@@ -17,13 +17,17 @@ A reference user's program maps directly:
                               chronobase_spark.streaming is the bulk path)
 
 Storage model: one directory per table (the reference's layout,
-db.go:291-350) of date-partitioned parquet, sorted within partitions by
-(ts, key) — the tablet sort order (tablet.go:124-132). The driver-side
-row buffer mirrors the reference's in-process memtable (table.go:17):
-``query`` unions it with the durable partitions exactly like the
-reference's memtable ∪ disk-tablets scan (table.go:132-161). Bulk
-ingest at scale bypasses the buffer via ``insert_df`` or the streaming
-module; the buffer exists for API parity with row-at-a-time callers.
+db.go:291-350) whose ``data/`` holds a table of the storage layer
+(``streaming.maintenance``) — the same ``event_date`` layout and the
+same locked, tagged append commit as the streaming sink. ``flush`` and
+``insert_df`` are append commits (a fresh tag each); ``compact`` and
+``cleanup`` are the layer's partition-replace and retention jobs. The
+driver-side row buffer mirrors the reference's in-process memtable
+(table.go:17): ``query`` unions it with the durable partitions exactly
+like the reference's memtable ∪ disk-tablets scan (table.go:132-161).
+Bulk ingest at scale bypasses the buffer via ``insert_df`` or the
+streaming module; the buffer exists for API parity with row-at-a-time
+callers.
 """
 
 from __future__ import annotations
@@ -37,11 +41,9 @@ from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from chronobase_spark.operators import timeseries
-from chronobase_spark.sources.writers import write_time_partitioned
 from chronobase_spark.streaming import maintenance
 
 _META = "_table_meta.json"
-_PARTITION_COL = "_bucket"
 
 
 class TableNotFoundError(KeyError):
@@ -221,10 +223,10 @@ class ChronoSpark:
         return len(accepted)
 
     def insert_df(self, table: str, df: DataFrame) -> None:
-        """Bulk append straight to durable storage (the scale path) in
-        the canonical layout: date-partitioned, sorted by (ts, key)."""
+        """Bulk append straight to durable storage (the scale path): one
+        append commit of the storage layer."""
         self._require(table)
-        write_time_partitioned(df, str(self.root / table / "data"), mode="append")
+        maintenance.append(df, self._data(table))
 
     def flush(self, table: str | None = None) -> int:
         """Write buffered rows as durable sorted partitions — the
@@ -245,32 +247,15 @@ class ChronoSpark:
 
     # -- reads (db.go:155-162; table.go:122-163) -----------------------
 
-    def _durable(
-        self,
-        table: str,
-        start: dt.datetime | None = None,
-        end: dt.datetime | None = None,
-    ) -> DataFrame | None:
-        data_dir = self.root / table / "data"
-        if not data_dir.exists() or not any(data_dir.iterdir()):
-            return None
-        df = self.spark.read.parquet(str(data_dir))
-        if start is not None and end is not None:
-            # partition pruning on the date bucket — whole directories
-            # skipped before any file is opened (the reference's tablet
-            # [MinTS,MaxTS] skip, table.go:146-149, at directory
-            # granularity); the row-level ts predicate then prunes row
-            # groups within the surviving partitions
-            df = df.filter(
-                F.col(_PARTITION_COL).between(
-                    F.lit(start.date().isoformat()), F.lit(end.date().isoformat())
-                )
-            )
-        return df.drop(_PARTITION_COL)
+    def _data(self, table: str) -> str:
+        return str(self.root / table / "data")
 
-    @staticmethod
-    def _as_dt(value: str | dt.datetime) -> dt.datetime:
-        return dt.datetime.fromisoformat(value) if isinstance(value, str) else value
+    def _durable(self, table: str) -> DataFrame | None:
+        """The flushed partitions, with the ``event_date`` partition
+        column (``time_range_scan`` prunes on it)."""
+        if not maintenance.data_files(self._data(table)):
+            return None
+        return self.spark.read.parquet(self._data(table))
 
     def query(
         self,
@@ -294,19 +279,22 @@ class ChronoSpark:
         rule (tablet.go:124-132)."""
         self._require(table)
         parts = []
-        durable = self._durable(table, self._as_dt(start), self._as_dt(end))
+        durable = self._durable(table)
         if durable is not None:
-            parts.append(durable)
+            # whole day directories skipped before any file is opened (the
+            # reference's tablet [MinTS,MaxTS] skip, table.go:146-149)
+            scan = timeseries.time_range_scan(durable, start, end)
+            parts.append(scan.drop(maintenance.PARTITION_COL))
         buf = self._memtable[table]
         if buf:
             mem = self.spark.createDataFrame([Row(**r) for r in buf])
+            mem = timeseries.time_range_scan(mem, start, end)
             parts.append(mem.select(*(parts[0].columns if parts else mem.columns)))
         if not parts:
             raise TableNotFoundError(f"{table} has no data")
         scan = parts[0]
         for p in parts[1:]:
             scan = scan.unionByName(p)
-        scan = timeseries.time_range_scan(scan, start, end)
         pkeys = self._pkeys.get(table)
         if enforce_primary_keys and pkeys:
             scan = self._enforce_primary_keys(scan, pkeys)
@@ -379,7 +367,7 @@ class ChronoSpark:
                 F.count(F.lit(1)), F.min("ts"), F.max("ts")
             ).collect()[0]
             n_disk, oldest, newest = agg[0], agg[1], agg[2]
-        files = list((self.root / table).rglob("*.parquet"))
+        files = maintenance.data_files(self._data(table))
         return {
             "in_memory_rows": len(self._memtable[table]),
             "total_disk_rows": n_disk,
@@ -391,24 +379,17 @@ class ChronoSpark:
 
     # -- maintenance (db.go:195-288) -----------------------------------
 
-    def compact(self, table: str, target_files: int = 1) -> int:
-        """Compact every partition of a table (reference merge,
-        table.go:240-331, without its pairwise restart loop)."""
+    def compact(self, table: str) -> int:
+        """Compact every partition of a table that holds more than one
+        data file (reference merge, table.go:240-331, without its
+        pairwise restart loop). Returns the rows rewritten."""
         self._require(table)
-        data_dir = self.root / table / "data"
-        total = 0
-        if not data_dir.exists():
-            return 0
-        for part in sorted(data_dir.iterdir()):
-            if part.is_dir() and part.name.startswith(f"{_PARTITION_COL}="):
-                total += maintenance.compact_partition(
-                    self.spark,
-                    str(data_dir),
-                    part.name.split("=", 1)[1],
-                    target_files=target_files,
-                    partition_col=_PARTITION_COL,
-                )
-        return total
+        data_dir = self._data(table)
+        return sum(
+            maintenance.compact_partition(self.spark, data_dir, value)
+            for value in maintenance.partitions(data_dir)
+            if len(maintenance.data_files(data_dir, value)) > 1
+        )
 
     def cleanup(self, table: str, now: dt.datetime | None = None) -> list[str]:
         """TTL retention (reference cleanup, table.go:334-369): drop whole
@@ -420,9 +401,7 @@ class ChronoSpark:
         now = now or dt.datetime.utcnow()
         cutoff = now - dt.timedelta(seconds=ttl)
         dropped = maintenance.retention_sweep(
-            str(self.root / table / "data"),
-            cutoff.date().isoformat(),
-            partition_col=_PARTITION_COL,
+            self._data(table), cutoff.date().isoformat()
         )
         self._memtable[table] = [
             r for r in self._memtable[table] if r["ts"] > cutoff

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from chronobase_spark.plans.barrier import barrier
+
 # Expected chunk length ~ CDC_MOD chars; window is the locality horizon.
 CDC_WINDOW = 8
 CDC_PRIME = 1000003
@@ -61,14 +63,6 @@ def _window_hash(cps: Column, end_pos: Column) -> Column:
         c = F.element_at(cps, end_pos - F.lit(CDC_WINDOW - 1 - k))
         h = h * 31 + c.cast("long")
     return h % F.lit(CDC_PRIME).cast("long")
-
-
-def _barrier(df: DataFrame, **cols: Column) -> DataFrame:
-    """Materialize ``cols`` behind one Generate node so downstream
-    lambdas see attribute references, not re-inlined expression trees
-    (CollapseProject cannot merge across Generate)."""
-    named = [c.alias(name) for name, c in cols.items()]
-    return df.select("*", F.inline(F.array(F.struct(*named))))
 
 
 def with_chunk_bounds(
@@ -93,7 +87,7 @@ def with_chunk_bounds(
 
     df = spread(df, key="doc_id" if "doc_id" in df.columns else None)
     t = F.col(text_col)
-    stage1 = _barrier(
+    stage1 = barrier(
         df,
         # length(t) > 0 guard: split("", "") is [""] (size 1, ascii 0),
         # which would fabricate a phantom 1-char chunk for empty docs
@@ -111,7 +105,7 @@ def with_chunk_bounds(
             lambda i: _window_hash(cps, i) % CDC_MOD == F.lit(0),
         ),
     ).otherwise(F.array().cast("array<int>"))
-    stage2 = _barrier(
+    stage2 = barrier(
         stage1,
         _cdc_bs=F.when(
             n > 0, F.concat(F.array(F.lit(0).cast("int")), cuts, F.array(n))
@@ -136,7 +130,7 @@ def with_chunk_bounds(
     # used to inline the whole pairs transform and re-evaluate it twice
     # per row (visible as the 800+-char Filter conditions in the r17
     # plans); behind the Generate it lands on the materialized attribute.
-    return _barrier(stage2, _cdc_bounds=pairs).select(
+    return barrier(stage2, _cdc_bounds=pairs).select(
         *df.columns, "_cdc_bounds"
     )
 

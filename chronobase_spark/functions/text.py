@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from chronobase_spark.plans.barrier import barrier
+
 # Tiny English stopword list for quality scoring (public knowledge).
 STOPWORDS = ("the", "a", "an", "and", "or", "of", "to", "in", "is", "it")
 
@@ -720,17 +722,6 @@ def _doc_bigram_tf(docs, id_col: str, text_col: str):
     )
 
 
-def _expr_barrier(df, **cols):
-    """Materialize ``cols`` behind one Generate node (the dedup/cdc
-    _barrier convention): a filter on a plain column alias is inlined
-    by CollapseProject and re-evaluates the whole expression tree per
-    predicate — behind inline(array(struct)) the filter reads the
-    materialized attribute instead (r18; the duplicated trees were
-    visible as 600+-char Filter conditions in the committed plans)."""
-    named = [c.alias(name) for name, c in cols.items()]
-    return df.select("*", F.inline(F.array(F.struct(*named))))
-
-
 def _lm_vocab(gram_counts, docs, text_col: str):
     """1-row corpus unigram vocabulary size — the add-one denominator's
     V, counting tokens from ALL docs including single-token docs that
@@ -749,11 +740,11 @@ def _lm_vocab(gram_counts, docs, text_col: str):
     redundant second corpus pass in the suite's slowest query
     (q_bigram_lm_logprob r9 bench 6.5 s)."""
     tk = lm_tokens(F.col(text_col))
-    # _expr_barrier: the isNotNull used to inline the tokenize + get
+    # barrier: the isNotNull used to inline the tokenize + get
     # tree and re-run it as the pushed predicate (2 tokenize per row on
     # the scan side); behind the Generate it reads the attribute.
     last = (
-        _expr_barrier(docs, t=F.get(tk, F.size(tk) - 1))
+        barrier(docs, t=F.get(tk, F.size(tk) - 1))
         .where(F.col("t").isNotNull())
         .select("t")
     )
@@ -902,14 +893,14 @@ def _jm_marginals(tri_counts, docs, text_col: str):
         F.substring_index("gram", " ", -2).alias("b"),
         F.col("c123").alias("cnt"),
     )
-    # _expr_barrier on both correction sides (r18): the isNotNull
+    # barrier on both correction sides (r18): the isNotNull
     # predicates (and the bc join's inferred substring_index notnull)
     # used to inline the first-gram when-trees and re-tokenize every
     # doc up to 3× in the pushed Filter (the 663-char conditions in
     # the committed r17/r18-before plans); behind the Generate the
     # predicates read the materialized attribute.
     first_b = (
-        _expr_barrier(
+        barrier(
             docs,
             b=F.when(
                 F.size(tk) >= 2,
@@ -939,7 +930,7 @@ def _jm_marginals(tri_counts, docs, text_col: str):
         F.col("c123").alias("cnt"),
     )
     first_w = (
-        _expr_barrier(
+        barrier(
             docs,
             _w2=F.filter(
                 F.array(F.get(tk, 0), F.get(tk, 1)),

@@ -14,9 +14,10 @@ optimizer can see through:
 * the key lookup's sparse block index (index.go:231-236, dead code in the
   reference) is Parquet predicate pushdown on the key column.
 
-At 100 TB the events dataset would be written partitioned by a time bucket
-(see chronobase_spark.streaming.ingest), making these scans prune whole
-partitions before touching a file.
+Tables written by the storage layer (chronobase_spark.streaming.
+maintenance) are partitioned by ``event_date``; ``time_range_scan`` adds
+the matching partition predicate, so those scans prune whole partitions
+before touching a file.
 """
 
 from __future__ import annotations
@@ -26,6 +27,8 @@ import datetime as dt
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from chronobase_spark.streaming.maintenance import PARTITION_COL, partition_between
 
 TimeLike = "str | dt.datetime"
 
@@ -65,13 +68,17 @@ def time_range_scan(
     ``ts >= s ⟺ ns >= s·1000`` and ``ts <= e ⟺ ns <= e·1000 + 999`` —
     and the int64 predicate reaches the Parquet reader (PushedFilters),
     giving the row-group/partition pruning the reference intended but
-    never wired (tablet.go:349-350 reads every block).
+    never wired (tablet.go:349-350 reads every block). On a table in the
+    storage layer's layout the ``event_date`` bounds become
+    PartitionFilters, so whole day directories are skipped.
     """
     cond = F.col(ts_col).between(_ts(start), _ts(end))
     if TS_NS in df.columns and ts_col == "ts":
         s_ns = _to_micros(start) * 1000
         e_ns = _to_micros(end) * 1000 + 999
         cond = cond & F.col(TS_NS).between(F.lit(s_ns), F.lit(e_ns))
+    if PARTITION_COL in df.columns and ts_col == "ts":
+        cond = cond & partition_between(_ts(start), _ts(end))
     return df.filter(cond).drop(TS_NS)
 
 

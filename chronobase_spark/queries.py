@@ -52,252 +52,14 @@ def register(name: str, sql: str | None):
     return deco
 
 
-def _recorded_evidence() -> tuple[int, set[str], set[str], dict[str, int]]:
-    """Scan the repo's recorded ``CORRECTNESS_r*.json`` files.
-
-    Returns ``(rounds_seen, green, failed, last_round)``: green =
-    value-hash match against the DuckDB oracle or a completed rows-only
-    check for the (documented) no-oracle queries; failed = attempted by
-    the driver and red (regression candidates); last_round[name] = the
-    1-based index of the newest file mentioning the name, used to
-    re-grade the STALEST green evidence first. A name that later turns
-    green leaves ``failed``. Tolerant of missing/corrupt files so a
-    fresh checkout degrades to plain registration order.
-    """
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    failed: set[str] = set()
-    last_round: dict[str, int] = {}
-    files = sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json")))
-    for i, path in enumerate(files, start=1):
-        try:
-            with open(path) as fh:
-                data = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for name, rec in data.items():
-            if not isinstance(rec, dict):
-                continue
-            last_round[name] = i
-            if rec.get("hash_match") is True or (
-                rec.get("err") == "no_oracle" and rec.get("spark_rows") is not None
-            ):
-                green.add(name)
-                failed.discard(name)
-            elif (
-                rec.get("err")
-                or rec.get("hash_match") is False
-                or rec.get("rows_match") is False
-                or rec.get("schema_match") is False
-            ):
-                # LATEST check wins: a query green in r1 but hash-failed
-                # later is a live regression, not a green row (r3's two
-                # hash mismatches sat in the rotated-green tail because
-                # only err-type failures reached this bucket).
-                failed.add(name)
-                green.discard(name)
-    return len(files), green, failed, last_round
-
-
-def _recorded_green() -> tuple[int, set[str]]:
-    rounds, green, _, _ = _recorded_evidence()
-    return rounds, green
-
-
-# Queries whose implementation changed materially after their latest
-# green driver row — front-run the rotation so the new code gets fresh
-# evidence (a recorded green for superseded code is stale). Each entry
-# maps to the number of CORRECTNESS_r*.json files that existed when the
-# change shipped; it expires only once the NAME APPEARS in a newer file
-# (the driver actually re-graded the new code), not merely once more
-# rounds exist — a crashed or shrunken grading round must not silently
-# drop a pending re-grade (r4 advisor note).
-_FORCE_REGRADE = {
-    # r7: NULLS LAST pinned explicitly in the per-user windows + path
-    # concat re-keyed on the window rank (r6 advisor note; re-proven
-    # vs the oracle at sf0.01 this session)
-    "user_event_paths": 6,
-    "event_type_transitions": 6,
-    # r7 null-contract pins (tests/test_null_oracle.py sweep): explicit
-    # NULLS LAST / null drops / coalesced counts on both engines —
-    # re-proven vs the oracle at sf0.01 AND on the nully corpus
-    "percent_rank_value": 6,
-    "value_ntiles": 6,
-    # cheapest_supplier_per_part's r7 pin is superseded by its r10
-    # entry below (duplicate keys silently overwrite — keep one).
-    "ohlc_daily_rollup": 6,
-    "doc_fingerprint": 6,
-    "doc_repetition": 6,
-    "quality_filter_funnel": 6,
-    "embedding_centroids": 6,
-    "ivf_assign_counts": 6,
-    # r7: PQ pipeline refactored onto shared _pq_codes/_pq_lut/
-    # _adc_topk helpers (same math, one codebook aggregation; all four
-    # re-proven vs the oracle at sf0.01 this session)
-    "pq_adc_search": 6,
-    "ivf_pq_search": 6,
-    "ann_recall_at_10": 6,
-    "pq_code_histogram": 6,
-    # r7: NULL observations excluded up front on both engines (null
-    # contract pin, see block above; previously r6's window fusion)
-    "ewma_user_value": 6,
-    # r5: stub decode -> real PPM decoder; bumped r12: to_ppm_payload
-    # refactored onto the shared ppm_payload_col expression (same
-    # column tree, but the rule is driver evidence postdates change)
-    "multimodal_decode_features": 11,
-    "dup_clusters": 4,  # r5: CC convergence seeded from init labels
-    # r5 sf0.1 robustness sweep: rounded double quotients replaced by
-    # exact sums + one unrounded division (values changed slightly).
-    # embedding_centroids / ivf_assign_counts were in this batch too but
-    # now carry the LATER r7 null-contract entry above (a duplicate dict
-    # key here would silently overwrite the newer round number).
-    "gap_fill_locf": 4,
-    "gap_fill_interp": 4,
-    # r8 (commit 2e89033, shipped while 8 CORRECTNESS files existed):
-    # query AND oracle rewritten together (decimal widths, NOT-IN null
-    # fix, broadcast-hint drops) but absent from r9's 50-query subset —
-    # no cross-engine hash evidence post-change (r9 advisor note).
-    "important_part_values": 8,
-    "supplier_count_by_part_attrs": 8,
-    "local_supplier_revenue": 8,
-    "product_profit_by_nation_year": 8,
-    # r10: the six r9-verdict broadcast hints (plus two more unfiltered
-    # supplier broadcasts the new static gate caught) deleted — results
-    # are plan-invariant, but the recorded green predates the new plans.
-    "promo_revenue_ratio": 9,
-    "returned_customer_revenue": 9,
-    "large_order_customers": 9,
-    "nation_revenue_share": 9,
-    "disjunctive_part_revenue": 9,
-    "top_volume_orders": 9,
-    "sole_late_supplier": 9,
-    "top_supplier_revenue": 9,
-    # r10: the stricter gate (filter/join keep the SF-proportional
-    # class) flagged 11 more forced broadcasts of constant-fraction
-    # part/customer/supplier subsets — hints deleted; plan-invariant
-    # results, but the recorded greens predate the new plans.
-    "shipping_priority_top10": 9,
-    "cheapest_supplier_per_part": 9,
-    "small_quantity_revenue": 9,
-    "dominant_part_suppliers": 9,
-    "nation_pair_trade": 9,
-    "nation_market_share": 9,
-    "regional_cheapest_supplier": 9,
-    # r10: vocabulary derived from the doc_token_stats TF pass instead
-    # of a second corpus-wide explode (commit 4426bb4) — hash-green in
-    # driver_sim at sf0.01/0.1 this session, but the recorded driver
-    # green predates the rewrite.
-    "bigram_lm_logprob": 9,
-    # r11: rewritten onto the shared datacard_signals struct
-    # (functions/text.py, commit e82cb25) AFTER its r10 driver green —
-    # identity-arguable (same stopwords/tokenizer; full local oracle
-    # green at HEAD) but the documented rule is that driver evidence
-    # must postdate material change (r11 verdict finding #1).
-    "corpus_datacard": 10,
-    # r12: triple-scan fix — the micro-quantized projection now
-    # persists (measured A/B in the docstring; r11 verdict finding
-    # #2). Rows-only check, but the plan changed materially.
-    "mad_outliers_approx": 11,
-    # r13 (commit 3bd7ad1): oracle SQL refactored onto shared grid-CTE
-    # constants AFTER both queries' r12 driver grades, and r13's
-    # 50-query sample missed them — the regrade-on-oracle-refactor rule
-    # (r13 verdict task #6): touching a query's ORACLE text forces the
-    # next driver window just like touching its Spark plan.
-    "phash_near_pairs": 13,
-    "raster_topk_l1": 13,
-    # r16: NULL text coalesced to '' in BOTH the Spark expression and
-    # the oracle SQL so the keep flag is literally the streaming twin's
-    # (r15 advisor note) — aggregates provably unchanged (NULL keep
-    # contributed 0 to every sum on both engines), but the rule is that
-    # driver evidence must postdate any query/oracle text change.
-    "quality_weighted_sample": 15,
-}
-
-# Families whose driver evidence matters most while slots are scarce
-# (the LLM-pipeline and late-registered operators that a bounded grading
-# prefix would otherwise reach last).
-_GRADE_PRIORITY = (
-    "doc_token_stats",
-    "tfidf_top_terms",
-    "dup_clusters",
-    "dedup_canonical_map",
-    "gap_fill_locf",
-    "multimodal_payload_meta",
-    "multimodal_decode_features",
-    "multimodal_frame_sample",
-    "multimodal_resize_meta",
-    "doc_repetition",
-    "quality_filter_funnel",
-    "decontam_overlap",
-    "embedding_centroids",
-    "ivf_assign_counts",
-    "ewma_user_value",
-    "ohlc_hourly",
-    "doc_pack_chunks",
-    "doc_split_assign",
-    "embedding_quant_int8",
-)
-
-
-def _ordered_names() -> list[str]:
-    """Registry order = grading priority.
-
-    The driver grades a bounded prefix of ``queries()`` (50 entries in
-    round 1, vs 86+ registered), so plain registration order starves the
-    tail forever. Order by need:
-
-    1. previously attempted and FAILED (prove the regression fixed);
-    2. never-graded queries from ``_GRADE_PRIORITY`` (the operator
-       families whose evidence is most valuable);
-    3. remaining never-graded, in registration order;
-    4. already-green queries last, rotated by round count so regression
-       re-checks cycle through the green set across rounds.
-
-    This is a scheduling concern only: both dicts stay name-keyed and
-    complete, so nothing about pairing or semantics changes.
-    """
-    names = list(_REGISTRY)
-    rounds, green, failed, last_round = _recorded_evidence()
-    prio = set(_GRADE_PRIORITY)
-    force = {
-        n for n, shipped_at in _FORCE_REGRADE.items()
-        if n in green and last_round.get(n, 0) <= shipped_at
-    }
-    p_failed = [n for n in names if n in failed]
-    p_force = [n for n in names if n in force]
-    p_boost = [
-        n
-        for n in names
-        if n not in green and n not in failed and n in prio
-    ]
-    p_rest = [
-        n for n in names if n not in green and n not in failed and n not in prio
-    ]
-    # Stalest evidence first (stable on registration order within a
-    # round): with a 50-query window this bounds any green row's age to
-    # ceil(n/window) rounds — the blind stride rotation it replaces
-    # could re-grade fresh rows while r1 evidence aged indefinitely.
-    done = sorted(
-        (n for n in names if n in green and n not in force),
-        key=lambda n: last_round.get(n, 0),
-    )
-    return p_failed + p_force + p_boost + p_rest + done
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: _REGISTRY[name][0] for name in _ordered_names()}
+    """Every registered query, in registration order."""
+    return {name: fn for name, (fn, _sql) in _REGISTRY.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: _REGISTRY[name][1]
-        for name in _ordered_names()
-        if _REGISTRY[name][1] is not None
-    }
+    """The oracle SQL of every query that has one, in registration order."""
+    return {name: sql for name, (_fn, sql) in _REGISTRY.items() if sql is not None}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -6310,7 +6072,7 @@ def q_quality_signal_corr(spark, sf_dir):
     char_entropy A/B, r17)."""
     docs = catalog.spread(_t(spark, sf_dir, "documents"), key="doc_id")
     ntok = text.space_distinct_tokens(F.col("text")).cast("bigint")
-    # inline(array(struct)) = the Generate barrier (dedup/cdc._barrier
+    # inline(array(struct)) = the Generate barrier (plans/barrier.py
     # convention, r18): a plain alias let the isNotNull filter inline
     # the WHOLE char-entropy sorted fold and re-evaluate it per row
     # (the 1480-char Filter condition in the r17 plans — the heaviest
@@ -9324,7 +9086,7 @@ def q_dedup_strategy_compare(spark, sf_dir):
             )
         )
     )
-    # Generate barrier (dedup/cdc._barrier convention, r18): the store
+    # Generate barrier (plans/barrier.py convention, r18): the store
     # side's distinct dh feeds a join, and the inferred join-key
     # isnotnull used to inline md5(text) and re-hash every store doc in
     # the Filter; behind the barrier it reads the materialized column.
@@ -9764,7 +9526,7 @@ def q_boilerplate_templates(spark, sf_dir):
     # template_stage emits (functions/text.template_end_hashes) — NULL
     # fields for short docs, which the filters below drop exactly like
     # the former explicit size gate. inline(array(struct)) = the
-    # Generate barrier (dedup/cdc._barrier convention, r18): a plain
+    # Generate barrier (plans/barrier.py convention, r18): a plain
     # `_e` alias let CollapseProject inline the tokenize+2×md5 struct
     # into BOTH branch filters and BOTH field extractions — up to four
     # evaluations per row (the 500+-char Filter conditions in the r17

@@ -1,45 +1,12 @@
-"""Batch writers — the engine's canonical table layout.
-
-The write conventions ARE the optimizer story at 100 TB (SURVEY.md §4):
-(1) partition by a time bucket → partition pruning for time-range scans
-    (the reference's tablet [MinTS,MaxTS] skip, table.go:146-149);
-(2) sort within partitions by (ts, key) → tight parquet row-group
-    min/max stats (the reference's tablet sort, tablet.go:124-132);
-(3) zstd columnar compression (vs. the reference's per-block gzip
-    BestSpeed, compression.go:78).
+"""Batch writers for tables without a time axis: plain tables and
+bucketed catalog tables. Time-series tables are written by the storage
+layer (``chronobase_spark.streaming.maintenance``), which owns their
+``event_date`` layout and commit protocol.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def write_time_partitioned(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    bucket: str = "day",
-    mode: str = "append",
-) -> None:
-    """Write a time-series table in the engine's canonical layout.
-
-    Sort tie-break: ``key_col`` when the schema has it, else ``key``
-    (the reference's Row.Key, row.go:6-10), else timestamp alone — the
-    facade accepts arbitrary row schemas, not just the test corpus.
-    """
-    if key_col not in df.columns:
-        key_col = "key" if "key" in df.columns else None
-    sort_cols = [ts_col] + ([key_col] if key_col else [])
-    bucket_col = F.to_date(ts_col) if bucket == "day" else F.date_trunc(bucket, ts_col)
-    (
-        df.withColumn("_bucket", bucket_col)
-        .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .partitionBy("_bucket")
-        .parquet(path)
-    )
 
 
 def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -384,26 +351,3 @@ def ensure_bucketed(
         )
     return spark.table(table_name)
 
-
-def overwrite_time_partitions(
-    df: DataFrame,
-    path: str,
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    bucket: str = "day",
-) -> None:
-    """Idempotent backfill: dynamic partition overwrite replaces ONLY
-    the time buckets present in ``df``, leaving every other partition
-    untouched — re-running a day's pipeline is safe at any scale, and
-    no job ever rewrites the whole table. (Static overwrite mode — the
-    Spark default — would truncate the table first; always scope
-    overwrites to the partitions in hand.)"""
-    bucket_col = F.to_date(ts_col) if bucket == "day" else F.date_trunc(bucket, ts_col)
-    (
-        df.withColumn("_bucket", bucket_col)
-        .sortWithinPartitions(ts_col, key_col)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_bucket")
-        .parquet(path)
-    )

@@ -6,9 +6,12 @@ Reference lifecycle → Spark mapping (SURVEY.md §1.2):
   time-bounded, compressed tablet (reference internal/storage/
   table.go:78-119, 198-236; tablet.go:203-281).  Spark-natively the
   memtable IS the micro-batch: ``readStream → writeStream`` with a
-  processing-time trigger; the sink writes Parquet partitioned by a
-  time bucket (the "tablet" directory) sorted within partitions by
-  (ts, key) (the reference's tablet sort order, tablet.go:124-132).
+  processing-time trigger, and each batch is one append commit of the
+  storage layer (``streaming.maintenance``): Parquet partitioned by
+  ``event_date`` (the "tablet" directory), sorted by (ts, event_id)
+  (the reference's tablet sort order, tablet.go:124-132). The
+  ``db.ChronoSpark`` facade writes the same layout through the same
+  commit, and compaction and retention run on both.
 * the TTL ingest gate — rows older than TTL at arrival are silently
   dropped (table.go:93-96) — becomes a watermark + filter per
   micro-batch.
@@ -16,10 +19,10 @@ Reference lifecycle → Spark mapping (SURVEY.md §1.2):
   aggregations; the reference's crude drop-at-ingest is kept as an
   explicit, testable filter.
 
-At 100 TB the date/hour partitioning keeps every time-range query
-pruning whole directories, and each micro-batch file lands with footer
-min/max stats on ts — exactly the per-tablet [MinTS,MaxTS] index the
-reference maintained by hand (internal/storage/index.go:14-20).
+At 100 TB the date partitioning keeps every time-range query pruning
+whole directories, and each micro-batch file lands with footer min/max
+stats on ts — exactly the per-tablet [MinTS,MaxTS] index the reference
+maintained by hand (internal/storage/index.go:14-20).
 """
 
 from __future__ import annotations
@@ -36,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from chronobase_spark.streaming import maintenance
 
 EVENT_SCHEMA = StructType(
     [
@@ -78,25 +83,17 @@ def start_ingest(
 ) -> StreamingQuery:
     """Micro-batch Parquet sink = the reference's flush (table.go:198-236).
 
-    Each batch is bucketed by event date (tablet time range), sorted
-    within partitions by (ts, event_id) (tablet sort order), and written
-    append-only — immutable files, like flushed tablets. Exactly-once via
-    the checkpoint + file-sink log replaces the reference's atomic
-    temp-file rename (utils/fileutils.go:87-103).
+    Each micro-batch is one tagged append commit of the storage layer
+    (``maintenance.batch_writer``): immutable files in the shared
+    ``event_date`` layout, like flushed tablets. The checkpoint makes
+    Spark replay a batch whose commit it did not record, and the tag
+    makes the replay replace that batch's files instead of adding them
+    again, so the sink is exactly-once. That replaces the reference's
+    atomic temp-file rename (utils/fileutils.go:87-103).
     """
-    bucketed = stream.withColumn("event_date", F.to_date("ts"))
-
-    def write_batch(batch: DataFrame, batch_id: int) -> None:
-        (
-            batch.sortWithinPartitions("ts", "event_id")
-            .write.mode("append")
-            .partitionBy("event_date")
-            .parquet(table_dir)
-        )
-
-    writer = bucketed.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    writer = stream.writeStream.foreachBatch(
+        maintenance.batch_writer(table_dir, checkpoint_dir)
+    ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     elif trigger_seconds:

@@ -31,12 +31,12 @@ import sys
 REG_FACTOR = 2.0
 ABS_FLOOR = 0.75  # seconds; below this, 2x is JVM/GC jitter, not drift
 
-# Reviewed intentional slowdowns: query -> (shipped_round, why), same
-# self-expiry contract as queries._FORCE_REGRADE. An entry is LIVE only
-# while the newest BENCH_r*.json baseline predates shipped_round; as
-# soon as a round >= shipped_round records the new level, the entry is
-# ignored — the guard is strict again and a fresh regression vs the new
-# baseline fails. (The r5 entry for ewma_user_value expired the moment
+# Reviewed intentional slowdowns: query -> (shipped_round, why). Each
+# entry expires by itself: it is LIVE only while the newest
+# BENCH_r*.json baseline predates shipped_round; as soon as a round
+# >= shipped_round records the new level, the entry is ignored — the
+# guard is strict again and a fresh regression vs the new baseline
+# fails. (The r5 entry for ewma_user_value expired the moment
 # BENCH_r05.json recorded 2.60 s; kept here as the format example.)
 # An UNREVIEWED regression still fails.
 INTENTIONAL: dict[str, tuple[int, str]] = {

@@ -1730,8 +1730,9 @@ def ingest_probe(spark, factor: int, tmp_root: Path) -> dict:
     Returns rows/s per stage (wall includes sink commit — ingest is a
     write's throughput, not a transformation's)."""
     from chronobase_spark import catalog
-    from chronobase_spark.sources import tabfile, writers
+    from chronobase_spark.sources import tabfile
     from chronobase_spark.streaming import docs as docstream
+    from chronobase_spark.streaming import maintenance
 
     ev_path = replicate(spark, "events", factor, "event_id")
     ev = spark.read.parquet(ev_path)
@@ -1742,7 +1743,7 @@ def ingest_probe(spark, factor: int, tmp_root: Path) -> dict:
     for rep in range(2):
         dest = tmp_root / f"batch_write_x{factor}_r{rep}"
         t0 = time.perf_counter()
-        writers.write_time_partitioned(ev, str(dest), mode="overwrite")
+        maintenance.append(ev, str(dest))
         best = min(best, time.perf_counter() - t0)
         shutil.rmtree(dest, ignore_errors=True)
     out["batch_write_s"] = round(best, 2)

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+import re
 import sys
 
 import pytest
@@ -125,7 +126,58 @@ def test_query_prunes_partitions(db):
     got = db.query("metrics", NOW, NOW + dt.timedelta(days=1))
     assert {r["event_id"] for r in got.collect()} == {0, 1}
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "_bucket" in plan, plan
+    assert "PartitionFilters: [" in plan and "event_date" in plan, plan
+    assert re.search(r"PartitionFilters: \[[^\]]*event_date", plan), plan
+
+
+def test_facade_writes_the_sink_layout(db, tmp_path):
+    """Facade flushes land in the storage layer's ``event_date`` layout,
+    the same one the streaming sink writes."""
+    db.create_table("metrics")
+    db.insert("metrics", [_row(i, NOW + dt.timedelta(days=i)) for i in range(3)], now=NOW)
+    db.flush()
+    data = tmp_path / "dbdata" / "metrics" / "data"
+    parts = sorted(p.name for p in data.iterdir() if not p.name.startswith("."))
+    assert parts == [
+        f"event_date={(NOW + dt.timedelta(days=i)).date()}" for i in range(3)
+    ]
+
+
+def test_compact_skips_single_file_partitions(db, tmp_path):
+    """A partition already holding one data file is left alone: a second
+    compact pass rewrites nothing."""
+    db.create_table("metrics")
+    for batch in range(2):  # each flush writes a file into both days
+        rows = [_row(100 * batch + i, NOW + dt.timedelta(hours=i)) for i in range(20)]
+        db.insert("metrics", rows, now=NOW)
+        db.flush()
+    assert db.compact("metrics") == 40
+    data = tmp_path / "dbdata" / "metrics" / "data"
+    files = {p: p.stat().st_mtime_ns for p in data.glob("event_date=*/*.parquet")}
+    assert len(files) == len(list(data.glob("event_date=*")))
+    assert db.compact("metrics") == 0
+    assert {p: p.stat().st_mtime_ns for p in data.glob("event_date=*/*.parquet")} == files
+
+
+def test_compact_table_without_event_id(spark, tmp_path):
+    """Compaction sorts by (ts, key) when the rows carry ``key`` instead
+    of ``event_id``."""
+    db = ChronoSpark(spark, str(tmp_path / "dbdata"))
+    db.create_table("metrics")
+    for batch in range(2):
+        rows = [
+            {"ts": NOW + dt.timedelta(seconds=i), "key": f"k{batch}-{i}", "value": float(i)}
+            for i in range(10)
+        ]
+        db.insert("metrics", rows, now=NOW)
+        db.flush()
+    assert db.compact("metrics") == 20
+    data = tmp_path / "dbdata" / "metrics" / "data"
+    assert len(list(data.glob("event_date=*/*.parquet"))) == 1
+    got = db.query("metrics", NOW, NOW + dt.timedelta(minutes=1))
+    assert sorted(r["key"] for r in got.collect()) == sorted(
+        f"k{b}-{i}" for b in range(2) for i in range(10)
+    )
 
 
 def test_iter_query_streams_rows(db):

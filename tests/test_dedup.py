@@ -347,6 +347,26 @@ def test_winnow_fingerprints_match_reference_python(spark):
     assert got == expected
 
 
+def test_winnow_fingerprints_no_null_fp_at_token_boundary(spark):
+    """``winnow_fingerprints`` keeps docs with >= k+w-1 tokens and then
+    uses explode_outer, which would emit a NULL ``fp`` for a kept doc
+    with no selected fingerprint. At k+w-2 tokens the doc must emit no
+    row; at k+w-1 tokens it must emit exactly one, non-NULL."""
+    from chronobase_spark.dedup import winnow
+
+    k, w = winnow.K, winnow.W
+    docs = spark.createDataFrame(
+        [
+            (n, " ".join(f"tok{i}" for i in range(n)))
+            for n in (k + w - 2, k + w - 1)
+        ],
+        ["doc_id", "text"],
+    )
+    rows = winnow.winnow_fingerprints(docs, k=k, w=w).collect()
+    assert [r["doc"] for r in rows] == [k + w - 1]
+    assert all(r["fp"] is not None for r in rows)
+
+
 def test_winnow_dup_pairs_match_brute_force(spark):
     """The posting-list pair generation (r17: collect_list over the
     max_df-pruned postings + bounded explode, replacing the fp
@@ -1002,6 +1022,9 @@ def test_r18_tokenize_and_gram_rewrites_match_two_pass_forms(spark, docs):
             ("héllo wörld çafé",),
             ("a-b c_d e.f",),
             ("0 00 000 0a a0",),
+            ("nbsp\u00a0sep emsp\u2003sep",),
+            ("vtab\x0bsep\x0b",),
+            ("\u00a0\u2003\x0b",),
         ],
         "text string",
     )

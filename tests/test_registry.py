@@ -1,4 +1,4 @@
-"""Registry/scheduler contract tests — the driver-facing invariants that
+"""Registry contract tests — the driver-facing invariants that
 don't need a SparkSession."""
 
 from __future__ import annotations
@@ -19,29 +19,10 @@ def test_oracle_keys_subset_of_queries():
 
 
 def test_queries_and_oracles_share_order():
-    """The driver grades a prefix by pairing the two dicts by name; both
-    must enumerate in the same (priority) order."""
+    """Graders pair the two dicts by name; both must enumerate in the
+    same (registration) order."""
     qnames = [n for n in q.queries() if n in q.oracle_sql()]
     assert qnames == list(q.oracle_sql())
-
-
-def test_never_green_queries_sort_first():
-    """Grading-window scheduler: every query lacking green evidence in
-    recorded CORRECTNESS files must precede every query that has it —
-    except the documented _FORCE_REGRADE set (green rows recorded
-    against superseded code), which is allowed to front-run."""
-    rounds, green = q._recorded_green()
-    names = list(q.queries())
-    if not green or rounds == 0:
-        return  # fresh checkout — nothing to schedule around
-    seen_plain_green = False
-    for n in names:
-        if n in green and n not in q._FORCE_REGRADE:
-            seen_plain_green = True
-        elif n not in green:
-            assert not seen_plain_green, (
-                f"pending query {n!r} sorted after a green one"
-            )
 
 
 def test_rows_only_queries_are_documented_set():
