@@ -5,131 +5,56 @@ reference's JSON config (reference internal/config/config.go:11-42
 The reference validates storage-engine knobs (tablet size, block size,
 buffer pool…) that have no direct meaning on Spark; SURVEY.md §4 maps
 each onto the session/config surface that *does* govern the same
-behavior here:
+behavior here. Only knobs that something reads are fields:
 
 =====================  ==============================================
 reference knob         Spark-native effect (``to_spark_conf``)
 =====================  ==============================================
 compression_type/lvl   spark.sql.parquet.compression.codec
 block_size             spark.sql.files.maxPartitionBytes (scan split)
-max_tablet_size        target output file size (writers roll files)
 query_concurrency      spark.sql.shuffle.partitions
 max_memory_usage       spark.driver.memory (local mode single JVM)
-flush_interval         streaming trigger interval (ingest jobs)
-merge/maintenance/...  batch-job schedule hints (external scheduler)
 =====================  ==============================================
 
-Durations accept Go-style strings (``"10m"``, ``"1h30m"``, ``"45s"``)
-or raw numbers (seconds), mirroring the reference's Duration JSON codec
-(config.go:49-76, which takes strings or numbers).
+The reference's remaining knobs (tablet size, tickers, file and buffer
+limits, logging; SURVEY D10/D11) have no reader here: ``load_config``
+ignores them like any unknown key, so a reference config file loads.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import re
 from dataclasses import asdict, dataclass, field
-
-_DUR_RE = re.compile(r"(\d+(?:\.\d+)?)(ms|h|m|s)")
-_DUR_SECONDS = {"h": 3600.0, "m": 60.0, "s": 1.0, "ms": 0.001}
-
-
-def parse_duration(value: float | int | str) -> float:
-    """Duration → seconds. Accepts numbers (seconds) or Go-style strings."""
-    if isinstance(value, (int, float)):
-        return float(value)
-    s = value.strip()
-    if not s:
-        raise ValueError("empty duration")
-    pos, total = 0, 0.0
-    for m in _DUR_RE.finditer(s):
-        if m.start() != pos:
-            break
-        total += float(m.group(1)) * _DUR_SECONDS[m.group(2)]
-        pos = m.end()
-    if pos != len(s):
-        raise ValueError(f"invalid duration: {value!r}")
-    return total
-
-
-def format_duration(seconds: float) -> str:
-    """Seconds → compact Go-style string (inverse of :func:`parse_duration`).
-
-    Fractional seconds render fixed-point, never scientific notation —
-    ``f"{1e-05}s"`` would produce ``"1e-05s"``, which the parser rejects
-    and which would make a saved config unreadable."""
-    if seconds == int(seconds):
-        n = int(seconds)
-        if n % 3600 == 0 and n:
-            return f"{n // 3600}h"
-        if n % 60 == 0 and n:
-            return f"{n // 60}m"
-        return f"{n}s"
-    return f"{seconds:.9f}".rstrip("0") + "s"
 
 
 @dataclass
 class EngineConfig:
-    """Engine configuration with the reference's field surface
-    (config.go:11-42) and its defaults (config.go:79-113) translated to
-    the Spark posture (zstd over gzip — columnar zstd dominates the
-    reference's per-block gzip on ratio and scan speed)."""
+    """Engine configuration: the reference fields that have a Spark
+    effect (config.go:11-42), with its defaults (config.go:79-113)
+    translated to the Spark posture (zstd over gzip — columnar zstd
+    dominates the reference's per-block gzip on ratio and scan speed)."""
 
-    # basic
     data_dir: str = "./data"
-    max_tablet_size: int = 256 * 1024 * 1024
     block_size: int = 128 * 1024 * 1024  # scan-split granularity on Spark
-    flush_interval_s: float = 600.0
-    merge_interval_s: float = 3600.0
     # compression
     compression_enabled: bool = True
     compression_type: str = "zstd"
     compression_level: int = 3
     # performance
     max_memory_usage: int = 8 * 1024 * 1024 * 1024
-    max_open_files: int = 1000
-    buffer_pool_size: int = 128 * 1024 * 1024
-    concurrent_merges: int = 2
     query_concurrency: int = 32
-    # maintenance
-    maintenance_interval_s: float = 3600.0
-    max_file_age_s: float = 30 * 24 * 3600.0
-    backup_interval_s: float = 24 * 3600.0
-    backup_retention: int = 7
-    # logging
-    log_level: str = "WARN"
-    log_file: str = "db.log"
-    enable_metrics: bool = True
     # passthrough for any raw spark conf the user pins
     extra_spark_conf: dict[str, str] = field(default_factory=dict)
 
     def validate(self) -> None:
         """Mirror of the reference's Validate (config.go:173-208): every
-        size/count positive, durations non-negative, known codec."""
+        size/count positive, known codec."""
         if not self.data_dir:
             raise ValueError("data_dir is required")
-        for name in (
-            "max_tablet_size",
-            "block_size",
-            "max_open_files",
-            "buffer_pool_size",
-            "concurrent_merges",
-            "query_concurrency",
-            "max_memory_usage",
-            "backup_retention",
-        ):
+        for name in ("block_size", "query_concurrency", "max_memory_usage"):
             if getattr(self, name) <= 0:
                 raise ValueError(f"{name} must be positive")
-        for name in (
-            "flush_interval_s",
-            "merge_interval_s",
-            "maintenance_interval_s",
-            "max_file_age_s",
-            "backup_interval_s",
-        ):
-            if getattr(self, name) < 0:
-                raise ValueError(f"{name} must be non-negative")
         if self.compression_type not in ("zstd", "snappy", "gzip", "lz4", "none"):
             raise ValueError(f"unknown compression_type {self.compression_type!r}")
 
@@ -149,15 +74,6 @@ class EngineConfig:
         return conf
 
 
-_DURATION_FIELDS = {
-    "flush_interval": "flush_interval_s",
-    "merge_interval": "merge_interval_s",
-    "maintenance_interval": "maintenance_interval_s",
-    "max_file_age": "max_file_age_s",
-    "backup_interval": "backup_interval_s",
-}
-
-
 def load_config(path: str) -> EngineConfig:
     """Load + validate a JSON config file, unknown-key tolerant, defaults
     applied for absent keys (reference LoadConfig, config.go:154-170)."""
@@ -168,11 +84,7 @@ def load_config(path: str) -> EngineConfig:
     cfg = EngineConfig()
     known = set(asdict(cfg))
     for key, value in raw.items():
-        if key in _DURATION_FIELDS:
-            setattr(cfg, _DURATION_FIELDS[key], parse_duration(value))
-        elif key in known:
-            if key.endswith("_s"):
-                value = parse_duration(value)
+        if key in known:
             setattr(cfg, key, value)
         # unknown keys ignored: forward-compatible, like json.Unmarshal
     cfg.validate()
@@ -180,25 +92,8 @@ def load_config(path: str) -> EngineConfig:
 
 
 def save_config(cfg: EngineConfig, path: str) -> None:
-    """Validate + write (reference SaveConfig, config.go:173-193).
-    Durations serialize as Go-style strings for round-trip parity."""
+    """Validate + write (reference SaveConfig, config.go:173-193)."""
     cfg.validate()
-    raw = asdict(cfg)
-    for json_key, attr in _DURATION_FIELDS.items():
-        raw[json_key] = format_duration(raw.pop(attr))
     os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
     with open(path, "w") as fh:
-        json.dump(raw, fh, indent=4, sort_keys=True)
-
-
-def get_spark_from_config(path: str, **kwargs):
-    """One-call bootstrap: config file → tuned SparkSession. Explicit
-    ``extra_conf`` entries passed by the caller win over config-file
-    values, and the caller's dict is never mutated."""
-    from chronobase_spark.session import get_spark
-
-    cfg = load_config(path)
-    merged = dict(cfg.to_spark_conf())
-    merged.update(kwargs.get("extra_conf") or {})
-    kwargs["extra_conf"] = merged
-    return get_spark(**kwargs)
+        json.dump(asdict(cfg), fh, indent=4, sort_keys=True)

@@ -33,7 +33,9 @@ callers.
 from __future__ import annotations
 
 import datetime as dt
+import fcntl
 import json
+import os
 import shutil
 from pathlib import Path
 
@@ -55,7 +57,7 @@ class TableExistsError(KeyError):
 
 
 class DBLockedError(RuntimeError):
-    """Another live process holds the data directory's writer lock."""
+    """Another open facade holds the data directory's writer lock."""
 
 
 class ChronoSpark:
@@ -68,7 +70,7 @@ class ChronoSpark:
         self.spark = spark
         self.root = Path(data_dir)
         self.root.mkdir(parents=True, exist_ok=True)
-        self._lock_held = False
+        self._lock_fh = None
         if lock:
             self._acquire_lock()
         self._discover()
@@ -90,53 +92,34 @@ class ChronoSpark:
     # -- single-writer lock (utils/fileutils.go:236-268) ---------------
 
     def _acquire_lock(self) -> None:
-        """Exclusive-create a pid-stamped lock file, the reference's
-        ``CreateLock`` (O_CREATE|O_EXCL, fileutils.go:242-256). A lock
-        whose recorded pid is no longer alive is stale (crashed writer:
-        the reference leaks the lock in that case and the operator must
-        delete it by hand) — reclaim it automatically. Note this guards
-        *embedded* writers on one host, same as the reference; across a
-        real cluster, writer coordination belongs to the table format.
-        """
-        import os
-
-        path = self.root / self._LOCK
-        for _ in range(3):  # retries after stale-lock reclaim races
-            try:
-                fd = os.open(str(path), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-                os.write(fd, str(os.getpid()).encode())
-                os.close(fd)
-                self._lock_held = True
-                return
-            except FileExistsError:
-                try:
-                    pid = int(path.read_text().strip() or "-1")
-                except (OSError, ValueError):
-                    pid = -1
-                if pid > 0 and _pid_alive(pid):
-                    raise DBLockedError(
-                        f"{self.root} is locked by live pid {pid}"
-                    )
-                # Atomic reclaim: RENAME the stale lock aside before
-                # deleting. rename succeeds for exactly one contender —
-                # a plain unlink here would let a second process delete
-                # a lock the first just re-created (TOCTOU double
-                # acquisition). The loser's rename raises and it simply
-                # retries against whatever lock now exists.
-                claimed = path.with_name(
-                    f"{self._LOCK}.stale.{os.getpid()}"
-                )
-                try:
-                    path.rename(claimed)
-                except OSError:
-                    continue  # someone else reclaimed first — retry
-                claimed.unlink(missing_ok=True)
-        raise DBLockedError(f"could not acquire lock at {path}")
+        """A non-blocking ``fcntl.flock`` on ``.chronospark.lock``, held
+        for the facade's lifetime: the primitive the storage layer's
+        commits use (``maintenance._locked``). The kernel drops it when
+        the process dies, so a crashed writer leaves no stale claim to
+        reclaim (the reference's exclusive-create ``CreateLock``,
+        fileutils.go:242-256, leaks one). The file only records the
+        holder's pid for the error message; it is never unlinked, since
+        unlinking a flock file lets two writers each lock a different
+        inode. This guards *embedded* writers on one host, same as the
+        reference; across a real cluster, writer coordination belongs
+        to the table format."""
+        fh = open(self.root / self._LOCK, "a+")
+        try:
+            fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            fh.seek(0)
+            holder = fh.read().strip() or "?"
+            fh.close()
+            raise DBLockedError(f"{self.root} is locked by pid {holder}") from None
+        fh.truncate(0)
+        fh.write(str(os.getpid()))
+        fh.flush()
+        self._lock_fh = fh
 
     def _release_lock(self) -> None:
-        if self._lock_held:
-            (self.root / self._LOCK).unlink(missing_ok=True)
-            self._lock_held = False
+        if self._lock_fh is not None:
+            self._lock_fh.close()  # drops the flock
+            self._lock_fh = None
 
     def __enter__(self) -> "ChronoSpark":
         return self
@@ -439,15 +422,3 @@ class ChronoSpark:
         itself is caller-owned."""
         self.flush()
         self._release_lock()
-
-
-def _pid_alive(pid: int) -> bool:
-    import os
-
-    try:
-        os.kill(pid, 0)
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-    return True

@@ -42,7 +42,7 @@ def shingles(text: Column, n: int = 3) -> Column:
         # (every i+j is in range by construction of count, and tokens are
         # never NULL/empty, so concat_ws's NULL-skip can't fire — the
         # joined string is bit-identical; proven over every sf table +
-        # adversarial frame in scripts/ab_tokens_r18.py --check).
+        # the adversarial frame in tests/test_dedup.py; r18 family L).
         grams = F.transform(
             F.sequence(F.lit(0), count - 1),
             lambda i: F.concat_ws(" ", *[F.get(tk, i + j) for j in range(n)]),

@@ -386,7 +386,7 @@ def _pq_subvectors(
     slice explode + downstream per-(row, subspace, code) integer
     distance folds serialize on an unsplittable scan (interleaved A/B
     at sf0.1, full pq_assign: 1.92 s → 1.27 s, r17,
-    scripts/ab_spread3_r17.py; semantic_dedup_scaled and topk_cosine
+    OPTIMIZATION_r17.md family E; semantic_dedup_scaled and topk_cosine
     measured spread-neutral-to-negative there and stay unspread)."""
     from chronobase_spark.catalog import spread
 

@@ -31,8 +31,9 @@ def tokens(text: Column) -> Column:
     either way, and leading/trailing separators only contribute empty
     strings, which the filter drops. Bit-identical over every sf
     documents table and an adversarial literal frame (NULL, empty,
-    punctuation-only, unicode whitespace, tabs/newlines —
-    scripts/ab_tokens_r18.py --check, 0 mismatches); the saved
+    punctuation-only, unicode whitespace, tabs/newlines — 0 mismatches,
+    OPTIMIZATION_r18.md family K; tests/test_dedup.py keeps that frame
+    as a regression check); the saved
     regexp_replace is one fewer full pass over every text byte in the
     corpus (interleaved A/B: the shingle map stage −29%)."""
     return F.filter(F.split(F.lower(text), r"[^a-z0-9]+"), lambda t: t != F.lit(""))
@@ -701,7 +702,7 @@ def _doc_bigram_tf(docs, id_col: str, text_col: str):
     Input spread (catalog.spread — identity at scale): the tokenize +
     gram-assembly explode serializes on an unsplittable scan
     (interleaved A/B at sf0.1: 0.58 s → 0.20 s, r17,
-    scripts/ab_spread2_r17.py)."""
+    OPTIMIZATION_r17.md family D)."""
     from chronobase_spark.catalog import spread
 
     docs = spread(docs, key=id_col)
@@ -1146,7 +1147,7 @@ def _dsir_doc_buckets(docs, target_lang: str, id_col: str, text_col: str,
     Input spread (catalog.spread — identity at scale): the bigram
     explode + per-gram md5 bucket serializes on an unsplittable scan
     (interleaved A/B at sf0.1: 0.72 s → 0.26 s, r17,
-    scripts/ab_spread2_r17.py)."""
+    OPTIMIZATION_r17.md family D)."""
     from chronobase_spark.catalog import spread
 
     docs = spread(docs, key=id_col)

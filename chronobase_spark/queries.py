@@ -2757,7 +2757,7 @@ def q_doc_repetition(spark, sf_dir):
     identity at scale): the sort+fold is heavy-CPU map work that
     serializes on an unsplittable scan (interleaved A/B at sf0.1:
     old chain 1.12 s → map-only 0.92 → map-only+spread 0.73, r17,
-    scripts/ab_toptok_r17.py)."""
+    OPTIMIZATION_r17.md family D)."""
     docs = catalog.spread(_t(spark, sf_dir, "documents"), key="doc_id")
     # bind the fold structs under named columns first (the repo's
     # bind-then-project convention: CollapseProject keeps non-cheap
@@ -3372,7 +3372,7 @@ def q_quality_filter_funnel(spark, sf_dir):
     division results, so the oracle splits rows identically (NULL/empty
     text folds to n_tok 0 → too_short, the old join-NULL path). Input
     spread (catalog.spread — identity at scale): the sort+fold
-    serializes on an unsplittable scan (the ab_toptok_r17 A/B)."""
+    serializes on an unsplittable scan (OPTIMIZATION_r17.md family D)."""
     docs = catalog.spread(_t(spark, sf_dir, "documents"), key="doc_id")
     feats = docs.select(
         "lang",
@@ -3445,7 +3445,7 @@ def q_repeated_spans(spark, sf_dir):
     aggregation that AQE can re-balance. Input spread (catalog.spread —
     identity at scale): the per-span md5 map serializes on an
     unsplittable scan (interleaved A/B at sf0.1: 1.06 s → 0.73 s, r17,
-    scripts/ab_spread2_r17.py)."""
+    OPTIMIZATION_r17.md family D)."""
     docs = catalog.spread(_t(spark, sf_dir, "documents"), key="doc_id")
     spans = text.span_hashes("toks", _SPAN_W)
     return (
@@ -7977,7 +7977,7 @@ def q_minhash_lsh_recall(spark, sf_dir):
     the exchanges already dedup). A second r17 sharing attempt — ONE
     persisted shingle table feeding BOTH finders via *_from_shingles
     entry points — measured WORSE the same way (interleaved min-of-5:
-    old 5.33 s / new 6.15 s, scripts/ab_lshrecall_r17.py): the shared
+    old 5.33 s / new 6.15 s, OPTIMIZATION_r17.md family J): the shared
     cache must materialize serially and the truth side then re-reads
     it through three explodes, while the independent finders' two
     tokenize passes overlap across cores as parallel stages. Kept
@@ -8130,7 +8130,7 @@ def q_embedding_dim_cov_topk(spark, sf_dir):
     products/vector on one core, measured 4.1 s vs 1.6 s). The
     dim-stats marginals project off the SAME spread+posexplode
     subtree (one scan; interleaved A/B min-of-5: old 2.21 s → new
-    1.67 s, scripts/ab_dimcov_r17.py). The ORDER is
+    1.67 s, OPTIMIZATION_r17.md family J). The ORDER is
     decided on EXACT decimal/HUGEINT integers (ranking on a rounded
     double could reorder knife-edge ties), then the winning values
     take the string-route to double for output; top-k is a
@@ -9582,7 +9582,7 @@ def q_mad_outliers_approx(spark, sf_dir):
     dev projection, and (via dev) the mad sketch + fence count — the
     r11 plan dump showed 3 FileScans of events and the med_micro
     sketch computed twice with no ReuseExchange across the legs.
-    A/B at sf0.1 (min-of-3 collect path, scripts/ab_mad_approx.py):
+    A/B at sf0.1 (min-of-3 collect path, r12):
     no persist 0.97 s / persist v 0.73 s / persist dev 0.91 s — the
     2-column quantized cache wins and is the lightest footprint at
     100 TB (bigint+string vs dev's extra med/adev columns). Honest

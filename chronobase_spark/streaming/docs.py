@@ -52,7 +52,7 @@ by duplicating a modality.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -68,6 +68,7 @@ from pyspark.sql.types import (
 
 from chronobase_spark.dedup.exact import normalize
 from chronobase_spark.functions import text
+from chronobase_spark.streaming._fold import fold_by_key
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -111,6 +112,26 @@ def _watermarked(
         stream if watermark is None else stream.withWatermark("ingest_ts", watermark)
     )
     return marked, window
+
+
+def _admission_verdict(
+    cand: DataFrame, id_col: str, ok: Column, window: str
+) -> DataFrame:
+    """The near-dup admission verdict, one windowed aggregation per
+    arrival: dup iff ANY candidate verifies (``ok``); canonical = the
+    smallest matched ``cand`` id, NULL when none matched. Three scalars
+    of state per in-flight arrival, watermark-evicted. Arrivals with no
+    candidate row (NULL ``cand``) still get (false, NULL)."""
+    agg = cand.groupBy(F.window("ingest_ts", window), id_col).agg(
+        F.max(F.when(ok, 1).otherwise(0)).alias("_dup"),
+        F.min(F.when(ok, F.col("cand"))).alias("canonical_id"),
+    )
+    return agg.select(
+        "window",
+        id_col,
+        (F.col("_dup") == 1).alias("dup_of_corpus"),
+        "canonical_id",
+    )
 
 
 def quality_gate(
@@ -787,16 +808,7 @@ def minhash_admit_stage(
     ok = F.col("cand").isNotNull() & (
         common * 1_000_000 >= F.lit(thresh_micro) * union
     )
-    agg = cand.groupBy(F.window("ingest_ts", window), "doc_id").agg(
-        F.max(F.when(ok, 1).otherwise(0)).alias("_dup"),
-        F.min(F.when(ok, F.col("cand"))).alias("canonical_id"),
-    )
-    return agg.select(
-        "window",
-        "doc_id",
-        (F.col("_dup") == 1).alias("dup_of_corpus"),
-        "canonical_id",
-    )
+    return _admission_verdict(cand, "doc_id", ok, window)
 
 
 EMB_STREAM_SCHEMA = StructType(
@@ -828,7 +840,7 @@ def semantic_admit_stage(
     num_planes: int = 8,
     min_cosine: float = 0.9,
     round_digits: int = 6,
-    watermark: str = "10 minutes",
+    watermark: str | None = "10 minutes",
     window: str | None = None,
 ) -> DataFrame:
     """Is this ARRIVING embedding semantically near a FROZEN stored
@@ -860,7 +872,8 @@ def semantic_admit_stage(
     should freeze its model with semantic_cell_model_scaled (returns
     (cells, k); pass ``num_planes=k`` here) — the batch scaled
     quantizer's constant-cell-size guarantee applied to intake.
-    ``watermark``/``window`` are independent knobs.
+    ``watermark``/``window`` are independent knobs; ``watermark=None``
+    follows the composed-pipeline contract (``_watermarked``).
 
     A driver-hash-checked batch report twin (the
     near_dup_admission_report shape with the cosine verify) is the
@@ -870,14 +883,13 @@ def semantic_admit_stage(
     from chronobase_spark.dedup.embedding import hyperplanes, lsh_signature
     from chronobase_spark.functions.similarity import cosine_pre, norm
 
-    if window is None:
-        window = watermark
+    marked, window = _watermarked(stream, watermark, window)
     planes = hyperplanes(num_planes)
     # norms projected once per row BELOW the cell join on both sides
     # (r17; similarity.cosine's join-path note): per-arrival and
     # per-stored-row folds instead of per-(arrival, cand) pair —
     # bit-identical verdicts (the drained-equal pins hold unchanged).
-    prepped = stream.withWatermark("ingest_ts", watermark).select(
+    prepped = marked.select(
         "vec_id",
         "ingest_ts",
         F.col(vec_col).alias("vec"),
@@ -899,16 +911,7 @@ def semantic_admit_stage(
         round_digits,
     )
     ok = F.col("cand").isNotNull() & (sim >= min_cosine)
-    agg = cand.groupBy(F.window("ingest_ts", window), "vec_id").agg(
-        F.max(F.when(ok, 1).otherwise(0)).alias("_dup"),
-        F.min(F.when(ok, F.col("cand"))).alias("canonical_id"),
-    )
-    return agg.select(
-        "window",
-        "vec_id",
-        (F.col("_dup") == 1).alias("dup_of_corpus"),
-        "canonical_id",
-    )
+    return _admission_verdict(cand, "vec_id", ok, window)
 
 
 def phash_admit_stage(
@@ -916,7 +919,7 @@ def phash_admit_stage(
     corpus_chunks: DataFrame,
     text_col: str = "text",
     max_hamming: int = 3,
-    watermark: str = "10 minutes",
+    watermark: str | None = "10 minutes",
     window: str | None = None,
 ) -> DataFrame:
     """Is this ARRIVING image a near-dup of the FROZEN corpus? — the
@@ -950,16 +953,17 @@ def phash_admit_stage(
     batch finder excludes; every arrival still gets a verdict (the
     admission contract). Static-side scale levers are
     minhash_admit_stage's (deduped store, larger triggers,
-    pre-bucketing); ``watermark``/``window`` are independent knobs."""
+    pre-bucketing); ``watermark``/``window`` are independent knobs, and
+    ``watermark=None`` follows the composed-pipeline contract
+    (``_watermarked``)."""
     from chronobase_spark.dedup.phash import CHUNKS, MIN_PAYLOAD_BYTES
     from chronobase_spark.functions import multimodal
 
-    if window is None:
-        window = watermark
+    marked, window = _watermarked(stream, watermark, window)
     eligible = F.col(text_col).isNotNull() & (
         F.length(F.encode(text_col, "UTF-8")) >= MIN_PAYLOAD_BYTES
     )
-    with_payload = stream.withWatermark("ingest_ts", watermark).withColumn(
+    with_payload = marked.withColumn(
         "_payload",
         F.when(eligible, multimodal.ppm_payload_col(F.col(text_col))),
     )
@@ -1003,16 +1007,7 @@ def phash_admit_stage(
         for j in range(CHUNKS)
     ).cast("bigint")
     ok = F.col("cand").isNotNull() & (hamming <= max_hamming)
-    agg = cand.groupBy(F.window("ingest_ts", window), "doc_id").agg(
-        F.max(F.when(ok, 1).otherwise(0)).alias("_dup"),
-        F.min(F.when(ok, F.col("cand"))).alias("canonical_id"),
-    )
-    return agg.select(
-        "window",
-        "doc_id",
-        (F.col("_dup") == 1).alias("dup_of_corpus"),
-        "canonical_id",
-    )
+    return _admission_verdict(cand, "doc_id", ok, window)
 
 
 def budget_histogram_stage(
@@ -1203,7 +1198,7 @@ def dsir_admit_stage(
     ratio: DataFrame,
     unseen_micro: int,
     m: float,
-    watermark: str = "10 minutes",
+    watermark: str | None = "10 minutes",
     window: str | None = None,
 ) -> DataFrame:
     """Admit arriving documents under a FROZEN DSIR model trained in
@@ -1235,12 +1230,11 @@ def dsir_admit_stage(
     knobs — the budget_histogram_stage convention; window defaults to
     the watermark so existing callers keep their granularity, but
     tuning lateness no longer silently changes the output window
-    column (r13 advice)."""
-    if window is None:
-        window = watermark
+    column (r13 advice). ``watermark=None`` follows the
+    composed-pipeline contract (``_watermarked``)."""
+    marked, window = _watermarked(stream, watermark, window)
     buckets = (
-        stream.withWatermark("ingest_ts", watermark)
-        .select(
+        marked.select(
             "doc_id",
             "ingest_ts",
             F.explode(text.lm_grams(F.col("text"))).alias("gram"),
@@ -1314,7 +1308,7 @@ def reservoir_admit_stage(
     A-ES: rank by round(ln(u)/w, 6) with the md5-deterministic u, top
     k ARE a weighted sample without replacement), completing the
     selection family's last admission member: a custom BOUNDED-STATE
-    stateful operator (applyInPandasWithState), state = at most k
+    stateful operator (the per-key state fold), state = at most k
     (doc_id, source, wt, wrs_key) rows per window — the reservoir
     itself, nothing corpus-sized.
 
@@ -1337,9 +1331,6 @@ def reservoir_admit_stage(
     (a plain group key — the stateful API needs a flat column);
     watermarking is the sink reader's concern since state is bounded
     by construction."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("window_start", TimestampType()),
@@ -1357,46 +1348,30 @@ def reservoir_admit_stage(
             StructField("keys", ArrayType(DoubleType())),
         ]
     )
+    cols = ["doc_id", "source", "wt", "wrs_key"]
 
-    def update(key, pdfs, state: GroupState):
-        win = key[0]
-        if state.exists:
-            doc_ids, sources, wts, keys = state.get
-            cur = pd.DataFrame(
-                {
-                    "doc_id": doc_ids,
-                    "source": sources,
-                    "wt": wts,
-                    "wrs_key": keys,
-                }
-            )
-        else:
-            cur = pd.DataFrame(
-                columns=["doc_id", "source", "wt", "wrs_key"]
-            )
-        batches = [cur] + [
-            pdf[["doc_id", "source", "wt", "wrs_key"]] for pdf in pdfs
-        ]
-        merged = pd.concat(batches, ignore_index=True)
+    def step(win, pdf, prior):
+        import pandas as pd
+
+        parts = [pdf[cols]]
+        if prior:
+            parts.insert(0, pd.DataFrame(dict(zip(cols, prior))))
         # the batch query's exact cut: key desc, doc_id asc tie-break
         merged = (
-            merged.sort_values(
-                ["wrs_key", "doc_id"], ascending=[False, True]
-            )
+            pd.concat(parts, ignore_index=True)
+            .sort_values(["wrs_key", "doc_id"], ascending=[False, True])
             .drop_duplicates("doc_id")
             .head(k)
         )
-        state.update(
-            (
-                [int(x) for x in merged["doc_id"]],
-                [str(x) for x in merged["source"]],
-                [int(x) for x in merged["wt"]],
-                [float(x) for x in merged["wrs_key"]],
-            )
+        new_state = (
+            [int(x) for x in merged["doc_id"]],
+            [str(x) for x in merged["source"]],
+            [int(x) for x in merged["wt"]],
+            [float(x) for x in merged["wrs_key"]],
         )
         out = merged.copy()
         out.insert(0, "window_start", win)
-        yield out
+        return new_state, out
 
     wt = F.greatest(F.col("n_chars"), F.lit(1)).cast("bigint")
     u = (
@@ -1421,12 +1396,8 @@ def reservoir_admit_stage(
         wt.alias("wt"),
         F.round(F.log(u) / wt, 6).alias("wrs_key"),
     )
-    return keyed.groupBy("window_start").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        keyed, "window_start", step, out_schema, state_schema, "append"
     )
 
 

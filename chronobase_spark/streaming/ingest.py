@@ -27,6 +27,9 @@ maintained by hand (internal/storage/index.go:14-20).
 
 from __future__ import annotations
 
+from decimal import ROUND_HALF_UP, Decimal
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -41,6 +44,7 @@ from pyspark.sql.types import (
 )
 
 from chronobase_spark.streaming import maintenance
+from chronobase_spark.streaming._fold import fold_by_key
 
 EVENT_SCHEMA = StructType(
     [
@@ -138,9 +142,9 @@ def streaming_sessionization(
 
 
 def streaming_user_running_totals(stream: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator via ``applyInPandasWithState``:
-    per-user running (event count, value total), re-emitted on every
-    micro-batch that touches the user.
+    """Custom stateful streaming operator (the per-key state fold,
+    ``streaming._fold``): per-user running (event count, value total),
+    re-emitted on every micro-batch that touches the user.
 
     This is the extension point for stateful logic Spark's built-in
     streaming aggregations can't express (per-key custom accumulators,
@@ -148,9 +152,6 @@ def streaming_user_running_totals(stream: DataFrame) -> DataFrame:
     user_id, partitioned across executors by the groupBy key; batches
     arrive Arrow-vectorized (pandas), never row-at-a-time.
     """
-    import pandas as pd  # local import: only this operator needs pandas
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -162,23 +163,16 @@ def streaming_user_running_totals(stream: DataFrame) -> DataFrame:
         [StructField("n", LongType()), StructField("total", DoubleType())]
     )
 
-    def update(key, pdfs, state: GroupState):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, round(total, 6)))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(total, 6)]}
-        )
+    def step(user_id, pdf, prior):
+        n, total = prior or (0, 0.0)
+        for _, chunk in pdf.groupby(level=0):  # keeps the float summation order
+            n += len(chunk)
+            total += float(chunk["value"].sum())
+        total = round(total, 6)
+        out = {"user_id": [user_id], "n_events": [n], "total_value": [total]}
+        return (n, total), out
 
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return fold_by_key(stream, "user_id", step, out_schema, state_schema, "update")
 
 
 def streaming_user_ewma(stream: DataFrame, alpha: float = 0.5) -> DataFrame:
@@ -186,20 +180,15 @@ def streaming_user_ewma(stream: DataFrame, alpha: float = 0.5) -> DataFrame:
     streaming form of the batch ``ewma_user_value`` recurrence.
 
     State per user is ONE double (the last smoothed value). Each batch
-    sorts its rows by (ts, event_id) and runs the recurrence vectorized
-    (pandas ``ewm(adjust=False)`` seeded by prepending the state value),
-    so arithmetic is identical to the batch fold: with α=0.5 the two
-    agree bit-for-bit. Emits every input row once (append semantics).
+    runs over its rows in (ts, event_id) order, vectorized (pandas
+    ``ewm(adjust=False)`` seeded by prepending the state value), so
+    arithmetic is identical to the batch fold: with α=0.5 the two agree
+    bit-for-bit. Emits every input row once (append semantics).
 
     Ordering contract: the recurrence is order-dependent, so rows must
-    arrive in event-time order ACROSS batches per user (in-batch order
-    is handled here). A source that can deliver late data needs a
-    watermark-buffered variant in front — same trade the reference's
-    in-order memtable insert path assumes implicitly (table.go:78-119).
+    arrive in event-time order ACROSS batches per user; in-batch order
+    is the fold's (``streaming._fold``).
     """
-    import pandas as pd  # local import: only this operator needs pandas
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -211,21 +200,10 @@ def streaming_user_ewma(stream: DataFrame, alpha: float = 0.5) -> DataFrame:
     )
     state_schema = StructType([StructField("prev", DoubleType())])
 
-    def update(key, pdfs, state: GroupState):
-        prev = state.get[0] if state.exists else None
-        # Concatenate the WHOLE micro-batch before sorting: Arrow hands
-        # a group's batch as multiple chunks (split at
-        # maxRecordsPerBatch) with no cross-chunk ordering guarantee —
-        # sorting chunks independently would run the order-dependent
-        # recurrence out of time order for groups spanning chunks.
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(["ts", "event_id"])
-            .reset_index(drop=True)
-        )
+    def step(user_id, pdf, prior):
+        import pandas as pd
+
+        prev = prior[0] if prior else None
         values = pdf["value"].astype("float64")
         if prev is not None:
             seeded = pd.concat(
@@ -240,23 +218,17 @@ def streaming_user_ewma(stream: DataFrame, alpha: float = 0.5) -> DataFrame:
             )
         else:
             ew = values.ewm(alpha=alpha, adjust=False).mean()
-        state.update((float(ew.iloc[-1]),))
-        yield pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "event_id": pdf["event_id"],
-                "ts": pdf["ts"],
-                "value": values,
-                "ewma": ew,
-            }
-        )
+        out = {
+            "user_id": pdf["user_id"],
+            "event_id": pdf["event_id"],
+            "ts": pdf["ts"],
+            "value": values,
+            "ewma": ew,
+        }
+        return (float(ew.iloc[-1]),), out
 
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        stream, "user_id", step, out_schema, state_schema, "append", ordered=True
     )
 
 
@@ -267,18 +239,15 @@ def streaming_counter_rate(stream: DataFrame) -> DataFrame:
     handling).
 
     State per user is ONE (last whole-second timestamp, last value)
-    pair. Each batch sorts its rows by (ts, event_id), seeds the lag
-    series from state, and computes increase (delta, or the raw value on
-    a counter reset) and rate (increase / whole-second gap; NULL for the
-    first-ever sample and for same-second pairs) vectorized — identical
-    arithmetic to the batch window operator, so the two agree exactly.
-    Emits every input row once (append semantics). Same in-order
-    delivery contract as ``streaming_user_ewma``.
+    pair. Each batch takes its rows in (ts, event_id) order, seeds the
+    lag series from state, and computes increase (delta, or the raw
+    value on a counter reset) and rate (increase / whole-second gap;
+    NULL for the first-ever sample and for same-second pairs)
+    vectorized — identical arithmetic to the batch window operator, so
+    the two agree exactly. Emits every input row once (append
+    semantics). Same in-order delivery contract as
+    ``streaming_user_ewma``.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -293,50 +262,33 @@ def streaming_counter_rate(stream: DataFrame) -> DataFrame:
         [StructField("last_sec", LongType()), StructField("last_value", DoubleType())]
     )
 
-    def update(key, pdfs, state: GroupState):
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(["ts", "event_id"])
-            .reset_index(drop=True)
-        )
+    def step(user_id, pdf, prior):
         sec = pdf["ts"].astype("datetime64[ns]").astype("int64") // 1_000_000_000
         vals = pdf["value"].astype("float64")
         prev_v = vals.shift(1)
         prev_s = sec.shift(1).astype("float64")
-        if state.exists:
-            s0, v0 = state.get
-            prev_s.iloc[0], prev_v.iloc[0] = float(s0), float(v0)
+        if prior:
+            prev_s.iloc[0], prev_v.iloc[0] = float(prior[0]), float(prior[1])
         first = prev_v.isna()
         delta = vals - prev_v
-        inc = pd.Series(np.where(delta >= 0, delta, vals), dtype="float64")
-        inc[first] = np.nan
+        inc = delta.where(delta >= 0, vals).mask(first)
         gap = sec - prev_s
-        rate = inc / gap
-        rate[first | (gap <= 0)] = np.nan
-        state.update((int(sec.iloc[-1]), float(vals.iloc[-1])))
+        rate = (inc / gap).mask(first | (gap <= 0))
         # NaN would surface as a double NaN, not SQL NULL — emit object
         # columns with None so the sink schema carries real NULLs like
         # the batch operator.
-        yield pd.DataFrame(
-            {
-                "user_id": pdf["user_id"],
-                "event_id": pdf["event_id"],
-                "ts": pdf["ts"],
-                "value": vals,
-                "increase": inc.astype(object).where(inc.notna(), None),
-                "rate_per_s": rate.astype(object).where(rate.notna(), None),
-            }
-        )
+        out = {
+            "user_id": pdf["user_id"],
+            "event_id": pdf["event_id"],
+            "ts": pdf["ts"],
+            "value": vals,
+            "increase": inc.astype(object).where(inc.notna(), None),
+            "rate_per_s": rate.astype(object).where(rate.notna(), None),
+        }
+        return (int(sec.iloc[-1]), float(vals.iloc[-1])), out
 
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        stream, "user_id", step, out_schema, state_schema, "append", ordered=True
     )
 
 
@@ -488,10 +440,6 @@ def streaming_value_trend(stream: DataFrame) -> DataFrame:
     the last emitted row per type equals the batch result EXACTLY
     (pinned in tests/test_streaming.py). Emits the updated trend per
     touched type per batch (update semantics)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("event_type", StringType()),
@@ -511,25 +459,22 @@ def streaming_value_trend(stream: DataFrame) -> DataFrame:
     )
     origin_us = 1_704_067_200_000_000  # TIMESTAMP '2024-01-01' in µs
 
-    def update(key, pdfs, state: GroupState):
-        if state.exists:
-            n, sx, sy, sxx_s, sxy_s = state.get
+    def step(event_type, pdf, prior):
+        if prior:
+            n, sx, sy, sxx_s, sxy_s = prior
             sxx, sxy = int(sxx_s), int(sxy_s)
         else:
             n, sx, sy, sxx, sxy = 0, 0, 0, 0, 0
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            us = pdf["ts"].astype("datetime64[ns]").astype("int64") // 1000
+        for _, chunk in pdf.groupby(level=0):  # int64 partial sums per chunk
+            us = chunk["ts"].astype("datetime64[ns]").astype("int64") // 1000
             xs = (us - origin_us) // 1_000_000
-            v6 = pdf["value"].astype("float64") * 1e6
+            v6 = chunk["value"].astype("float64") * 1e6
             yu = (np.sign(v6) * np.floor(np.abs(v6) + 0.5)).astype("int64")
-            n += int(len(pdf))
+            n += int(len(chunk))
             sx += int(xs.sum())
             sy += int(yu.sum())
             sxx += int((xs * xs).sum())
             sxy += int((xs * yu).sum())
-        state.update((n, sx, sy, str(sxx), str(sxy)))
         nf, sxf, syf = float(n), float(sx), float(sy)
         sxxf, sxyf = float(sxx), float(sxy)
         den = nf * sxxf - sxf * sxf
@@ -538,21 +483,16 @@ def streaming_value_trend(stream: DataFrame) -> DataFrame:
             intercept = (syf - slope * sxf) / nf
         else:
             slope = intercept = None
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_events": [n],
-                "slope_uv_per_s": [slope],
-                "intercept_uv": [intercept],
-            }
-        )
+        out = {
+            "event_type": [event_type],
+            "n_events": [n],
+            "slope_uv_per_s": [slope],
+            "intercept_uv": [intercept],
+        }
+        return (n, sx, sy, str(sxx), str(sxy)), out
 
-    return stream.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        stream, "event_type", step, out_schema, state_schema, "update"
     )
 
 
@@ -591,7 +531,7 @@ def streaming_event_transitions(stream: DataFrame) -> DataFrame:
     next_type) yields the transition matrix.
 
     State per user is ONE string: the latest event_type in (ts,
-    event_id) order. Each batch sorts its rows, seeds the lag from
+    event_id) order. Each batch, in that order, seeds the lag from
     state, emits one (prev_type, next_type) row per consecutive pair
     (NULL-typed events break the chain exactly as the batch filter
     drops them), and stores the last type — the same in-order delivery
@@ -599,9 +539,6 @@ def streaming_event_transitions(stream: DataFrame) -> DataFrame:
     emitted pairs equal the batch lag window exactly (pinned in
     tests/test_streaming.py).
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -611,38 +548,24 @@ def streaming_event_transitions(stream: DataFrame) -> DataFrame:
     )
     state_schema = StructType([StructField("last_type", StringType())])
 
-    def update(key, pdfs, state: GroupState):
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .sort_values(["ts", "event_id"])
-            .reset_index(drop=True)
-        )
+    def step(user_id, pdf, prior):
         types = pdf["event_type"]
         prev = types.shift(1)
-        if state.exists:
-            (t0,) = state.get
-            prev.iloc[0] = t0
+        if prior:
+            prev.iloc[0] = prior[0]
         keep = prev.notna() & types.notna()
         # the state is the LITERAL last type, NULL included: the batch
         # lag carries NULLs through (a NULL type breaks the chain on
         # both sides of it), so remembering the last non-null type
         # would invent an A->B pair across a NULL at a batch boundary
-        last = types.iloc[-1]
-        state.update((str(last) if pd.notna(last) else None,))
+        last = None if types.isna().iloc[-1] else str(types.iloc[-1])
         out = pdf.loc[keep, ["user_id"]].copy()
         out["prev_type"] = prev[keep]
         out["next_type"] = types[keep]
-        yield out
+        return (last,), out
 
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        stream, "user_id", step, out_schema, state_schema, "append", ordered=True
     )
 
 
@@ -658,7 +581,7 @@ def streaming_user_holt(
     forever, and the daily reset means a user idle past midnight
     simply re-anchors on their next event (no unbounded drift in the
     state's relevance). Each batch drops NULL observations (matching
-    the batch null contract), sorts by (ts, event_id), and runs the
+    the batch null contract) and, in (ts, event_id) order, runs the
     recurrence row-wise with the IDENTICAL floating-point operation
     tree as the batch fold (α·v + (1-α)·(l+b); β·(l'−l) + (1-β)·b) —
     with α = β = 0.5 every coefficient multiply is a power of two, so
@@ -666,12 +589,9 @@ def streaming_user_holt(
     (pinned in tests/test_streaming.py).
 
     Ordering contract: in-order event-time delivery per user across
-    batches (in-batch order handled here) — the streaming_user_ewma /
+    batches (in-batch order is the fold's) — the streaming_user_ewma /
     streaming_counter_rate contract.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("user_id", LongType()),
@@ -691,22 +611,14 @@ def streaming_user_holt(
     )
     a, be = float(alpha), float(beta)
 
-    def update(key, pdfs, state: GroupState):
-        day_ns, l, b = state.get if state.exists else (None, None, None)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .dropna(subset=["value"])
-            .sort_values(["ts", "event_id"])
-            .reset_index(drop=True)
-        )
+    def step(user_id, pdf, prior):
+        day_ns, l, b = prior or (None, None, None)
+        pdf = pdf.dropna(subset=["value"])
         if not len(pdf):
-            return
+            return None
         levels, trends = [], []
         for ts, v in zip(pdf["ts"], pdf["value"].astype("float64")):
-            d = pd.Timestamp(ts).normalize().value
+            d = ts.normalize().value
             if day_ns is None or d != day_ns:
                 l, b = float(v), 0.0
             else:
@@ -716,18 +628,13 @@ def streaming_user_holt(
             day_ns = d
             levels.append(l)
             trends.append(b)
-        state.update((int(day_ns), float(l), float(b)))
         out = pdf[["user_id", "event_id", "ts", "value"]].copy()
         out["level"] = levels
         out["trend"] = trends
-        yield out
+        return (int(day_ns), float(l), float(b)), out
 
-    return stream.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        stream, "user_id", step, out_schema, state_schema, "append", ordered=True
     )
 
 
@@ -752,11 +659,8 @@ def streaming_cusum_alarms(
     State per event_type is ONE (day_ns, s, idx) triple — 24 bytes
     forever, reset at midnight like streaming_user_holt. Ordering
     contract: in-order event-time delivery per key across batches
-    (in-batch order handled here) — the streaming_user_ewma contract.
+    (in-batch order is the fold's) — the streaming_user_ewma contract.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = StructType(
         [
             StructField("event_type", StringType()),
@@ -776,24 +680,14 @@ def streaming_cusum_alarms(
     )
     k_ref, h = int(k_ref_micro), int(h_micro)
 
-    def update(key, pdfs, state: GroupState):
-        from decimal import ROUND_HALF_UP, Decimal
-
-        day_ns, s, idx = state.get if state.exists else (None, 0, 0)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        if not chunks:
-            return
-        pdf = (
-            pd.concat(chunks, ignore_index=True)
-            .dropna(subset=["value"])
-            .sort_values(["ts", "event_id"])
-            .reset_index(drop=True)
-        )
+    def step(event_type, pdf, prior):
+        day_ns, s, idx = prior or (None, 0, 0)
+        pdf = pdf.dropna(subset=["value"])
         if not len(pdf):
-            return
+            return None
         idxs, sums, alarms = [], [], []
         for ts, v in zip(pdf["ts"], pdf["value"].astype("float64")):
-            d = pd.Timestamp(ts).normalize().value
+            d = ts.normalize().value
             if day_ns is None or d != day_ns:
                 day_ns, s, idx = d, 0, 0
             x = int(
@@ -806,19 +700,14 @@ def streaming_cusum_alarms(
             idxs.append(idx)
             sums.append(s)
             alarms.append(s > h)
-        state.update((int(day_ns), int(s), int(idx)))
         out = pdf[["event_type", "event_id", "ts"]].copy()
         out["idx"] = idxs
         out["cusum_micro"] = sums
         out["alarm"] = alarms
-        yield out
+        return (int(day_ns), int(s), int(idx)), out
 
-    return stream.groupBy("event_type").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return fold_by_key(
+        stream, "event_type", step, out_schema, state_schema, "append", ordered=True
     )
 
 

@@ -51,7 +51,7 @@ INTENTIONAL: dict[str, tuple[int, str]] = {
         12,
         "r12: 2-column quantized projection persisted so the corpus is "
         "read ONCE instead of 3x — a measured +0.24 s at sf0.1 noop-sink "
-        "(scripts/ab_mad_approx.py A/B in the docstring) accepted because "
+        "(A/B in the mad_outliers_approx docstring) accepted because "
         "scan count, not local-mode wall, is the binding variable at "
         "100 TB; expired the moment BENCH_r12.json recorded the new level",
     ),

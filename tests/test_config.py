@@ -13,32 +13,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from chronobase_spark.config import (  # noqa: E402
     EngineConfig,
-    format_duration,
     load_config,
-    parse_duration,
     save_config,
 )
-
-
-def test_parse_duration_go_style():
-    assert parse_duration("10m") == 600.0
-    assert parse_duration("1h30m") == 5400.0
-    assert parse_duration("45s") == 45.0
-    assert parse_duration("250ms") == 0.25
-    assert parse_duration(90) == 90.0
-    with pytest.raises(ValueError):
-        parse_duration("10 parsecs")
-
-
-def test_format_duration_round_trips():
-    for s in (600.0, 5400.0, 45.0, 86400.0):
-        assert parse_duration(format_duration(s)) == s
 
 
 def test_round_trip(tmp_path):
     cfg = EngineConfig(
         data_dir="/data/chrono",
-        flush_interval_s=120.0,
+        block_size=64 * 1024 * 1024,
         query_concurrency=64,
         compression_type="zstd",
         extra_spark_conf={"spark.sql.adaptive.enabled": "true"},
@@ -53,19 +36,26 @@ def test_defaults_applied_and_unknown_keys_ignored(tmp_path):
     path = str(tmp_path / "partial.json")
     with open(path, "w") as fh:
         json.dump(
-            {"data_dir": "/x", "flush_interval": "5m", "some_future_knob": 1}, fh
+            {
+                "data_dir": "/x",
+                "compression_level": 5,
+                "flush_interval": "5m",  # a reference knob with no reader
+                "some_future_knob": 1,
+            },
+            fh,
         )
     cfg = load_config(path)
     assert cfg.data_dir == "/x"
-    assert cfg.flush_interval_s == 300.0
+    assert cfg.compression_level == 5
     assert cfg.query_concurrency == EngineConfig().query_concurrency
+    assert not hasattr(cfg, "flush_interval")
 
 
 def test_validation_rejects_bad_values(tmp_path):
     path = str(tmp_path / "bad.json")
     with open(path, "w") as fh:
-        json.dump({"max_tablet_size": -1}, fh)
-    with pytest.raises(ValueError, match="max_tablet_size"):
+        json.dump({"block_size": -1}, fh)
+    with pytest.raises(ValueError, match="block_size"):
         load_config(path)
     with open(path, "w") as fh:
         json.dump({"compression_type": "brotli9000"}, fh)

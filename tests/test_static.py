@@ -248,3 +248,21 @@ def test_no_broadcast_of_unfiltered_sf_proportional_tables():
         "autoBroadcast decide — rule per commit 2e89033):\n"
         + "\n".join(bad)
     )
+
+
+def test_apply_in_pandas_with_state_has_one_caller():
+    """Every custom stateful streaming operator goes through the one
+    per-key state fold (streaming/_fold.py), which owns the call, its
+    imports and the whole-batch (ts, event_id) ordering contract. A
+    second caller would fork that idiom again."""
+    callers = []
+    for p in glob.glob(os.path.join(REPO, "chronobase_spark/**/*.py"), recursive=True):
+        for node in ast.walk(ast.parse(open(p).read())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "applyInPandasWithState"
+            ):
+                callers.append(f"{os.path.relpath(p, REPO)}:{node.lineno}")
+    assert len(callers) == 1, callers
+    assert callers[0].startswith("chronobase_spark/streaming/_fold.py:"), callers

@@ -2494,6 +2494,118 @@ def test_streaming_phash_admit_matches_batch_pairs(spark, tmp_path):
     corpus_chunks.unpersist()
 
 
+def _drain_composed_and_alone(spark, tmp_path, arrivals, stage, id_col):
+    """Drain ``stage`` over ``arrivals`` twice: alone (its own default
+    watermark) and composed after ``content_dedup``, which defines the
+    watermark, so the stage gets ``watermark=None`` and an explicit
+    window. Returns ({id: row} alone, {id: row} composed, number of
+    distinct content fingerprints among the arrivals)."""
+    from chronobase_spark.dedup.exact import normalize
+    from chronobase_spark.streaming import docs as docstream
+
+    src = str(tmp_path / "cmp_src")
+    arrivals.repartition(3).write.parquet(src)
+    out = []
+    for name, staged in (
+        ("alone", stage(docstream.read_document_stream(spark, src), {})),
+        (
+            "composed",
+            stage(
+                docstream.content_dedup(docstream.read_document_stream(spark, src)),
+                {"watermark": None, "window": "10 minutes"},
+            ),
+        ),
+    ):
+        q = (
+            staged.writeStream.format("parquet")
+            .option("path", str(tmp_path / f"sink_{name}"))
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(180)
+        out.append(
+            {
+                r[id_col]: r.asDict()
+                for r in spark.read.parquet(str(tmp_path / f"sink_{name}")).collect()
+            }
+        )
+    n_content = (
+        arrivals.select(F.xxhash64(normalize(F.col("text"))).alias("fp"))
+        .distinct()
+        .count()
+    )
+    return out[0], out[1], n_content
+
+
+def test_phash_admit_composed_after_content_dedup(spark, tmp_path):
+    """phash_admit_stage composed after content_dedup (watermark=None,
+    explicit window) drains to the same verdicts as the stage on its
+    own, for every arrival that survives the content dedup. Also
+    dsir_admit_stage, the other stage that used to define its own
+    watermark unconditionally."""
+    from chronobase_spark.dedup import phash
+    from chronobase_spark.functions import text as textf
+    from chronobase_spark.streaming import docs as docstream
+
+    FLUSH = 999990
+    flush = spark.createDataFrame(
+        [(FLUSH, "flush row", "xx", "synthetic", 9, 10_000_000)],
+        "doc_id long, text string, lang string, source string,"
+        " n_chars long, off long",
+    ).select(
+        "doc_id", "text", "lang", "source", "n_chars",
+        F.timestamp_seconds(F.lit(1700000000) + F.col("off")).alias("ingest_ts"),
+    )
+
+    def stamped(df):
+        return df.withColumn(
+            "ingest_ts", F.timestamp_seconds(F.lit(1700000000) + F.col("doc_id"))
+        )
+
+    base = catalog.table(spark, SF_SMOKE, "documents").filter(
+        F.col("text").isNotNull()
+        & (F.length(F.encode("text", "UTF-8")) >= phash.MIN_PAYLOAD_BYTES)
+    )
+    fresh_ids = {r["doc_b"] for r in phash.phash_near_pairs(base).collect()}
+    assert fresh_ids, "fixture must contain phash near-dup pairs"
+    chunks = phash.phash_band_model(base.filter(~F.col("doc_id").isin(*fresh_ids)))
+    alone, composed, n_content = _drain_composed_and_alone(
+        spark,
+        tmp_path / "phash",
+        stamped(base.filter(F.col("doc_id").isin(*fresh_ids))).unionByName(flush),
+        lambda s, wm: docstream.phash_admit_stage(s, chunks, **wm),
+        "doc_id",
+    )
+    chunks.unpersist()
+    alone.pop(FLUSH, None)  # the flush row's far-future window never closes
+    composed.pop(FLUSH, None)
+    verdict = lambda r: (r["dup_of_corpus"], r["canonical_id"])  # noqa: E731
+    assert len(composed) == n_content - 1 and set(composed) <= set(alone)
+    assert {d: verdict(r) for d, r in composed.items()} == {
+        d: verdict(alone[d]) for d in composed
+    }
+    assert any(r["dup_of_corpus"] for r in composed.values())
+
+    docs = stamped(catalog.table(spark, SF_SMOKE, "documents").limit(40))
+    ratio, unseen_micro, m = textf.dsir_model(docs)
+    alone, composed, n_content = _drain_composed_and_alone(
+        spark,
+        tmp_path / "dsir",
+        docs.unionByName(flush),
+        lambda s, wm: docstream.dsir_admit_stage(s, ratio, unseen_micro, m, **wm),
+        "doc_id",
+    )
+    alone.pop(FLUSH, None)
+    composed.pop(FLUSH, None)
+    score = lambda r: (r["n_grams"], r["w_micro"], r["accepted"])  # noqa: E731
+    assert composed and set(composed) <= set(alone)
+    assert {d: score(r) for d, r in composed.items()} == {
+        d: score(alone[d]) for d in composed
+    }
+
+
 def test_streaming_semantic_admit_matches_batch_pairs(spark, tmp_path):
     """Stream-static semantic admission (semantic_admit_stage): drained
     verdicts over a fresh×frozen embedding split must equal the batch
