@@ -2699,11 +2699,10 @@ def q_dup_clusters(spark, sf_dir):
     from chronobase_spark.dedup import cluster
 
     docs = _t(spark, sf_dir, "documents")
-    # persist: the CC stage references the pair list from every round's
-    # lineage and the symmetrization union references it twice —
-    # measured 2x faster end-to-end than recomputing the Jaccard
-    # pipeline under the iteration. At 100 TB the pairs WOULD be a
-    # materialized table between the two stages.
+    # persist: the CC's symmetrization union reads the pair list twice
+    # in the one job that materializes its edge list; no later round
+    # reads it again. At 100 TB the pairs WOULD be a materialized table
+    # between the two stages.
     pairs = (
         ngram.jaccard_pairs(docs, threshold=0.5, max_df=50)
         .select("doc_a", "doc_b")
@@ -8867,9 +8866,10 @@ def q_leakage_safe_split(spark, sf_dir):
     hash-checked cross-engine, including the recursive-CTE oracle for
     the transitive closure.
 
-    Scale shape: inherits dup_clusters' CC posture (edges persisted,
-    per-round join + min-aggregate, scalar-only driver traffic); the
-    split expressions are map-only md5 nibbles; the final form is two
+    Scale shape: inherits dup_clusters' CC posture (edge list
+    materialized once, per-round join + min-aggregate on checkpointed
+    labels, scalar-only driver traffic); the split expressions are
+    map-only md5 nibbles; the final form is two
     doc_id-keyed equi-joins (cluster table ⋈ split table twice — the
     second keyed on cluster_id, whose values ARE doc ids)."""
     from chronobase_spark.dedup import cluster

@@ -176,7 +176,10 @@ def compact_partition(
 ) -> int:
     """Rewrite one partition into a single sorted file (reference merge,
     table.go:240-331, minus its pairwise restart loop). Returns the row
-    count compacted."""
+    count compacted, read from the staged file's Parquet footer rather
+    than by a separate counting job."""
+    import pyarrow.parquet as pq
+
     root = Path(table_dir)
     part = root / f"{PARTITION_COL}={partition_value}"
     staged = root / f"{_NEW}{part.name}"
@@ -186,13 +189,13 @@ def compact_partition(
         if not part.exists():
             return 0
         df = spark.read.parquet(str(part))
-        n = df.count()
         (
             df.repartition(1)
             .sortWithinPartitions(*_sort_key(df.columns))
             .write.mode("overwrite")
             .parquet(str(staged))
         )
+        n = sum(pq.read_metadata(f).num_rows for f in staged.glob("[!._]*.parquet"))
         _swap(part, staged)
     return n
 

@@ -102,6 +102,40 @@ def test_connected_components_matches_union_find(spark):
     }
     assert got == want
 
+    empty = cluster.connected_components(
+        spark.createDataFrame([], "doc_a long, doc_b long")
+    )
+    assert empty.columns == ["id", "label"] and empty.count() == 0
+
+
+def test_connected_components_plan_size_is_independent_of_diameter(spark):
+    """Each round's labels refer to the previous generation twice (union
+    side and join side), so an untruncated plan doubles per round and
+    analysis time grows exponentially with the path length. The
+    returned frame's logical plan must have one size whatever the round
+    count and whatever the lineage of the input edges; a 12-hop path
+    then converges within the default ``max_iter`` to label 0."""
+    from chronobase_spark.dedup import cluster
+
+    def path(hops):
+        # the longer path also gets a longer input lineage
+        e = spark.createDataFrame(
+            [(i, i + 1) for i in range(hops)], "doc_a long, doc_b long"
+        )
+        return e if hops == 2 else e.filter("doc_a >= 0").union(e.limit(1))
+
+    def plan_lines(df):
+        return len(df._jdf.queryExecution().logical().toString().splitlines())
+
+    sizes = {}
+    for hops in (2, 5, 12):
+        labels = cluster.connected_components(path(hops))
+        sizes[hops] = plan_lines(labels)
+        assert len(set(sizes.values())) == 1, f"plan lines by hop count: {sizes}"
+        rows = labels.collect()
+        assert len(rows) == hops + 1
+        assert all(r["label"] == 0 for r in rows)
+
 
 def test_lsh_candidates_rejects_short_signatures(spark, docs):
     """A signature shorter than bands x rows_per_band must raise, not
