@@ -30,7 +30,7 @@ Scale shape (canopy blocking, the standard entity-resolution trick):
 At 100 TB the canopy join shuffles on (lang, prefix) — a high-card
 key family with bounded group sizes — and carries shuffle_hash hints
 on both corpus-derived sides so a stats misestimate can never promote
-one to a broadcast (the LSH-pipeline rule, dedup/minhash.py).
+one to a broadcast (the band-join rule, dedup/_bands.py).
 
 Reference parity: the reference has no text operators at all (its
 Data is opaque bytes, row.go:6-10); this extends the §2.4 dedup
@@ -41,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from chronobase_spark.dedup._bands import band_join
 
 
 def levenshtein_near_pairs(
@@ -65,13 +67,8 @@ def levenshtein_near_pairs(
         F.substring(F.col(text_col), 1, prefix_len).alias("pre"),
         F.length(F.col(text_col)).alias("len"),
     )
-    a = docs.alias("a")
-    # both sides corpus-sized: never let stats broadcast one (minhash.py)
-    b = docs.hint("shuffle_hash").alias("b")
-    cand = a.join(
-        b,
-        (F.col("a.lang") == F.col("b.lang")) & (F.col("a.pre") == F.col("b.pre")),
-    )
+    # two-frame form: the a.doc < b.doc test lives in the DP guard below
+    cand = band_join(docs, docs, keys=("lang", "pre"))
     mx = F.greatest(F.col("a.len"), F.col("b.len")).cast("double")
     budget = F.lit(rel_threshold) * mx
     gap = (F.col("a.len") - F.col("b.len")).cast("double")

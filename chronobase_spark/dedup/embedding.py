@@ -23,6 +23,7 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from chronobase_spark.dedup._bands import band_join
 from chronobase_spark.functions.similarity import cosine_pre
 from chronobase_spark.functions.similarity import norm as _sim_norm
 
@@ -91,8 +92,6 @@ def bucketed_near_pairs(
         lsh_signature(F.col(vec_col), planes).alias("bucket"),
         _sim_norm(F.col(vec_col)).alias("nrm"),
     ).persist()
-    # shuffle-hash: self-join sides are corpus-sized (see minhash.py)
-    a, b = sig.alias("a"), sig.hint("shuffle_hash").alias("b")
     sim = F.round(
         cosine_pre(
             F.col("a.vec"), F.col("b.vec"), F.col("a.nrm"), F.col("b.nrm")
@@ -100,11 +99,7 @@ def bucketed_near_pairs(
         round_digits,
     )
     return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
+        band_join(sig, keys=("bucket",), id_col="vid")
         .select(
             F.col("a.vid").alias("vec_a"),
             F.col("b.vid").alias("vec_b"),
@@ -178,8 +173,9 @@ def ivf_pq_topk(
 
     Scale posture: the cell candidate set is corpus/2^num_planes — it
     GROWS with the corpus, so it is semi-joined on the id key with a
-    shuffle_hash hint (never broadcast; the LSH-pipeline rule). The
-    only broadcasts are the 1-row probe bucket and the m·|codes| LUT.
+    shuffle_hash hint (never broadcast; the band-join rule of
+    dedup/_bands.py). The only broadcasts are the 1-row probe bucket
+    and the m·|codes| LUT.
     Codebooks are trained on the FULL corpus (assignment quality must
     not depend on which cell a vector routed to). Integer-exact ADC
     sums + deterministic signature literals ⇒ fully oracle-checkable.
@@ -394,7 +390,6 @@ def _dedup_assign(
     # the same bit-identical doubles; measured −20% on
     # semantic_dedup_scaled at sf0.1, 0 result changes).
     sig = sig.withColumn("_nrm", _sim_norm(F.col("vec"))).persist()
-    a, b = sig.alias("a"), sig.hint("shuffle_hash").alias("b")
     sim = F.round(
         cosine_pre(
             F.col("a.vec"), F.col("b.vec"), F.col("a._nrm"), F.col("b._nrm")
@@ -402,11 +397,7 @@ def _dedup_assign(
         round_digits,
     )
     drops = (
-        a.join(
-            b,
-            (F.col("a.cell") == F.col("b.cell"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
+        band_join(sig, keys=("cell",), id_col="vid")
         .filter(sim >= min_cosine)
         .select(F.col("b.vid").alias("vid"))
         .distinct()

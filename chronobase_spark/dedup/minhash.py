@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from chronobase_spark.catalog import spread
+from chronobase_spark.dedup._bands import band_join, jaccard_sizes, with_shingles
 from chronobase_spark.dedup.ngram import shingles
 
 
@@ -60,18 +61,24 @@ def minhash_signature(
     Docs with no shingles get no signature (dropped — they cannot be
     near-duplicates of anything).
     """
-    exploded = (
+    return _xxhash_lanes(
         df.select(
             F.col(id_col).alias("doc"),
             F.explode(shingles(F.col(text_col), n)).alias("_g"),
-        )
-        .select("doc", F.xxhash64("_g").alias("_h"))
+        ),
+        num_perm,
     )
+
+
+def _xxhash_lanes(grams: DataFrame, num_perm: int) -> DataFrame:
+    """(doc, sig) from (doc, _g) shingle rows: ONE xxhash64 per shingle,
+    then num_perm min-lanes, lane i = min(xxhash64(base_hash, i))."""
+    hashed = grams.select("doc", F.xxhash64("_g").alias("_h"))
     lanes = [
         F.min(F.xxhash64("_h", F.lit(i))).alias(f"_l{i}") for i in range(num_perm)
     ]
     return (
-        exploded.groupBy("doc")
+        hashed.groupBy("doc")
         .agg(*lanes)
         .select("doc", F.array(*[f"_l{i}" for i in range(num_perm)]).alias("sig"))
     )
@@ -128,17 +135,13 @@ def lsh_candidates(
             )
         ).alias("band"),
     ).select("doc", "band.band_id", "band.band_val")
-    # SHUFFLE_HASH hint: both sides of the band self-join are corpus-
-    # sized; a stats misestimate must never pick broadcast (measured
-    # driver OOM at 16x corpus), and sort-merge would pay a useless sort.
-    a, b = banded.alias("a"), banded.hint("shuffle_hash").alias("b")
+    return _pairs(banded)
+
+
+def _pairs(banded: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b) pairs sharing a band of ``banded``."""
     return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+        band_join(banded)
         .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
         .distinct()
     )
@@ -373,38 +376,11 @@ def minhash_md5_pairs(
     the corpus independently (one redundant text scan + spread shuffle
     per invocation; plan diff: two parquet scans of documents → one)."""
     sh = shingle_table(df, text_col, id_col, n).persist()
-    banded = md5_band_table_from_shingles(sh, bands, rows_per_band)
-    a = banded.alias("a")
-    b = banded.hint("shuffle_hash").alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    sa = sh.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a")).hint(
-        "shuffle_hash"
-    )
-    sb = sh.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b")).hint(
-        "shuffle_hash"
-    )
+    cands = _pairs(md5_band_table_from_shingles(sh, bands, rows_per_band))
     thresh_micro = int(round(threshold * 1_000_000))
-    common = F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint")
-    # |A ∪ B| = |A| + |B| − |A ∩ B|: exact on the distinct shingle
-    # arrays (shingles() ends in array_distinct), and array length is
-    # O(1) where array_union is a second O(|A|+|B|) hash-set pass per
-    # candidate pair (r17, guide §1.2 per-task work; same integers, so
-    # the threshold gate and the reported jaccard are bit-identical).
-    union = (
-        F.size("sh_a").cast("bigint") + F.size("sh_b").cast("bigint") - F.col("_c")
-    )
+    common, union = jaccard_sizes("sh_a", "sh_b", F.col("_c"))
     return (
-        cands.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        with_shingles(cands, sh)
         .withColumn("_c", common)
         .withColumn("_u", union)
         .filter(F.col("_c") * 1_000_000 >= F.lit(thresh_micro) * F.col("_u"))
@@ -447,47 +423,19 @@ def minhash_dedup_pairs(
     well-split 100 TB scans, parallelizing only unsplittable local
     files)."""
     sh = shingle_table(df, text_col, id_col, n).persist()
-    exploded = sh.select("doc", F.explode("sh").alias("_g")).select(
-        "doc", F.xxhash64("_g").alias("_h")
-    )
-    lanes = [
-        F.min(F.xxhash64("_h", F.lit(i))).alias(f"_l{i}") for i in range(num_perm)
-    ]
-    sigs = (
-        exploded.groupBy("doc")
-        .agg(*lanes)
-        .select("doc", F.array(*[f"_l{i}" for i in range(num_perm)]).alias("sig"))
-        .persist()
-    )
+    sigs = _xxhash_lanes(
+        sh.select("doc", F.explode("sh").alias("_g")), num_perm
+    ).persist()
     cands = lsh_candidates(sigs, bands, rows_per_band)
-    # shuffle_hash on the shingle sides: both are corpus-sized arrays and a
-    # Catalyst stats misestimate must never broadcast them (same failure
-    # class as the measured band-join OOM at 16x — see SCALING.md). The
-    # hinted side becomes the per-partition hash build; shingle rows per
-    # partition are corpus/P, bounded, while a broadcast is corpus-total.
-    a = sh.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a")).hint(
-        "shuffle_hash"
-    )
-    b = sh.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b")).hint(
-        "shuffle_hash"
-    )
-    verified = (
-        cands.join(a, "doc_a")
-        .join(b, "doc_b")
-        # union via |A|+|B|−|A∩B| (distinct arrays — see
-        # minhash_md5_pairs): one array pass per pair, not two;
-        # identical quotient, so the rounded jaccard is unchanged.
-        # _c bound as its own column so the intersect runs once.
-        .withColumn("_c", F.size(F.array_intersect("sh_a", "sh_b")))
+    # _c bound as its own column so the intersect runs once.
+    common, union = jaccard_sizes("sh_a", "sh_b", F.col("_c"), dtype=None)
+    return (
+        with_shingles(cands, sh)
+        .withColumn("_c", common)
         .withColumn(
             "jaccard",
-            F.round(
-                F.col("_c").cast("double")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("_c")).cast("double"),
-                6,
-            ),
+            F.round(F.col("_c").cast("double") / union.cast("double"), 6),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    return verified

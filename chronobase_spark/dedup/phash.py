@@ -8,14 +8,13 @@ numpy pooling), so payloads that differ in a few pixels land within a
 small Hamming distance, exactly the image-dedup primitive a pretraining
 media pipeline runs (pHash/dHash over thumbnails).
 
-Candidate generation reuses the chunk-LSH pigeonhole of
-dedup.simhash.simhash_md5_near_pairs: four 16-bit signature chunks,
-group-join on any shared chunk, verify exact Hamming ≤ 3 — any pair
-within distance 3 shares at least one identical chunk, so the banded
-result EQUALS the brute-force all-pairs result (pinned in
-tests/test_dedup.py) while staying sub-quadratic. Kept as its own
-pipeline rather than a shared helper with simhash so neither family's
-recorded driver evidence is invalidated by refactors of the other.
+Candidate generation is the chunk-LSH pigeonhole of
+dedup.simhash.simhash_md5_near_pairs, through the same dedup._bands
+helpers: four 16-bit signature chunks, group-join on any shared chunk,
+verify exact Hamming ≤ 3 — any pair within distance 3 shares at least
+one identical chunk, so the banded result EQUALS the brute-force
+all-pairs result (pinned in tests/test_dedup.py) while staying
+sub-quadratic.
 
 Everything is deterministic integer math (no engine-internal hashing),
 so the full pipeline — decode, pooling, bits, band join, Hamming verify
@@ -34,6 +33,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chronobase_spark.dedup._bands import (
+    CHUNK_KEYS,
+    band_join,
+    chunk_bands,
+    chunk_hamming,
+)
 from chronobase_spark.functions import multimodal
 
 CHUNKS = 4
@@ -60,23 +65,12 @@ def dhash_chunk_table(
     sigs = multimodal.dhash_chunks(
         multimodal.to_ppm_payload(docs, text_col, id_col)
     )
+    cs = [f"c{j}" for j in range(CHUNKS)]
     return sigs.select(
         F.col("doc_id").alias("doc"),
-        *[f"c{j}" for j in range(CHUNKS)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("chunk_id"),
-                        F.col(f"c{j}").alias("chunk_val"),
-                    )
-                    for j in range(CHUNKS)
-                ]
-            )
-        ).alias("k"),
-    ).select(
-        "doc", *[f"c{j}" for j in range(CHUNKS)], "k.chunk_id", "k.chunk_val"
-    )
+        *cs,
+        F.explode(chunk_bands([F.col(c) for c in cs])).alias("k"),
+    ).select("doc", *cs, "k.chunk_id", "k.chunk_val")
 
 
 def phash_band_model(
@@ -130,23 +124,12 @@ def phash_near_pairs(
     guarantee exact). Input rows must already pass the minimum-raster
     gate (see MIN_PAYLOAD_BYTES)."""
     chunked = dhash_chunk_table(docs, text_col, id_col)
-    # shuffle-hash: both self-join sides are corpus-sized (simhash.py).
-    a, b = chunked.alias("a"), chunked.hint("shuffle_hash").alias("b")
-    hamming = sum(
-        F.bit_count(F.col(f"a.c{j}").bitwiseXOR(F.col(f"b.c{j}")))
-        for j in range(CHUNKS)
-    ).cast("bigint")
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+        band_join(chunked, keys=CHUNK_KEYS)
         .select(
             F.col("a.doc").alias("doc_a"),
             F.col("b.doc").alias("doc_b"),
-            hamming.alias("hamming"),
+            chunk_hamming("a.c", "b.c", CHUNKS).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()

@@ -22,6 +22,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from chronobase_spark.dedup._bands import (
+    CHUNK_KEYS,
+    band_join,
+    chunk_bands,
+    chunk_hamming,
+    hamming_distance,
+)
 from chronobase_spark.functions.text import tokens
 
 BITS = 64
@@ -54,11 +61,6 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> Da
             F.lit(0).cast("long")
         )
     return agg.select("doc", sig.alias("simhash"))
-
-
-def hamming_distance(a, b):
-    """Popcount of XOR via bit_count (Spark ≥3.3 built-in)."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 def simhash_md5_chunks(
@@ -116,39 +118,16 @@ def simhash_md5_near_pairs(
     the FULL pipeline (bit sums, chunking, band join, Hamming verify)
     hash-verifies against DuckDB. Returns (doc_a, doc_b, hamming)."""
     sigs = simhash_md5_chunks(df, text_col, id_col)
+    cs = [f"c{j}" for j in range(CHUNKS)]
     chunked = sigs.select(
-        "doc",
-        *[f"c{j}" for j in range(CHUNKS)],
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("chunk_id"),
-                        F.col(f"c{j}").alias("chunk_val"),
-                    )
-                    for j in range(CHUNKS)
-                ]
-            )
-        ).alias("k"),
-    ).select(
-        "doc", *[f"c{j}" for j in range(CHUNKS)], "k.chunk_id", "k.chunk_val"
-    )
-    a, b = chunked.alias("a"), chunked.hint("shuffle_hash").alias("b")
-    hamming = sum(
-        F.bit_count(F.col(f"a.c{j}").bitwiseXOR(F.col(f"b.c{j}")))
-        for j in range(CHUNKS)
-    ).cast("bigint")
+        "doc", *cs, F.explode(chunk_bands([F.col(c) for c in cs])).alias("k")
+    ).select("doc", *cs, "k.chunk_id", "k.chunk_val")
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+        band_join(chunked, keys=CHUNK_KEYS)
         .select(
             F.col("a.doc").alias("doc_a"),
             F.col("b.doc").alias("doc_b"),
-            hamming.alias("hamming"),
+            chunk_hamming("a.c", "b.c", CHUNKS).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
@@ -173,32 +152,15 @@ def simhash_near_pairs(
     session lifetime (r3 verdict) and bought nothing the exchange reuse
     doesn't already provide."""
     sigs = simhash(df, text_col, id_col)
+    vals = [
+        F.shiftright(F.col("simhash"), i * 16).bitwiseAND(F.lit(0xFFFF))
+        for i in range(CHUNKS)
+    ]
     chunked = sigs.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("chunk_id"),
-                        F.shiftright(F.col("simhash"), i * 16)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("chunk_val"),
-                    )
-                    for i in range(CHUNKS)
-                ]
-            )
-        ).alias("c"),
+        "doc", "simhash", F.explode(chunk_bands(vals)).alias("c")
     ).select("doc", "simhash", "c.chunk_id", "c.chunk_val")
-    # shuffle-hash: self-join sides are corpus-sized (see minhash.py)
-    a, b = chunked.alias("a"), chunked.hint("shuffle_hash").alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+        band_join(chunked, keys=CHUNK_KEYS)
         .select(
             F.col("a.doc").alias("doc_a"),
             F.col("b.doc").alias("doc_b"),

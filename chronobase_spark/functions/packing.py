@@ -91,6 +91,16 @@ def md5_split(
     )
 
 
+def md5_u16(id_col: Column) -> Column:
+    """The content-free 16-bit id bucket: the first 4 hex chars of
+    ``md5(cast(id as string))`` as a BIGINT in 0..65535. Portable like
+    [[md5_split]], so every sampler and split built on it has a DuckDB
+    oracle and is stable as the corpus grows."""
+    return F.conv(F.substring(F.md5(id_col.cast("string")), 1, 4), 16, 10).cast(
+        "bigint"
+    )
+
+
 def md5_stratified_keep(id_col: Column, strata_col: Column, fractions: dict) -> Column:
     """Deterministic stratified-sampling predicate: keep a row iff its
     md5 bucket falls under its stratum's fraction.

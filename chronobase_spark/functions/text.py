@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from chronobase_spark.functions.packing import md5_u16
 from chronobase_spark.plans.barrier import barrier
 
 # Tiny English stopword list for quality scoring (public knowledge).
@@ -61,24 +62,6 @@ def distinct_token_count(text: Column) -> Column:
 
 def _stop_count(tk: Column) -> Column:
     return F.size(F.filter(tk, lambda t: t.isin(*STOPWORDS)))
-
-
-def stopword_ratio(text: Column) -> Column:
-    return with_tokens(
-        text,
-        lambda tk: _stop_count(tk).cast("double")
-        / F.greatest(F.size(tk), F.lit(1)).cast("double"),
-    )
-
-
-def avg_token_length(text: Column) -> Column:
-    return with_tokens(
-        text,
-        lambda tk: F.aggregate(
-            tk, F.lit(0), lambda acc, t: acc + F.length(t)
-        ).cast("double")
-        / F.greatest(F.size(tk), F.lit(1)).cast("double"),
-    )
 
 
 def bigram_dup_stats(text: Column) -> Column:
@@ -166,31 +149,6 @@ def token_features(text: Column) -> Column:
             ).alias("stop_ratio"),
         ),
     )
-
-
-def quality_score(text: Column) -> Column:
-    """Heuristic document quality in [0, 1]: rewards moderate length,
-    lexical diversity, and a sane stopword ratio — the standard cheap
-    pre-filter in LLM training-data pipelines. Deterministic closed-form
-    arithmetic (same formula runs in the SQL oracle); one tokenization
-    pass via the token binding."""
-
-    def score(tk: Column) -> Column:
-        n = F.size(tk).cast("double")
-        diversity = F.size(F.array_distinct(tk)).cast("double") / F.greatest(
-            n, F.lit(1.0)
-        )
-        length_score = F.least(n / F.lit(50.0), F.lit(1.0))
-        stop = _stop_count(tk).cast("double") / F.greatest(n, F.lit(1.0))
-        stop_score = F.lit(1.0) - F.abs(stop - F.lit(0.2))
-        return F.round(
-            F.lit(0.4) * length_score
-            + F.lit(0.4) * diversity
-            + F.lit(0.2) * stop_score,
-            6,
-        )
-
-    return with_tokens(text, score)
 
 
 def fingerprint(text: Column) -> Column:
@@ -654,6 +612,19 @@ def space_distinct_tokens(text: Column) -> Column:
     )
 
 
+def diversity_keep(id_col: Column, text: Column) -> tuple[Column, Column]:
+    """(n_distinct, keep): importance-weighted thinning, keep
+    probability p = min(distinct tokens, 64)/64, decided by the pure
+    BIGINT cross-multiplication ``bucket·64 < min(d,64)·65536`` on the
+    content-free md5 16-bit id bucket — one definition for the batch
+    ``quality_weighted_sample`` and the streaming
+    ``weighted_sample_stage``, so their per-row flags are identical.
+    NULL text counts as '' (n_distinct 0 ⇒ keep false)."""
+    n_distinct = space_distinct_tokens(F.coalesce(text, F.lit(""))).cast("bigint")
+    keep = md5_u16(id_col) * 64 < F.least(n_distinct, F.lit(64)) * 65536
+    return n_distinct, keep
+
+
 def lm_tokens(text_col: Column) -> Column:
     """The bigram-LM tokenization: plain space split of trimmed
     lowercase (NULL text coalesced to empty). One definition shared by
@@ -777,24 +748,6 @@ def _lm_from_gram_counts(gram_counts, vocab):
             .cast("bigint")
             .alias("term_micro"),
         )
-    )
-
-
-def bigram_lm_table(docs, text_col: str = "text"):
-    """Train the add-one-smoothed bigram LM: returns (gram,
-    term_micro) with term_micro = round(ln((c12+1)/(c1+V))·1e6) as
-    BIGINT — the frozen model table ``bigram_lm_scores`` joins against
-    in batch and ``streaming.docs.lm_score_stage`` joins against
-    stream-static. Gram-type sized (bounded by the corpus' distinct
-    bigrams), so it shuffles on the gram/word keys and never
-    broadcasts."""
-    gram_counts = (
-        docs.select(F.explode(lm_grams(F.col(text_col))).alias("gram"))
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("c12"))
-    )
-    return _lm_from_gram_counts(
-        gram_counts, _lm_vocab(gram_counts, docs, text_col)
     )
 
 
@@ -1213,9 +1166,7 @@ def dsir_accept_col(id_col: Column, w_micro: Column, n_grams: Column,
     u < exp((w̄ − m)/1e6) with u the content-free md5 16-bit bucket of
     the id — ONE definition shared by the batch selector and the
     in-stream admission stage so the two surfaces can never drift."""
-    u = F.conv(F.substring(F.md5(id_col.cast("string")), 1, 4), 16, 10).cast(
-        "bigint"
-    )
+    u = md5_u16(id_col)
     avg = w_micro.cast("double") / n_grams.cast("double")
     return (
         F.log((u.cast("double") + F.lit(1.0)) / F.lit(65536.0))

@@ -11,12 +11,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def union_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    """UNION ALL by column name — pure concatenation of partitions, no
-    shuffle at all (the cheapest multi-input operator in Spark)."""
-    return a.unionByName(b)
-
-
 def union_distinct(a: DataFrame, b: DataFrame) -> DataFrame:
     """UNION (distinct): concatenate then hash-deduplicate — one shuffle
     on all columns."""

@@ -40,7 +40,3 @@ def read_schema(df: DataFrame) -> str:
 
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in _executed_plan(df)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    return _executed_plan(df).count("WholeStageCodegen")

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from chronobase_spark import catalog
 from chronobase_spark.dedup import embedding as emb_dedup
 from chronobase_spark.dedup import exact as exact_dedup
-from chronobase_spark.dedup import cdc, minhash, ngram, simhash, winnow
+from chronobase_spark.dedup import _bands, cdc, minhash, ngram, simhash, winnow
 from chronobase_spark.functions import bpe, packing, similarity, sketches, text
 from chronobase_spark.operators import aggregates as agg
 from chronobase_spark.operators import joins, setops, timeseries, windows
@@ -1149,6 +1149,29 @@ WHERE {arr.format(d="d.doc_id")}
 """
 
 
+def _arriving(c):
+    """The batch admission reports' split: the content-free md5 16-bit
+    id bucket sends 20 % of ids to the "arriving" side, the rest are
+    "stored" (the oracles' ``arr`` predicate)."""
+    return packing.md5_u16(c) % 5 == 0
+
+
+def _admission_report(table: DataFrame, id_col: str, ver: DataFrame) -> DataFrame:
+    """(id, dup_of_corpus, canonical_id) for EVERY arriving row of
+    ``table``: the (id, canonical_id) verdicts left-joined back, so an
+    arrival with no verified stored partner reports (false, NULL)."""
+    return (
+        table.filter(_arriving(F.col(id_col)))
+        .select(id_col)
+        .join(ver.hint("shuffle_hash"), id_col, "left")
+        .select(
+            id_col,
+            F.col("canonical_id").isNotNull().alias("dup_of_corpus"),
+            "canonical_id",
+        )
+    )
+
+
 @register("near_dup_admission_report", _admission_sql())
 def q_near_dup_admission_report(spark, sf_dir):
     """Batch near-dup ADMISSION report — the driver-hash-checked twin
@@ -1174,66 +1197,28 @@ def q_near_dup_admission_report(spark, sf_dir):
     plus two linear joins. Docs with no shingles report non-dup, like
     the streaming stage."""
     docs = _t(spark, sf_dir, "documents")
-
-    def arriving(c):
-        u = F.conv(
-            F.substring(F.md5(c.cast("string")), 1, 4), 16, 10
-        ).cast("bigint")
-        return u % 5 == 0
-
     # r17: ONE persisted shingle table feeds the band table AND the
     # verify joins (the minhash_md5_pairs optimization applied to this
     # composite — band+verify used to shingle the corpus twice).
     sh = minhash.shingle_table(docs).persist()
     banded = minhash.md5_band_table_from_shingles(sh)
-    a = banded.filter(arriving(F.col("doc"))).alias("a")
-    b = (
-        banded.filter(~arriving(F.col("doc")))
-        .hint("shuffle_hash")
-        .alias("b")
-    )
     cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
+        _bands.band_join(
+            banded.filter(_arriving(F.col("doc"))),
+            banded.filter(~_arriving(F.col("doc"))),
         )
         .select(F.col("a.doc").alias("doc_id"), F.col("b.doc").alias("cand"))
         .distinct()
     )
-    sa = sh.select(F.col("doc").alias("doc_id"), F.col("sh").alias("sh_a")).hint(
-        "shuffle_hash"
-    )
-    sb = sh.select(F.col("doc").alias("cand"), F.col("sh").alias("sh_b")).hint(
-        "shuffle_hash"
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint")
-    # union via |A|+|B|−|A∩B| (distinct shingle arrays): one array
-    # pass per candidate instead of two (r17; the minhash_md5_pairs
-    # identity — same integers, bit-identical verdicts). _c bound as
-    # a column so the intersect evaluates once in the gate.
+    common, union = _bands.jaccard_sizes("sh_a", "sh_b", F.col("_c"))
     verdicts = (
-        cands.join(sa, "doc_id")
-        .join(sb, "cand")
+        _bands.with_shingles(cands, sh, "doc_id", "cand")
         .withColumn("_c", common)
-        .filter(
-            F.col("_c") * 1_000_000
-            >= F.lit(500_000)
-            * (F.size("sh_a").cast("bigint") + F.size("sh_b").cast("bigint") - F.col("_c"))
-        )
+        .filter(F.col("_c") * 1_000_000 >= F.lit(500_000) * union)
         .groupBy("doc_id")
         .agg(F.min("cand").alias("canonical_id"))
     )
-    return (
-        docs.filter(arriving(F.col("doc_id")))
-        .select("doc_id")
-        .join(verdicts.hint("shuffle_hash"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("canonical_id").isNotNull().alias("dup_of_corpus"),
-            "canonical_id",
-        )
-    )
+    return _admission_report(docs, "doc_id", verdicts)
 
 
 _DOT = (
@@ -5709,19 +5694,12 @@ def q_quality_weighted_sample(spark, sf_dir):
     pure BIGINT, no float threshold anywhere. Map-only predicate + one
     partial-agged groupBy(source); nothing shuffles before the
     |sources|-sized aggregate. NULL text coalesces to '' (n_distinct
-    0 ⇒ keep false) so the keep flag is the LITERAL expression the
-    streaming twin (streaming/docs.weighted_sample_stage) evaluates —
-    the aggregates are unchanged (a NULL keep already contributed 0 to
-    every sum on both engines) but the per-row flags are now identical
-    too, making the drained-equal pin exact (r15 advisor note)."""
+    0 ⇒ keep false). The keep flag is one column, text.diversity_keep,
+    shared with the streaming twin (streaming/docs.weighted_sample_stage),
+    so the per-row flags are identical and the drained-equal pin is
+    exact."""
     docs = _t(spark, sf_dir, "documents")
-    n_distinct = text.space_distinct_tokens(
-        F.coalesce(F.col("text"), F.lit(""))
-    ).cast("bigint")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("bigint")
-    keep = bucket * 64 < F.least(n_distinct, F.lit(64)) * 65536
+    n_distinct, keep = text.diversity_keep(F.col("doc_id"), F.col("text"))
     scored = docs.select(
         "source", n_distinct.alias("n_distinct"), keep.alias("keep")
     )
@@ -6889,15 +6867,8 @@ def q_semantic_admission_report(spark, sf_dir):
     left join. NULL arriving embeddings join nothing and report
     (false, NULL) — every arrival gets a verdict, the admission
     contract."""
-
-    def arriving(c):
-        u = F.conv(
-            F.substring(F.md5(c.cast("string")), 1, 4), 16, 10
-        ).cast("bigint")
-        return u % 5 == 0
-
     embt = _t(spark, sf_dir, "embeddings")
-    stored = embt.filter(~arriving(F.col("vec_id")))
+    stored = embt.filter(~_arriving(F.col("vec_id")))
     cells, k = emb_dedup.semantic_cell_model_scaled(
         stored,
         target_cell_size=_SEMDEDUP_CELL_SIZE,
@@ -6909,7 +6880,7 @@ def q_semantic_admission_report(spark, sf_dir):
     # each arrival's and each stored row's norm per (arrival, cand)
     # pair — bit-identical sim either way.
     arr = embt.filter(
-        arriving(F.col("vec_id")) & F.col("embedding").isNotNull()
+        _arriving(F.col("vec_id")) & F.col("embedding").isNotNull()
     ).select(
         "vec_id",
         F.col("embedding").alias("vec_a"),
@@ -6924,23 +6895,14 @@ def q_semantic_admission_report(spark, sf_dir):
         6,
     )
     # shuffle_hash: the stored cell table is corpus-sized (the
-    # LSH-pipeline rule — never broadcast the store)
+    # dedup/_bands.py band-join rule — never broadcast the store)
     ver = (
         arr.join(cells_n.hint("shuffle_hash"), "cell")
         .filter(sim >= _SEMDEDUP_MIN_COSINE)
         .groupBy("vec_id")
         .agg(F.min("vid").alias("canonical_id"))
     )
-    return (
-        embt.filter(arriving(F.col("vec_id")))
-        .select("vec_id")
-        .join(ver.hint("shuffle_hash"), "vec_id", "left")
-        .select(
-            "vec_id",
-            F.col("canonical_id").isNotNull().alias("dup_of_corpus"),
-            "canonical_id",
-        )
-    )
+    return _admission_report(embt, "vec_id", ver)
 
 
 def _pipeline_sql() -> str:
@@ -7574,9 +7536,7 @@ def q_cluster_balanced_sample(spark, sf_dir):
     cnt = assigned.groupBy("assigned").agg(
         F.count(F.lit(1)).alias("c")
     )
-    bucket = F.conv(
-        F.substring(F.md5(F.col("vec_id").cast("string")), 1, 4), 16, 10
-    ).cast("bigint")
+    bucket = packing.md5_u16(F.col("vec_id"))
     sel = assigned.join(cnt, "assigned").select(
         "assigned", "vec_id", "c", bucket.alias("bucket")
     )
@@ -10050,12 +10010,6 @@ def q_phash_admission_report(spark, sf_dir):
     plus two linear joins."""
     from chronobase_spark.dedup import phash
 
-    def arriving(c):
-        u = F.conv(
-            F.substring(F.md5(c.cast("string")), 1, 4), 16, 10
-        ).cast("bigint")
-        return u % 5 == 0
-
     docs = _t(spark, sf_dir, "documents")
     gated = docs.filter(
         F.col("text").isNotNull()
@@ -10064,36 +10018,17 @@ def q_phash_admission_report(spark, sf_dir):
     # persist: the decode feeds both sides of the arriving/stored
     # split — one raster pass (the md5_band_table convention)
     chunked = phash.dhash_chunk_table(gated).persist()
-    a = chunked.filter(arriving(F.col("doc"))).alias("a")
-    b = (
-        chunked.filter(~arriving(F.col("doc")))
-        .hint("shuffle_hash")
-        .alias("b")
-    )
-    hamming = sum(
-        F.bit_count(F.col(f"a.c{j}").bitwiseXOR(F.col(f"b.c{j}")))
-        for j in range(phash.CHUNKS)
-    ).cast("bigint")
     ver = (
-        a.join(
-            b,
-            (F.col("a.chunk_id") == F.col("b.chunk_id"))
-            & (F.col("a.chunk_val") == F.col("b.chunk_val")),
+        _bands.band_join(
+            chunked.filter(_arriving(F.col("doc"))),
+            chunked.filter(~_arriving(F.col("doc"))),
+            keys=_bands.CHUNK_KEYS,
         )
-        .filter(hamming <= 3)
+        .filter(_bands.chunk_hamming("a.c", "b.c", phash.CHUNKS) <= 3)
         .groupBy(F.col("a.doc").alias("doc_id"))
         .agg(F.min(F.col("b.doc")).alias("canonical_id"))
     )
-    return (
-        docs.filter(arriving(F.col("doc_id")))
-        .select("doc_id")
-        .join(ver.hint("shuffle_hash"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("canonical_id").isNotNull().alias("dup_of_corpus"),
-            "canonical_id",
-        )
-    )
+    return _admission_report(docs, "doc_id", ver)
 
 
 _JM_LM_SQL = """

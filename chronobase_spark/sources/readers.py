@@ -1,7 +1,6 @@
 """Batch readers.
 
-Parquet is the primary format (the corpus); CSV/JSON/ORC are thin
-conveniences over the same normalization path. Everything funnels
+Parquet is the one format (the corpus). ``read_parquet`` funnels
 through catalog._normalize so physical quirks (ns timestamps) are fixed
 exactly once, at the boundary.
 """
@@ -16,45 +15,3 @@ from chronobase_spark.catalog import _normalize
 def read_parquet(spark: SparkSession, path: str, table_name: str | None = None) -> DataFrame:
     df = spark.read.parquet(path)
     return _normalize(table_name or "", df)
-
-
-def read_csv(
-    spark: SparkSession, path: str, schema=None, header: bool = True
-) -> DataFrame:
-    reader = spark.read.option("header", str(header).lower())
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
-
-
-def read_kafka_stream(
-    spark: SparkSession,
-    bootstrap_servers: str,
-    topic: str,
-    starting_offsets: str = "latest",
-):
-    """Kafka ingest source — the production arrival path the reference's
-    ``DB.Insert`` RPC surface maps to at scale. Requires the
-    spark-sql-kafka connector on the classpath (not bundled in this
-    test container; the file source plays its role in tests — both
-    yield the same (key, value, timestamp) micro-batch shape)."""
-    return (
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting_offsets)
-        .load()
-    )

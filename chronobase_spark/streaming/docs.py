@@ -66,6 +66,12 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from chronobase_spark.dedup._bands import (
+    CHUNK_KEYS,
+    chunk_bands,
+    chunk_hamming,
+    jaccard_sizes,
+)
 from chronobase_spark.dedup.exact import normalize
 from chronobase_spark.functions import text
 from chronobase_spark.streaming._fold import fold_by_key
@@ -796,15 +802,8 @@ def minhash_admit_stage(
         "left",
     )
     thresh_micro = int(round(threshold * 1_000_000))
-    common = F.size(F.array_intersect("_sh", "sh_c")).cast("bigint")
-    # union via |A|+|B|−|A∩B| (both sides distinct shingle arrays —
-    # the r17 minhash_md5_pairs identity; one array pass per candidate,
-    # bit-identical verdicts: NULL sh_c still propagates NULL through
-    # the sum exactly as array_union did, and the cand-NULL guard
-    # gates the comparison either way).
-    union = (
-        F.size("_sh").cast("bigint") + F.size("sh_c").cast("bigint") - common
-    )
+    # NULL sh_c (no candidate) propagates NULL; the cand guard gates it
+    common, union = jaccard_sizes("_sh", "sh_c")
     ok = F.col("cand").isNotNull() & (
         common * 1_000_000 >= F.lit(thresh_micro) * union
     )
@@ -970,42 +969,29 @@ def phash_admit_stage(
     annotated = multimodal.dhash_annotate(
         with_payload.select("doc_id", "ingest_ts", "_payload"), "_payload"
     )
+    cs = [f"c{j}" for j in range(CHUNKS)]
     banded = annotated.select(
         "doc_id",
         "ingest_ts",
-        *[f"c{j}" for j in range(CHUNKS)],
+        *cs,
         F.explode_outer(
-            F.when(
-                F.col("c0").isNotNull(),
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(j).alias("chunk_id"),
-                            F.col(f"c{j}").alias("chunk_val"),
-                        )
-                        for j in range(CHUNKS)
-                    ]
-                ),
-            )
+            F.when(F.col("c0").isNotNull(), chunk_bands([F.col(c) for c in cs]))
         ).alias("k"),
     ).select(
         "doc_id",
         "ingest_ts",
-        *[f"c{j}" for j in range(CHUNKS)],
+        *cs,
         F.col("k.chunk_id").alias("chunk_id"),
         F.col("k.chunk_val").alias("chunk_val"),
     )
     corpus = corpus_chunks.select(
         F.col("doc").alias("cand"),
-        *[F.col(f"c{j}").alias(f"cc{j}") for j in range(CHUNKS)],
+        *[F.col(c).alias(f"c{c}") for c in cs],
         "chunk_id",
         "chunk_val",
     )
-    cand = banded.join(corpus, ["chunk_id", "chunk_val"], "left")
-    hamming = sum(
-        F.bit_count(F.col(f"c{j}").bitwiseXOR(F.col(f"cc{j}")))
-        for j in range(CHUNKS)
-    ).cast("bigint")
+    cand = banded.join(corpus, list(CHUNK_KEYS), "left")
+    hamming = chunk_hamming("c", "cc", CHUNKS)
     ok = F.col("cand").isNotNull() & (hamming <= max_hamming)
     return _admission_verdict(cand, "doc_id", ok, window)
 
@@ -1272,20 +1258,14 @@ def weighted_sample_stage(stream: DataFrame, text_col: str = "text") -> DataFram
     member is reservoir_admit_stage). The keep probability is
     proportional to the arriving doc's OWN lexical diversity
     (p = min(distinct_tokens, 64)/64), decided by the batch query's
-    LITERAL pure-BIGINT cross-multiplication on the content-free md5
-    doc_id bucket — a pure function of the row, so this is a map-only
-    SELECT: no state, no watermark, no shuffle, and a drained stream's
-    flags equal the batch flags row-for-row (pinned in
+    keep column (text.diversity_keep: a pure-BIGINT cross-multiplication
+    on the content-free md5 doc_id bucket) — a pure function of the
+    row, so this is a map-only SELECT: no state, no watermark, no
+    shuffle, and a drained stream's flags equal the batch flags row-for-row (pinned in
     tests/test_streaming.py). NULL text keeps n_distinct = 0 ⇒
     keep = false (p = 0 — nothing to sample), the admission
     contract's explicit NULL arm."""
-    n_distinct = text.space_distinct_tokens(
-        F.coalesce(F.col(text_col), F.lit(""))
-    ).cast("bigint")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10
-    ).cast("bigint")
-    keep = bucket * 64 < F.least(n_distinct, F.lit(64)) * 65536
+    n_distinct, keep = text.diversity_keep(F.col("doc_id"), F.col(text_col))
     return stream.select(
         "doc_id",
         "ingest_ts",

@@ -823,11 +823,14 @@ def test_lpa_separates_bridged_cliques_cc_fuses(spark):
 
 
 def test_phash_banded_pairs_equal_brute_force(spark, docs):
-    """The dHash chunk-LSH result must EQUAL brute-force all-pairs
-    Hamming ≤ 3 (pigeonhole: 4 bands, distance ≤ 3 ⇒ one band
-    identical — completeness is exact, not probabilistic), with the
-    reference hash computed by an independent pure-Python dHash from
-    the raw text bytes (same raster the PPM payload carries)."""
+    """Every chunk-LSH Hamming finder must EQUAL brute-force all-pairs
+    Hamming ≤ 3 over its own signatures (pigeonhole: 4 bands, distance
+    ≤ 3 ⇒ one band identical — completeness is exact, not
+    probabilistic). For the dHash the reference signature is computed
+    by an independent pure-Python dHash from the raw text bytes (same
+    raster the PPM payload carries); the two SimHash finders are
+    checked against their own signature tables (simhash,
+    simhash_md5_chunks)."""
     import itertools
     import math
 
@@ -853,24 +856,44 @@ def test_phash_banded_pairs_equal_brute_force(spark, docs):
                     chunks[gr // 2] |= 1 << ((gr % 2) * 8 + gc)
         return chunks
 
-    sigs = {r["doc_id"]: py_dhash(r["text"]) for r in gated.collect()}
+    cases = {
+        "phash": (
+            {r["doc_id"]: py_dhash(r["text"]) for r in gated.collect()},
+            phash.phash_near_pairs(gated),
+        ),
+        # a signed 64-bit long; & 2^64-1 is its two's-complement bits
+        "simhash": (
+            {
+                r["doc"]: [r["simhash"] & 0xFFFFFFFFFFFFFFFF]
+                for r in simhash.simhash(docs).collect()
+            },
+            simhash.simhash_near_pairs(docs, max_hamming=3),
+        ),
+        "simhash_md5": (
+            {
+                r["doc"]: [r[f"c{j}"] for j in range(simhash.CHUNKS)]
+                for r in simhash.simhash_md5_chunks(docs).collect()
+            },
+            simhash.simhash_md5_near_pairs(docs, max_hamming=3),
+        ),
+    }
 
     def ham(a, b):
         return sum(bin(x ^ y).count("1") for x, y in zip(a, b))
 
-    truth = {
-        (a, b, ham(sigs[a], sigs[b]))
-        for a, b in itertools.combinations(sorted(sigs), 2)
-        if ham(sigs[a], sigs[b]) <= 3
-    }
-    assert truth, "smoke corpus should contain perceptually-near rasters"
-    found = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in phash.phash_near_pairs(gated).collect()
-    }
-    assert found == truth, (
-        f"missed={truth - found} spurious={found - truth}"
-    )
+    for name, (sigs, pairs) in cases.items():
+        truth = {
+            (a, b, ham(sigs[a], sigs[b]))
+            for a, b in itertools.combinations(sorted(sigs), 2)
+            if ham(sigs[a], sigs[b]) <= 3
+        }
+        assert truth, f"{name}: smoke corpus should contain near signatures"
+        found = {
+            (r["doc_a"], r["doc_b"], r["hamming"]) for r in pairs.collect()
+        }
+        assert found == truth, (
+            f"{name}: missed={truth - found} spurious={found - truth}"
+        )
 
 
 def test_semantic_cell_model_scaled_k_rule_and_masking(spark):

@@ -266,3 +266,39 @@ def test_apply_in_pandas_with_state_has_one_caller():
                 callers.append(f"{os.path.relpath(p, REPO)}:{node.lineno}")
     assert len(callers) == 1, callers
     assert callers[0].startswith("chronobase_spark/streaming/_fold.py:"), callers
+
+
+def test_near_dup_idioms_live_in_bands():
+    """The near-dup family's building blocks each have one definition,
+    in dedup/_bands.py: the popcount Hamming (``F.bit_count``), the
+    exact-Jaccard intersection size (``F.array_intersect``) and the
+    never-broadcast band join (``.hint("shuffle_hash").alias("b")``).
+    The batch finders, the batch admission reports and the streaming
+    admit stages agree only because they share them. DuckDB oracle SQL
+    strings are references and are not checked."""
+
+    def const_arg(node: ast.Call, value: str) -> bool:
+        return bool(node.args) and isinstance(node.args[0], ast.Constant) and (
+            node.args[0].value == value
+        )
+
+    bad = []
+    pkg = os.path.join(REPO, "chronobase_spark/**/*.py")
+    for p in glob.glob(pkg, recursive=True):
+        rel = os.path.relpath(p, REPO)
+        if rel == "chronobase_spark/dedup/_bands.py":
+            continue
+        for node in ast.walk(ast.parse(open(p).read())):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            attr, inner = node.func.attr, node.func.value
+            if attr in ("bit_count", "array_intersect") or (
+                attr == "alias"
+                and const_arg(node, "b")
+                and isinstance(inner, ast.Call)
+                and isinstance(inner.func, ast.Attribute)
+                and inner.func.attr == "hint"
+                and const_arg(inner, "shuffle_hash")
+            ):
+                bad.append(f"{rel}:{node.lineno} {attr}")
+    assert not bad, bad
