@@ -337,13 +337,15 @@ def label_propagation(
     chained-CTE mirror (the dup_graph_pagerank pattern). Each round is
     one edges ⋈ labels join (both sides node-keyed, labels side
     shuffle_hash — corpus-derived, never broadcast) and one
-    (node, label) count + min(struct) argmax, all partial-agged.
+    (node, label) count + min(struct) argmax, all partial-agged. The
+    symmetrized edge list every round reads is materialized once with
+    ``localCheckpoint(eager=True)``, which leaves nothing cached.
     Returns (id, community) for every node with ≥1 edge."""
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
-        .persist()
+        .localCheckpoint(eager=True)
     )
     labels = sym.select(F.col("u").alias("id"), F.col("u").alias("lbl")).distinct()
     for _ in range(rounds):
@@ -358,5 +360,4 @@ def label_propagation(
             .agg(F.min(best).alias("b"))
             .select(F.col("nid").alias("id"), F.col("b.l").alias("lbl"))
         )
-    out = labels.select("id", F.col("lbl").alias("community"))
-    return out
+    return labels.select("id", F.col("lbl").alias("community"))

@@ -274,13 +274,14 @@ def minhash_band_model(
     band table and the (doc, sh) shingle table, both persisted — they
     are re-read every micro-batch as the static sides of stream-static
     joins, so recomputing the corpus signature pass per trigger would
-    be a corpus scan per micro-batch. Both tables are the LITERAL batch
-    expressions (md5_band_table / shingle_table), so admission joins
-    hit exactly the keys the batch pair finder banded on. Callers own
-    the caches' lifetime (unpersist on retrain — the dsir_model
-    lesson)."""
-    band_t = md5_band_table(docs, text_col, id_col, bands, rows_per_band, n)
-    return band_t.persist(), shingle_table(docs, text_col, id_col, n).persist()
+    be a corpus scan per micro-batch. The band table is built from the
+    persisted shingle table (md5_band_table_from_shingles, the rows of
+    md5_band_table), so the corpus is tokenized once and admission
+    joins hit exactly the keys the batch pair finder banded on.
+    Callers own the caches' lifetime (unpersist on retrain — the
+    dsir_model lesson)."""
+    sh = shingle_table(docs, text_col, id_col, n).persist()
+    return md5_band_table_from_shingles(sh, bands, rows_per_band).persist(), sh
 
 
 def minhash_band_model_bucketed(
@@ -324,20 +325,18 @@ def minhash_band_model_bucketed(
     spark = docs.sparkSession
     band_name = f"{table_prefix}_bands"
     sh_name = f"{table_prefix}_shingles"
-    write_bucketed(
-        md5_band_table(docs, text_col, id_col, bands, rows_per_band, n),
-        band_name,
-        ["band_id", "band_val"],
-        buckets,
-        sort_col=["band_id", "band_val"],
-    )
-    write_bucketed(
-        shingle_table(docs, text_col, id_col, n),
-        sh_name,
-        "doc",
-        buckets,
-        sort_col="doc",
-    )
+    sh = shingle_table(docs, text_col, id_col, n).persist()
+    try:
+        write_bucketed(
+            md5_band_table_from_shingles(sh, bands, rows_per_band),
+            band_name,
+            ["band_id", "band_val"],
+            buckets,
+            sort_col=["band_id", "band_val"],
+        )
+        write_bucketed(sh, sh_name, "doc", buckets, sort_col="doc")
+    finally:
+        sh.unpersist()
     return spark.table(band_name), spark.table(sh_name)
 
 

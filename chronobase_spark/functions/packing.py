@@ -101,6 +101,20 @@ def md5_u16(id_col: Column) -> Column:
     )
 
 
+def aes_key(id_col: Column, n_chars: Column) -> tuple[Column, Column]:
+    """(wt, wrs_key) of Efraimidis-Spirakis A-ES weighted sampling
+    without replacement: weight ``wt = greatest(n_chars, 1)`` as BIGINT
+    and rank key ``round(ln(u) / wt, 6)`` with the deterministic
+    uniform ``u = (md5-uint32 of "<id>#wrs" + 0.5) / 2^32``. The top k
+    rows by (wrs_key desc, id) are the sample. u is integer arithmetic
+    on both engines and the key is rounded to 6 dp, so a last-ulp libm
+    divergence in ln cannot reorder the cut."""
+    wt = F.greatest(n_chars, F.lit(1)).cast("bigint")
+    hex8 = F.substring(F.md5(F.concat(id_col.cast("string"), F.lit("#wrs"))), 1, 8)
+    u = (F.conv(hex8, 16, 10).cast("double") + 0.5) / F.lit(4294967296.0)
+    return wt, F.round(F.log(u) / wt, 6)
+
+
 def md5_stratified_keep(id_col: Column, strata_col: Column, fractions: dict) -> Column:
     """Deterministic stratified-sampling predicate: keep a row iff its
     md5 bucket falls under its stratum's fraction.

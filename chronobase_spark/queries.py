@@ -8952,27 +8952,9 @@ def q_weighted_reservoir_sample(spark, sf_dir):
     global sort, never a single-partition window; the classic
     one-pass distributed weighted sampler."""
     docs = _t(spark, sf_dir, "documents")
-    wt = F.greatest(F.col("n_chars"), F.lit(1))
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#wrs"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + 0.5
-    ) / F.lit(4294967296.0)
-    key = F.round(F.log(u) / wt, 6)
+    wt, key = packing.aes_key(F.col("doc_id"), F.col("n_chars"))
     return (
-        docs.select(
-            "doc_id",
-            "source",
-            wt.cast("bigint").alias("wt"),
-            key.alias("wrs_key"),
-        )
+        docs.select("doc_id", "source", wt.alias("wt"), key.alias("wrs_key"))
         .orderBy(F.col("wrs_key").desc(), "doc_id")
         .limit(_WRS_K)
     )

@@ -73,7 +73,7 @@ from chronobase_spark.dedup._bands import (
     jaccard_sizes,
 )
 from chronobase_spark.dedup.exact import normalize
-from chronobase_spark.functions import text
+from chronobase_spark.functions import packing, text
 from chronobase_spark.streaming._fold import fold_by_key
 
 DOC_STREAM_SCHEMA = StructType(
@@ -999,7 +999,6 @@ def phash_admit_stage(
 def budget_histogram_stage(
     stream: DataFrame,
     text_col: str = "text",
-    ts_col: str = "ingest_ts",
     window: str = "1 day",
     watermark: str = "1 hour",
 ) -> DataFrame:
@@ -1023,15 +1022,15 @@ def budget_histogram_stage(
     |distinct scores| count rows, watermark-evicted."""
     txt = F.coalesce(F.col(text_col), F.lit(""))
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark("ingest_ts", watermark)
         .select(
-            ts_col,
+            "ingest_ts",
             text.space_distinct_tokens(txt).cast("bigint").alias("score"),
             F.size(text.lm_tokens(F.col(text_col)))
             .cast("bigint")
             .alias("n_tokens"),
         )
-        .groupBy(F.window(ts_col, window), "score")
+        .groupBy(F.window("ingest_ts", window), "score")
         .agg(
             F.sum("n_tokens").cast("bigint").alias("bucket_n"),
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1095,7 +1094,6 @@ def finalize_budget_admission(
 def topq_histogram_stage(
     stream: DataFrame,
     text_col: str = "text",
-    ts_col: str = "ingest_ts",
     window: str = "1 day",
     watermark: str = "1 hour",
 ) -> DataFrame:
@@ -1117,13 +1115,13 @@ def topq_histogram_stage(
     tests/test_streaming.py). State per window is at most
     |langs|·|distinct scores| count rows, watermark-evicted."""
     return (
-        stream.withWatermark(ts_col, watermark)
+        stream.withWatermark("ingest_ts", watermark)
         .select(
-            ts_col,
+            "ingest_ts",
             "lang",
             text.space_distinct_tokens(F.col(text_col)).alias("score"),
         )
-        .groupBy(F.window(ts_col, window), "lang", "score")
+        .groupBy(F.window("ingest_ts", window), "lang", "score")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         .select(
             F.col("window.start").alias("window_start"),
@@ -1285,8 +1283,9 @@ def reservoir_admit_stage(
 ) -> DataFrame:
     """Fixed-budget weighted selection AT INTAKE — the streaming twin
     of the batch ``weighted_reservoir_sample`` (Efraimidis-Spirakis
-    A-ES: rank by round(ln(u)/w, 6) with the md5-deterministic u, top
-    k ARE a weighted sample without replacement), completing the
+    A-ES: both rank by ``packing.aes_key``, round(ln(u)/w, 6) with the
+    md5-deterministic u; the top k ARE a weighted sample without
+    replacement), completing the
     selection family's last admission member: a custom BOUNDED-STATE
     stateful operator (the per-key state fold), state = at most k
     (doc_id, source, wt, wrs_key) rows per window — the reservoir
@@ -1353,19 +1352,7 @@ def reservoir_admit_stage(
         out.insert(0, "window_start", win)
         return new_state, out
 
-    wt = F.greatest(F.col("n_chars"), F.lit(1)).cast("bigint")
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit("#wrs"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + 0.5
-    ) / F.lit(4294967296.0)
+    wt, key = packing.aes_key(F.col("doc_id"), F.col("n_chars"))
     keyed = stream.select(
         F.timestamp_seconds(
             (F.unix_timestamp("ingest_ts") / window_seconds).cast("bigint")
@@ -1374,7 +1361,7 @@ def reservoir_admit_stage(
         "doc_id",
         "source",
         wt.alias("wt"),
-        F.round(F.log(u) / wt, 6).alias("wrs_key"),
+        key.alias("wrs_key"),
     )
     return fold_by_key(
         keyed, "window_start", step, out_schema, state_schema, "append"

@@ -56,8 +56,8 @@ def run_factor(spark, factor: int) -> dict:
     passes, cache cleared between passes.
 
     Methodology (round 6): the caller gives each factor a FRESH
-    SparkSession and each stage reports the min over two passes — the
-    same signal-vs-noise rule as bench.py. The r5 probe ran all
+    SparkSession and each stage reports the min over two passes, so
+    one slow pass does not stand for the stage. The r5 probe ran all
     factors and stages through one session; by the time the 64×
     simhash stage ran, accumulated JVM state (shuffle files, GC
     pressure from the 113 s minhash stage just before it) had doubled

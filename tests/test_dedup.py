@@ -822,6 +822,20 @@ def test_lpa_separates_bridged_cliques_cc_fuses(spark):
     assert sides[0] == {0, 1, 2, 3} and sides[1] == {10, 11, 12, 13}
 
 
+def test_label_propagation_leaves_nothing_cached(spark):
+    """LPA materializes its symmetrized edge list with a local
+    checkpoint, not persist(): the CacheManager is as empty after the
+    call as before it."""
+    from chronobase_spark.dedup import cluster
+
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    edges = spark.createDataFrame([(0, 1), (1, 2), (5, 6)], "doc_a long, doc_b long")
+    assert len(cluster.label_propagation(edges).collect()) == 5
+    assert cache.isEmpty()
+
+
 def test_phash_banded_pairs_equal_brute_force(spark, docs):
     """Every chunk-LSH Hamming finder must EQUAL brute-force all-pairs
     Hamming ≤ 3 over its own signatures (pigeonhole: 4 bands, distance
@@ -925,6 +939,46 @@ def test_semantic_cell_model_scaled_k_rule_and_masking(spark):
         assert got == masked
         cells.unpersist()
         full.unpersist()
+
+
+def _source_scans_per_cached_plan(spark, frames):
+    """For each cached relation reachable from the persisted ``frames``:
+    how many file scans its own cached plan runs (a cached relation
+    read inside it is followed on its own, not counted)."""
+
+    def scans(plan, nested):
+        name = plan.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return scans(plan.inputPlan(), nested)
+        if name == "InMemoryTableScanExec":
+            nested.append(plan.relation())
+            return 0
+        if name == "FileSourceScanExec":
+            return 1
+        kids = plan.children()
+        return sum(scans(kids.apply(i), nested) for i in range(kids.size()))
+
+    todo = [f._jdf.queryExecution().withCachedData() for f in frames]
+    seen, out = set(), []
+    while todo:
+        cached = todo.pop().cacheBuilder()
+        key = spark._jvm.System.identityHashCode(cached)
+        if key not in seen:
+            seen.add(key)
+            out.append(scans(cached.cachedPlan(), todo))
+    return sorted(out)
+
+
+def test_band_model_reads_the_corpus_once(spark):
+    """minhash_band_model builds its band table from its persisted
+    shingle table, so of the model's three cached plans (shingles,
+    signatures, bands) exactly one scans the documents."""
+    spark.catalog.clearCache()
+    bands, sh = minhash.minhash_band_model(catalog.table(spark, SF_SMOKE, "documents"))
+    try:
+        assert _source_scans_per_cached_plan(spark, [bands, sh]) == [0, 0, 1]
+    finally:
+        spark.catalog.clearCache()
 
 
 def test_bucketed_band_model_matches_persisted(spark, docs):

@@ -1,8 +1,7 @@
 """Repo-wide static sanity: no module may reference an unresolvable
 top-level name. Round 3's official bench artifact was a NameError
 traceback from exactly this failure class (an undefined helper shipped
-uncalled-in-tests); tests/test_bench.py pins bench.py specifically,
-this sweeps every Python file in the repo in ~1 s.
+uncalled-in-tests); this sweeps every Python file in the repo in ~1 s.
 
 Scope limits (kept deliberately simple): only module-level name
 resolution is checked — attribute access, star-imports, and names
@@ -66,7 +65,7 @@ def test_no_duplicate_dict_literal_keys():
     skipped a pending re-grade. Python doesn't warn; this does."""
     paths = glob.glob(
         os.path.join(REPO, "chronobase_spark/**/*.py"), recursive=True
-    ) + [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+    ) + [os.path.join(REPO, "__spark_entry__.py")]
     bad: dict[str, list[str]] = {}
     for p in paths:
         for node in ast.walk(ast.parse(open(p).read())):
@@ -89,7 +88,7 @@ def test_no_unresolved_names_anywhere():
         glob.glob(os.path.join(REPO, "chronobase_spark/**/*.py"), recursive=True)
         + glob.glob(os.path.join(REPO, "scripts/*.py"))
         + glob.glob(os.path.join(REPO, "tests/*.py"))
-        + [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+        + [os.path.join(REPO, "__spark_entry__.py")]
     )
     assert len(paths) > 20  # the glob actually found the repo
     bad = {os.path.relpath(p, REPO): m for p in paths if (m := _unresolved(p))}
@@ -188,10 +187,10 @@ def test_no_broadcast_of_unfiltered_sf_proportional_tables():
     """r9 verdict item 1: six queries forced F.broadcast on full
     part/customer — invisible at sf0.1, OOM at 100×. The hints are
     deleted; this gate statically bans the whole class across the
-    package (queries, operators, dedup, functions, entry, bench)."""
+    package (queries, operators, dedup, functions, entry)."""
     paths = glob.glob(
         os.path.join(REPO, "chronobase_spark/**/*.py"), recursive=True
-    ) + [os.path.join(REPO, "bench.py"), os.path.join(REPO, "__spark_entry__.py")]
+    ) + [os.path.join(REPO, "__spark_entry__.py")]
     bad: list[str] = []
     for p in paths:
         tree = ast.parse(open(p).read())
