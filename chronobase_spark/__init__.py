@@ -16,7 +16,7 @@ Layout:
     operators/  — query operators (time-series, joins, aggregates, windows…)
     functions/  — column-level function library (similarity, text analysis)
     dedup/      — exact + near-duplicate detection (MinHash LSH, SimHash…)
-    sources/    — batch/streaming readers and writers
+    sources/    — table writers and the chronotab DataSource
     streaming/  — ingest lifecycle (the reference's flush/merge/TTL loops)
     plans/      — plan inspection / optimization helpers
 """

@@ -65,9 +65,7 @@ def _window_hash(cps: Column, end_pos: Column) -> Column:
     return h % F.lit(CDC_PRIME).cast("long")
 
 
-def with_chunk_bounds(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
+def with_chunk_bounds(df: DataFrame) -> DataFrame:
     """Adds ``_cdc_bounds``: array<struct<s:int, e:int>> of
     (exclusive-start, inclusive-end) chunk bounds — consecutive pairs
     over [0] ++ cuts ++ [len], dropping the empty tail pair that
@@ -86,7 +84,7 @@ def with_chunk_bounds(
     from chronobase_spark.catalog import spread
 
     df = spread(df, key="doc_id" if "doc_id" in df.columns else None)
-    t = F.col(text_col)
+    t = F.col("text")
     stage1 = barrier(
         df,
         # length(t) > 0 guard: split("", "") is [""] (size 1, ascii 0),
@@ -135,14 +133,14 @@ def with_chunk_bounds(
     )
 
 
-def chunk_hashes(df: DataFrame, text_col: str = "text") -> DataFrame:
+def chunk_hashes(df: DataFrame) -> DataFrame:
     """Adds ``chunk_md5s``: array<string> of per-chunk md5 keys, one
     row per document — the STREAMING-safe shape (map-only, no explode,
     bytes linear in text; streaming.docs.cdc_stage wraps this). md5 is
     computed over the chunk substring via substr on the original text
     attribute (cheap: no per-chunk array copies)."""
-    t = F.col(text_col)
-    bounded = with_chunk_bounds(df, text_col)
+    t = F.col("text")
+    bounded = with_chunk_bounds(df)
     hashes = F.transform(
         F.col("_cdc_bounds"),
         lambda st: F.md5(F.substr(t, st["s"] + 1, st["e"] - st["s"])),
@@ -150,16 +148,14 @@ def chunk_hashes(df: DataFrame, text_col: str = "text") -> DataFrame:
     return bounded.select(*df.columns, hashes.alias("chunk_md5s"))
 
 
-def chunk_table(
-    docs: DataFrame, text_col: str = "text", keep_text: bool = False
-) -> DataFrame:
+def chunk_table(docs: DataFrame, keep_text: bool = False) -> DataFrame:
     """Exploded chunk inventory: (doc_id, source, chunk_idx, chunk_md5,
     chunk_len[, chunk_text]). The md5 is the dedup key — 16 bytes per
     chunk into the shuffle instead of chunk bodies (collision odds at
     100 TB chunk counts are ~2⁻¹²⁸-scale; the trade is standard for
     content stores). NULL-text docs contribute no rows."""
-    t = F.col(text_col)
-    bounded = with_chunk_bounds(docs, text_col)
+    t = F.col("text")
+    bounded = with_chunk_bounds(docs)
     ex = bounded.select(
         "doc_id",
         "source",
@@ -192,7 +188,7 @@ def chunk_table(
     return out
 
 
-def chunk_dedup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def chunk_dedup_stats(docs: DataFrame) -> DataFrame:
     """Per-source CDC dedup accounting: total vs distinct chunks and
     chars, plus the byte-savings ratio a chunk store would realize.
 
@@ -203,7 +199,7 @@ def chunk_dedup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     exact integer sums — order-insensitive, cross-engine exact, no
     rounding needed."""
     per_chunk = (
-        chunk_table(docs, text_col)
+        chunk_table(docs)
         .groupBy("source", "chunk_md5")
         .agg(
             F.count(F.lit(1)).alias("cnt"),

@@ -31,15 +31,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 25,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """(id, label) for every node appearing in ``edges``; ``label`` is
     the minimum node id reachable from ``id`` (= the cluster's canonical
-    id). Raises if not converged within ``max_iter`` rounds (diameter
+    id). Raises if not converged within 25 rounds (diameter
     bound; near-dup graphs converge in a handful)."""
     # The symmetric edge list is static: partition it on the join key
     # and materialize it once. Every round's edges ⋈ labels then
@@ -48,8 +43,8 @@ def connected_components(
     # whole MinHash pipeline). The distinct() after repartition("a")
     # dedups within the a-partitions, so one shuffle serves both.
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        .union(edges.select(F.col("doc_b").alias("a"), F.col("doc_a").alias("b")))
         .repartition("a")
         .distinct()
         .localCheckpoint(eager=True)
@@ -92,7 +87,7 @@ def connected_components(
         return df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
     total_prev = label_sum(labels)
-    for _ in range(max_iter):
+    for _ in range(25):
         contrib = sym.join(
             labels.hint("shuffle_hash"), sym["a"] == labels["id"]
         ).select(F.col("b").alias("id"), "label")
@@ -106,37 +101,26 @@ def connected_components(
         if total == total_prev:
             return labels
         total_prev = total
-    raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
+    raise RuntimeError("connected_components: no fixpoint in 25 rounds")
 
 
-def assign_clusters(
-    all_ids: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
+def assign_clusters(all_ids: DataFrame, edges: DataFrame) -> DataFrame:
     """Every id in ``all_ids`` mapped to its duplicate-cluster canonical
     id (its own id when it is in no pair) — the join-back table the
     pipeline filters on (keep rows where doc_id == cluster_id)."""
-    labels = connected_components(edges, src, dst)
+    labels = connected_components(edges)
     # labels is corpus-derived (every paired doc) — never broadcast it.
     return (
-        all_ids.select(id_col)
-        .join(labels.hint("shuffle_hash"), all_ids[id_col] == labels["id"], "left")
+        all_ids.select("doc_id")
+        .join(labels.hint("shuffle_hash"), all_ids["doc_id"] == labels["id"], "left")
         .select(
-            id_col,
-            F.coalesce("label", F.col(id_col)).alias("cluster_id"),
+            "doc_id",
+            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
         )
     )
 
 
-def graph_pagerank(
-    pairs: DataFrame,
-    iters: int = 2,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
+def graph_pagerank(pairs: DataFrame, iters: int = 2) -> DataFrame:
     """PageRank over the undirected near-dup graph — centrality-ranked
     duplicates (the canonical-pick signal "which copy is the hub";
     min-id CC keeps the smallest id, this keeps the most-connected).
@@ -159,9 +143,9 @@ def graph_pagerank(
     rank_micro).
     """
     edges = pairs.select(
-        F.col(src).alias("e_src"), F.col(dst).alias("e_dst")
+        F.col("doc_a").alias("e_src"), F.col("doc_b").alias("e_dst")
     ).unionAll(
-        pairs.select(F.col(dst).alias("e_src"), F.col(src).alias("e_dst"))
+        pairs.select(F.col("doc_b").alias("e_src"), F.col("doc_a").alias("e_dst"))
     )
     deg = edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("degree"))
     ranks = deg.select(
@@ -191,13 +175,13 @@ def graph_pagerank(
     )
 
 
-def _canon_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def _canon_edges(edges: DataFrame) -> DataFrame:
     """Distinct undirected edges, canonically (larger, smaller), no
     self-loops."""
     return (
         edges.select(
-            F.greatest(F.col(src), F.col(dst)).alias("u"),
-            F.least(F.col(src), F.col(dst)).alias("v"),
+            F.greatest(F.col("doc_a"), F.col("doc_b")).alias("u"),
+            F.least(F.col("doc_a"), F.col("doc_b")).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
@@ -240,12 +224,7 @@ def _small_star(e: DataFrame) -> DataFrame:
     )
 
 
-def connected_components_star(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 30,
-) -> DataFrame:
+def connected_components_star(edges: DataFrame) -> DataFrame:
     """(id, label) by the ALTERNATING large-star/small-star algorithm
     (Kiveris et al., "Connected Components in MapReduce and Beyond",
     SoCC'14): converges in O(log² n) rounds REGARDLESS of graph
@@ -275,9 +254,9 @@ def connected_components_star(
     reliable ``checkpoint()`` directory buys the same truncation plus
     executor-loss recovery; local checkpoint is the right single-node
     trade."""
-    e = _canon_edges(edges, src, dst).localCheckpoint(eager=True)
+    e = _canon_edges(edges).localCheckpoint(eager=True)
     n_prev = e.count()
-    for _ in range(max_iter):
+    for _ in range(30):
         new_e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         n_new = new_e.count()
         if n_new == n_prev and new_e.exceptAll(e).limit(1).count() == 0:
@@ -286,7 +265,7 @@ def connected_components_star(
         e, n_prev = new_e, n_new
     else:
         raise RuntimeError(
-            f"connected_components_star: no fixpoint in {max_iter} rounds"
+            "connected_components_star: no fixpoint in 30 rounds"
         )
     # stars: every edge is (child, root); roots label themselves
     return e.select(
@@ -296,33 +275,22 @@ def connected_components_star(
     ).distinct()
 
 
-def assign_clusters_star(
-    all_ids: DataFrame,
-    edges: DataFrame,
-    id_col: str = "doc_id",
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
+def assign_clusters_star(all_ids: DataFrame, edges: DataFrame) -> DataFrame:
     """assign_clusters with the star-contraction CC (same output
     contract: every id mapped to its cluster's min id, singletons to
     themselves)."""
-    labels = connected_components_star(edges, src, dst)
+    labels = connected_components_star(edges)
     return (
-        all_ids.select(id_col)
-        .join(labels.hint("shuffle_hash"), all_ids[id_col] == labels["id"], "left")
+        all_ids.select("doc_id")
+        .join(labels.hint("shuffle_hash"), all_ids["doc_id"] == labels["id"], "left")
         .select(
-            id_col,
-            F.coalesce("label", F.col(id_col)).alias("cluster_id"),
+            "doc_id",
+            F.coalesce("label", F.col("doc_id")).alias("cluster_id"),
         )
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int = 2,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int = 2) -> DataFrame:
     """Synchronous deterministic label propagation (LPA) over the
     undirected near-dup graph: every node starts labeled with its own
     id; each round it adopts its neighbors' MOST FREQUENT label,
@@ -342,8 +310,8 @@ def label_propagation(
     ``localCheckpoint(eager=True)``, which leaves nothing cached.
     Returns (id, community) for every node with ≥1 edge."""
     sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .unionAll(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
+        edges.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        .unionAll(edges.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
         .distinct()
         .localCheckpoint(eager=True)
     )

@@ -47,9 +47,6 @@ from chronobase_spark.dedup._bands import band_join
 
 def levenshtein_near_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lang_col: str = "lang",
     prefix_len: int = 24,
     rel_threshold: float = 0.3,
 ) -> DataFrame:
@@ -61,11 +58,11 @@ def levenshtein_near_pairs(
     Levenshtein (the SQL oracle runs DuckDB's).
     """
     docs = df.select(
-        F.col(id_col).alias("doc"),
-        F.col(lang_col).alias("lang"),
-        F.col(text_col).alias("txt"),
-        F.substring(F.col(text_col), 1, prefix_len).alias("pre"),
-        F.length(F.col(text_col)).alias("len"),
+        F.col("doc_id").alias("doc"),
+        F.col("lang"),
+        F.col("text").alias("txt"),
+        F.substring(F.col("text"), 1, prefix_len).alias("pre"),
+        F.length(F.col("text")).alias("len"),
     )
     # two-frame form: the a.doc < b.doc test lives in the DP guard below
     cand = band_join(docs, docs, keys=("lang", "pre"))

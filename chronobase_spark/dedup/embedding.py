@@ -31,11 +31,11 @@ DIM = 64
 SEED = 42
 
 
-def hyperplanes(num_planes: int = 8, dim: int = DIM, seed: int = SEED) -> np.ndarray:
+def hyperplanes(num_planes: int = 8, seed: int = SEED) -> np.ndarray:
     """Deterministic Gaussian hyperplanes, rounded to 6 decimals so the
     literals embedded in Spark and SQL are the exact same doubles."""
     rng = np.random.default_rng(seed)
-    return np.round(rng.standard_normal((num_planes, dim)), 6)
+    return np.round(rng.standard_normal((num_planes, DIM)), 6)
 
 
 def _plane_dot(vec: Column, plane: np.ndarray) -> Column:
@@ -70,33 +70,26 @@ def sql_signature_expr(vec_expr: str, planes: np.ndarray) -> str:
     return " + ".join(terms)
 
 
-def bucketed_near_pairs(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 8,
-    min_cosine: float = 0.9,
-    round_digits: int = 6,
-) -> DataFrame:
+def bucketed_near_pairs(df: DataFrame, min_cosine: float = 0.9) -> DataFrame:
     """Near-duplicate vector pairs (a < b) that share an LSH bucket AND
     have exact cosine ≥ min_cosine. Shuffle on bucket id; exact math only
     within buckets."""
-    planes = hyperplanes(num_planes)
+    planes = hyperplanes()
     # persist: the signature (num_planes × dim fold per row) feeds both
     # sides of the self-join — compute once. The norm rides along (r17):
     # cached per ROW, where cosine() in the join would re-fold it per
     # PAIR — bit-identical sim (same fold, same multiply).
     sig = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
-        _sim_norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("vec"),
+        lsh_signature(F.col("embedding"), planes).alias("bucket"),
+        _sim_norm(F.col("embedding")).alias("nrm"),
     ).persist()
     sim = F.round(
         cosine_pre(
             F.col("a.vec"), F.col("b.vec"), F.col("a.nrm"), F.col("b.nrm")
         ),
-        round_digits,
+        6,
     )
     return (
         band_join(sig, keys=("bucket",), id_col="vid")
@@ -109,29 +102,21 @@ def bucketed_near_pairs(
     )
 
 
-def ivf_topk(
-    df: DataFrame,
-    probe_ids: list[int],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 6,
-    round_digits: int = 6,
-) -> DataFrame:
+def ivf_topk(df: DataFrame, probe_ids: list[int]) -> DataFrame:
     """IVF/LSH-style approximate top-k: each probe searches only its own
     LSH cell instead of the full corpus. Returns (q_id, n_id, sim) ranked
     within cell. The approximation is the cell restriction; ranking
     inside is exact cosine."""
     from pyspark.sql import Window
 
-    planes = hyperplanes(num_planes)
+    planes = hyperplanes(6)
     # nrm projected once per row below the join (r17; see cosine()'s
     # join-path note) — bit-identical sim, |pairs| fewer norm folds.
     sig = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
-        _sim_norm(F.col(vec_col)).alias("nrm"),
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("vec"),
+        lsh_signature(F.col("embedding"), planes).alias("bucket"),
+        _sim_norm(F.col("embedding")).alias("nrm"),
     )
     probes = sig.filter(F.col("vid").isin(probe_ids)).select(
         F.col("vid").alias("q_id"),
@@ -145,12 +130,12 @@ def ivf_topk(
     )
     sim = F.round(
         cosine_pre(F.col("q_vec"), F.col("vec"), F.col("q_nrm"), F.col("nrm")),
-        round_digits,
+        6,
     )
     scored = cands.select("q_id", F.col("vid").alias("n_id"), sim.alias("sim"))
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
     return scored.withColumn("rnk", F.row_number().over(w)).filter(
-        F.col("rnk") <= k
+        F.col("rnk") <= 10
     ).drop("rnk")
 
 
@@ -160,9 +145,6 @@ def ivf_pq_topk(
     num_planes: int = 6,
     m: int = 8,
     k: int = 10,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ search — the full FAISS-style ANN composition: the probe
     ROUTES to its LSH cell (coarse quantizer, same hyperplane signature
@@ -184,8 +166,8 @@ def ivf_pq_topk(
 
     planes = hyperplanes(num_planes)
     sig = df.select(
-        F.col(id_col).alias("vid"),
-        lsh_signature(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("vid"),
+        lsh_signature(F.col("embedding"), planes).alias("bucket"),
     )
     probe_bucket = sig.filter(F.col("vid") == probe_id).select(
         F.col("bucket").alias("q_bucket")
@@ -193,32 +175,26 @@ def ivf_pq_topk(
     cand = (
         sig.join(F.broadcast(probe_bucket), F.col("bucket") == F.col("q_bucket"))
         .filter(F.col("vid") != probe_id)
-        .select(F.col("vid").alias(id_col))
+        .select(F.col("vid").alias("vec_id"))
     )
 
     # One subvector/codebook build feeds assignment AND the probe LUT
     # (similarity's shared _pq_codes/_pq_lut/_adc_topk — the single ADC
     # definition both search paths rank with).
-    subs = _sim._pq_subvectors(df, m, id_col, label_col, vec_col)
+    subs = _sim._pq_subvectors(df, m, "vec_id", "label", "embedding")
     book = _sim._pq_codebook(subs)
-    codes = _sim._pq_codes(subs, book, id_col).select(
-        id_col, "subspace", "code"
+    codes = _sim._pq_codes(subs, book).select(
+        "vec_id", "subspace", "code"
     )
-    lut = _sim._pq_lut(subs, book, probe_id, id_col)
+    lut = _sim._pq_lut(subs, book, probe_id)
     return _sim._adc_topk(
-        codes.join(cand.hint("shuffle_hash"), id_col, "left_semi"),
+        codes.join(cand.hint("shuffle_hash"), "vec_id", "left_semi"),
         lut,
         k,
-        id_col,
     )
 
 
-def semantic_cell_model(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 8,
-) -> DataFrame:
+def semantic_cell_model(df: DataFrame, num_planes: int = 8) -> DataFrame:
     """Freeze the corpus-side model for streaming semantic admission
     (streaming/docs.semantic_admit_stage): the persisted (vid, vec,
     cell) table under the SAME literal hyperplanes the batch pair
@@ -229,11 +205,11 @@ def semantic_cell_model(
     — the minhash_band_model convention)."""
     planes = hyperplanes(num_planes)
     return (
-        df.filter(F.col(vec_col).isNotNull())
+        df.filter(F.col("embedding").isNotNull())
         .select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("vec"),
-            lsh_signature(F.col(vec_col), planes).alias("cell"),
+            F.col("vec_id").alias("vid"),
+            F.col("embedding").alias("vec"),
+            lsh_signature(F.col("embedding"), planes).alias("cell"),
         )
         .persist()
     )
@@ -243,10 +219,6 @@ def semantic_cell_model_bucketed(
     df: DataFrame,
     table_prefix: str = "chrono_semantic_model",
     buckets: int = 32,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    target_cell_size: int = 32,
-    max_planes: int = 16,
 ) -> tuple[DataFrame, int]:
     """``semantic_cell_model_scaled`` persisted as a BUCKETED TABLE on
     the admission join's exact key (``cell``) — the embedding member
@@ -261,9 +233,7 @@ def semantic_cell_model_bucketed(
     from chronobase_spark.sources.writers import write_bucketed
 
     spark = df.sparkSession
-    cells, k = semantic_cell_model_scaled(
-        df, vec_col, id_col, target_cell_size, max_planes
-    )
+    cells, k = semantic_cell_model_scaled(df)
     name = f"{table_prefix}_cells"
     write_bucketed(cells, name, "cell", buckets, sort_col="cell")
     cells.unpersist()
@@ -272,8 +242,6 @@ def semantic_cell_model_bucketed(
 
 def semantic_cell_model_scaled(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     target_cell_size: int = 32,
     max_planes: int = 16,
 ) -> tuple[DataFrame, int]:
@@ -291,22 +259,19 @@ def semantic_cell_model_scaled(
     construction (plane i is bit i). Returns ``(cells, k)``; pass
     ``num_planes=k`` to semantic_admit_stage so arriving rows fold the
     SAME masked cell."""
-    n = df.filter(F.col(vec_col).isNotNull()).count()
+    n = df.filter(F.col("embedding").isNotNull()).count()
     k = next(
         (k for k in range(1, max_planes + 1)
          if (1 << k) * target_cell_size >= n),
         max_planes,
     )
-    return semantic_cell_model(df, vec_col, id_col, num_planes=k), k
+    return semantic_cell_model(df, num_planes=k), k
 
 
 def semantic_dedup(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     num_planes: int = 8,
     min_cosine: float = 0.35,
-    round_digits: int = 6,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus (here: deterministic LSH
@@ -322,22 +287,19 @@ def semantic_dedup(
     globally. NULL embeddings are excluded up front (explicit null
     contract; a vector store may not assume them)."""
     planes = hyperplanes(num_planes)
-    sig = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_signature(F.col(vec_col), planes).alias("cell"),
+    sig = df.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("vec"),
+        lsh_signature(F.col("embedding"), planes).alias("cell"),
     )
-    return _dedup_assign(sig, min_cosine, round_digits)
+    return _dedup_assign(sig, min_cosine)
 
 
 def semantic_dedup_scaled(
     df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     target_cell_size: int = 32,
     max_planes: int = 16,
     min_cosine: float = 0.35,
-    round_digits: int = 6,
 ) -> DataFrame:
     """``semantic_dedup`` with a quantizer that SCALES WITH THE CORPUS —
     the SemDeDup paper's posture (cluster count grows with n so cluster
@@ -358,10 +320,10 @@ def semantic_dedup_scaled(
     ANSI SQL oracle computes the identical k (cross-engine exact).
     Returns (vec_id, cell, kept) like semantic_dedup."""
     planes = hyperplanes(max_planes)
-    base = df.filter(F.col(vec_col).isNotNull()).select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        lsh_signature(F.col(vec_col), planes).alias("sig"),
+    base = df.filter(F.col("embedding").isNotNull()).select(
+        F.col("vec_id").alias("vid"),
+        F.col("embedding").alias("vec"),
+        lsh_signature(F.col("embedding"), planes).alias("sig"),
     )
     k = base.agg(F.count(F.lit(1)).alias("n")).select(
         F.expr(
@@ -375,11 +337,11 @@ def semantic_dedup_scaled(
         "vec",
         F.expr("sig & (shiftleft(cast(1 as bigint), k) - 1)").alias("cell"),
     )
-    return _dedup_assign(sig, min_cosine, round_digits)
+    return _dedup_assign(sig, min_cosine)
 
 
 def _dedup_assign(
-    sig: DataFrame, min_cosine: float, round_digits: int
+    sig: DataFrame, min_cosine: float
 ) -> DataFrame:
     """Shared SemDeDup keep/drop pass over (vid, vec, cell): pairwise
     cosine within cells, smallest id per semantic group survives."""
@@ -394,7 +356,7 @@ def _dedup_assign(
         cosine_pre(
             F.col("a.vec"), F.col("b.vec"), F.col("a._nrm"), F.col("b._nrm")
         ),
-        round_digits,
+        6,
     )
     drops = (
         band_join(sig, keys=("cell",), id_col="vid")

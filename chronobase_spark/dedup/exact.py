@@ -20,34 +20,28 @@ def normalize(text: Column) -> Column:
     return F.trim(F.regexp_replace(cleaned, r"\s+", " "))
 
 
-def dedup_exact(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Keep the minimum-id representative per exact text; report group
     size. Returns (doc_id, dup_count) — dup_count > 1 marks duplicate
     clusters."""
-    return df.groupBy(text_col).agg(
-        F.min(id_col).alias(id_col),
+    return df.groupBy("text").agg(
+        F.min("doc_id").alias("doc_id"),
         F.count(F.lit(1)).alias("dup_count"),
-    ).select(id_col, "dup_count")
+    ).select("doc_id", "dup_count")
 
 
-def dedup_normalized(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dedup_normalized(df: DataFrame) -> DataFrame:
     """Exact dedup on the normalized form (case/punct/whitespace
     -insensitive)."""
     return (
-        df.select(F.col(id_col), normalize(F.col(text_col)).alias("_norm"))
+        df.select(F.col("doc_id"), normalize(F.col("text")).alias("_norm"))
         .groupBy("_norm")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
-        .select(id_col, "dup_count")
+        .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("dup_count"))
+        .select("doc_id", "dup_count")
     )
 
 
-def canonical_map(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def canonical_map(df: DataFrame) -> DataFrame:
     """Duplicate-cluster canonical assignment: every row keeps its id
     plus the minimum id sharing its normalized text — the keep-one
     mapping a training pipeline joins back onto the corpus to drop (or
@@ -55,25 +49,9 @@ def canonical_map(
     over the normalized key (a single hash shuffle); at 100 TB, window
     over a digest of the text (see dedup_by_digest) so the shuffle
     carries hashes, not bodies."""
-    w = Window.partitionBy(normalize(F.col(text_col)))
-    canonical = F.min(id_col).over(w).alias("canonical_id")
+    w = Window.partitionBy(normalize(F.col("text")))
+    canonical = F.min("doc_id").over(w).alias("canonical_id")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         canonical,
-    ).withColumn("is_duplicate", F.col(id_col) != F.col("canonical_id"))
-
-
-def dedup_by_digest(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Scale variant: shuffle a 64-bit digest of the normalized text
-    instead of the text itself (the shuffle payload at 100 TB is ids +
-    hashes only). Collisions at 64 bits are ~n²/2⁶⁵ — negligible below
-    ~10⁹ docs; use sha2-256 beyond."""
-    h = F.xxhash64(normalize(F.col(text_col)))
-    return (
-        df.select(F.col(id_col), h.alias("_digest"))
-        .groupBy("_digest")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("dup_count"))
-        .select(id_col, "dup_count")
-    )
+    ).withColumn("is_duplicate", F.col("doc_id") != F.col("canonical_id"))

@@ -32,14 +32,18 @@ from chronobase_spark.catalog import spread
 from chronobase_spark.dedup._bands import band_join, jaccard_sizes, with_shingles
 from chronobase_spark.dedup.ngram import shingles
 
+#: Word n-gram size of every MinHash shingle, batch and streaming.
+SHINGLE_N = 3
+#: The portable md5 banding scheme: BANDS bands of ROWS_PER_BAND lanes.
+#: md5_band_table, minhash_band_model(_bucketed), minhash_md5_pairs,
+#: streaming/docs.minhash_admit_stage and the DuckDB oracles in
+#: queries.py all read it, so an admission model and its arrivals
+#: always band alike.
+BANDS = 4
+ROWS_PER_BAND = 4
 
-def minhash_signature(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 128,
-    n: int = 3,
-) -> DataFrame:
+
+def minhash_signature(df: DataFrame, num_perm: int = 128) -> DataFrame:
     """(id, sig: array<bigint>[num_perm]).
 
     Two-stage, fully codegen'd formulation:
@@ -63,8 +67,8 @@ def minhash_signature(
     """
     return _xxhash_lanes(
         df.select(
-            F.col(id_col).alias("doc"),
-            F.explode(shingles(F.col(text_col), n)).alias("_g"),
+            F.col("doc_id").alias("doc"),
+            F.explode(shingles(F.col("text"), SHINGLE_N)).alias("_g"),
         ),
         num_perm,
     )
@@ -158,7 +162,7 @@ def md5_lane(g, i: int):
     ).cast("bigint")
 
 
-def md5_band_key(lane_cols, bands: int, rows_per_band: int):
+def md5_band_key(lane_cols):
     """array<struct(band_id, band_val)> from per-lane columns — the
     shared banding layout (comma-joined lane strings, engine-portable).
     ``lane_cols[i]`` must be lane i's value; shared by batch and
@@ -170,19 +174,17 @@ def md5_band_key(lane_cols, bands: int, rows_per_band: int):
                 F.concat_ws(
                     ",",
                     *[
-                        lane_cols[bi * rows_per_band + r].cast("string")
-                        for r in range(rows_per_band)
+                        lane_cols[bi * ROWS_PER_BAND + r].cast("string")
+                        for r in range(ROWS_PER_BAND)
                     ],
                 ).alias("band_val"),
             )
-            for bi in range(bands)
+            for bi in range(BANDS)
         ]
     )
 
 
-def md5_band_table_from_shingles(
-    sh: DataFrame, bands: int = 4, rows_per_band: int = 4
-) -> DataFrame:
+def md5_band_table_from_shingles(sh: DataFrame) -> DataFrame:
     """(doc, band_id, band_val) from an existing (doc, sh) shingle
     table (:func:`shingle_table`): one explode of the shingle ARRAYS,
     ONE groupBy with num_perm min-lanes (map-side partial agg), then
@@ -192,30 +194,21 @@ def md5_band_table_from_shingles(
     and verify stages used to tokenize+shingle the corpus
     independently — one redundant full-text pass per invocation, and
     at 100 TB one redundant corpus scan+shuffle)."""
-    num_perm = bands * rows_per_band
+    num_perm = BANDS * ROWS_PER_BAND
     exploded = sh.select("doc", F.explode("sh").alias("_g"))
     lanes = [
         F.min(md5_lane(F.col("_g"), i)).alias(f"_m{i}")
         for i in range(num_perm)
     ]
-    sigs = exploded.groupBy("doc").agg(*lanes).persist()
-    key_arr = md5_band_key(
-        [F.col(f"_m{i}") for i in range(num_perm)], bands, rows_per_band
-    )
+    sigs = exploded.groupBy("doc").agg(*lanes)
+    key_arr = md5_band_key([F.col(f"_m{i}") for i in range(num_perm)])
     return (
         sigs.select("doc", F.explode(key_arr).alias("b"))
         .select("doc", "b.band_id", "b.band_val")
     )
 
 
-def md5_band_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-    n: int = 3,
-) -> DataFrame:
+def md5_band_table(df: DataFrame) -> DataFrame:
     """(doc, band_id, band_val): the batch md5-MinHash LSH band table —
     one shingle explode, ONE groupBy with num_perm min-lanes (map-side
     partial agg), then the band explode. Extracted from
@@ -226,14 +219,10 @@ def md5_band_table(
     produces no exploded rows either way), so when a persisted shingle
     table for the same corpus is already cached, Spark's CacheManager
     feeds this table from it instead of re-shingling."""
-    return md5_band_table_from_shingles(
-        shingle_table(df, text_col, id_col, n), bands, rows_per_band
-    )
+    return md5_band_table_from_shingles(shingle_table(df))
 
 
-def shingle_table(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 3
-) -> DataFrame:
+def shingle_table(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc, sh): per-doc distinct shingle arrays for the exact-Jaccard
     verify stage — shared by minhash_md5_pairs and the admission
     model. Input is spread (conditional repartition — catalog.spread)
@@ -246,29 +235,25 @@ def shingle_table(
     Exchange, so the FULL shingle expression (tokenize + per-gram
     assembly + array_distinct) used to evaluate twice per surviving
     row — once as the pushed predicate, once as the projection above
-    the Exchange (visible in the committed r17 plan dumps). A doc has
-    ≥1 shingle iff it has ≥ n tokens (gram count = size(tk)−n+1 > 0 ⟺
-    size(tk) ≥ n; array_distinct of a non-empty array is non-empty),
-    so the pushed predicate now pays ONE tokenize instead of the whole
+    the Exchange (visible in the committed r17 plan dumps). With
+    N = SHINGLE_N, a doc has ≥1 shingle iff it has ≥ N tokens (gram
+    count = size(tk)−N+1 > 0 ⟺ size(tk) ≥ N; array_distinct of a
+    non-empty array is non-empty), so the pushed predicate now pays ONE tokenize instead of the whole
     shingle chain — identical surviving rows and identical sh arrays
     by construction."""
     from chronobase_spark.functions.text import tokens
 
     return (
-        spread(df, key=id_col)
-        .filter(F.size(tokens(F.col(text_col))) >= n)
-        .select(F.col(id_col).alias("doc"), shingles(F.col(text_col), n).alias("sh"))
+        spread(df, key="doc_id")
+        .filter(F.size(tokens(F.col(text_col))) >= SHINGLE_N)
+        .select(
+            F.col("doc_id").alias("doc"),
+            shingles(F.col(text_col), SHINGLE_N).alias("sh"),
+        )
     )
 
 
-def minhash_band_model(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-    n: int = 3,
-) -> tuple[DataFrame, DataFrame]:
+def minhash_band_model(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Freeze the corpus-side model for streaming near-dup admission
     (streaming/docs.minhash_admit_stage): the (doc, band_id, band_val)
     band table and the (doc, sh) shingle table, both persisted — they
@@ -280,8 +265,8 @@ def minhash_band_model(
     joins hit exactly the keys the batch pair finder banded on.
     Callers own the caches' lifetime (unpersist on retrain — the
     dsir_model lesson)."""
-    sh = shingle_table(docs, text_col, id_col, n).persist()
-    return md5_band_table_from_shingles(sh, bands, rows_per_band).persist(), sh
+    sh = shingle_table(docs).persist()
+    return md5_band_table_from_shingles(sh).persist(), sh
 
 
 def minhash_band_model_bucketed(
@@ -289,10 +274,6 @@ def minhash_band_model_bucketed(
     table_prefix: str = "chrono_admit_model",
     buckets: int = 32,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-    n: int = 3,
 ) -> tuple[DataFrame, DataFrame]:
     """``minhash_band_model`` persisted as BUCKETED TABLES — the
     admission stage's scale lever 3 turned into code: the band table
@@ -318,17 +299,16 @@ def minhash_band_model_bucketed(
     each table with writers.reattach_bucketed — one DDL, ~0.22 s at
     any store size, instead of re-paying this builder (measured in
     SCALING.md r16; pinned across a real session boundary in
-    tests/test_plans.py). Same (bands, rows_per_band, n) contract as
-    minhash_band_model."""
+    tests/test_plans.py)."""
     from chronobase_spark.sources.writers import write_bucketed
 
     spark = docs.sparkSession
     band_name = f"{table_prefix}_bands"
     sh_name = f"{table_prefix}_shingles"
-    sh = shingle_table(docs, text_col, id_col, n).persist()
+    sh = shingle_table(docs, text_col).persist()
     try:
         write_bucketed(
-            md5_band_table_from_shingles(sh, bands, rows_per_band),
+            md5_band_table_from_shingles(sh),
             band_name,
             ["band_id", "band_val"],
             buckets,
@@ -343,10 +323,6 @@ def minhash_band_model_bucketed(
 def minhash_md5_pairs(
     df: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    bands: int = 4,
-    rows_per_band: int = 4,
-    n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Portable-hash MinHash+LSH twin — same banding pipeline as
@@ -374,8 +350,11 @@ def minhash_md5_pairs(
     the verify joins — the band and verify stages used to re-shingle
     the corpus independently (one redundant text scan + spread shuffle
     per invocation; plan diff: two parquet scans of documents → one)."""
-    sh = shingle_table(df, text_col, id_col, n).persist()
-    cands = _pairs(md5_band_table_from_shingles(sh, bands, rows_per_band))
+    sh = shingle_table(df, text_col).persist()
+    # persisted: both sides of the band self-join read it, and without
+    # the cache each side re-runs the 16-lane md5 aggregate (AQE does
+    # not reuse the exchange above a cached scan)
+    cands = _pairs(md5_band_table_from_shingles(sh).persist())
     thresh_micro = int(round(threshold * 1_000_000))
     common, union = jaccard_sizes("sh_a", "sh_b", F.col("_c"))
     return (
@@ -393,23 +372,14 @@ def minhash_md5_pairs(
     )
 
 
-def minhash_dedup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 128,
-    bands: int = 16,
-    rows_per_band: int = 8,
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     """End-to-end: LSH candidates verified with exact shingle Jaccard.
 
     Returns (doc_a, doc_b, jaccard) for verified pairs ≥ threshold.
 
     The signature table is persisted before banding: the banding stage
     references it 16×(bands) × 2(join sides), and the signature
-    expression is ~num_perm × |shingles| hash evaluations per doc —
+    expression is ~128 × |shingles| hash evaluations per doc —
     recomputing it per reference is a >100× slowdown (measured). At
     100 TB you'd materialize signatures as their own table; persist()
     is the single-job version of that decision.
@@ -421,11 +391,9 @@ def minhash_dedup_pairs(
     input spread is conditional (catalog.spread: identity on
     well-split 100 TB scans, parallelizing only unsplittable local
     files)."""
-    sh = shingle_table(df, text_col, id_col, n).persist()
-    sigs = _xxhash_lanes(
-        sh.select("doc", F.explode("sh").alias("_g")), num_perm
-    ).persist()
-    cands = lsh_candidates(sigs, bands, rows_per_band)
+    sh = shingle_table(df).persist()
+    sigs = _xxhash_lanes(sh.select("doc", F.explode("sh").alias("_g")), 128).persist()
+    cands = lsh_candidates(sigs)
     # _c bound as its own column so the intersect runs once.
     common, union = jaccard_sizes("sh_a", "sh_b", F.col("_c"), dtype=None)
     return (

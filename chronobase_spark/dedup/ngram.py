@@ -52,9 +52,7 @@ def shingles(text: Column, n: int = 3) -> Column:
     return F.get(F.transform(F.array(tokens(text)), grams_of), 0)
 
 
-def decontam_model(
-    benchmark: DataFrame, text_col: str = "text", n: int = 3
-) -> DataFrame:
+def decontam_model(benchmark: DataFrame, text_col: str = "text") -> DataFrame:
     """Freeze the BENCHMARK shingle set for streaming decontamination
     admission (streaming/docs.decontam_admit_stage): the distinct
     n-gram shingles of the eval suite, persisted — re-read every
@@ -65,7 +63,7 @@ def decontam_model(
     batch sweep counts). Callers own the cache's lifetime (unpersist
     on benchmark refresh — the minhash_band_model convention)."""
     return (
-        benchmark.select(F.explode(shingles(F.col(text_col), n)).alias("sh"))
+        benchmark.select(F.explode(shingles(F.col(text_col))).alias("sh"))
         .distinct()
         .persist()
     )
@@ -75,8 +73,6 @@ def contamination_overlap(
     corpus: DataFrame,
     benchmark: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     min_overlap: int = 3,
 ) -> DataFrame:
     """Benchmark decontamination: corpus docs sharing ≥ ``min_overlap``
@@ -95,11 +91,11 @@ def contamination_overlap(
     doc, so a plain count is the distinct-overlap count.
     """
     bench_sh = benchmark.select(
-        F.explode(shingles(F.col(text_col), n)).alias("sh")
+        F.explode(shingles(F.col(text_col))).alias("sh")
     ).distinct()
     corpus_sh = corpus.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles(F.col(text_col), n)).alias("sh"),
+        F.col("doc_id"),
+        F.explode(shingles(F.col(text_col))).alias("sh"),
     )
     return (
         corpus_sh.join(F.broadcast(bench_sh), "sh")
@@ -110,7 +106,7 @@ def contamination_overlap(
 
 
 def _pair_candidates(
-    df: DataFrame, text_col: str, id_col: str, n: int, max_df: int
+    df: DataFrame, max_df: int
 ) -> DataFrame:
     """ONE-definition candidate pipeline shared by BOTH batch pair
     finders (:func:`jaccard_pairs` / :func:`containment_pairs`) — the
@@ -146,7 +142,7 @@ def _pair_candidates(
     # 16-lane md5 signature (~2.8 s single-core) makes the spread a
     # clear win.
     sh = df.select(
-        F.col(id_col).alias("doc"), F.explode(shingles(F.col(text_col), n)).alias("sh")
+        F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"))).alias("sh")
     ).persist()
     # |shingles(doc)|
     sizes = sh.groupBy("doc").agg(F.count(F.lit(1)).alias("n_sh"))
@@ -196,14 +192,7 @@ def _pair_candidates(
     return common.join(sa, "doc_a").join(sb, "doc_b")
 
 
-def jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.2,
-    max_df: int = 50,
-) -> DataFrame:
+def jaccard_pairs(df: DataFrame, threshold: float = 0.2, max_df: int = 50) -> DataFrame:
     """All document pairs (a < b) with shingle-set Jaccard ≥ threshold.
 
     Returns (doc_a, doc_b, jaccard) with jaccard rounded to 6 digits so
@@ -212,7 +201,7 @@ def jaccard_pairs(
     :func:`containment_pairs` — see its docstring for the scale shape
     and cache-lifetime contract); only the measure differs.
     """
-    cand = _pair_candidates(df, text_col, id_col, n, max_df)
+    cand = _pair_candidates(df, max_df)
     jac = F.round(
         F.col("common").cast("double")
         / (F.col("n_a") + F.col("n_b") - F.col("common")).cast("double"),
@@ -225,9 +214,6 @@ def jaccard_pairs(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     threshold: float = 0.8,
     max_df: int = 50,
 ) -> DataFrame:
@@ -249,7 +235,7 @@ def containment_pairs(
     never-broadcast-a-corpus join discipline carry over by
     construction. The asymmetric MEASURE changes only the final
     projection."""
-    cand = _pair_candidates(df, text_col, id_col, n, max_df)
+    cand = _pair_candidates(df, max_df)
     c_ab = F.round(F.col("common").cast("double") / F.col("n_a").cast("double"), 6)
     c_ba = F.round(F.col("common").cast("double") / F.col("n_b").cast("double"), 6)
     return (
@@ -266,16 +252,10 @@ def containment_pairs(
     )
 
 
-def containment_model(
-    corpus: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_df: int = 50,
-) -> DataFrame:
+def containment_model(corpus: DataFrame, text_col: str = "text") -> DataFrame:
     """Freeze the corpus-side posting lists for streaming containment
     admission (streaming/docs.containment_admit_stage): the (doc, sh)
-    shingle table PRUNED at ``max_df`` document frequency — the same
+    shingle table PRUNED at document frequency 50 — the same
     posting-list bound the batch pair finders apply, because a hot
     shingle stored in f docs creates f candidate rows PER ARRIVAL (the
     admission-time form of the f² pair blowup). Persisted; re-read per
@@ -284,24 +264,24 @@ def containment_model(
     — an admission model cannot know future arrivals' df), which is
     the deterministic contract the batch twin ``containment_against``
     shares."""
-    return _pruned_postings(corpus, text_col, id_col, n, max_df).persist()
+    return _pruned_postings(corpus, text_col).persist()
 
 
 def _pruned_postings(
-    corpus: DataFrame, text_col: str, id_col: str, n: int, max_df: int
+    corpus: DataFrame, text_col: str
 ) -> DataFrame:
-    """The (doc, sh) posting table pruned at ``max_df``, UNPERSISTED —
+    """The (doc, sh) posting table pruned at document frequency 50, UNPERSISTED —
     containment_model caches it for per-trigger re-reads; the bucketed
     builder materializes it straight into the table (caching there
     would leak a corpus-sized cache the on-disk layout exists to
     avoid, r16 review catch)."""
     sh = corpus.select(
-        F.col(id_col).alias("doc"), F.explode(shingles(F.col(text_col), n)).alias("sh")
+        F.col("doc_id").alias("doc"), F.explode(shingles(F.col(text_col))).alias("sh")
     )
     return sh.join(
         sh.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= max_df)
+        .filter(F.col("df") <= 50)
         .hint("shuffle_hash"),
         "sh",
     ).select("doc", "sh")
@@ -311,10 +291,6 @@ def containment_model_bucketed(
     corpus: DataFrame,
     table_name: str = "chrono_containment_postings",
     buckets: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    max_df: int = 50,
 ) -> DataFrame:
     """``containment_model`` persisted as a table BUCKETED on exactly
     [sh] — the admission join's equi-key — so the corpus-sized posting
@@ -327,7 +303,7 @@ def containment_model_bucketed(
 
     spark = corpus.sparkSession
     write_bucketed(
-        _pruned_postings(corpus, text_col, id_col, n, max_df),
+        _pruned_postings(corpus, "text"),
         table_name,
         "sh",
         buckets,
@@ -336,9 +312,7 @@ def containment_model_bucketed(
     return spark.table(table_name)
 
 
-def novelty_model(
-    corpus: DataFrame, text_col: str = "text", n: int = 3
-) -> DataFrame:
+def novelty_model(corpus: DataFrame, text_col: str = "text") -> DataFrame:
     """Freeze the corpus' DISTINCT shingle set for streaming
     union-novelty admission (streaming/docs.novelty_admit_stage): the
     one-column [sh] membership table, persisted for per-trigger
@@ -351,7 +325,7 @@ def novelty_model(
     most common stored content). Callers own the cache lifetime —
     the model-builder convention."""
     return (
-        corpus.select(F.explode(shingles(F.col(text_col), n)).alias("sh"))
+        corpus.select(F.explode(shingles(F.col(text_col))).alias("sh"))
         .distinct()
         .persist()
     )
@@ -361,8 +335,6 @@ def novelty_model_bucketed(
     corpus: DataFrame,
     table_name: str = "chrono_novelty_shingles",
     buckets: int = 32,
-    text_col: str = "text",
-    n: int = 3,
 ) -> DataFrame:
     """``novelty_model`` persisted as a table BUCKETED on exactly [sh]
     — zero static-side Exchange in the per-trigger membership join;
@@ -373,7 +345,7 @@ def novelty_model_bucketed(
 
     spark = corpus.sparkSession
     write_bucketed(
-        corpus.select(F.explode(shingles(F.col(text_col), n)).alias("sh")).distinct(),
+        corpus.select(F.explode(shingles(F.col("text"))).alias("sh")).distinct(),
         table_name,
         "sh",
         buckets,
@@ -386,8 +358,6 @@ def novelty_candidate_rows(
     arrivals: DataFrame,
     stored_sh: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     carry: tuple[str, ...] = (),
     hint: str | None = None,
 ) -> DataFrame:
@@ -406,9 +376,9 @@ def novelty_candidate_rows(
     if hint is not None:
         stored = stored.hint(hint)
     sh_arr = arrivals.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[F.col(c) for c in carry],
-        shingles(F.col(text_col), n).alias("_sh"),
+        shingles(F.col(text_col)).alias("_sh"),
     ).select(
         "doc_id",
         *carry,
@@ -453,8 +423,6 @@ def novelty_against(
     arrivals: DataFrame,
     stored_sh: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """Batch reference for union-novelty ADMISSION: per arrival, the
     fraction of its distinct shingles absent from the ENTIRE frozen
@@ -469,9 +437,7 @@ def novelty_against(
     instead, the admission-time contract. One row per arrival,
     including NULL-text/shingle-less ones (novelty 0.0). Compiled from
     the SAME shared builders the streaming stage uses."""
-    rows = novelty_candidate_rows(
-        arrivals, stored_sh, text_col, id_col, n, hint="shuffle_hash"
-    )
+    rows = novelty_candidate_rows(arrivals, stored_sh, text_col, hint="shuffle_hash")
     return novelty_projection(rows.groupBy("doc_id").agg(*novelty_agg_exprs()))
 
 
@@ -479,8 +445,6 @@ def containment_candidate_rows(
     arrivals: DataFrame,
     postings: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
     carry: tuple[str, ...] = (),
     hint: str | None = None,
 ) -> DataFrame:
@@ -500,9 +464,9 @@ def containment_candidate_rows(
     if hint is not None:
         post = post.hint(hint)
     sh_arr = arrivals.select(
-        F.col(id_col).alias("doc_id"),
+        F.col("doc_id"),
         *[F.col(c) for c in carry],
-        shingles(F.col(text_col), n).alias("_sh"),
+        shingles(F.col(text_col)).alias("_sh"),
     ).select(
         "doc_id",
         *carry,
@@ -545,8 +509,6 @@ def containment_against(
     arrivals: DataFrame,
     postings: DataFrame,
     text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
 ) -> DataFrame:
     """Batch reference for containment ADMISSION: per arrival, the
     per-candidate containment C(arrival→stored) = |shared pruned
@@ -559,9 +521,7 @@ def containment_against(
     (:func:`containment_candidate_rows` / :func:`containment_agg_exprs`
     / :func:`containment_projection`); reduce to a per-arrival verdict
     with the shared argmax (streaming/docs.finalize_containment)."""
-    rows = containment_candidate_rows(
-        arrivals, postings, text_col, id_col, n, hint="shuffle_hash"
-    )
+    rows = containment_candidate_rows(arrivals, postings, text_col, hint="shuffle_hash")
     return containment_projection(
         rows.groupBy("doc_id", "cand").agg(*containment_agg_exprs())
     )

@@ -51,9 +51,7 @@ MIN_RASTER_ROWS = 8
 MIN_PAYLOAD_BYTES = (MIN_RASTER_ROWS - 1) * multimodal.PPM_WIDTH * 3 + 1
 
 
-def dhash_chunk_table(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def dhash_chunk_table(docs: DataFrame) -> DataFrame:
     """(doc, c0..c3, chunk_id, chunk_val): each image's full dHash
     chunks plus one exploded pigeonhole-band row per 16-bit chunk —
     the table BOTH the batch pair self-join and the frozen-corpus
@@ -63,7 +61,7 @@ def dhash_chunk_table(
     explode's struct equality never matching NULL — callers must
     pre-gate (phash_near_pairs contract)."""
     sigs = multimodal.dhash_chunks(
-        multimodal.to_ppm_payload(docs, text_col, id_col)
+        multimodal.to_ppm_payload(docs)
     )
     cs = [f"c{j}" for j in range(CHUNKS)]
     return sigs.select(
@@ -73,24 +71,20 @@ def dhash_chunk_table(
     ).select("doc", *cs, "k.chunk_id", "k.chunk_val")
 
 
-def phash_band_model(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def phash_band_model(docs: DataFrame) -> DataFrame:
     """Freeze the corpus-side model for streaming image-dedup admission
     (streaming/docs.phash_admit_stage): the persisted chunk table —
     dhash_chunk_table verbatim, so admission bands on the LITERAL keys
     the batch pair finder self-joins. Input must already pass the
     raster gate (MIN_PAYLOAD_BYTES); callers own the cache's lifetime
     (unpersist on retrain — the minhash_band_model convention)."""
-    return dhash_chunk_table(docs, text_col, id_col).persist()
+    return dhash_chunk_table(docs).persist()
 
 
 def phash_band_model_bucketed(
     docs: DataFrame,
     table_prefix: str = "chrono_phash_model",
     buckets: int = 32,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """``phash_band_model`` persisted as a BUCKETED TABLE on the
     admission join's exact keys (``chunk_id, chunk_val``) — the image
@@ -104,7 +98,7 @@ def phash_band_model_bucketed(
     spark = docs.sparkSession
     name = f"{table_prefix}_chunks"
     write_bucketed(
-        dhash_chunk_table(docs, text_col, id_col),
+        dhash_chunk_table(docs),
         name,
         ["chunk_id", "chunk_val"],
         buckets,
@@ -113,17 +107,12 @@ def phash_band_model_bucketed(
     return spark.table(name)
 
 
-def phash_near_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-) -> DataFrame:
+def phash_near_pairs(docs: DataFrame) -> DataFrame:
     """(doc_a, doc_b, hamming) for every image pair whose dHash Hamming
-    distance is ≤ ``max_hamming`` (≤ CHUNKS-1 keeps the pigeonhole
+    distance is ≤ 3 (≤ CHUNKS-1 keeps the pigeonhole
     guarantee exact). Input rows must already pass the minimum-raster
     gate (see MIN_PAYLOAD_BYTES)."""
-    chunked = dhash_chunk_table(docs, text_col, id_col)
+    chunked = dhash_chunk_table(docs)
     return (
         band_join(chunked, keys=CHUNK_KEYS)
         .select(
@@ -131,6 +120,6 @@ def phash_near_pairs(
             F.col("b.doc").alias("doc_b"),
             chunk_hamming("a.c", "b.c", CHUNKS).alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
         .distinct()
     )

@@ -89,13 +89,7 @@ def selected_fingerprints(text, k: int = K, w: int = W):
     return F.array_distinct(F.get(F.transform(F.array(tokens(text)), fps_of), 0))
 
 
-def winnow_fingerprints(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = K,
-    w: int = W,
-) -> DataFrame:
+def winnow_fingerprints(df: DataFrame, k: int = K, w: int = W) -> DataFrame:
     """(doc, fp): one row per document per selected fingerprint.
 
     Input spread (catalog.spread): the per-row fingerprint expression
@@ -104,7 +98,7 @@ def winnow_fingerprints(
     sf0.1: 1.62 s → 1.06 s (r17)."""
     from chronobase_spark.catalog import spread
 
-    fps = selected_fingerprints(F.col(text_col), k, w)
+    fps = selected_fingerprints(F.col("text"), k, w)
     # Row filter on token count, NOT on size(_fps) (r18): Catalyst
     # inlines a filter on the projected alias and pushes it below the
     # spread Exchange, so the WHOLE fingerprint expression (one md5 per
@@ -126,27 +120,19 @@ def winnow_fingerprints(
     # non-empty for every surviving row, so the emitted rows are
     # identical (no NULL-fp rows can appear).
     return (
-        spread(df, key=id_col)
-        .filter(F.size(tokens(F.col(text_col))) >= k + w - 1)
-        .select(F.col(id_col).alias("doc"), fps.alias("_fps"))
+        spread(df, key="doc_id")
+        .filter(F.size(tokens(F.col("text"))) >= k + w - 1)
+        .select(F.col("doc_id").alias("doc"), fps.alias("_fps"))
         .select("doc", F.explode_outer("_fps").alias("fp"))
     )
 
 
-def winnow_dup_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = K,
-    w: int = W,
-    min_shared: int = 3,
-    max_df: int = 50,
-) -> DataFrame:
+def winnow_dup_pairs(df: DataFrame, min_shared: int = 3, max_df: int = 50) -> DataFrame:
     """(doc_a, doc_b, n_shared): pairs sharing ≥ ``min_shared`` selected
     fingerprints, hot fingerprints (document frequency > ``max_df``)
     pruned first — boilerplate shared by half the corpus must not
     drive an f² join."""
-    fps = winnow_fingerprints(df, text_col, id_col, k, w)
+    fps = winnow_fingerprints(df)
     rare = fps.join(
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_df"))

@@ -50,14 +50,14 @@ MERGES_SCHEMA = T.StructType(
 )
 
 
-def encoded_word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def encoded_word_freqs(docs: DataFrame) -> DataFrame:
     """Corpus -> (w, ws, freq): lowercase ``[a-z]+`` word runs, counted,
     each word encoded as its ``|c1||c2||...|`` character sequence. This
     is the ONE corpus-wide pass; everything after runs on the vocab."""
     words = (
         docs.select(
             F.explode(
-                F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), F.lit(0))
+                F.regexp_extract_all(F.lower(F.col("text")), F.lit(TOKEN_PATTERN), F.lit(0))
             ).alias("w")
         )
         .groupBy("w")
@@ -124,16 +124,11 @@ def _train(
     return merges, cur
 
 
-def bpe_merges(
-    spark: SparkSession,
-    docs: DataFrame,
-    n_merges: int = 12,
-    text_col: str = "text",
-) -> DataFrame:
+def bpe_merges(spark: SparkSession, docs: DataFrame, n_merges: int = 12) -> DataFrame:
     """Train ``n_merges`` BPE merges; returns the merges table
     (merge_rank, left_sym, right_sym, pair_count). Stops early if the
     vocab runs out of pairs."""
-    base = encoded_word_freqs(docs, text_col).persist()
+    base = encoded_word_freqs(docs).persist()
     try:
         merges, _vocab = _train(base, n_merges)
     finally:
@@ -145,8 +140,6 @@ def doc_trained_token_counts(
     spark: SparkSession,
     docs: DataFrame,
     n_merges: int = 12,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Tokenizer APPLICATION: per-document token count under the
     freshly trained ``n_merges``-rule BPE — the number a sequence
@@ -159,29 +152,29 @@ def doc_trained_token_counts(
     corpus, never broadcast) + one partial-agged sum. Documents with
     zero alphabetic words drop out on both engines (explode semantics).
     """
-    base = encoded_word_freqs(docs, text_col).persist()
+    base = encoded_word_freqs(docs).persist()
     try:
         _merges, cur = _train(base, n_merges)
         n_syms = F.size(F.split(F.expr("btrim(ws, '|')"), r"\|\|"))
         vocab = cur.select("w", n_syms.alias("n_syms"))
         toks = docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), F.lit(0)
+                    F.lower(F.col("text")), F.lit(TOKEN_PATTERN), F.lit(0)
                 )
             ).alias("w"),
         )
         return (
             toks.join(vocab.hint("shuffle_hash"), "w")
-            .groupBy(id_col)
+            .groupBy("doc_id")
             .agg(F.sum("n_syms").cast("bigint").alias("n_bpe_tokens"))
         )
     finally:
         base.unpersist()
 
 
-def bpe_merges_oracle_sql(n_merges: int = 12, table: str = "documents") -> str:
+def bpe_merges_oracle_sql(n_merges: int = 12) -> str:
     """The DuckDB twin: the same algorithm unrolled into ``n_merges``
     chained CTE stages (pair-count -> 1-row argmax -> literal replace).
     Possible only because the ``|``-guard encoding makes each round one
@@ -197,10 +190,10 @@ def bpe_merges_oracle_sql(n_merges: int = 12, table: str = "documents") -> str:
         f" b AS right_sym, cnt AS pair_count FROM best{i}"
         for i in range(1, n_merges + 1)
     )
-    return _bpe_cte_chain(n_merges, table) + "\n" + unions
+    return _bpe_cte_chain(n_merges) + "\n" + unions
 
 
-def _bpe_cte_chain(n_merges: int, table: str) -> str:
+def _bpe_cte_chain(n_merges: int) -> str:
     """The shared WITH-chain: words0 .. words{n} plus per-round pair
     counts and argmax, each stage materialized."""
     parts = [
@@ -208,7 +201,7 @@ def _bpe_cte_chain(n_merges: int, table: str) -> str:
   SELECT w, '|' || array_to_string(string_split(w, ''), '||') || '|' AS ws,
          CAST(COUNT(*) AS BIGINT) AS freq
   FROM (SELECT unnest(regexp_extract_all(lower(text), '{TOKEN_PATTERN}')) AS w
-        FROM {table})
+        FROM documents)
   GROUP BY 1
 )"""
     ]
@@ -237,26 +230,24 @@ def _bpe_cte_chain(n_merges: int, table: str) -> str:
     return "".join(parts)
 
 
-def doc_token_counts_oracle_sql(
-    n_merges: int = 12, table: str = "documents", id_col: str = "doc_id"
-) -> str:
+def doc_token_counts_oracle_sql(n_merges: int = 12) -> str:
     """DuckDB twin of doc_trained_token_counts: the same training chain,
     then per-word final symbol counts joined back to the exploded
     corpus."""
     return (
-        _bpe_cte_chain(n_merges, table)
+        _bpe_cte_chain(n_merges)
         + f"""
 , vocab AS MATERIALIZED (
   SELECT w, len(string_split(trim(ws, '|'), '||')) AS n_syms
   FROM words{n_merges}
 ), toks AS (
-  SELECT {id_col}, unnest(regexp_extract_all(lower(text),
+  SELECT doc_id, unnest(regexp_extract_all(lower(text),
                                              '{TOKEN_PATTERN}')) AS w
-  FROM {table}
+  FROM documents
 )
-SELECT toks.{id_col}, CAST(SUM(vocab.n_syms) AS BIGINT) AS n_bpe_tokens
+SELECT toks.doc_id, CAST(SUM(vocab.n_syms) AS BIGINT) AS n_bpe_tokens
 FROM toks JOIN vocab ON toks.w = vocab.w
-GROUP BY toks.{id_col}"""
+GROUP BY toks.doc_id"""
     )
 
 
@@ -264,8 +255,6 @@ def lang_fertility(
     spark: SparkSession,
     docs: DataFrame,
     n_merges: int = 12,
-    text_col: str = "text",
-    lang_col: str = "lang",
 ) -> DataFrame:
     """Tokenizer FERTILITY per language — mean subword tokens per word
     under the freshly trained BPE: the standard multilingual-fairness
@@ -280,16 +269,16 @@ def lang_fertility(
     (token and word totals are far inside 2^53), identical on both
     engines.
     """
-    base = encoded_word_freqs(docs, text_col).persist()
+    base = encoded_word_freqs(docs).persist()
     try:
         _merges, cur = _train(base, n_merges)
         n_syms = F.size(F.split(F.expr("btrim(ws, '|')"), r"\|\|"))
         vocab = cur.select("w", n_syms.alias("n_syms"))
         toks = docs.select(
-            F.col(lang_col).alias("lang"),
+            F.col("lang"),
             F.explode(
                 F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), F.lit(0)
+                    F.lower(F.col("text")), F.lit(TOKEN_PATTERN), F.lit(0)
                 )
             ).alias("w"),
         )
@@ -314,21 +303,19 @@ def lang_fertility(
         base.unpersist()
 
 
-def lang_fertility_oracle_sql(
-    n_merges: int = 12, table: str = "documents", lang_col: str = "lang"
-) -> str:
+def lang_fertility_oracle_sql(n_merges: int = 12) -> str:
     """DuckDB twin of lang_fertility: the same training chain, per-word
     symbol counts joined to the exploded corpus, grouped by language."""
     return (
-        _bpe_cte_chain(n_merges, table)
+        _bpe_cte_chain(n_merges)
         + f"""
 , vocab AS MATERIALIZED (
   SELECT w, len(string_split(trim(ws, '|'), '||')) AS n_syms
   FROM words{n_merges}
 ), toks AS (
-  SELECT {lang_col} AS lang, unnest(regexp_extract_all(lower(text),
+  SELECT lang, unnest(regexp_extract_all(lower(text),
                                                        '{TOKEN_PATTERN}')) AS w
-  FROM {table}
+  FROM documents
 )
 SELECT lang,
        CAST(COUNT(*) AS BIGINT) AS n_words,

@@ -47,12 +47,12 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def to_payload(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def to_payload(df: DataFrame) -> DataFrame:
     """Wrap a column as an opaque binary payload + metadata struct —
     the canonical multimodal row shape."""
-    payload = F.encode(F.col(text_col), "UTF-8")
+    payload = F.encode(F.col("text"), "UTF-8")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("application/octet-stream").alias("media_type"),
@@ -127,17 +127,17 @@ PPM_FEATURE_SCHEMA = StructType(
 )
 
 
-def ppm_payload_col(text_col, width: int = PPM_WIDTH):
+def ppm_payload_col(text_col):
     """The PPM (P6) payload as a pure COLUMN expression (JVM-side
     encode/concat/repeat, no Python) — shared by the batch
     ``to_ppm_payload`` frame builder and the streaming ``phash_stage``
     so the encoded bytes can never drift between surfaces."""
     data = F.encode(text_col, "UTF-8")
     n = F.length(data)
-    h = F.greatest(F.ceil(n / F.lit(float(width * 3))).cast("int"), F.lit(1))
-    pad = (h * width * 3 - n).cast("int")
+    h = F.greatest(F.ceil(n / F.lit(float(PPM_WIDTH * 3))).cast("int"), F.lit(1))
+    pad = (h * PPM_WIDTH * 3 - n).cast("int")
     header = F.concat(
-        F.lit(f"P6\n{width} "), h.cast("string"), F.lit("\n255\n")
+        F.lit(f"P6\n{PPM_WIDTH} "), h.cast("string"), F.lit("\n255\n")
     )
     return F.concat(
         F.encode(header, "UTF-8"),
@@ -146,18 +146,16 @@ def ppm_payload_col(text_col, width: int = PPM_WIDTH):
     )
 
 
-def to_ppm_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", width: int = PPM_WIDTH
-) -> DataFrame:
+def to_ppm_payload(df: DataFrame) -> DataFrame:
     """Encode each document as a REAL binary PPM (P6) image whose raster
-    is the document's bytes, zero-padded to ``width`` × height × 3 —
+    is the document's bytes, zero-padded to ``PPM_WIDTH`` × height × 3 —
     built entirely JVM-side (encode/concat/repeat, no Python). The
     payload is a spec-valid netpbm file any external PPM reader can
     open; height varies per document, exercising real header parsing
     downstream instead of fixed-shape assumptions."""
-    payload = ppm_payload_col(F.col(text_col), width)
+    payload = ppm_payload_col(F.col("text"))
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("image/x-portable-pixmap").alias("media_type"),
@@ -328,22 +326,22 @@ def dhash_chunks(payloads: DataFrame) -> DataFrame:
     return payloads.mapInPandas(extract, PHASH_SCHEMA)
 
 
-def dhash_annotate(df: DataFrame, payload_col: str = "_payload") -> DataFrame:
+def dhash_annotate(df: DataFrame) -> DataFrame:
     """Append dHash chunk columns c0..c3 to EVERY input row, decoding
-    ``payload_col`` with the real PPM parser and dropping it — the
+    ``_payload`` with the real PPM parser and dropping it — the
     carry-all-columns twin of ``dhash_chunks`` for pipelines (batch or
     streaming) that must keep the row intact. NULL payload → NULL
     chunks. Stateless Arrow-batched mapInPandas; output schema =
     input schema minus the payload plus four LongType chunks."""
     out_schema = StructType(
-        [f for f in df.schema.fields if f.name != payload_col]
+        [f for f in df.schema.fields if f.name != "_payload"]
         + [StructField(f"c{j}", LongType()) for j in range(4)]
     )
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             cs: dict[str, list] = {f"c{j}": [] for j in range(4)}
-            for p in pdf[payload_col]:
+            for p in pdf["_payload"]:
                 if p is None:
                     vals = [None] * 4
                 else:
@@ -351,7 +349,7 @@ def dhash_annotate(df: DataFrame, payload_col: str = "_payload") -> DataFrame:
                     vals = _dhash_chunks_of_raster(w, h, raster)
                 for j in range(4):
                     cs[f"c{j}"].append(vals[j])
-            yield pdf.drop(columns=[payload_col]).assign(**cs)
+            yield pdf.drop(columns=["_payload"]).assign(**cs)
 
     return df.mapInPandas(extract, out_schema)
 
@@ -478,9 +476,7 @@ def _le_bytes(v, nbytes: int):
     return F.concat(*parts)
 
 
-def to_wav_payload(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def to_wav_payload(df: DataFrame) -> DataFrame:
     """Encode each document as a REAL RIFF/WAVE file (PCM16 mono,
     8 kHz) whose samples are the document's bytes centered and scaled:
     sample_i = (byte_i − 96)·256 — built entirely JVM-side. Centering
@@ -494,7 +490,7 @@ def to_wav_payload(
     1:1); the 44-byte canonical header is chr()-built LE fields. The
     payload opens in any WAV reader (stdlib ``wave`` validates it in
     pytest) — the same REAL-codec standard the PPM image path set."""
-    t = F.col(text_col)
+    t = F.col("text")
     n = F.length(F.encode(t, "UTF-8")).cast("long")
     # length > 0 guard: split("", "") is [""] (one phantom element),
     # which would fabricate a bogus -32768 sample for empty documents
@@ -528,9 +524,9 @@ def to_wav_payload(
     # Interleaved A/B at sf0.1 (payload+decode): 0.89 s → 0.61 s.
     from chronobase_spark.catalog import spread
 
-    df = spread(df, key=id_col)
+    df = spread(df, key="doc_id")
     return df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         payload.alias("payload"),
         F.struct(
             F.lit("audio/wav").alias("media_type"),

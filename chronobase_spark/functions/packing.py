@@ -28,13 +28,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def pack_offsets(
-    df: DataFrame,
-    n_tokens_col: str = "n_tokens",
-    shard_col: str = "shard",
-    order_col: str = "doc_id",
-    context_len: int = 2048,
-) -> DataFrame:
+def pack_offsets(df: DataFrame, context_len: int = 2048) -> DataFrame:
     """Assign concat-and-chunk pack coordinates within each shard.
 
     Adds:
@@ -50,11 +44,11 @@ def pack_offsets(
     advances the offset nor belongs to any pack.
     """
     w = (
-        Window.partitionBy(shard_col)
-        .orderBy(order_col)
+        Window.partitionBy("shard")
+        .orderBy("doc_id")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
-    start = F.coalesce(F.sum(n_tokens_col).over(w), F.lit(0)).cast("long")
+    start = F.coalesce(F.sum("n_tokens").over(w), F.lit(0)).cast("long")
     df = df.withColumn("start_off", start)
     # Integer `div`, not `/`: float division then truncation loses
     # exactness once offsets pass 2^53 (a 100 TB token stream is well
@@ -62,17 +56,13 @@ def pack_offsets(
     df = df.withColumn("pack_id", F.expr(f"start_off div {context_len}"))
     return df.withColumn(
         "packs_spanned",
-        F.expr(f"(start_off + {n_tokens_col} - 1) div {context_len}")
+        F.expr(f"(start_off + n_tokens - 1) div {context_len}")
         - F.col("pack_id")
         + F.lit(1),
     )
 
 
-def md5_split(
-    id_col: Column,
-    train_hi: str = "b",
-    val_hi: str = "d",
-) -> Column:
+def md5_split(id_col: Column) -> Column:
     """Deterministic split label from the first hex nibble of
     ``md5(cast(id as string))``.
 
@@ -85,8 +75,8 @@ def md5_split(
     """
     nib = F.substring(F.md5(id_col.cast("string")), 1, 1)
     return (
-        F.when(nib <= F.lit(train_hi), F.lit("train"))
-        .when(nib <= F.lit(val_hi), F.lit("val"))
+        F.when(nib <= F.lit("b"), F.lit("train"))
+        .when(nib <= F.lit("d"), F.lit("val"))
         .otherwise(F.lit("test"))
     )
 

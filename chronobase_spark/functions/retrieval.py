@@ -40,12 +40,6 @@ def rrf_hybrid_topk(
     emb: DataFrame,
     query_terms: Sequence[str],
     probe_id: int = 0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    vec_id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    per_side: int = 50,
-    rrf_k: int = 60,
     k: int = 20,
 ) -> DataFrame:
     """Fuse BM25(query_terms) and cosine(probe ``probe_id``) rankings.
@@ -58,17 +52,17 @@ def rrf_hybrid_topk(
     # Lexical side: total BM25 over the query terms (integer micro sum),
     # distributed top-k, then rank the bounded candidate set.
     lex = (
-        text.bm25_scores(docs, id_col=id_col, text_col=text_col)
+        text.bm25_scores(docs)
         .filter(F.col("term").isin(*query_terms))
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.sum("score_micro").alias("lex_micro"))
-        .orderBy(F.col("lex_micro").desc(), F.col(id_col))
-        .limit(per_side)
+        .orderBy(F.col("lex_micro").desc(), F.col("doc_id"))
+        .limit(50)
     )
     lex_ranked = lex.select(
-        F.col(id_col).alias("lex_doc"),
+        F.col("doc_id").alias("lex_doc"),
         F.row_number()
-        .over(Window.orderBy(F.col("lex_micro").desc(), F.col(id_col)))
+        .over(Window.orderBy(F.col("lex_micro").desc(), F.col("doc_id")))
         .alias("r_lex"),
     )
 
@@ -78,31 +72,31 @@ def rrf_hybrid_topk(
     # probe norm computed once on the 1-row side (r17; cosine()'s
     # join-path note): cosine() re-folded the probe's 64-dim norm per
     # corpus row for the same bit-identical double.
-    probe = emb.filter(F.col(vec_id_col) == probe_id).select(
-        F.col(vec_col).alias("probe_vec"),
-        similarity.norm(F.col(vec_col)).alias("probe_nrm"),
+    probe = emb.filter(F.col("vec_id") == probe_id).select(
+        F.col("embedding").alias("probe_vec"),
+        similarity.norm(F.col("embedding")).alias("probe_nrm"),
     )
     cos_micro = F.round(
         similarity.cosine_pre(
-            F.col(vec_col),
+            F.col("embedding"),
             F.col("probe_vec"),
-            similarity.norm(F.col(vec_col)),
+            similarity.norm(F.col("embedding")),
             F.col("probe_nrm"),
         )
         * F.lit(1000000.0),
         0,
     ).cast("bigint")
     vec = (
-        emb.filter(F.col(vec_id_col) != probe_id)
+        emb.filter(F.col("vec_id") != probe_id)
         .crossJoin(F.broadcast(probe))
-        .select(F.col(vec_id_col), cos_micro.alias("cos_micro"))
-        .orderBy(F.col("cos_micro").desc(), F.col(vec_id_col))
-        .limit(per_side)
+        .select(F.col("vec_id"), cos_micro.alias("cos_micro"))
+        .orderBy(F.col("cos_micro").desc(), F.col("vec_id"))
+        .limit(50)
     )
     vec_ranked = vec.select(
-        F.col(vec_id_col).alias("vec_doc"),
+        F.col("vec_id").alias("vec_doc"),
         F.row_number()
-        .over(Window.orderBy(F.col("cos_micro").desc(), F.col(vec_id_col)))
+        .over(Window.orderBy(F.col("cos_micro").desc(), F.col("vec_id")))
         .alias("r_vec"),
     )
 
@@ -110,19 +104,19 @@ def rrf_hybrid_topk(
         vec_ranked, F.col("lex_doc") == F.col("vec_doc"), "full_outer"
     )
     rrf = F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("r_lex")).cast("double"), F.lit(0.0)
+        F.lit(1.0) / (F.lit(60) + F.col("r_lex")).cast("double"), F.lit(0.0)
     ) + F.coalesce(
-        F.lit(1.0) / (F.lit(rrf_k) + F.col("r_vec")).cast("double"), F.lit(0.0)
+        F.lit(1.0) / (F.lit(60) + F.col("r_vec")).cast("double"), F.lit(0.0)
     )
     doc = F.coalesce(F.col("lex_doc"), F.col("vec_doc"))
     return (
         fused.select(
-            doc.alias(id_col),
+            doc.alias("doc_id"),
             # bigint: Spark row_number is INT, the oracle engine's BIGINT
             F.col("r_lex").cast("bigint").alias("r_lex"),
             F.col("r_vec").cast("bigint").alias("r_vec"),
             F.round(rrf * F.lit(1000000.0), 0).cast("bigint").alias("rrf_micro"),
         )
-        .orderBy(F.col("rrf_micro").desc(), F.col(id_col))
+        .orderBy(F.col("rrf_micro").desc(), F.col("doc_id"))
         .limit(k)
     )

@@ -39,31 +39,20 @@ def norm(a: Column) -> Column:
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL-safe only insofar as inputs are non-empty.
-
-    Join-path discipline (r17, guide §1.2 per-task work): inside a
-    pair-producing join, do NOT call this directly — each side's norm
-    would be re-folded PER PAIR. Project ``norm(vec)`` once per row
-    BELOW the join and combine with :func:`cosine_pre`; the doubles are
-    bit-identical (same fold, same multiply), the fold count drops from
-    2·|pairs| to |rows|."""
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cosine_pre(a: Column, b: Column, a_nrm: Column, b_nrm: Column) -> Column:
-    """``cosine`` with both norms precomputed per row (see cosine's
-    join-path note): dot(a, b) / (a_nrm * b_nrm) — identical IEEE ops
-    on identical operands, so results are bit-equal to cosine()."""
+    """Cosine similarity with both norms precomputed per row:
+    dot(a, b) / (a_nrm * b_nrm); NULL-safe only insofar as inputs are
+    non-empty.
+
+    Join-path note (r17, guide §1.2 per-task work): inside a
+    pair-producing join, project ``norm(vec)`` once per row BELOW the
+    join and pass it here — folding each side's norm per pair instead
+    would give bit-identical doubles (same fold, same multiply) at
+    2·|pairs| folds instead of |rows|."""
     return dot(a, b) / (a_nrm * b_nrm)
 
 
-def label_centroids(
-    df: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
+def label_centroids(df: DataFrame, label_col: str = "label") -> DataFrame:
     """Per-label elementwise mean vector — the k-means/IVF "update" step
     (each label's centroid), fully distributed: posexplode is map-side,
     the (label, pos) aggregate partial-aggregates before its one
@@ -79,10 +68,10 @@ def label_centroids(
     engine performing the same arithmetic. Returns
     (label, cvec: array<double>).
     """
-    scale = float(10 ** round_digits)
+    scale = 1e6
     ex = df.select(
         F.col(label_col).alias("clabel"),
-        F.posexplode(vec_col).alias("pos", "v"),
+        F.posexplode("embedding").alias("pos", "v"),
     )
     per_pos = ex.groupBy("clabel", "pos").agg(
         (
@@ -115,13 +104,7 @@ def squared_distance(a: Column, b: Column) -> Column:
     )
 
 
-def assign_nearest_centroid(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
+def assign_nearest_centroid(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """k-means/IVF "assign" step: each vector's nearest centroid by
     squared L2. Centroids broadcast (|labels| rows); the corpus streams
     through once; the argmin is a single-shuffle min(struct) aggregate
@@ -133,16 +116,16 @@ def assign_nearest_centroid(
     distance would otherwise win the struct-min as Spark sorts nulls
     first, silently mis-binning every embedding-less row — r7
     nully-differential finding; same policy as pq_assign)."""
-    df = df.filter(F.col(vec_col).isNotNull())
+    df = df.filter(F.col("embedding").isNotNull())
     dist = F.round(
-        squared_distance(F.col(vec_col), F.col("cvec")), round_digits
+        squared_distance(F.col("embedding"), F.col("cvec")), 6
     )
     pairs = df.crossJoin(F.broadcast(centroids)).select(
-        *[c for c in df.columns if c != vec_col],
+        *[c for c in df.columns if c != "embedding"],
         F.col("clabel"),
         dist.alias("dist"),
     )
-    keys = [c for c in df.columns if c != vec_col]
+    keys = [c for c in df.columns if c != "embedding"]
     return (
         pairs.groupBy(*keys)
         .agg(F.min(F.struct("dist", "clabel")).alias("_m"))
@@ -154,13 +137,7 @@ def assign_nearest_centroid(
     )
 
 
-def kmeans_lloyd(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_lloyd(df: DataFrame, k: int = 8, iters: int = 2) -> DataFrame:
     """Unsupervised Lloyd's k-means over an embedding column — the
     trained coarse quantizer the IVF/SemDeDup family assumes (SemDeDup
     clusters with k-means before the per-cell cosine sweep; the
@@ -186,18 +163,16 @@ def kmeans_lloyd(
 
     Returns (id, assigned, dist) after the final assignment.
     """
-    base = df.filter(F.col(vec_col).isNotNull()).select(id_col, vec_col)
-    cents = base.filter(F.col(id_col) < k).select(
-        F.col(id_col).alias("clabel"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("cvec"),
+    base = df.filter(F.col("embedding").isNotNull()).select("vec_id", "embedding")
+    cents = base.filter(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("clabel"),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("cvec"),
     )
     for _ in range(iters - 1):
-        assigned = assign_nearest_centroid(
-            base, cents, id_col=id_col, vec_col=vec_col
-        ).select(id_col, "assigned")
-        members = assigned.join(base.hint("shuffle_hash"), id_col)
-        cents = label_centroids(members, label_col="assigned", vec_col=vec_col)
-    return assign_nearest_centroid(base, cents, id_col=id_col, vec_col=vec_col)
+        assigned = assign_nearest_centroid(base, cents).select("vec_id", "assigned")
+        members = assigned.join(base.hint("shuffle_hash"), "vec_id")
+        cents = label_centroids(members, label_col="assigned")
+    return assign_nearest_centroid(base, cents)
 
 
 def ivf_kmeans_topk(
@@ -205,10 +180,6 @@ def ivf_kmeans_topk(
     probe_ids: list,
     k: int = 10,
     kmeans_k: int = 8,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """IVF search over the unsupervised ``kmeans_lloyd`` quantizer:
     probes search only their own trained cell, exact cosine re-rank
@@ -225,33 +196,33 @@ def ivf_kmeans_topk(
     # _nrm projected once per row below the cell join (r17; see
     # cosine()'s join-path note) — bit-identical sim, |pairs| fewer
     # norm folds.
-    base = df.filter(F.col(vec_col).isNotNull()).select(
-        id_col, vec_col, norm(F.col(vec_col)).alias("_nrm")
+    base = df.filter(F.col("embedding").isNotNull()).select(
+        "vec_id", "embedding", norm(F.col("embedding")).alias("_nrm")
     )
     cells = base.join(
-        kmeans_lloyd(df, k=kmeans_k, iters=iters, id_col=id_col, vec_col=vec_col)
-        .select(id_col, "assigned")
+        kmeans_lloyd(df, k=kmeans_k)
+        .select("vec_id", "assigned")
         .hint("shuffle_hash"),
-        id_col,
+        "vec_id",
     )
-    probes = cells.filter(F.col(id_col).isin(list(probe_ids))).select(
-        F.col(id_col).alias("q_id"),
-        F.col(vec_col).alias("q_vec"),
+    probes = cells.filter(F.col("vec_id").isin(list(probe_ids))).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("embedding").alias("q_vec"),
         F.col("_nrm").alias("q_nrm"),
         F.col("assigned").alias("q_cell"),
     )
     cand = cells.join(
         F.broadcast(probes),
         (F.col("assigned") == F.col("q_cell"))
-        & (F.col(id_col) != F.col("q_id")),
+        & (F.col("vec_id") != F.col("q_id")),
     )
     sim = F.round(
         cosine_pre(
-            F.col(vec_col), F.col("q_vec"), F.col("_nrm"), F.col("q_nrm")
+            F.col("embedding"), F.col("q_vec"), F.col("_nrm"), F.col("q_nrm")
         ),
-        round_digits,
+        6,
     )
-    scored = cand.select("q_id", F.col(id_col).alias("n_id"), sim.alias("sim"))
+    scored = cand.select("q_id", F.col("vec_id").alias("n_id"), sim.alias("sim"))
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -260,7 +231,7 @@ def ivf_kmeans_topk(
     )
 
 
-def int8_quant_stats(vec: Column, round_digits: int = 6) -> Column:
+def int8_quant_stats(vec: Column) -> Column:
     """Symmetric int8 quantization of one embedding vector, summarized
     as struct(qscale, q_sum, q_min, q_max, n_sat).
 
@@ -309,7 +280,7 @@ def int8_quant_stats(vec: Column, round_digits: int = 6) -> Column:
         )
         inner = F.get(F.transform(F.array(codes), with_codes), 0)
         return F.struct(
-            F.round(s, round_digits).alias("qscale"),
+            F.round(s, 6).alias("qscale"),
             inner["q_sum"].alias("q_sum"),
             inner["q_min"].alias("q_min"),
             inner["q_max"].alias("q_max"),
@@ -323,17 +294,14 @@ def topk_cosine(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
-    query_id: str = "vec_id",
-    corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    round_digits: int = 6,
 ) -> DataFrame:
     """Brute-force exact top-k cosine neighbors for each query vector.
 
     The query side is broadcast (it is small by construction — a handful
     of probe vectors), so the corpus streams through executors exactly
     once with no shuffle; per-query ranking then shuffles only
-    (q, corpus_id, sim) triples, and TakeOrdered keeps k per query.
+    (q, vec_id, sim) triples, and TakeOrdered keeps k per query.
 
     Similarity is rounded before ranking so rank boundaries are
     deterministic across engines; residual ties break by corpus id.
@@ -344,12 +312,12 @@ def topk_cosine(
     # row's norm per query — |q|·|corpus| extra 64-dim folds for the
     # same bit-identical doubles.
     q = queries.select(
-        F.col(query_id).alias("q_id"),
+        F.col("vec_id").alias("q_id"),
         F.col(vec_col).alias("q_vec"),
         norm(F.col(vec_col)).alias("q_nrm"),
     )
     c = corpus.select(
-        F.col(corpus_id).alias("n_id"),
+        F.col("vec_id").alias("n_id"),
         F.col(vec_col).alias("n_vec"),
         norm(F.col(vec_col)).alias("n_nrm"),
     )
@@ -358,7 +326,7 @@ def topk_cosine(
         cosine_pre(
             F.col("q_vec"), F.col("n_vec"), F.col("q_nrm"), F.col("n_nrm")
         ),
-        round_digits,
+        6,
     )
     scored = pairs.select("q_id", "n_id", sim.alias("sim"))
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
@@ -453,14 +421,7 @@ def _pq_codebook(subs: DataFrame) -> DataFrame:
     )
 
 
-def pq_assign(
-    df: DataFrame,
-    m: int = 8,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    round_digits: int = 6,
-) -> DataFrame:
+def pq_assign(df: DataFrame, m: int = 8) -> DataFrame:
     """Product quantization (Jégou et al., PAMI 2011): split each
     vector into ``m`` contiguous subvectors, build one codebook per
     subspace, and assign every subvector its nearest code — the
@@ -487,7 +448,7 @@ def pq_assign(
     raise a contentless error for them — same policy as
     lsh_candidates' NULL-signature drop).
     """
-    subs = _pq_subvectors(df, m, id_col, label_col, vec_col)
+    subs = _pq_subvectors(df, m, "vec_id", "label", "embedding")
     # Component quantization multiplies FIRST (round(v·1e6, 0), see
     # _micro_u), never round(v, 6): Spark's round works on the value's
     # shortest decimal string while DuckDB rounds the scaled binary,
@@ -495,7 +456,7 @@ def pq_assign(
     # where the two disagree (measured: 1 group in 80 flaked at
     # sf0.1). After the one scaled round, everything is BIGINT.
     book = _pq_codebook(subs)
-    return _pq_codes(subs, book, id_col)
+    return _pq_codes(subs, book)
 
 
 def _sub_sq_dist_u2(sub_u: Column) -> Column:
@@ -508,20 +469,20 @@ def _sub_sq_dist_u2(sub_u: Column) -> Column:
     )
 
 
-def _pq_codes(subs: DataFrame, book: DataFrame, id_col: str) -> DataFrame:
+def _pq_codes(subs: DataFrame, book: DataFrame) -> DataFrame:
     """Nearest-code assignment from prebuilt subvectors + codebook:
     (id, subspace, code, dist_u2). Split out of pq_assign so callers
     that already hold subs/book (pq_adc_topk, ivf_pq_topk) don't
     re-aggregate the codebook a second time."""
     dist = _sub_sq_dist_u2(F.transform(F.col("subvec"), _micro_u))
     pairs = subs.join(F.broadcast(book), "subspace").select(
-        id_col, "subspace", "code", dist.alias("dist_u2")
+        "vec_id", "subspace", "code", dist.alias("dist_u2")
     )
     return (
-        pairs.groupBy(id_col, "subspace")
+        pairs.groupBy("vec_id", "subspace")
         .agg(F.min(F.struct("dist_u2", "code")).alias("_m"))
         .select(
-            id_col,
+            "vec_id",
             "subspace",
             F.col("_m.code").alias("code"),
             F.col("_m.dist_u2").alias("dist_u2"),
@@ -530,13 +491,13 @@ def _pq_codes(subs: DataFrame, book: DataFrame, id_col: str) -> DataFrame:
 
 
 def _pq_lut(
-    subs: DataFrame, book: DataFrame, probe_id, id_col: str
+    subs: DataFrame, book: DataFrame, probe_id
 ) -> DataFrame:
     """ADC lookup table for one probe: (subspace, code, pdist_u2) —
     m·|codes| rows of exact BIGINT probe-subvector-to-codeword
     distances, built from the SAME subs/book the codes came from (one
     definition; the two ADC users can't drift — r6 advisor note)."""
-    probe_subs = subs.filter(F.col(id_col) == probe_id).select(
+    probe_subs = subs.filter(F.col("vec_id") == probe_id).select(
         "subspace", F.transform(F.col("subvec"), _micro_u).alias("psub_u")
     )
     pdist = _sub_sq_dist_u2(F.col("psub_u"))
@@ -546,28 +507,20 @@ def _pq_lut(
 
 
 def _adc_topk(
-    codes: DataFrame, lut: DataFrame, k: int, id_col: str
+    codes: DataFrame, lut: DataFrame, k: int
 ) -> DataFrame:
     """Rank candidate code rows by ADC sum against a broadcast LUT and
     return the ascending top-``k`` (id, adc_u2), ties broken by id."""
     return (
         codes.join(F.broadcast(lut), ["subspace", "code"])
-        .groupBy(id_col)
+        .groupBy("vec_id")
         .agg(F.sum("pdist_u2").cast("bigint").alias("adc_u2"))
-        .orderBy(F.col("adc_u2").asc(), F.col(id_col))
+        .orderBy(F.col("adc_u2").asc(), F.col("vec_id"))
         .limit(k)
     )
 
 
-def pq_adc_topk(
-    df: DataFrame,
-    probe_id: int,
-    m: int = 8,
-    k: int = 10,
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pq_adc_topk(df: DataFrame, probe_id: int, m: int = 8, k: int = 10) -> DataFrame:
     """PQ asymmetric-distance (ADC) top-k search (Jégou et al. 2011;
     the FAISS IVF-PQ query path): the probe vector stays EXACT while
     corpus vectors are represented by their 1-byte-per-subspace PQ
@@ -590,10 +543,10 @@ def pq_adc_topk(
     # One subvector/codebook build feeds assignment AND the probe LUT
     # (shared helpers — one definition, the bucketing can never drift,
     # and the codebook aggregates once per query instead of twice).
-    subs = _pq_subvectors(df, m, id_col, label_col, vec_col)
+    subs = _pq_subvectors(df, m, "vec_id", "label", "embedding")
     book = _pq_codebook(subs)
-    codes = _pq_codes(subs, book, id_col).select(id_col, "subspace", "code")
-    lut = _pq_lut(subs, book, probe_id, id_col)
+    codes = _pq_codes(subs, book).select("vec_id", "subspace", "code")
+    lut = _pq_lut(subs, book, probe_id)
     return _adc_topk(
-        codes.filter(F.col(id_col) != probe_id), lut, k, id_col
+        codes.filter(F.col("vec_id") != probe_id), lut, k
     )

@@ -56,10 +56,6 @@ def token_count(text: Column) -> Column:
     return F.size(tokens(text))
 
 
-def distinct_token_count(text: Column) -> Column:
-    return F.size(F.array_distinct(tokens(text)))
-
-
 def _stop_count(tk: Column) -> Column:
     return F.size(F.filter(tk, lambda t: t.isin(*STOPWORDS)))
 
@@ -151,21 +147,6 @@ def token_features(text: Column) -> Column:
     )
 
 
-def fingerprint(text: Column) -> Column:
-    """Deterministic document fingerprint: polynomial rolling hash of the
-    normalized token stream, mod 2^31-1. Engine-portable (plain integer
-    arithmetic over code points — the same fold runs in ANSI SQL), unlike
-    murmur/xxhash which differ across engines."""
-    joined = F.array_join(tokens(text), " ")
-    # fold over code points: h = (h*31 + ascii(ch)) % 2147483647
-    chars = F.split(joined, "")
-    return F.aggregate(
-        chars,
-        F.lit(0).cast("long"),
-        lambda acc, ch: (acc * 31 + F.ascii(ch)) % F.lit(2147483647).cast("long"),
-    )
-
-
 def lang_id(text: Column) -> Column:
     """Heuristic language ID via stopword/character evidence — returns a
     best-guess code from a fixed candidate set, 'unk' when no evidence.
@@ -203,9 +184,7 @@ def lang_id(text: Column) -> Column:
     )
 
 
-def tfidf_top_terms(
-    docs, id_col: str = "doc_id", text_col: str = "text", k: int = 3
-):
+def tfidf_top_terms(docs, k: int = 3):
     """Top-k TF-IDF terms per document, with a linear (un-logged) IDF
     ``N/df`` — integer-ratio double arithmetic, so Spark and the SQL
     oracle produce bit-identical scores (``ln`` could differ in the last
@@ -216,10 +195,10 @@ def tfidf_top_terms(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.col(text_col)), " +")).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.col("text")), " +")).alias("term"),
     ).filter(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_docs"))
     n_docs = docs.select(F.count(F.lit(1)).alias("n_docs"))
     scored = (
@@ -230,11 +209,11 @@ def tfidf_top_terms(
             F.col("tf").cast("double") * F.col("n_docs") / F.col("df_docs"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(F.col("score").desc(), F.col("term"))
+    w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select(id_col, "term", "tf", "score")
+        .select("doc_id", "term", "tf", "score")
     )
 
 
@@ -316,13 +295,7 @@ def char_entropy(text: Column) -> Column:
     return F.get(F.transform(F.array(cs), ent), 0)
 
 
-def bm25_scores(
-    docs,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-):
+def bm25_scores(docs):
     """Per-(document, term) BM25 scores (Robertson/Spärck Jones BM25
     with the Lucene-style non-negative idf ``ln(1 + (N − df + 0.5)/(df
     + 0.5))``) — the ranking-function upgrade over tf-idf and the
@@ -342,14 +315,15 @@ def bm25_scores(
     doubles; the score is emitted as integer micro-units
     (multiply-then-round, FIXTURES.md quantization rule) so any
     downstream ranking compares identically on both engines. Returns
-    (id_col, term, tf, score_micro).
+    (doc_id, term, tf, score_micro).
     """
+    k1, b = 1.2, 0.75
     toks = docs.select(
-        F.col(id_col),
-        F.explode(F.split(F.lower(F.col(text_col)), " +")).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.split(F.lower(F.col("text")), " +")).alias("term"),
     ).filter(F.col("term") != "")
-    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_docs"))
     consts = dl.agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -370,41 +344,29 @@ def bm25_scores(
     ).cast("bigint")
     return (
         tf.join(F.broadcast(dfreq), "term")
-        .join(dl.hint("shuffle_hash"), id_col)
+        .join(dl.hint("shuffle_hash"), "doc_id")
         .crossJoin(F.broadcast(consts))
-        .select(id_col, "term", "tf", score.alias("score_micro"))
+        .select("doc_id", "term", "tf", score.alias("score_micro"))
     )
 
 
-def bm25_top_terms(
-    docs,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k1: float = 1.2,
-    b: float = 0.75,
-    k: int = 3,
-):
+def bm25_top_terms(docs, k: int = 3):
     """Top-k BM25 terms per document — windowed top-k over
     ``bm25_scores``, partitioned by document (never global)."""
     from pyspark.sql import Window
 
-    scored = bm25_scores(docs, id_col, text_col, k1, b)
-    w = Window.partitionBy(id_col).orderBy(
+    scored = bm25_scores(docs)
+    w = Window.partitionBy("doc_id").orderBy(
         F.col("score_micro").desc(), F.col("term")
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
-        .select(id_col, "term", "tf", "score_micro")
+        .select("doc_id", "term", "tf", "score_micro")
     )
 
 
-def inverted_index(
-    docs,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_postings: int = 100,
-):
+def inverted_index(docs, max_postings: int = 100):
     """Inverted-index build: one row per distinct term with its document
     frequency and a bounded, sorted posting list (the ``max_postings``
     lowest doc ids) — the retrieval-side complement of the posting-list
@@ -421,8 +383,8 @@ def inverted_index(
     from pyspark.sql import Window
 
     toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.array_distinct(tokens(F.col(text_col)))).alias("term"),
+        F.col("doc_id"),
+        F.explode(F.array_distinct(tokens(F.col("text")))).alias("term"),
     )
     w = Window.partitionBy("term").orderBy("doc_id")
     ranked = toks.withColumn("rn", F.row_number().over(w))
@@ -434,7 +396,7 @@ def inverted_index(
     )
 
 
-def bigram_lm_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
+def bigram_lm_scores(docs):
     """Per-document log-probability under an add-one-smoothed bigram
     language model trained on the corpus itself — the classic
     perplexity-style quality signal LLM data pipelines use to rank
@@ -464,7 +426,7 @@ def bigram_lm_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
     (multiply-round-cast, FIXTURES.md rule) BEFORE the weighted sum,
     so the per-doc total is an exact integer sum in any order — the
     ln() is the only transcendental and both engines evaluate it on
-    identical exact doubles. Returns (id_col, n_grams, logprob_micro);
+    identical exact doubles. Returns (doc_id, n_grams, logprob_micro);
     docs with fewer than two tokens have no bigrams and no row, on
     both engines (explode/unnest of an empty gram list).
     """
@@ -472,12 +434,12 @@ def bigram_lm_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
     # the score join, and without materialization each branch re-scans
     # and re-explodes the whole corpus (measured 8 parquet scans in the
     # diamond DAG; the dup_clusters edge persist is the same pattern)
-    doc_grams = _doc_bigram_tf(docs, id_col, text_col).persist()
+    doc_grams = _doc_bigram_tf(docs).persist()
     gram_counts = doc_grams.groupBy("gram").agg(F.sum("tf").alias("c12"))
-    lm = _lm_from_gram_counts(gram_counts, _lm_vocab(gram_counts, docs, text_col))
+    lm = _lm_from_gram_counts(gram_counts, _lm_vocab(gram_counts, docs))
     return (
         doc_grams.join(lm.hint("shuffle_hash"), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").alias("n_grams"),
             F.sum(F.col("tf") * F.col("term_micro")).alias("logprob_micro"),
@@ -485,7 +447,7 @@ def bigram_lm_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def kn_bigram_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
+def kn_bigram_scores(docs):
     """Per-document log-probability under an interpolated Kneser-Ney
     bigram LM trained on the corpus itself — the smoothing that
     actually wins LM-quality filtering shootouts (Chen & Goodman 1999:
@@ -518,12 +480,12 @@ def kn_bigram_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
     word-keyed shuffle_hash joins to assemble the LM, one gram-keyed
     shuffle_hash score join (AQE-skew territory, fan-in bounded by the
     TF collapse), one final per-doc integer sum."""
-    doc_grams = _doc_bigram_tf(docs, id_col, text_col).persist()
+    doc_grams = _doc_bigram_tf(docs).persist()
     gc = doc_grams.groupBy("gram").agg(F.sum("tf").alias("c12"))
     lm, _ctx, _cont, _tot = _kn_tables(gc)
     return (
         doc_grams.join(lm.hint("shuffle_hash"), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").cast("bigint").alias("n_grams"),
             F.sum(F.col("tf") * F.col("term_micro"))
@@ -580,14 +542,14 @@ def _kn_tables(gram_counts):
     return lm, ctx, cont, tot
 
 
-def kn_bigram_model(docs, text_col: str = "text"):
+def kn_bigram_model(docs):
     """Train the frozen KN model for in-stream scoring
     (streaming/docs.kn_score_stage): returns (lm, ctx, cont, n_types)
     where lm/ctx/cont are the _kn_tables DataFrames and n_types is a
     Python int (one 1-row collect — a frozen model constant, the
     bigram_lm_model V pattern)."""
     gc = (
-        _doc_bigram_tf(docs, "doc_id", text_col)
+        _doc_bigram_tf(docs)
         .groupBy("gram")
         .agg(F.sum("tf").alias("c12"))
     )
@@ -665,7 +627,7 @@ def lm_grams(text_col: Column) -> Column:
     return F.get(F.transform(F.array(lm_tokens(text_col)), grams), 0)
 
 
-def _doc_bigram_tf(docs, id_col: str, text_col: str):
+def _doc_bigram_tf(docs):
     """(id, gram, tf): per-document bigram term frequencies — one
     shuffle on (id, gram), collapsing repeated grams so downstream LM
     joins are per gram TYPE per doc, not per instance.
@@ -676,7 +638,7 @@ def _doc_bigram_tf(docs, id_col: str, text_col: str):
     OPTIMIZATION_r17.md family D)."""
     from chronobase_spark.catalog import spread
 
-    docs = spread(docs, key=id_col)
+    docs = spread(docs, key="doc_id")
     # NO pre-filter here (r18, measured): the explode's generator input
     # is the inline gram EXPRESSION, not an aliased column, and Spark 4
     # infers no generate filter for that shape — the gram tree already
@@ -687,14 +649,14 @@ def _doc_bigram_tf(docs, id_col: str, text_col: str):
     # all three LM queries — reverted (guide §1: measure, don't assume).
     return (
         docs.select(
-            F.col(id_col), F.explode(lm_grams(F.col(text_col))).alias("gram")
+            F.col("doc_id"), F.explode(lm_grams(F.col("text"))).alias("gram")
         )
-        .groupBy(id_col, "gram")
+        .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
 
 
-def _lm_vocab(gram_counts, docs, text_col: str):
+def _lm_vocab(gram_counts, docs):
     """1-row corpus unigram vocabulary size — the add-one denominator's
     V, counting tokens from ALL docs including single-token docs that
     produce no bigrams — WITHOUT a second corpus-wide token explode.
@@ -711,7 +673,7 @@ def _lm_vocab(gram_counts, docs, text_col: str):
     distinct shuffle the derivation used to pay — the explode was the
     redundant second corpus pass in the suite's slowest query
     (q_bigram_lm_logprob r9 bench 6.5 s)."""
-    tk = lm_tokens(F.col(text_col))
+    tk = lm_tokens(F.col("text"))
     # barrier: the isNotNull used to inline the tokenize + get
     # tree and re-run it as the pushed predicate (2 tokenize per row on
     # the scan side); behind the Generate it reads the attribute.
@@ -751,7 +713,7 @@ def _lm_from_gram_counts(gram_counts, vocab):
     )
 
 
-def bigram_lm_model(docs, text_col: str = "text"):
+def bigram_lm_model(docs):
     """The FULL frozen model for out-of-corpus scoring: (lm, left, v)
     — the (gram, term_micro) table, the (w1, c1) left-context count
     table (what add-one smoothing needs to score an UNSEEN gram in a
@@ -760,11 +722,11 @@ def bigram_lm_model(docs, text_col: str = "text"):
     as a driver-side int (one scalar collect at train time, the
     dup_clusters convergence-scalar precedent)."""
     gram_counts = (
-        docs.select(F.explode(lm_grams(F.col(text_col))).alias("gram"))
+        docs.select(F.explode(lm_grams(F.col("text"))).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).alias("c12"))
     )
-    vocab = _lm_vocab(gram_counts, docs, text_col)
+    vocab = _lm_vocab(gram_counts, docs)
     lm = _lm_from_gram_counts(gram_counts, vocab)
     left = (
         gram_counts.withColumn("w1", F.substring_index("gram", " ", 1))
@@ -797,21 +759,21 @@ def lm_trigrams(text_col: Column) -> Column:
     return F.get(F.transform(F.array(lm_tokens(text_col)), grams), 0)
 
 
-def _doc_trigram_tf(docs, id_col: str, text_col: str):
+def _doc_trigram_tf(docs):
     """(id, gram, tf): per-document trigram term frequencies — the
     _doc_bigram_tf shape one order up (incl. its r17 input spread)."""
     from chronobase_spark.catalog import spread
 
-    docs = spread(docs, key=id_col)
+    docs = spread(docs, key="doc_id")
     # no pre-filter — the _doc_bigram_tf r18 measurement one order up
     # (no inferred filter exists for the inline-expression explode; an
     # added pre-filter serialized an extra tokenize below the spread
     # Exchange and measured WORSE).
     return (
         docs.select(
-            F.col(id_col), F.explode(lm_trigrams(F.col(text_col))).alias("gram")
+            F.col("doc_id"), F.explode(lm_trigrams(F.col("text"))).alias("gram")
         )
-        .groupBy(id_col, "gram")
+        .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
 
@@ -822,7 +784,7 @@ def _doc_trigram_tf(docs, id_col: str, text_col: str):
 JM_L3, JM_L2, JM_L1 = 0.5, 0.375, 0.125
 
 
-def _jm_marginals(tri_counts, docs, text_col: str):
+def _jm_marginals(tri_counts, docs):
     """The bigram and unigram corpus marginals the JM trigram mixture
     needs, derived WITHOUT a second or third corpus-wide explode — the
     _lm_vocab identity one order up:
@@ -842,7 +804,7 @@ def _jm_marginals(tri_counts, docs, text_col: str):
     c2p) keyed by the bigram STRING (tokens contain no spaces, so
     substring_index round-trips exactly), uni = (w, c3), n_tok a 1-row
     (n) DataFrame."""
-    tk = lm_tokens(F.col(text_col))
+    tk = lm_tokens(F.col("text"))
     suffix_b = tri_counts.select(
         F.substring_index("gram", " ", -2).alias("b"),
         F.col("c123").alias("cnt"),
@@ -907,7 +869,7 @@ def _jm_marginals(tri_counts, docs, text_col: str):
     return bi, uni, n_tok
 
 
-def _jm_tables(tri_counts, docs, text_col: str):
+def _jm_tables(tri_counts, docs):
     """(lm, bi, uni, n_tok) from a (gram, c123) trigram count table:
     lm = (gram, term_micro) for seen trigrams under the JM mixture
 
@@ -930,7 +892,7 @@ def _jm_tables(tri_counts, docs, text_col: str):
         F.substring_index("gram", " ", -1).alias("w3"),
     )
     pc = gs.groupBy("w12").agg(F.sum("c123").cast("bigint").alias("c12p"))
-    bi, uni, n_tok = _jm_marginals(tri_counts, docs, text_col)
+    bi, uni, n_tok = _jm_marginals(tri_counts, docs)
     term = (
         F.round(
             F.log(
@@ -955,7 +917,7 @@ def _jm_tables(tri_counts, docs, text_col: str):
     return lm, bi, uni, n_tok
 
 
-def jm_trigram_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
+def jm_trigram_scores(docs):
     """Per-document log-probability under a Jelinek-Mercer interpolated
     TRIGRAM LM trained on the corpus itself — the third smoother in
     the LM-quality family (add-one bigram, Kneser-Ney bigram, JM
@@ -969,16 +931,16 @@ def jm_trigram_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
     no second corpus explode); LM assembly is three vocab-bounded
     shuffle_hash joins + a 1-row broadcast; scoring is one gram-keyed
     shuffle_hash join and a final per-doc integer sum. Returns
-    (id_col, n_grams, jm_logprob_micro); docs with fewer than three
+    (doc_id, n_grams, jm_logprob_micro); docs with fewer than three
     tokens have no trigrams and no row, on both engines."""
-    doc_tris = _doc_trigram_tf(docs, id_col, text_col).persist()
+    doc_tris = _doc_trigram_tf(docs).persist()
     tri_counts = doc_tris.groupBy("gram").agg(
         F.sum("tf").cast("bigint").alias("c123")
     )
-    lm, _bi, _uni, _n = _jm_tables(tri_counts, docs, text_col)
+    lm, _bi, _uni, _n = _jm_tables(tri_counts, docs)
     return (
         doc_tris.join(lm.hint("shuffle_hash"), "gram")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").cast("bigint").alias("n_grams"),
             F.sum(F.col("tf") * F.col("term_micro"))
@@ -988,18 +950,18 @@ def jm_trigram_scores(docs, id_col: str = "doc_id", text_col: str = "text"):
     )
 
 
-def jm_trigram_model(docs, text_col: str = "text"):
+def jm_trigram_model(docs):
     """Train the frozen JM trigram model for in-stream scoring
     (streaming/docs.jm_score_stage): returns (lm, bi, uni, n_tokens)
     where lm/bi/uni are the _jm_tables DataFrames and n_tokens is a
     Python int (one 1-row collect — a frozen model constant, the
     bigram_lm_model V pattern)."""
     tri_counts = (
-        docs.select(F.explode(lm_trigrams(F.col(text_col))).alias("gram"))
+        docs.select(F.explode(lm_trigrams(F.col("text"))).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).cast("bigint").alias("c123"))
     )
-    lm, bi, uni, n_tok = _jm_tables(tri_counts, docs, text_col)
+    lm, bi, uni, n_tok = _jm_tables(tri_counts, docs)
     n = int(n_tok.collect()[0]["n"])
     return lm, bi, uni, n
 
@@ -1018,8 +980,7 @@ def dsir_bucket(gram: Column) -> Column:
     return F.conv(F.substring(F.md5(gram), 1, 3), 16, 10).cast("bigint")
 
 
-def dsir_select(docs, target_lang: str = "en", id_col: str = "doc_id",
-                text_col: str = "text", lang_col: str = "lang"):
+def dsir_select(docs, target_lang: str = "en", lang_col: str = "lang"):
     """Data Selection via Importance Resampling (DSIR — Xie et al.
     2023, arXiv:2302.03169): select raw-pool documents whose hashed
     n-gram feature distribution looks like a TARGET domain. Feature =
@@ -1050,7 +1011,7 @@ def dsir_select(docs, target_lang: str = "en", id_col: str = "doc_id",
     builds the ratio table and one 1-row max broadcast normalizes;
     scoring is one broadcast join + a per-doc partial-agged sum over
     the persisted weight table; the accept test is map-only. Returns
-    (id_col, n_grams, w_micro, accepted); docs without bigrams have
+    (doc_id, n_grams, w_micro, accepted); docs without bigrams have
     no feature evidence and no row, like the LM scorers.
 
     ``target_lang``/``lang_col`` parameterize the target-domain
@@ -1058,7 +1019,7 @@ def dsir_select(docs, target_lang: str = "en", id_col: str = "doc_id",
     registered oracle (queries._dsir_sql) is GENERATED from the same
     parameters, so a non-default configuration stays oracle-checkable
     instead of silently diverging from a hardcoded 'en' (r13 advice)."""
-    dbk = _dsir_doc_buckets(docs, target_lang, id_col, text_col, lang_col).persist()
+    dbk = _dsir_doc_buckets(docs, target_lang, lang_col).persist()
     ratio = _dsir_ratio(dbk)
     # persist: the weight table feeds BOTH the 1-row max and the final
     # accept projection — without it the whole scoring subtree (ratio
@@ -1066,7 +1027,7 @@ def dsir_select(docs, target_lang: str = "en", id_col: str = "doc_id",
     # 2-column-projection lesson; 3 BIGINTs per doc, cheap to hold)
     w = (
         dbk.join(F.broadcast(ratio), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("tf").cast("bigint").alias("n_grams"),
             F.sum(F.col("tf") * F.col("r_micro")).cast("bigint").alias("w_micro"),
@@ -1078,18 +1039,17 @@ def dsir_select(docs, target_lang: str = "en", id_col: str = "doc_id",
     return (
         w.crossJoin(F.broadcast(m))
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             "w_micro",
             dsir_accept_col(
-                F.col(id_col), F.col("w_micro"), F.col("n_grams"), F.col("m")
+                F.col("doc_id"), F.col("w_micro"), F.col("n_grams"), F.col("m")
             ).alias("accepted"),
         )
     )
 
 
-def _dsir_doc_buckets(docs, target_lang: str, id_col: str, text_col: str,
-                      lang_col: str = "lang"):
+def _dsir_doc_buckets(docs, target_lang: str, lang_col: str = "lang"):
     """(id, is_t, bucket, tf): per-document hashed-bigram bucket term
     frequencies — the one corpus-linear pass every DSIR surface derives
     its model tables from. Target membership is resolved to a 1-byte
@@ -1103,16 +1063,16 @@ def _dsir_doc_buckets(docs, target_lang: str, id_col: str, text_col: str,
     OPTIMIZATION_r17.md family D)."""
     from chronobase_spark.catalog import spread
 
-    docs = spread(docs, key=id_col)
+    docs = spread(docs, key="doc_id")
     is_t = (F.col(lang_col) == target_lang).cast("int").alias("is_t")
     return (
         docs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             is_t,
-            F.explode(lm_grams(F.col(text_col))).alias("gram"),
+            F.explode(lm_grams(F.col("text"))).alias("gram"),
         )
-        .select(id_col, "is_t", dsir_bucket(F.col("gram")).alias("bucket"))
-        .groupBy(id_col, "is_t", "bucket")
+        .select("doc_id", "is_t", dsir_bucket(F.col("gram")).alias("bucket"))
+        .groupBy("doc_id", "is_t", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("tf"))
     )
 
@@ -1175,8 +1135,7 @@ def dsir_accept_col(id_col: Column, w_micro: Column, n_grams: Column,
     )
 
 
-def dsir_model(docs, target_lang: str = "en", id_col: str = "doc_id",
-               text_col: str = "text", lang_col: str = "lang"):
+def dsir_model(docs):
     """Train the FROZEN DSIR model for in-stream admission
     (streaming/docs.dsir_admit_stage): returns (ratio, unseen_micro, m)
     — the ≤4096-row (bucket, r_micro) table, the unseen-bucket back-off
@@ -1197,7 +1156,7 @@ def dsir_model(docs, target_lang: str = "en", id_col: str = "doc_id",
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    dbk = _dsir_doc_buckets(docs, target_lang, id_col, text_col, lang_col).persist()
+    dbk = _dsir_doc_buckets(docs, "en").persist()
     ratio_plan = _dsir_ratio(dbk)
     totals = dbk.agg(
         F.sum("tf").alias("n_r"),
@@ -1214,7 +1173,7 @@ def dsir_model(docs, target_lang: str = "en", id_col: str = "doc_id",
     )
     m = float(
         dbk.join(F.broadcast(ratio_plan), "bucket")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             (
                 F.sum(F.col("tf") * F.col("r_micro")).cast("double")
@@ -1270,24 +1229,25 @@ def redact_pii(text: Column) -> Column:
 TEMPLATE_WIDTH = 12
 
 
-def template_end_hashes(text: Column, width: int = TEMPLATE_WIDTH) -> Column:
-    """struct(prefix_h, suffix_h): md5 over the first/last ``width``
-    tokens — the boilerplate/template group keys. NULL for documents
-    shorter than ``width`` tokens (they cannot carry a full template
-    span; the batch query's size filter and this NULL agree). Defined
+def template_end_hashes(text: Column) -> Column:
+    """struct(prefix_h, suffix_h): md5 over the first/last
+    TEMPLATE_WIDTH tokens — the boilerplate/template group keys. NULL
+    for documents shorter than TEMPLATE_WIDTH tokens (they cannot carry
+    a full template span; the batch query's size filter and this NULL
+    agree). Defined
     ONCE so the batch query and the in-stream twin
     (streaming/docs.template_stage) share the literal expression and
     stay drained-equal by construction. Pure per-row expression — one
     tokenization via the expression-level let (with_tokens)."""
 
     def ends(tk: Column) -> Column:
-        ok = F.size(tk) >= width
+        ok = F.size(tk) >= TEMPLATE_WIDTH
         return F.struct(
-            F.when(ok, F.md5(F.array_join(F.slice(tk, 1, width), " "))).alias(
+            F.when(ok, F.md5(F.array_join(F.slice(tk, 1, TEMPLATE_WIDTH), " "))).alias(
                 "prefix_h"
             ),
             F.when(
-                ok, F.md5(F.array_join(F.slice(tk, -width, width), " "))
+                ok, F.md5(F.array_join(F.slice(tk, -TEMPLATE_WIDTH, TEMPLATE_WIDTH), " "))
             ).alias("suffix_h"),
         )
 

@@ -20,19 +20,19 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def dsum(col: Column | str, scale: int = 2) -> Column:
+def dsum(col: Column | str) -> Column:
     """Order-insensitive exact sum of a fixed-point-valued double column:
     cast to DECIMAL(18, scale) (exact for the corpus' 2-decimal money
     values), sum exactly, cast back to double."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double")
+    return F.sum(c.cast("decimal(18,2)")).cast("double")
 
 
-def davg(col: Column | str, scale: int = 2) -> Column:
+def davg(col: Column | str) -> Column:
     """Order-insensitive mean: exact decimal sum divided by count, in
     double — one deterministic division instead of n accumulations."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.sum(c.cast(f"decimal(18,{scale})")).cast("double") / F.count(F.lit(1))
+    return F.sum(c.cast("decimal(18,2)")).cast("double") / F.count(F.lit(1))
 
 
 def group_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
@@ -63,7 +63,7 @@ def grouping_sets_agg(
 
 
 def percentiles(
-    df: DataFrame, keys: list[str], col: str, pcts: list[float], round_digits: int = 6
+    df: DataFrame, keys: list[str], col: str, pcts: list[float]
 ) -> DataFrame:
     """Exact percentiles (linear interpolation, ANSI semantics — matches
     DuckDB ``quantile_cont``). Exact percentile sorts each group's values;
@@ -71,7 +71,7 @@ def percentiles(
     memory, mergeable map-side) — kept exact here because the driver
     oracle hash-compares values."""
     aggs = [
-        F.round(F.percentile(col, F.lit(p)), round_digits).alias(
+        F.round(F.percentile(col, F.lit(p)), 6).alias(
             f"p{int(p * 100)}"
         )
         for p in pcts
@@ -86,10 +86,10 @@ def distinct_count(df: DataFrame, keys: list[str], col: str, alias: str) -> Data
 
 
 def approx_distinct_count(
-    df: DataFrame, keys: list[str], col: str, alias: str, rsd: float = 0.05
+    df: DataFrame, keys: list[str], col: str, alias: str
 ) -> DataFrame:
     """HyperLogLog++ COUNT(DISTINCT) — constant memory per group, single
     shuffle of sketches. The scale path: at 100 TB exact distinct on a
     high-cardinality column shuffles the full column; HLL ships ~1.5 KB
     per group instead."""
-    return df.groupBy(*keys).agg(F.approx_count_distinct(col, rsd).alias(alias))
+    return df.groupBy(*keys).agg(F.approx_count_distinct(col, 0.05).alias(alias))

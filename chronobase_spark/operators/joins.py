@@ -82,16 +82,10 @@ def range_join_bucketed(
     return joined.filter((delta >= 0) & (delta <= gap)).drop("_bucket")
 
 
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    how: str = "inner",
-    salt: int = 8,
-) -> DataFrame:
+def salted_join(left: DataFrame, right: DataFrame, on: str) -> DataFrame:
     """Skew-mitigating equi-join: scatter each left (big/skewed side) row
-    to one of ``salt`` sub-keys and replicate every right row across all
-    of them, so one hot join key spreads over ``salt`` shuffle partitions
+    to one of 8 sub-keys and replicate every right row across all
+    of them, so one hot join key spreads over 8 shuffle partitions
     instead of funneling into a single straggler task.
 
     The salt is derived deterministically from the left row's columns
@@ -103,14 +97,14 @@ def salted_join(
     """
     l_salted = left.withColumn(
         "_salt",
-        F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt)).cast(
+        F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(8)).cast(
             "int"
         ),
     )
     r_replicated = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(7)))
     )
-    return l_salted.join(r_replicated, on=[on, "_salt"], how=how).drop("_salt")
+    return l_salted.join(r_replicated, on=[on, "_salt"], how="inner").drop("_salt")
 
 
 def asof_join(

@@ -55,7 +55,6 @@ def time_range_scan(
     df: DataFrame,
     start: str | dt.datetime,
     end: str | dt.datetime,
-    ts_col: str = "ts",
 ) -> DataFrame:
     """All rows with start <= ts <= end — bounds inclusive on BOTH ends,
     matching the reference's memory path ``!ts.Before(start) &&
@@ -72,12 +71,12 @@ def time_range_scan(
     storage layer's layout the ``event_date`` bounds become
     PartitionFilters, so whole day directories are skipped.
     """
-    cond = F.col(ts_col).between(_ts(start), _ts(end))
-    if TS_NS in df.columns and ts_col == "ts":
+    cond = F.col("ts").between(_ts(start), _ts(end))
+    if TS_NS in df.columns:
         s_ns = _to_micros(start) * 1000
         e_ns = _to_micros(end) * 1000 + 999
         cond = cond & F.col(TS_NS).between(F.lit(s_ns), F.lit(e_ns))
-    if PARTITION_COL in df.columns and ts_col == "ts":
+    if PARTITION_COL in df.columns:
         cond = cond & partition_between(_ts(start), _ts(end))
     return df.filter(cond).drop(TS_NS)
 
@@ -93,7 +92,6 @@ def key_lookup(df: DataFrame, key_col: str, key_value) -> DataFrame:
 
 def scan_ordered(
     df: DataFrame,
-    ts_col: str = "ts",
     key_col: str = "event_id",
     ascending: bool = True,
     limit: int | None = None,
@@ -107,7 +105,7 @@ def scan_ordered(
     keeps a k-row heap and the driver merges k·p rows — no global sort,
     which is what makes top-k viable at 100 TB.
     """
-    order = [F.col(ts_col), F.col(key_col)]
+    order = [F.col("ts"), F.col(key_col)]
     if not ascending:
         order = [c.desc() for c in order]
     out = df.orderBy(*order)
@@ -116,11 +114,7 @@ def scan_ordered(
     return out
 
 
-def ttl_filter(
-    df: DataFrame,
-    cutoff: str | dt.datetime,
-    ts_col: str = "ts",
-) -> DataFrame:
+def ttl_filter(df: DataFrame, cutoff: str | dt.datetime) -> DataFrame:
     """Retention filter: keep rows strictly newer than the cutoff —
     the reference drops rows with ``time.Since(ts) > ttl`` at ingest
     (table.go:93-96) and filters the memtable to ``ts > now-ttl`` at
@@ -130,21 +124,21 @@ def ttl_filter(
 
     Same ns-pushdown translation as time_range_scan:
     ``ts > c ⟺ floor(ns/1000) >= c+1µs ⟺ ns >= (c+1µs)·1000``."""
-    cond = F.col(ts_col) > _ts(cutoff)
-    if TS_NS in df.columns and ts_col == "ts":
+    cond = F.col("ts") > _ts(cutoff)
+    if TS_NS in df.columns:
         cond = cond & (F.col(TS_NS) >= F.lit((_to_micros(cutoff) + 1) * 1000))
     return df.filter(cond).drop(TS_NS)
 
 
-def table_stats(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def table_stats(df: DataFrame) -> DataFrame:
     """Table statistics: row count + oldest/newest timestamp — the
     reference's ``GetStats`` (table.go:390-414, struct table.go:32-42).
     Storage-level fields (DiskTablets, DiskSize) are file-system facts
     owned by the catalog, not the query engine."""
     return df.agg(
         F.count(F.lit(1)).alias("row_count"),
-        F.min(ts_col).alias("oldest_ts"),
-        F.max(ts_col).alias("newest_ts"),
+        F.min("ts").alias("oldest_ts"),
+        F.max("ts").alias("newest_ts"),
     )
 
 
@@ -317,21 +311,13 @@ def latest_per_key(
     )
 
 
-def segmented_ewma(
-    df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    value_col: str = "value",
-    bucket: str = "day",
-    alpha: float = 0.5,
-) -> DataFrame:
+def segmented_ewma(df: DataFrame, bucket: str = "day") -> DataFrame:
     """Exponentially-weighted moving average per key via associative
     affine-segment composition — bounded state at every stage.
 
     Each EWMA step is the affine map y -> (1-α)·y + α·v; affine maps
     compose associatively, so per-key histories are segmented by a
-    calendar bucket of ``ts_col`` and each segment folds independently
+    calendar bucket of ``ts`` and each segment folds independently
     to a zero-start prefix b_j (the segment's EWMA as if entered with
     y = 0) and decay a_j = (1-α)^j. A window over (key) ordered by
     segment then chains the entry value yin(k) = a_tot·yin(k-1) + b_end
@@ -353,19 +339,19 @@ def segmented_ewma(
     stays exact because yin(first segment) = v_1 and
     0.5·v_1 + 0.5·v_1 = v_1.
 
-    Output: (key_col, tiebreak_col, ts_col, value_col, ewma), one row
+    Output: (user_id, event_id, ts, value, ewma), one row
     per input row.
     """
-    a = float(alpha)
+    a = 0.5
     ev = df.select(
-        key_col,
-        tiebreak_col,
-        ts_col,
-        value_col,
-        F.date_trunc(bucket, F.col(ts_col)).alias("_seg"),
+        "user_id",
+        "event_id",
+        "ts",
+        "value",
+        F.date_trunc(bucket, F.col("ts")).alias("_seg"),
     )
     seq = F.array_sort(
-        F.collect_list(F.struct(ts_col, tiebreak_col, value_col))
+        F.collect_list(F.struct("ts", "event_id", "value"))
     )
     # Zero-start prefix fold within one bounded (key, bucket) segment:
     # b_j = α v_j + (1-α) b_{j-1} (b_0 = 0), a_j = (1-α) a_{j-1} (a_0 = 1).
@@ -390,19 +376,19 @@ def segmented_ewma(
                 F.array(
                     F.when(
                         F.size(acc["b"]) > 0,
-                        F.lit(a) * x[value_col]
+                        F.lit(a) * x["value"]
                         + F.lit(1.0 - a) * F.element_at(acc["b"], -1),
-                    ).otherwise(F.lit(a) * x[value_col])
+                    ).otherwise(F.lit(a) * x["value"])
                 ),
             ).alias("b"),
         ),
     )
     seg_df = (
-        ev.groupBy(key_col, "_seg")
+        ev.groupBy("user_id", "_seg")
         .agg(seq.alias("_seq"))
         .withColumn("_f", fold)
         .select(
-            key_col,
+            "user_id",
             "_seg",
             "_seq",
             F.col("_f.a").alias("_a"),
@@ -423,18 +409,18 @@ def segmented_ewma(
     # key's segment rows (each bounded by the bucket) and spills past
     # memory, so per-task state stays bucket-bounded.
     w_prev = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("user_id")
         .orderBy("_seg")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_run = (
-        Window.partitionBy(key_col)
+        Window.partitionBy("user_id")
         .orderBy("_seg")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     chained = (
         seg_df.withColumn(
-            "first_v", F.col("_seq")[0][value_col]
+            "first_v", F.col("_seq")[0]["value"]
         )
         .withColumn(
             "_prefix",
@@ -457,14 +443,14 @@ def segmented_ewma(
     )
     return (
         chained.select(
-            key_col,
+            "user_id",
             F.explode(
                 F.transform(
                     "_seq",
                     lambda s, i: F.struct(
-                        s[tiebreak_col].alias(tiebreak_col),
-                        s[ts_col].alias(ts_col),
-                        s[value_col].alias(value_col),
+                        s["event_id"].alias("event_id"),
+                        s["ts"].alias("ts"),
+                        s["value"].alias("value"),
                         (
                             F.get("_a", i) * F.col("yin") + F.get("_b", i)
                         ).alias("ewma"),
@@ -472,18 +458,11 @@ def segmented_ewma(
                 )
             ).alias("_r"),
         )
-        .select(key_col, "_r.*")
+        .select("user_id", "_r.*")
     )
 
 
-def ltob_downsample(
-    df: DataFrame,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    tiebreak_col: str = "event_id",
-    bucket: str = "hour",
-) -> DataFrame:
+def ltob_downsample(df: DataFrame, bucket: str = "hour") -> DataFrame:
     """Largest-Triangle-One-Bucket downsampling: one representative row
     per (key, bucket), chosen to preserve the series' visual shape —
     the TSDB plotting primitive (TimescaleDB ships it as the lttb()
@@ -522,32 +501,32 @@ def ltob_downsample(
     emitted — callers keep the first/last bucket's endpoints verbatim,
     as LTTB prescribes for the series ends.
     """
-    b_start = F.date_trunc(bucket, F.col(ts_col))
-    xu = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    yu = F.round(F.col(value_col).cast("double") * F.lit(1000000.0), 0).cast(
+    b_start = F.date_trunc(bucket, F.col("ts"))
+    xu = F.unix_micros(F.col("ts").cast("timestamp"))
+    yu = F.round(F.col("value").cast("double") * F.lit(1000000.0), 0).cast(
         "bigint"
     )
     start_us = F.unix_micros(F.col("bucket_ts").cast("timestamp"))
     pts = df.select(
-        F.col(key_col),
+        F.col("event_type"),
         b_start.alias("bucket_ts"),
-        F.col(tiebreak_col),
-        F.col(ts_col),
-        F.col(value_col),
+        F.col("event_id"),
+        F.col("ts"),
+        F.col("value"),
         xu.alias("_xu"),
         yu.alias("_yu"),
     ).withColumn("_dx", F.col("_xu") - start_us)
 
-    summ = pts.groupBy(key_col, "bucket_ts").agg(
+    summ = pts.groupBy("event_type", "bucket_ts").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum("_dx").alias("sxr"),
         F.sum("_yu").alias("sy"),
     )
-    w = Window.partitionBy(key_col).orderBy("bucket_ts")
+    w = Window.partitionBy("event_type").orderBy("bucket_ts")
     nb = (
         summ.withColumn("_start", start_us)
         .select(
-            key_col,
+            "event_type",
             "bucket_ts",
             F.lag("n").over(w).alias("n_p"),
             F.lag("sxr").over(w).alias("sxr_p"),
@@ -562,7 +541,7 @@ def ltob_downsample(
         .filter(F.col("n_p").isNotNull() & F.col("n_n").isNotNull())
     )
 
-    j = pts.join(F.broadcast(nb), [key_col, "bucket_ts"])
+    j = pts.join(F.broadcast(nb), ["event_type", "bucket_ts"])
     d = lambda c: c.cast("double")  # noqa: E731 — one-symbol alias keeps
     # the score expression readable enough to compare with the oracle
     xa = F.col("sxr_p") + F.col("n_p") * (F.col("start_p") - F.col("start_c"))
@@ -575,25 +554,25 @@ def ltob_downsample(
     )
     best = (
         j.select(
-            key_col,
+            "event_type",
             "bucket_ts",
             F.struct(
                 F.abs(score).alias("score"),
                 (-F.col("_xu")).alias("neg_x"),
-                (-F.col(tiebreak_col)).alias("neg_tb"),
-                F.col(tiebreak_col).alias("tb"),
-                F.col(ts_col).alias("ts_v"),
-                F.col(value_col).alias("val"),
+                (-F.col("event_id")).alias("neg_tb"),
+                F.col("event_id").alias("tb"),
+                F.col("ts").alias("ts_v"),
+                F.col("value").alias("val"),
             ).alias("_cand"),
         )
-        .groupBy(key_col, "bucket_ts")
+        .groupBy("event_type", "bucket_ts")
         .agg(F.max("_cand").alias("_m"))
         .select(
-            key_col,
+            "event_type",
             "bucket_ts",
-            F.col("_m.tb").alias(tiebreak_col),
-            F.col("_m.ts_v").alias(ts_col),
-            F.col("_m.val").alias(value_col),
+            F.col("_m.tb").alias("event_id"),
+            F.col("_m.ts_v").alias("ts"),
+            F.col("_m.val").alias("value"),
         )
     )
     return best
@@ -601,16 +580,11 @@ def ltob_downsample(
 
 def holt_daily_smoothing(
     df: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-    value_col: str = "value",
     alpha: float = 0.5,
     beta: float = 0.5,
-    bucket: str = "day",
 ) -> DataFrame:
     """Holt's linear (double-exponential) smoothing per key, state
-    reset at each calendar ``bucket`` — level + trend for every
+    reset at each calendar day — level + trend for every
     observation (Holt 1957; the two-state upgrade over the one-state
     EWMA when series drift):
 
@@ -637,25 +611,25 @@ def holt_daily_smoothing(
     point). NULL observations are excluded up front on both engines
     (null-contract rule; an unobserved value has no smoothing step).
 
-    Output: (key_col, tiebreak_col, ts_col, value_col, level, trend),
+    Output: (user_id, event_id, ts, value, level, trend),
     one row per non-null input row.
     """
     a, be = float(alpha), float(beta)
-    ev = df.filter(F.col(value_col).isNotNull()).select(
-        key_col,
-        tiebreak_col,
-        ts_col,
-        value_col,
-        F.date_trunc(bucket, F.col(ts_col)).alias("_seg"),
+    ev = df.filter(F.col("value").isNotNull()).select(
+        "user_id",
+        "event_id",
+        "ts",
+        "value",
+        F.date_trunc("day", F.col("ts")).alias("_seg"),
     )
     seq = F.array_sort(
-        F.collect_list(F.struct(ts_col, tiebreak_col, value_col))
+        F.collect_list(F.struct("ts", "event_id", "value"))
     )
 
     def step(acc, x):
         lp = F.element_at(acc["l"], -1)
         bp = F.element_at(acc["b"], -1)
-        v = x[value_col].cast("double")
+        v = x["value"].cast("double")
         ln = F.lit(a) * v + F.lit(1.0 - a) * (lp + bp)
         bn = F.lit(be) * (ln - lp) + F.lit(1.0 - be) * bp
         first = F.size(acc["l"]) == 0
@@ -677,25 +651,25 @@ def holt_daily_smoothing(
         step,
     )
     folded = (
-        ev.groupBy(key_col, "_seg")
+        ev.groupBy("user_id", "_seg")
         .agg(seq.alias("_seq"))
         .withColumn("_f", fold)
     )
     return (
         folded.select(
-            key_col,
+            "user_id",
             F.explode(
                 F.transform(
                     "_seq",
                     lambda s, i: F.struct(
-                        s[tiebreak_col].alias(tiebreak_col),
-                        s[ts_col].alias(ts_col),
-                        s[value_col].alias(value_col),
+                        s["event_id"].alias("event_id"),
+                        s["ts"].alias("ts"),
+                        s["value"].alias("value"),
                         F.get(F.col("_f.l"), i).alias("level"),
                         F.get(F.col("_f.b"), i).alias("trend"),
                     ),
                 )
             ).alias("_r"),
         )
-        .select(key_col, "_r.*")
+        .select("user_id", "_r.*")
     )

@@ -14,37 +14,25 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def rank_events_per_user(
-    df: DataFrame,
-    partition_col: str = "user_id",
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    top_n: int | None = None,
-) -> DataFrame:
+def rank_events_per_user(df: DataFrame, top_n: int | None = None) -> DataFrame:
     """row_number/rank over each user's event stream ordered by
     (ts, key) — the reference's (Timestamp, Key) sort rule
     (tablet.go:124-132) as a per-key ranking."""
-    w = Window.partitionBy(partition_col).orderBy(F.col(ts_col), F.col(key_col))
+    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
     out = df.withColumn("rn", F.row_number().over(w))
     if top_n is not None:
         out = out.filter(F.col("rn") <= top_n)
     return out
 
 
-def lag_delta_seconds(
-    df: DataFrame,
-    partition_col: str = "user_id",
-    ts_col: str = "ts",
-    key_col: str = "event_id",
-    alias: str = "gap_s",
-) -> DataFrame:
+def lag_delta_seconds(df: DataFrame) -> DataFrame:
     """Seconds since the previous event of the same key (lag analytic);
     NULL for each key's first event."""
-    w = Window.partitionBy(partition_col).orderBy(F.col(ts_col), F.col(key_col))
-    prev = F.lag(F.col(ts_col)).over(w)
+    w = Window.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
+    prev = F.lag(F.col("ts")).over(w)
     return df.withColumn(
-        alias,
-        (F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev)).cast("bigint"),
+        "gap_s",
+        (F.unix_timestamp(F.col("ts")) - F.unix_timestamp(prev)).cast("bigint"),
     )
 
 
@@ -77,8 +65,6 @@ def moving_sum(
     key_col: str,
     value_col: str,
     preceding: int,
-    alias: str = "moving_sum",
-    scale: int = 2,
 ) -> DataFrame:
     """Moving sum over a ROWS frame [preceding, current] per key.
 
@@ -89,8 +75,8 @@ def moving_sum(
         .orderBy(F.col(ts_col), F.col(key_col))
         .rowsBetween(-preceding, Window.currentRow)
     )
-    val = F.col(value_col).cast(f"decimal(18,{scale})")
-    return df.withColumn(alias, F.sum(val).over(w).cast("double"))
+    val = F.col(value_col).cast("decimal(18,2)")
+    return df.withColumn("moving_sum", F.sum(val).over(w).cast("double"))
 
 
 def sessionize(
@@ -128,7 +114,6 @@ def range_frame_sum(
     value_col: str,
     preceding_seconds: int,
     alias: str = "range_sum",
-    scale: int = 2,
 ) -> DataFrame:
     """Moving sum over a time-based RANGE frame [ts - preceding, ts] per
     key — a true event-time frame, unlike the row-count frame in
@@ -149,7 +134,7 @@ def range_frame_sum(
         .orderBy(F.unix_micros(F.col(ts_col).cast("timestamp")))
         .rangeBetween(-preceding_seconds * 1_000_000, Window.currentRow)
     )
-    val = F.col(value_col).cast(f"decimal(18,{scale})")
+    val = F.col(value_col).cast("decimal(18,2)")
     return df.withColumn(alias, F.sum(val).over(w).cast("double"))
 
 
@@ -192,9 +177,6 @@ def pattern_triple(
     df: DataFrame,
     partition_col: str,
     pattern: tuple[str, str, str],
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    key_col: str = "event_id",
     within_seconds: int = 3600,
 ) -> DataFrame:
     """MATCH_RECOGNIZE-lite: contiguous three-step pattern detection per
@@ -211,31 +193,31 @@ def pattern_triple(
     at scale).
     """
     a, b, c = pattern
-    flt = df.filter(F.col(type_col).isin(a, b, c))
-    w = Window.partitionBy(partition_col).orderBy(F.col(ts_col), F.col(key_col))
-    t2 = F.lead(type_col, 1).over(w)
-    t3 = F.lead(type_col, 2).over(w)
+    flt = df.filter(F.col("event_type").isin(a, b, c))
+    w = Window.partitionBy(partition_col).orderBy(F.col("ts"), F.col("event_id"))
+    t2 = F.lead("event_type", 1).over(w)
+    t3 = F.lead("event_type", 2).over(w)
     out = (
         flt.withColumn("_t2", t2)
         .withColumn("_t3", t3)
-        .withColumn("_k2", F.lead(key_col, 1).over(w))
-        .withColumn("_k3", F.lead(key_col, 2).over(w))
-        .withColumn("_ts3", F.lead(ts_col, 2).over(w))
+        .withColumn("_k2", F.lead("event_id", 1).over(w))
+        .withColumn("_k3", F.lead("event_id", 2).over(w))
+        .withColumn("_ts3", F.lead("ts", 2).over(w))
     )
     span_ok = (
-        F.unix_timestamp("_ts3") - F.unix_timestamp(ts_col)
+        F.unix_timestamp("_ts3") - F.unix_timestamp("ts")
     ) <= within_seconds
     return (
         out.filter(
-            (F.col(type_col) == a) & (F.col("_t2") == b) & (F.col("_t3") == c)
+            (F.col("event_type") == a) & (F.col("_t2") == b) & (F.col("_t3") == c)
             & span_ok
         )
         .select(
             F.col(partition_col),
-            F.col(key_col).alias("k_start"),
+            F.col("event_id").alias("k_start"),
             F.col("_k2").alias("k_mid"),
             F.col("_k3").alias("k_end"),
-            F.col(ts_col).alias("ts_start"),
+            F.col("ts").alias("ts_start"),
             F.col("_ts3").alias("ts_end"),
         )
     )

@@ -97,9 +97,7 @@ def q_key_lookup(spark, sf_dir):
 )
 def q_scan_limit_asc(spark, sf_dir):
     """Reference D1/D2: ordered scan with limit (pkg/db/types.go:16-21)."""
-    df = timeseries.scan_ordered(
-        _t(spark, sf_dir, "events"), ascending=True, limit=100
-    )
+    df = timeseries.scan_ordered(_t(spark, sf_dir, "events"), limit=100)
     return df.select("event_id", "ts", "user_id")
 
 
@@ -278,7 +276,7 @@ def q_monthly_revenue_salted(spark, sf_dir):
         "CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))"
     )
     return (
-        joins.salted_join(li, orders, "l_orderkey", salt=8)
+        joins.salted_join(li, orders, "l_orderkey")
         .groupBy(
             F.date_trunc("month", "o_orderdate").alias("order_month"),
             F.col("o_orderstatus"),
@@ -547,9 +545,7 @@ def q_moving_value_sum(spark, sf_dir):
 def q_user_sessions(spark, sf_dir):
     """Sessionization (gaps-and-islands, 30-min gap) — batch analog of
     session_window; same `gap > 1800 ⇒ new session` rule on both engines."""
-    df = windows.sessionize(
-        _t(spark, sf_dir, "events"), "user_id", "ts", gap_seconds=1800
-    )
+    df = windows.sessionize(_t(spark, sf_dir, "events"))
     return df.groupBy("user_id").agg(
         F.max("session_id").cast("bigint").alias("n_sessions"),
         F.count(F.lit(1)).alias("n_events"),
@@ -896,9 +892,7 @@ WHERE ROUND(CAST(common AS DOUBLE) / CAST(sa.n_sh + sb.n_sh - common AS DOUBLE),
 def q_ngram_jaccard_pairs(spark, sf_dir):
     """3-gram shingle Jaccard near-dup pairs with posting-list pruning
     (dedup.ngram) — the exact, oracle-checkable near-dup variant."""
-    return ngram.jaccard_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.5, max_df=50
-    )
+    return ngram.jaccard_pairs(_t(spark, sf_dir, "documents"), threshold=0.5)
 
 
 @register("minhash_dedup_pairs", None)  # Spark xxhash64-dependent
@@ -906,9 +900,7 @@ def q_minhash_dedup_pairs(spark, sf_dir):
     """MinHash+LSH banding candidates verified by exact Jaccard — the
     sub-quadratic scale path (see dedup.minhash; equivalence to brute
     force pinned in tests/test_dedup.py)."""
-    return minhash.minhash_dedup_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.5
-    )
+    return minhash.minhash_dedup_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register("simhash_near_pairs", None)  # Spark xxhash64-dependent
@@ -957,10 +949,11 @@ def q_winnow_dup_pairs(spark, sf_dir):
     return winnow.winnow_dup_pairs(_t(spark, sf_dir, "documents"))
 
 
-def _minhash_md5_sql(bands: int = 4, rows: int = 4) -> str:
+def _minhash_md5_sql() -> str:
     lane = (
         lambda i: f"MIN(('0x' || substr(md5(g || '#{i}'), 1, 8))::BIGINT) AS m{i}"
     )
+    bands, rows = minhash.BANDS, minhash.ROWS_PER_BAND
     lanes = ",\n         ".join(lane(i) for i in range(bands * rows))
     band_rows = "\n  UNION ALL\n".join(
         f"  SELECT doc, {bi} AS band_id, concat_ws(','"
@@ -1004,7 +997,7 @@ WHERE c * 1000000 >= 500000 * u
 """
 
 
-def _simhash_md5_sql(max_hamming: int = 3) -> str:
+def _simhash_md5_sql() -> str:
     bit_sums = ",\n         ".join(
         f"SUM(CASE WHEN (h{1 if i < 32 else 2} >> {i % 32}) & 1 = 1"
         f" THEN 1 ELSE -1 END) AS b{i}"
@@ -1054,7 +1047,7 @@ SELECT DISTINCT doc_a, doc_b, hamming FROM (
     ON a.chunk_id = b.chunk_id AND a.chunk_val = b.chunk_val
    AND a.doc < b.doc
 )
-WHERE hamming <= {max_hamming}
+WHERE hamming <= 3
 """
 
 
@@ -1080,20 +1073,19 @@ def q_minhash_md5_pairs(spark, sf_dir):
     hash-verified against DuckDB, not just rows-only. The xxhash64
     production variant stays for throughput; this pins the pipeline's
     semantics cross-engine (the sketches.py md5-CMS precedent)."""
-    return minhash.minhash_md5_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.5
-    )
+    return minhash.minhash_md5_pairs(_t(spark, sf_dir, "documents"))
 
 
-def _admission_sql(bands: int = 4, rows: int = 4) -> str:
+def _admission_sql() -> str:
     """Oracle for near_dup_admission_report: the _minhash_md5_sql
     pipeline with the content-free md5 arriving/stored split applied
     at the band join and a per-ARRIVAL left-joined verdict instead of
-    a pair list — generated from the same (bands, rows) parameters as
-    the Spark operator (the _dsir_sql convention)."""
+    a pair list — generated from the Spark operator's banding scheme
+    (minhash.BANDS, minhash.ROWS_PER_BAND)."""
     lane = (
         lambda i: f"MIN(('0x' || substr(md5(g || '#{i}'), 1, 8))::BIGINT) AS m{i}"
     )
+    bands, rows = minhash.BANDS, minhash.ROWS_PER_BAND
     lanes = ",\n         ".join(lane(i) for i in range(bands * rows))
     band_rows = "\n  UNION ALL\n".join(
         f"  SELECT doc, {bi} AS band_id, concat_ws(','"
@@ -1254,7 +1246,7 @@ def q_topk_cosine(spark, sf_dir):
 
 
 def _lsh_pairs_sql() -> str:
-    planes = emb_dedup.hyperplanes(8)
+    planes = emb_dedup.hyperplanes()
     sig = emb_dedup.sql_signature_expr("e.embedding", planes)
     return f"""
 WITH sigs AS (
@@ -1292,18 +1284,14 @@ def q_ivf_topk_cosine(spark, sf_dir):
     re-rank inside the cell — the sub-linear scale path next to the
     brute-force topk_cosine baseline. Literal hyperplanes make it fully
     oracle-checkable."""
-    return emb_dedup.ivf_topk(
-        _t(spark, sf_dir, "embeddings"), probe_ids=[0, 1, 2], k=10, num_planes=6
-    )
+    return emb_dedup.ivf_topk(_t(spark, sf_dir, "embeddings"), probe_ids=[0, 1, 2])
 
 
 @register("embedding_near_pairs", _lsh_pairs_sql())
 def q_embedding_near_pairs(spark, sf_dir):
     """Random-hyperplane LSH bucketing + exact cosine verify ≥ 0.4 —
     engine-portable (literal hyperplanes), so fully oracle-checked."""
-    return emb_dedup.bucketed_near_pairs(
-        _t(spark, sf_dir, "embeddings"), num_planes=8, min_cosine=0.4
-    )
+    return emb_dedup.bucketed_near_pairs(_t(spark, sf_dir, "embeddings"), min_cosine=0.4)
 
 
 @register(
@@ -1690,7 +1678,7 @@ def q_inverted_index_terms(spark, sf_dir):
     projected to CSV for the compare harness (row-sorting over list
     columns is undefined in pandas)."""
     docs = _t(spark, sf_dir, "documents")
-    idx = text.inverted_index(docs, max_postings=100)
+    idx = text.inverted_index(docs)
     return idx.select(
         "term", "df", F.array_join("postings", ",").alias("postings")
     )
@@ -1956,7 +1944,7 @@ def q_latest_per_user(spark, sf_dir):
     ev = _t(spark, sf_dir, "events").select(
         "user_id", "event_id", "ts", "event_type", "value"
     )
-    return timeseries.latest_per_key(ev, "user_id", "ts", "event_id")
+    return timeseries.latest_per_key(ev, "user_id")
 
 
 @register(
@@ -1982,7 +1970,7 @@ def q_tfidf_top_terms(spark, sf_dir):
     """TF-IDF top-3 terms per document (text.tfidf_top_terms) — linear
     IDF N/df keeps the scores integer-ratio doubles, so the oracle
     hash-matches without rounding."""
-    return text.tfidf_top_terms(_t(spark, sf_dir, "documents"), k=3)
+    return text.tfidf_top_terms(_t(spark, sf_dir, "documents"))
 
 
 @register(
@@ -2201,7 +2189,7 @@ def q_multimodal_resize_meta(spark, sf_dir):
     from chronobase_spark.functions import multimodal
 
     docs = _t(spark, sf_dir, "documents")
-    resized = multimodal.resize_stub(multimodal.to_payload(docs), scale_denom=4)
+    resized = multimodal.resize_stub(multimodal.to_payload(docs))
     return resized.select(
         "doc_id",
         F.col("meta.n_bytes").alias("n_bytes_resized"),
@@ -2689,7 +2677,7 @@ def q_dup_clusters(spark, sf_dir):
     # reads it again. At 100 TB the pairs WOULD be a materialized table
     # between the two stages.
     pairs = (
-        ngram.jaccard_pairs(docs, threshold=0.5, max_df=50)
+        ngram.jaccard_pairs(docs, threshold=0.5)
         .select("doc_a", "doc_b")
         .persist()
     )
@@ -2935,7 +2923,7 @@ def q_kmeans_lloyd_assign(spark, sf_dir):
     is the vec_id join gluing assignment to vector (shuffle_hash).
     See functions.similarity.kmeans_lloyd."""
     emb = _t(spark, sf_dir, "embeddings")
-    return similarity.kmeans_lloyd(emb, k=_KMEANS_K, iters=2)
+    return similarity.kmeans_lloyd(emb, k=_KMEANS_K)
 
 
 _KMEANS_PROBE_IDS = (0, 1, 2)
@@ -2980,7 +2968,6 @@ def q_ivf_kmeans_topk(spark, sf_dir):
         probe_ids=list(_KMEANS_PROBE_IDS),
         k=_KMEANS_TOPK,
         kmeans_k=_KMEANS_K,
-        iters=2,
     )
 
 
@@ -3016,7 +3003,6 @@ def q_decontam_overlap(spark, sf_dir):
     return ngram.contamination_overlap(
         docs.filter(F.col("source") != "src0"),
         docs.filter(F.col("source") == "src0"),
-        min_overlap=3,
     )
 
 
@@ -4052,9 +4038,7 @@ def q_ivf_pq_search(spark, sf_dir):
     cell of 8-byte codes. The cell candidate set grows with the corpus
     so it is semi-joined shuffle_hash, never broadcast; codebooks are
     trained corpus-wide. Integer-exact ADC ⇒ full oracle."""
-    return emb_dedup.ivf_pq_topk(
-        _t(spark, sf_dir, "embeddings"), probe_id=0, num_planes=6, m=8, k=10
-    )
+    return emb_dedup.ivf_pq_topk(_t(spark, sf_dir, "embeddings"), probe_id=0)
 
 
 def _ann_recall_sql() -> str:
@@ -4093,9 +4077,7 @@ def q_ann_recall_at_10(spark, sf_dir):
     exact = similarity.topk_cosine(
         emb.filter(F.col("vec_id") == 0), emb, k=10
     ).select(F.col("n_id"))
-    approx = emb_dedup.ivf_pq_topk(
-        emb, probe_id=0, num_planes=6, m=8, k=10
-    ).select(F.col("vec_id").alias("n_id"))
+    approx = emb_dedup.ivf_pq_topk(emb, probe_id=0).select(F.col("vec_id").alias("n_id"))
     return approx.join(exact, "n_id").agg(
         F.count(F.lit(1)).alias("n_hits"),
         (F.count(F.lit(1)).cast("double") / F.lit(10).cast("double")).alias(
@@ -4113,9 +4095,7 @@ def q_pq_adc_search(spark, sf_dir):
     reads codes, never full-precision vectors. All LUT entries and ADC
     sums are exact BIGINT micro² arithmetic (pq_assign's integer
     rule), so the ranking is fully oracle-checked."""
-    return similarity.pq_adc_topk(
-        _t(spark, sf_dir, "embeddings"), probe_id=0, m=8, k=10
-    )
+    return similarity.pq_adc_topk(_t(spark, sf_dir, "embeddings"), probe_id=0)
 
 
 @register("pq_code_histogram", _PQ_SQL)
@@ -4131,7 +4111,7 @@ def q_pq_code_histogram(spark, sf_dir):
     never hash a summed double — the 6-dp double-distance variant
     flaked one group in 80 at sf0.1 on a half-even boundary)."""
     emb = _t(spark, sf_dir, "embeddings")
-    assigned = similarity.pq_assign(emb, m=8)
+    assigned = similarity.pq_assign(emb)
     return assigned.groupBy("subspace", "code").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.sum("dist_u2").cast("bigint").alias("err_sum_u2"),
@@ -4352,9 +4332,7 @@ def q_levenshtein_near_pairs(spark, sf_dir):
     fully oracle-checked."""
     from chronobase_spark.dedup import edit
 
-    return edit.levenshtein_near_pairs(
-        _t(spark, sf_dir, "documents"), prefix_len=24, rel_threshold=0.3
-    )
+    return edit.levenshtein_near_pairs(_t(spark, sf_dir, "documents"))
 
 
 _ENTROPY_SQL = """
@@ -4443,7 +4421,7 @@ def q_bm25_top_terms(spark, sf_dir):
     explode + two partial aggs, vocabulary broadcast, per-doc window.
     Scores are integer micro-units so ranking compares identically
     across engines."""
-    return text.bm25_top_terms(_t(spark, sf_dir, "documents"), k=3)
+    return text.bm25_top_terms(_t(spark, sf_dir, "documents"))
 
 
 _RRF_TERMS = ("spark", "vector", "customer")
@@ -4513,10 +4491,6 @@ def q_rrf_hybrid_topk(spark, sf_dir):
         _t(spark, sf_dir, "documents"),
         _t(spark, sf_dir, "embeddings"),
         query_terms=_RRF_TERMS,
-        probe_id=0,
-        per_side=50,
-        rrf_k=60,
-        k=20,
     )
 
 
@@ -4561,8 +4535,8 @@ def q_cms_user_counts(spark, sf_dir):
     overcount guarantee is pinned in pytest."""
     ev = _t(spark, sf_dir, "events")
     probes = ev.filter(F.col("user_id") % 7 == 0).select("user_id").distinct()
-    counters = sketches.cms_build(ev, "user_id", depth=4, width=512)
-    est = sketches.cms_estimate(counters, probes, "user_id", depth=4, width=512)
+    counters = sketches.cms_build(ev, "user_id")
+    est = sketches.cms_estimate(counters, probes, "user_id")
     exact = (
         ev.filter(F.col("user_id") % 7 == 0)
         .groupBy("user_id")
@@ -4808,9 +4782,7 @@ def q_clean_corpus_counts(spark, sf_dir):
     corpus = docs.filter(F.col("source") != "src0")
     canon = exact_dedup.canonical_map(corpus).select("doc_id", "is_duplicate")
     contam = (
-        ngram.contamination_overlap(
-            corpus, docs.filter(F.col("source") == "src0"), min_overlap=3
-        )
+        ngram.contamination_overlap(corpus, docs.filter(F.col("source") == "src0"))
         .select("doc_id")
         .withColumn("_contam", F.lit(True))
     )
@@ -6205,7 +6177,7 @@ def q_dup_graph_pagerank(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = (
-        minhash.minhash_md5_pairs(docs, threshold=0.5)
+        minhash.minhash_md5_pairs(docs)
         .select("doc_a", "doc_b")
         .persist()
     )
@@ -6699,7 +6671,7 @@ def q_pii_source_stats(spark, sf_dir):
 
 
 def _semdedup_sql() -> str:
-    planes = emb_dedup.hyperplanes(8)
+    planes = emb_dedup.hyperplanes()
     sig = emb_dedup.sql_signature_expr("e.embedding", planes)
     return f"""
 WITH sigs AS (
@@ -6725,9 +6697,7 @@ def q_semantic_dedup_assign(spark, sf_dir):
     the whole decision oracle-checkable. See dedup.embedding.
     semantic_dedup for the 100 TB shape (cell-bucketed pairs, keyed
     keep-flag join, zero corpus broadcasts)."""
-    return emb_dedup.semantic_dedup(
-        _t(spark, sf_dir, "embeddings"), num_planes=8, min_cosine=0.35
-    )
+    return emb_dedup.semantic_dedup(_t(spark, sf_dir, "embeddings"))
 
 
 # The corpus-scaled SemDeDup parameters, defined ONCE and consumed by
@@ -6876,8 +6846,8 @@ def q_semantic_admission_report(spark, sf_dir):
     )
     planes = emb_dedup.hyperplanes(k)
     # norms projected once per row BELOW the cell join on BOTH sides
-    # (r17; similarity.cosine's join-path note): cosine() would re-fold
-    # each arrival's and each stored row's norm per (arrival, cand)
+    # (r17; similarity.cosine_pre's join-path note): a per-pair norm would
+    # re-fold each arrival's and each stored row's norm per (arrival, cand)
     # pair — bit-identical sim either way.
     arr = embt.filter(
         _arriving(F.col("vec_id")) & F.col("embedding").isNotNull()
@@ -7530,7 +7500,7 @@ def q_cluster_balanced_sample(spark, sf_dir):
     k rows, never SF-proportional) and one map-side keep test; final
     output is k rows."""
     emb = _t(spark, sf_dir, "embeddings")
-    assigned = similarity.kmeans_lloyd(emb, k=_KMEANS_K, iters=2).select(
+    assigned = similarity.kmeans_lloyd(emb, k=_KMEANS_K).select(
         "vec_id", "assigned"
     )
     cnt = assigned.groupBy("assigned").agg(
@@ -7944,10 +7914,10 @@ def q_minhash_lsh_recall(spark, sf_dir):
     corpus-sized cache write + three cached re-reads, so the sharing
     is not a clear scale win either."""
     docs = _t(spark, sf_dir, "documents")
-    truth = ngram.jaccard_pairs(docs, threshold=0.5, max_df=50).select(
+    truth = ngram.jaccard_pairs(docs, threshold=0.5).select(
         "doc_a", "doc_b"
     )
-    found = minhash.minhash_md5_pairs(docs, threshold=0.5).select(
+    found = minhash.minhash_md5_pairs(docs).select(
         "doc_a", "doc_b"
     )
     t = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
@@ -8011,7 +7981,7 @@ def q_dup_graph_triangles(spark, sf_dir):
     1-row pattern."""
     docs = _t(spark, sf_dir, "documents")
     edges = (
-        minhash.minhash_md5_pairs(docs, threshold=0.5)
+        minhash.minhash_md5_pairs(docs)
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
         .persist()
     )
@@ -8299,7 +8269,7 @@ def q_hard_negative_mining(spark, sf_dir):
         F.col("label").isNotNull() & F.col("embedding").isNotNull()
     )
     # norms projected once per row below the join on both sides (r17;
-    # similarity.cosine's join-path note) — bit-identical sim.
+    # similarity.cosine_pre's join-path note) — bit-identical sim.
     probes = (
         emb.filter(F.col("vec_id") % 100 == 7)
         .orderBy("vec_id")
@@ -8439,7 +8409,7 @@ def q_split_leakage_report(spark, sf_dir):
     grouped rows. Everything is md5-derived, so the WHOLE audit is
     hash-checked cross-engine."""
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash.minhash_md5_pairs(docs, threshold=0.5).select(
+    pairs = minhash.minhash_md5_pairs(docs).select(
         "doc_a", "doc_b"
     )
     sp = docs.select(
@@ -8573,7 +8543,7 @@ def q_dup_clusters_star(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = (
-        ngram.jaccard_pairs(docs, threshold=0.5, max_df=50)
+        ngram.jaccard_pairs(docs, threshold=0.5)
         .select("doc_a", "doc_b")
         .persist()
     )
@@ -8836,7 +8806,7 @@ def q_leakage_safe_split(spark, sf_dir):
 
     docs = _t(spark, sf_dir, "documents")
     pairs = (
-        ngram.jaccard_pairs(docs, threshold=0.5, max_df=50)
+        ngram.jaccard_pairs(docs, threshold=0.5)
         .select("doc_a", "doc_b")
         .persist()
     )
@@ -9126,7 +9096,7 @@ def q_dup_graph_communities(spark, sf_dir):
     from chronobase_spark.dedup import cluster
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = minhash.minhash_md5_pairs(docs, threshold=0.5).select(
+    pairs = minhash.minhash_md5_pairs(docs).select(
         "doc_a", "doc_b"
     )
     return cluster.label_propagation(pairs, rounds=_LPA_ROUNDS)
@@ -9848,7 +9818,7 @@ def _raster_grid_cte() -> str:
 )"""
 
 
-def _phash_sql(max_hamming: int = 3) -> str:
+def _phash_sql() -> str:
     _w, g, _min_bytes = _raster_constants()
     chunk_exprs = ",\n         ".join(
         f"CAST(SUM(CASE WHEN gr // 2 = {j} THEN bit * (1 << ((gr % 2) * {g} + gc))"
@@ -9881,7 +9851,7 @@ SELECT DISTINCT doc_a, doc_b, hamming FROM (
     ON a.chunk_id = b.chunk_id AND a.chunk_val = b.chunk_val
    AND a.doc_id < b.doc_id
 )
-WHERE hamming <= {max_hamming}
+WHERE hamming <= 3
 """
 
 
@@ -9915,7 +9885,7 @@ def q_phash_near_pairs(spark, sf_dir):
     return phash.phash_near_pairs(docs)
 
 
-def _phash_admission_sql(max_hamming: int = 3) -> str:
+def _phash_admission_sql() -> str:
     """Oracle for phash_admission_report: the _phash_sql raster/dHash
     CTEs (shared _raster_grid_cte — one decode definition) with the
     content-free md5 arriving/stored split applied at the chunk join
@@ -9952,7 +9922,7 @@ def _phash_admission_sql(max_hamming: int = 3) -> str:
   FROM chunks a JOIN chunks b
     ON a.chunk_id = b.chunk_id AND a.chunk_val = b.chunk_val
   WHERE {arr.format(d="a.doc_id")} AND NOT {arr.format(d="b.doc_id")}
-    AND {ham} <= {max_hamming}
+    AND {ham} <= 3
   GROUP BY a.doc_id
 )
 SELECT d.doc_id,
@@ -10089,14 +10059,14 @@ def q_jm_trigram_logprob(spark, sf_dir):
     return text.jm_trigram_scores(_t(spark, sf_dir, "documents"))
 
 
-def _raster_topk_sql(probe_mod: int = 101, n_probes: int = 8, k: int = 10) -> str:
+def _raster_topk_sql() -> str:
     _w, g, _min_bytes = _raster_constants()
     return f"""
 {_raster_grid_cte()}, g AS MATERIALIZED (
   SELECT doc_id, list(s ORDER BY gr * {g} + gc) AS g FROM grid GROUP BY doc_id
 ), probes AS (
-  SELECT doc_id AS probe_id, g AS pg FROM g WHERE doc_id % {probe_mod} = 0
-  ORDER BY probe_id LIMIT {n_probes}
+  SELECT doc_id AS probe_id, g AS pg FROM g WHERE doc_id % 101 = 0
+  ORDER BY probe_id LIMIT 8
 ), scored AS (
   SELECT p.probe_id, c.doc_id,
          CAST(list_sum(list_transform(range(1, {g * g + 1}),
@@ -10108,7 +10078,7 @@ SELECT probe_id, doc_id, l1_dist, CAST(rnk AS BIGINT) AS rnk FROM (
          ROW_NUMBER() OVER (PARTITION BY probe_id
                             ORDER BY l1_dist, doc_id) AS rnk
   FROM scored
-) WHERE rnk <= {k}
+) WHERE rnk <= 10
 """
 
 
@@ -10292,17 +10262,13 @@ def q_token_budget_select(spark, sf_dir):
     )
 
 
-def _dsir_sql(
-    target_lang: str = "en",
-    lang_col: str = "lang",
-    buckets: int = text.DSIR_BUCKETS,
-) -> str:
+def _dsir_sql(target_lang: str = "en", lang_col: str = "lang") -> str:
     """DuckDB oracle for dsir_select, GENERATED from the SAME
     parameters the Spark operator takes (target_lang / lang_col /
     bucket count) — the _raster_grid_cte pattern, so a non-default
     configuration stays oracle-checked instead of silently diverging
     from a hardcoded 'en'/4096 (r13 advice)."""
-    b = float(buckets)
+    b = float(text.DSIR_BUCKETS)
     return f"""
 WITH tk AS (
   SELECT doc_id, {lang_col},
@@ -10406,9 +10372,7 @@ def q_ngram_containment_pairs(spark, sf_dir):
     sub-quadratic candidate shape and shuffle_hash discipline as the
     Jaccard finder; only the final projection differs, so the scale
     audit carries over."""
-    return ngram.containment_pairs(
-        _t(spark, sf_dir, "documents"), threshold=0.8, max_df=50
-    )
+    return ngram.containment_pairs(_t(spark, sf_dir, "documents"))
 
 
 _SEASONAL_DECOMP_SQL = """

@@ -7,4 +7,4 @@ DataFrameReader config; this package centralizes the engine's read/write
 conventions so every query sees the same normalized tables.
 """
 
-from chronobase_spark.sources import readers, writers  # noqa: F401
+from chronobase_spark.sources import writers  # noqa: F401

@@ -9,9 +9,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_table(df: DataFrame, path: str) -> None:
     """Plain dimension/fact table write (no time axis)."""
-    df.write.mode(mode).parquet(path)
+    df.write.mode("overwrite").parquet(path)
 
 
 #: Manifest file written beside a bucketed table's data files. The

@@ -162,12 +162,7 @@ def quality_gate(
     )
 
 
-def content_dedup(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ingest_ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def content_dedup(stream: DataFrame, text_col: str = "text") -> DataFrame:
     """Streaming exact dedup on the normalized-content fingerprint.
     State holds (fingerprint → seen) digests only, evicted past the
     watermark; a fingerprint collision (xxhash64, ~2^-64 per pair)
@@ -177,30 +172,21 @@ def content_dedup(
         stream.withColumn(
             "fingerprint", F.xxhash64(normalize(F.col(text_col)))
         )
-        .withWatermark(ts_col, watermark)
+        .withWatermark("ingest_ts", "1 hour")
         .dropDuplicatesWithinWatermark(["fingerprint"])
     )
 
 
-def document_intake(
-    stream: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ingest_ts",
-    min_tokens: int = 25,
-    max_stop_ratio: float = 0.12,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def document_intake(stream: DataFrame) -> DataFrame:
     """The composed intake stage: quality gate → content dedup. Gate
     first — rejected documents never enter the dedup state store."""
-    gated = quality_gate(stream, text_col, min_tokens, max_stop_ratio)
-    return content_dedup(gated, text_col, ts_col, watermark)
+    return content_dedup(quality_gate(stream))
 
 
 def signature_stage(
     stream: DataFrame,
     text_col: str = "text",
     num_perm: int = 128,
-    n: int = 3,
 ) -> DataFrame:
     """Per-row MinHash signatures computed IN the stream — so documents
     land in storage already carrying the signature column and the batch
@@ -226,9 +212,10 @@ def signature_stage(
     every band past the array's end hash an empty slice identically,
     collapsing the band join toward all-pairs (lsh_candidates now also
     rejects mismatched lane counts outright)."""
+    from chronobase_spark.dedup.minhash import SHINGLE_N
     from chronobase_spark.dedup.ngram import shingles as _shingles
 
-    sh = _shingles(F.col(text_col), n)
+    sh = _shingles(F.col(text_col), SHINGLE_N)
     lanes = [
         F.array_min(
             F.transform(sh, lambda g: F.xxhash64(F.xxhash64(g), F.lit(i)))
@@ -241,7 +228,7 @@ def signature_stage(
     )
 
 
-def simhash_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def simhash_stage(stream: DataFrame) -> DataFrame:
     """Per-row SimHash computed IN the stream — the SimHash companion
     to ``signature_stage``, completing the in-stream signature family
     so near-dup detection can ride ingest instead of re-tokenizing the
@@ -260,7 +247,7 @@ def simhash_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     mirroring the batch groupBy which never sees them."""
     from chronobase_spark.dedup.simhash import BITS
 
-    toks = text.tokens(F.col(text_col))
+    toks = text.tokens(F.col("text"))
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
 
     def _bit_sum(i: int):
@@ -287,7 +274,7 @@ def simhash_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def winnow_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def winnow_stage(stream: DataFrame) -> DataFrame:
     """Per-row winnowing fingerprints computed IN the stream (Schleimer
     et al.'s MOSS selection, dedup/winnow.py) — the third member of the
     in-stream signature family. Stateless by construction: the
@@ -299,7 +286,7 @@ def winnow_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     signature_stage convention."""
     from chronobase_spark.dedup.winnow import selected_fingerprints
 
-    fps = selected_fingerprints(F.col(text_col))
+    fps = selected_fingerprints(F.col("text"))
     return stream.withColumn("winnow_fps", F.when(F.size(fps) > 0, fps))
 
 
@@ -308,7 +295,6 @@ def lm_score_stage(
     lm: DataFrame,
     left: DataFrame,
     v: int,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Score arriving documents under a FROZEN bigram language model
     trained in batch (functions/text.bigram_lm_model) — the streaming
@@ -340,7 +326,7 @@ def lm_score_stage(
     (window, doc_id, n_grams, logprob_micro); documents with fewer
     than two tokens produce no grams and no row, matching batch.
     """
-    grams = stream.withWatermark("ingest_ts", watermark).select(
+    grams = stream.withWatermark("ingest_ts", "10 minutes").select(
         "doc_id",
         "ingest_ts",
         F.explode(text.lm_grams(F.col("text"))).alias("gram"),
@@ -366,7 +352,7 @@ def lm_score_stage(
         )
     )
     return (
-        scored.groupBy(F.window("ingest_ts", watermark), "doc_id")
+        scored.groupBy(F.window("ingest_ts", "10 minutes"), "doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.sum("term_micro").alias("logprob_micro"),
@@ -380,7 +366,6 @@ def kn_score_stage(
     ctx: DataFrame,
     cont: DataFrame,
     n_types: int,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Score arriving documents under a FROZEN Kneser-Ney bigram model
     trained in batch (functions/text.kn_bigram_model) — the KN
@@ -409,7 +394,7 @@ def kn_score_stage(
     Returns (window, doc_id, n_grams, kn_logprob_micro); docs with
     fewer than two tokens produce no row, matching batch."""
     grams = (
-        stream.withWatermark("ingest_ts", watermark)
+        stream.withWatermark("ingest_ts", "10 minutes")
         .select(
             "doc_id",
             "ingest_ts",
@@ -437,7 +422,7 @@ def kn_score_stage(
             F.coalesce(F.col("term_micro"), backoff_micro).alias("term_micro"),
         )
     )
-    return scored.groupBy(F.window("ingest_ts", watermark), "doc_id").agg(
+    return scored.groupBy(F.window("ingest_ts", "10 minutes"), "doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.sum("term_micro").alias("kn_logprob_micro"),
     )
@@ -449,7 +434,6 @@ def jm_score_stage(
     bi: DataFrame,
     uni: DataFrame,
     n_tokens: int,
-    watermark: str = "10 minutes",
 ) -> DataFrame:
     """Score arriving documents under a FROZEN Jelinek-Mercer trigram
     model trained in batch (functions/text.jm_trigram_model) — the
@@ -476,7 +460,7 @@ def jm_score_stage(
     n_grams, jm_logprob_micro); docs with fewer than three tokens
     produce no row, matching batch."""
     grams = (
-        stream.withWatermark("ingest_ts", watermark)
+        stream.withWatermark("ingest_ts", "10 minutes")
         .select(
             "doc_id",
             "ingest_ts",
@@ -507,13 +491,13 @@ def jm_score_stage(
             F.coalesce(F.col("term_micro"), backoff_micro).alias("term_micro"),
         )
     )
-    return scored.groupBy(F.window("ingest_ts", watermark), "doc_id").agg(
+    return scored.groupBy(F.window("ingest_ts", "10 minutes"), "doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.sum("term_micro").alias("jm_logprob_micro"),
     )
 
 
-def pii_scrub_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub_stage(stream: DataFrame) -> DataFrame:
     """PII scrubbing IN the stream — the in-stream twin of the batch
     ``pii_redact_docs`` pass (functions.text.redact_pii), so documents
     land in storage ALREADY scrubbed and audited instead of requiring
@@ -529,7 +513,7 @@ def pii_scrub_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     either surface; drained-equal-to-batch pinned in
     tests/test_streaming.py. NULL text yields NULL counts/redaction,
     matching batch."""
-    t = F.col(text_col)
+    t = F.col("text")
     return stream.select(
         "*",
         text.email_count(t).cast("bigint").alias("n_emails"),
@@ -538,9 +522,7 @@ def pii_scrub_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def span_stage(
-    stream: DataFrame, text_col: str = "text", width: int = 8
-) -> DataFrame:
+def span_stage(stream: DataFrame) -> DataFrame:
     """Span-hash emission IN the stream — the in-stream twin of the
     batch ExactSubstr candidate pass (queries.repeated_spans /
     span_dedup_assign / the span stage of pretrain_pipeline_report),
@@ -559,13 +541,13 @@ def span_stage(
     map-only and one-row-per-doc (token-linear bytes, the 100 TB
     concern is bandwidth, not state). Docs shorter than the window —
     and NULL text — carry an empty array: they cannot share a span."""
-    toks = text.tokens(F.col(text_col))
+    toks = text.tokens(F.col("text"))
     return stream.withColumn("_toks", toks).withColumn(
-        "span_hashes", text.span_hashes("_toks", width)
+        "span_hashes", text.span_hashes("_toks")
     ).drop("_toks")
 
 
-def cdc_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def cdc_stage(stream: DataFrame) -> DataFrame:
     """Content-defined chunk fingerprints IN the stream — the in-stream
     twin of the batch CDC dedup pass (dedup.cdc / queries
     cdc_chunk_dedup), so each arriving document lands in storage
@@ -583,10 +565,10 @@ def cdc_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     EMPTY array (they have no chunkable content), matching batch."""
     from chronobase_spark.dedup import cdc
 
-    return cdc.chunk_hashes(stream, text_col)
+    return cdc.chunk_hashes(stream)
 
 
-def template_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def template_stage(stream: DataFrame) -> DataFrame:
     """Boilerplate/template end-hashes IN the stream — the in-stream
     twin of the batch ``boilerplate_templates`` pass: each arriving
     document lands in storage already carrying the md5 of its first and
@@ -606,11 +588,11 @@ def template_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     the template width — and NULL text — carry NULL hashes: they
     cannot hold a full template span, matching the batch size gate."""
     return stream.withColumn(
-        "template_ends", text.template_end_hashes(F.col(text_col))
+        "template_ends", text.template_end_hashes(F.col("text"))
     )
 
 
-def datacard_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def datacard_stage(stream: DataFrame) -> DataFrame:
     """Per-document datacard signals IN the stream — the in-stream twin
     of the batch ``corpus_datacard`` signal pass: arriving documents
     land carrying content hash, token count, distinct-token mass and
@@ -627,7 +609,7 @@ def datacard_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     projections — FIXTURES.md lambda-inlining note). NULL text yields
     NULL signals, matching the batch NULL filter which counts nothing
     for such rows."""
-    return stream.withColumn("datacard", text.datacard_signals(F.col(text_col)))
+    return stream.withColumn("datacard", text.datacard_signals(F.col("text")))
 
 
 def wav_stage(stream: DataFrame) -> DataFrame:
@@ -649,7 +631,7 @@ def wav_stage(stream: DataFrame) -> DataFrame:
     return multimodal.decode_wav(multimodal.to_wav_payload(stream))
 
 
-def phash_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
+def phash_stage(stream: DataFrame) -> DataFrame:
     """Per-row perceptual-hash chunks computed IN the stream — the
     multimodal member of the in-stream signature family (MinHash /
     SimHash / winnowing / template hashes), so image payloads land in
@@ -671,14 +653,14 @@ def phash_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
     from chronobase_spark.dedup.phash import MIN_PAYLOAD_BYTES
     from chronobase_spark.functions import multimodal
 
-    eligible = F.col(text_col).isNotNull() & (
-        F.length(F.encode(text_col, "UTF-8")) >= MIN_PAYLOAD_BYTES
+    eligible = F.col("text").isNotNull() & (
+        F.length(F.encode("text", "UTF-8")) >= MIN_PAYLOAD_BYTES
     )
     with_payload = stream.withColumn(
         "_payload",
-        F.when(eligible, multimodal.ppm_payload_col(F.col(text_col))),
+        F.when(eligible, multimodal.ppm_payload_col(F.col("text"))),
     )
-    return multimodal.dhash_annotate(with_payload, "_payload")
+    return multimodal.dhash_annotate(with_payload)
 
 
 def minhash_admit_stage(
@@ -686,10 +668,6 @@ def minhash_admit_stage(
     corpus_bands: DataFrame,
     corpus_shingles: DataFrame,
     text_col: str = "text",
-    bands: int = 4,
-    rows_per_band: int = 4,
-    n: int = 3,
-    threshold: float = 0.5,
     watermark: str | None = "10 minutes",
     window: str | None = None,
 ) -> DataFrame:
@@ -748,23 +726,21 @@ def minhash_admit_stage(
     only form that works when the store outgrows executor memory.
     Per-band fan-out is bounded by the band-bucket distribution the
     batch pair finder already relies on (hot buckets probed
-    adversarially in SCALING.md). ``corpus_bands`` must be
-    built with the SAME (bands, rows_per_band, n) — a mismatch formats
-    band_val differently and every arrival silently reports non-dup
-    (the lsh_candidates lane-count contract; band_val carries no lane
-    count to check against, so the tuple is the caller's contract).
-    ``watermark``/``window`` are independent knobs
-    (budget_histogram_stage convention). ``watermark=None`` means the
+    adversarially in SCALING.md). ``watermark=None`` means the
     UPSTREAM already defined one (e.g. this stage composed after
     content_dedup in one query graph): Spark disallows redefining the
     watermark between chained stateful operators, so a composed
     pipeline sets it once at the first stateful stage and passes None
     (with an explicit ``window``) here — pinned in
     tests/test_streaming.py's composed-intake test."""
-    from chronobase_spark.dedup.minhash import md5_band_key, md5_lane
+    from chronobase_spark.dedup.minhash import (
+        BANDS,
+        ROWS_PER_BAND,
+        SHINGLE_N,
+        md5_band_key,
+        md5_lane,
+    )
     from chronobase_spark.dedup.ngram import shingles as _shingles
-
-    num_perm = bands * rows_per_band
 
     def _lane_fold(i: int):
         # one-arg lambda REQUIRED: F.transform passes the array INDEX
@@ -775,11 +751,11 @@ def minhash_admit_stage(
     def _bands_of(s):
         lanes = [
             F.array_min(F.transform(s, _lane_fold(i)))
-            for i in range(num_perm)
+            for i in range(BANDS * ROWS_PER_BAND)
         ]
-        return md5_band_key(lanes, bands, rows_per_band)
+        return md5_band_key(lanes)
 
-    sh = _shingles(F.col(text_col), n)
+    sh = _shingles(F.col(text_col), SHINGLE_N)
     marked, window = _watermarked(stream, watermark, window)
     prepped = marked.select("doc_id", "ingest_ts", sh.alias("_sh"))
     banded = prepped.select(
@@ -801,12 +777,9 @@ def minhash_admit_stage(
         "cand",
         "left",
     )
-    thresh_micro = int(round(threshold * 1_000_000))
     # NULL sh_c (no candidate) propagates NULL; the cand guard gates it
     common, union = jaccard_sizes("_sh", "sh_c")
-    ok = F.col("cand").isNotNull() & (
-        common * 1_000_000 >= F.lit(thresh_micro) * union
-    )
+    ok = F.col("cand").isNotNull() & (common * 1_000_000 >= F.lit(500_000) * union)
     return _admission_verdict(cand, "doc_id", ok, window)
 
 
@@ -820,14 +793,12 @@ EMB_STREAM_SCHEMA = StructType(
 )
 
 
-def read_embedding_stream(
-    spark: SparkSession, src_dir: str, max_files: int = 4
-) -> DataFrame:
+def read_embedding_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """File-source embedding stream (parquet drops into ``src_dir``) —
     the vector-side arrival feed next to read_document_stream."""
     return (
         spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
+        .option("maxFilesPerTrigger", 4)
         .parquet(src_dir)
     )
 
@@ -835,12 +806,8 @@ def read_embedding_stream(
 def semantic_admit_stage(
     stream: DataFrame,
     corpus_cells: DataFrame,
-    vec_col: str = "embedding",
     num_planes: int = 8,
     min_cosine: float = 0.9,
-    round_digits: int = 6,
-    watermark: str | None = "10 minutes",
-    window: str | None = None,
 ) -> DataFrame:
     """Is this ARRIVING embedding semantically near a FROZEN stored
     one? — the embedding-space member of the admission family,
@@ -870,30 +837,22 @@ def semantic_admit_stage(
     store and so does per-arrival verify fan-out, so a growing store
     should freeze its model with semantic_cell_model_scaled (returns
     (cells, k); pass ``num_planes=k`` here) — the batch scaled
-    quantizer's constant-cell-size guarantee applied to intake.
-    ``watermark``/``window`` are independent knobs; ``watermark=None``
-    follows the composed-pipeline contract (``_watermarked``).
-
-    A driver-hash-checked batch report twin (the
-    near_dup_admission_report shape with the cosine verify) is the
-    natural next registration; deferred from r14 only to keep that
-    round's new-query count at the verdict-mandated ≤2 so the driver
-    window could clear the full r9/r10 evidence tail."""
+    quantizer's constant-cell-size guarantee applied to intake."""
     from chronobase_spark.dedup.embedding import hyperplanes, lsh_signature
     from chronobase_spark.functions.similarity import cosine_pre, norm
 
-    marked, window = _watermarked(stream, watermark, window)
+    marked = stream.withWatermark("ingest_ts", "10 minutes")
     planes = hyperplanes(num_planes)
     # norms projected once per row BELOW the cell join on both sides
-    # (r17; similarity.cosine's join-path note): per-arrival and
+    # (r17; similarity.cosine_pre's join-path note): per-arrival and
     # per-stored-row folds instead of per-(arrival, cand) pair —
     # bit-identical verdicts (the drained-equal pins hold unchanged).
     prepped = marked.select(
         "vec_id",
         "ingest_ts",
-        F.col(vec_col).alias("vec"),
-        norm(F.col(vec_col)).alias("_nrm"),
-        lsh_signature(F.col(vec_col), planes).alias("cell"),
+        F.col("embedding").alias("vec"),
+        norm(F.col("embedding")).alias("_nrm"),
+        lsh_signature(F.col("embedding"), planes).alias("cell"),
     )
     cand = prepped.join(
         corpus_cells.select(
@@ -907,10 +866,10 @@ def semantic_admit_stage(
     )
     sim = F.round(
         cosine_pre(F.col("vec"), F.col("vec_c"), F.col("_nrm"), F.col("_nrm_c")),
-        round_digits,
+        6,
     )
     ok = F.col("cand").isNotNull() & (sim >= min_cosine)
-    return _admission_verdict(cand, "vec_id", ok, window)
+    return _admission_verdict(cand, "vec_id", ok, "10 minutes")
 
 
 def phash_admit_stage(
@@ -952,9 +911,8 @@ def phash_admit_stage(
     batch finder excludes; every arrival still gets a verdict (the
     admission contract). Static-side scale levers are
     minhash_admit_stage's (deduped store, larger triggers,
-    pre-bucketing); ``watermark``/``window`` are independent knobs, and
-    ``watermark=None`` follows the composed-pipeline contract
-    (``_watermarked``)."""
+    pre-bucketing); ``watermark=None`` follows the composed-pipeline
+    contract (``_watermarked``)."""
     from chronobase_spark.dedup.phash import CHUNKS, MIN_PAYLOAD_BYTES
     from chronobase_spark.functions import multimodal
 
@@ -967,7 +925,7 @@ def phash_admit_stage(
         F.when(eligible, multimodal.ppm_payload_col(F.col(text_col))),
     )
     annotated = multimodal.dhash_annotate(
-        with_payload.select("doc_id", "ingest_ts", "_payload"), "_payload"
+        with_payload.select("doc_id", "ingest_ts", "_payload"),
     )
     cs = [f"c{j}" for j in range(CHUNKS)]
     banded = annotated.select(
@@ -996,12 +954,7 @@ def phash_admit_stage(
     return _admission_verdict(cand, "doc_id", ok, window)
 
 
-def budget_histogram_stage(
-    stream: DataFrame,
-    text_col: str = "text",
-    window: str = "1 day",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def budget_histogram_stage(stream: DataFrame) -> DataFrame:
     """Windowed per-SCORE token histogram — the streaming half of the
     batch ``token_budget_select`` admission: budget selection is a
     corpus-level decision (which score classes fit 30% of the window's
@@ -1020,17 +973,17 @@ def budget_histogram_stage(
     window's histogram equals the batch histogram over the same rows
     (pinned in tests/test_streaming.py). State per window is at most
     |distinct scores| count rows, watermark-evicted."""
-    txt = F.coalesce(F.col(text_col), F.lit(""))
+    txt = F.coalesce(F.col("text"), F.lit(""))
     return (
-        stream.withWatermark("ingest_ts", watermark)
+        stream.withWatermark("ingest_ts", "1 hour")
         .select(
             "ingest_ts",
             text.space_distinct_tokens(txt).cast("bigint").alias("score"),
-            F.size(text.lm_tokens(F.col(text_col)))
+            F.size(text.lm_tokens(F.col("text")))
             .cast("bigint")
             .alias("n_tokens"),
         )
-        .groupBy(F.window("ingest_ts", window), "score")
+        .groupBy(F.window("ingest_ts", "1 day"), "score")
         .agg(
             F.sum("n_tokens").cast("bigint").alias("bucket_n"),
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
@@ -1044,11 +997,9 @@ def budget_histogram_stage(
     )
 
 
-def finalize_budget_admission(
-    counts: DataFrame, ratio_num: int = 3, ratio_den: int = 10
-) -> DataFrame:
+def finalize_budget_admission(counts: DataFrame) -> DataFrame:
     """The admission plan from drained budget histograms: per window,
-    budget = window_tokens * ratio_num DIV ratio_den; score classes
+    budget = window_tokens * 3 DIV 10; score classes
     whose inclusive (score desc) cumulative fits are fully admitted,
     the single crossing class is the boundary with its exact remaining
     token allowance. One batch projection over |windows|·|scores|
@@ -1076,7 +1027,7 @@ def finalize_budget_admission(
     # integer DIV, the batch query's exact budget arithmetic — a double
     # quotient would drift for window token sums beyond 2^53
     counts = counts.withColumn("_tot", F.sum("bucket_n").over(w_b))
-    b = F.expr(f"_tot * {int(ratio_num)} div {int(ratio_den)}")
+    b = F.expr("_tot * 3 div 10")
     cum = F.sum("bucket_n").over(w_cum)
     cum_before = cum - F.col("bucket_n")
     return counts.select(
@@ -1091,12 +1042,7 @@ def finalize_budget_admission(
     )
 
 
-def topq_histogram_stage(
-    stream: DataFrame,
-    text_col: str = "text",
-    window: str = "1 day",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def topq_histogram_stage(stream: DataFrame) -> DataFrame:
     """Windowed per-(lang, score) document histogram — the streaming
     half of the batch ``quality_topq_filter`` admission, completing the
     intake selection trio (budget: budget_histogram_stage; DSIR:
@@ -1115,13 +1061,13 @@ def topq_histogram_stage(
     tests/test_streaming.py). State per window is at most
     |langs|·|distinct scores| count rows, watermark-evicted."""
     return (
-        stream.withWatermark("ingest_ts", watermark)
+        stream.withWatermark("ingest_ts", "1 hour")
         .select(
             "ingest_ts",
             "lang",
-            text.space_distinct_tokens(F.col(text_col)).alias("score"),
+            text.space_distinct_tokens(F.col("text")).alias("score"),
         )
-        .groupBy(F.window("ingest_ts", window), "lang", "score")
+        .groupBy(F.window("ingest_ts", "1 day"), "lang", "score")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         .select(
             F.col("window.start").alias("window_start"),
@@ -1210,12 +1156,11 @@ def dsir_admit_stage(
     row, matching batch.
 
     ``watermark`` (lateness tolerance / state-eviction horizon) and
-    ``window`` (per-doc aggregation window duration) are INDEPENDENT
-    knobs — the budget_histogram_stage convention; window defaults to
-    the watermark so existing callers keep their granularity, but
-    tuning lateness no longer silently changes the output window
-    column (r13 advice). ``watermark=None`` follows the
-    composed-pipeline contract (``_watermarked``)."""
+    ``window`` (per-doc aggregation window duration) are set
+    separately; window defaults to the watermark, so tuning lateness
+    does not silently change the output window column (r13 advice).
+    ``watermark=None`` follows the composed-pipeline contract
+    (``_watermarked``)."""
     marked, window = _watermarked(stream, watermark, window)
     buckets = (
         marked.select(
@@ -1276,11 +1221,7 @@ def weighted_sample_stage(stream: DataFrame, text_col: str = "text") -> DataFram
 RESERVOIR_K = 100
 
 
-def reservoir_admit_stage(
-    stream: DataFrame,
-    k: int = RESERVOIR_K,
-    window_seconds: int = 86_400,
-) -> DataFrame:
+def reservoir_admit_stage(stream: DataFrame, k: int = RESERVOIR_K) -> DataFrame:
     """Fixed-budget weighted selection AT INTAKE — the streaming twin
     of the batch ``weighted_reservoir_sample`` (Efraimidis-Spirakis
     A-ES: both rank by ``packing.aes_key``, round(ln(u)/w, 6) with the
@@ -1355,8 +1296,8 @@ def reservoir_admit_stage(
     wt, key = packing.aes_key(F.col("doc_id"), F.col("n_chars"))
     keyed = stream.select(
         F.timestamp_seconds(
-            (F.unix_timestamp("ingest_ts") / window_seconds).cast("bigint")
-            * window_seconds
+            (F.unix_timestamp("ingest_ts") / 86_400).cast("bigint")
+            * 86_400
         ).alias("window_start"),
         "doc_id",
         "source",
@@ -1396,9 +1337,6 @@ def decontam_admit_stage(
     stream: DataFrame,
     bench_shingles: DataFrame,
     text_col: str = "text",
-    min_overlap: int = 3,
-    watermark: str | None = "10 minutes",
-    window: str | None = None,
 ) -> DataFrame:
     """Is this ARRIVING document contaminated by the FROZEN eval
     benchmark? — test-set decontamination AT INTAKE, the admission
@@ -1417,7 +1355,7 @@ def decontam_admit_stage(
     near-dup admission models Catalyst broadcasts it and the arriving
     rows never shuffle for the join. The per-doc verdict is a windowed
     streaming aggregation: n_overlap = count of matched distinct
-    shingles, contaminated = n_overlap ≥ min_overlap. Two scalars of
+    shingles, contaminated = n_overlap ≥ 3. Two scalars of
     state per in-flight doc, watermark-evicted.
 
     Drained verdicts over a fresh×frozen-benchmark split equal the
@@ -1425,12 +1363,10 @@ def decontam_admit_stage(
     same n_overlap; clean and shingle-less arrivals report (0, false)
     — every arrival gets a verdict, the admission contract the batch
     HAVING-filtered list does not provide). Pinned in
-    tests/test_streaming.py. ``watermark=None`` means the upstream
-    already defined one (composed-pipeline contract, see
-    minhash_admit_stage) and requires an explicit ``window``."""
+    tests/test_streaming.py."""
     from chronobase_spark.dedup.ngram import shingles as _shingles
 
-    marked, window = _watermarked(stream, watermark, window)
+    marked = stream.withWatermark("ingest_ts", "10 minutes")
     exploded = (
         marked
         .select(
@@ -1444,7 +1380,7 @@ def decontam_admit_stage(
         "sh",
         "left",
     )
-    agg = matched.groupBy(F.window("ingest_ts", window), "doc_id").agg(
+    agg = matched.groupBy(F.window("ingest_ts", "10 minutes"), "doc_id").agg(
         F.sum(F.when(F.col("_hit").isNotNull(), 1).otherwise(0))
         .cast("bigint")
         .alias("n_overlap")
@@ -1453,7 +1389,7 @@ def decontam_admit_stage(
         "window",
         "doc_id",
         "n_overlap",
-        (F.col("n_overlap") >= min_overlap).alias("contaminated"),
+        (F.col("n_overlap") >= 3).alias("contaminated"),
     )
 
 
@@ -1461,9 +1397,6 @@ def containment_admit_stage(
     stream: DataFrame,
     postings: DataFrame,
     text_col: str = "text",
-    n: int = 3,
-    watermark: str | None = "10 minutes",
-    window: str | None = None,
 ) -> DataFrame:
     """Is this ARRIVING document (partly) CONTAINED in the frozen
     corpus? — the partial-copy member of the admission family.
@@ -1495,8 +1428,6 @@ def containment_admit_stage(
     trigger; per-shingle fan-out is bounded by the model's ``max_df``
     pruning (the admission-time form of the f² pair bound). State is
     one count per in-flight (doc, cand) candidate, watermark-evicted.
-    ``watermark=None`` follows the composed-pipeline contract
-    (upstream already defined one; explicit ``window`` required).
 
     The candidate rows, aggregate, and projection are the LITERAL
     shared builders the batch reference compiles
@@ -1510,17 +1441,15 @@ def containment_admit_stage(
         containment_projection,
     )
 
-    marked, window = _watermarked(stream, watermark, window)
-    rows = containment_candidate_rows(
-        marked, postings, text_col, "doc_id", n, carry=("ingest_ts",)
-    )
-    agg = rows.groupBy(F.window("ingest_ts", window), "doc_id", "cand").agg(
+    marked = stream.withWatermark("ingest_ts", "10 minutes")
+    rows = containment_candidate_rows(marked, postings, text_col, carry=("ingest_ts",))
+    agg = rows.groupBy(F.window("ingest_ts", "10 minutes"), "doc_id", "cand").agg(
         *containment_agg_exprs()
     )
     return containment_projection(agg, lead=("window",))
 
 
-def finalize_containment(sink: DataFrame, threshold: float = 0.8) -> DataFrame:
+def finalize_containment(sink: DataFrame) -> DataFrame:
     """Per-arrival verdict from drained ``containment_admit_stage``
     emissions: (doc_id, contained, host_id, containment) where host =
     the stored doc with the highest containment (min id tie-break, the
@@ -1537,7 +1466,7 @@ def finalize_containment(sink: DataFrame, threshold: float = 0.8) -> DataFrame:
         F.col("containment").desc(), F.col("cand").asc_nulls_last()
     )
     best = sink.withColumn("_r", F.row_number().over(w)).filter(F.col("_r") == 1)
-    contained = F.col("cand").isNotNull() & (F.col("containment") >= threshold)
+    contained = F.col("cand").isNotNull() & (F.col("containment") >= 0.8)
     return best.select(
         "doc_id",
         contained.alias("contained"),
@@ -1550,9 +1479,6 @@ def novelty_admit_stage(
     stream: DataFrame,
     stored_sh: DataFrame,
     text_col: str = "text",
-    n: int = 3,
-    watermark: str | None = "10 minutes",
-    window: str | None = None,
 ) -> DataFrame:
     """How much of this ARRIVING document is NEW against the entire
     frozen corpus? — the aggregate member of the admission family.
@@ -1581,8 +1507,7 @@ def novelty_admit_stage(
     is corpus-sized, so the bucketed-on-[sh] model is the 100 TB form
     (no re-distinct is applied to it — an Exchange above the static
     scan every trigger would defeat the layout; the model builders
-    guarantee distinctness). ``watermark=None`` follows the
-    composed-pipeline contract. The candidate rows, aggregate, and
+    guarantee distinctness). The candidate rows, aggregate, and
     projection are the LITERAL shared builders the batch reference
     (``ngram.novelty_against``) compiles — drained-equal by
     construction; only the window grouping key differs."""
@@ -1592,11 +1517,9 @@ def novelty_admit_stage(
         novelty_projection,
     )
 
-    marked, window = _watermarked(stream, watermark, window)
-    rows = novelty_candidate_rows(
-        marked, stored_sh, text_col, "doc_id", n, carry=("ingest_ts",)
-    )
-    agg = rows.groupBy(F.window("ingest_ts", window), "doc_id").agg(
+    marked = stream.withWatermark("ingest_ts", "10 minutes")
+    rows = novelty_candidate_rows(marked, stored_sh, text_col, carry=("ingest_ts",))
+    agg = rows.groupBy(F.window("ingest_ts", "10 minutes"), "doc_id").agg(
         *novelty_agg_exprs()
     )
     return novelty_projection(agg, lead=("window",))

@@ -70,19 +70,18 @@ def read_event_stream(
     )
 
 
-def ttl_gate(stream: DataFrame, ttl_seconds: int, ts_col: str = "ts") -> DataFrame:
+def ttl_gate(stream: DataFrame, ttl_seconds: int) -> DataFrame:
     """The reference's ingest TTL drop (table.go:93-96): silently discard
     rows already older than TTL on arrival. Evaluated per micro-batch
     against the clock, like the reference's ``time.Since``."""
     cutoff = F.current_timestamp() - F.make_interval(secs=F.lit(ttl_seconds))
-    return stream.filter(F.col(ts_col) > cutoff)
+    return stream.filter(F.col("ts") > cutoff)
 
 
 def start_ingest(
     stream: DataFrame,
     table_dir: str,
     checkpoint_dir: str,
-    trigger_seconds: int | None = 60,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Micro-batch Parquet sink = the reference's flush (table.go:198-236).
@@ -100,19 +99,17 @@ def start_ingest(
     ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    else:
+        writer = writer.trigger(processingTime="60 seconds")
     return writer.start()
 
 
-def streaming_hourly_counts(
-    stream: DataFrame, watermark: str = "1 hour"
-) -> DataFrame:
+def streaming_hourly_counts(stream: DataFrame) -> DataFrame:
     """Windowed streaming aggregation with late-data watermark: events
     per (hour, event_type). The watermark bounds aggregation state — the
     principled version of the reference's drop-late-rows policy."""
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour"), F.col("event_type"))
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -175,7 +172,7 @@ def streaming_user_running_totals(stream: DataFrame) -> DataFrame:
     return fold_by_key(stream, "user_id", step, out_schema, state_schema, "update")
 
 
-def streaming_user_ewma(stream: DataFrame, alpha: float = 0.5) -> DataFrame:
+def streaming_user_ewma(stream: DataFrame) -> DataFrame:
     """Per-user EWMA maintained incrementally across micro-batches — the
     streaming form of the batch ``ewma_user_value`` recurrence.
 
@@ -211,13 +208,13 @@ def streaming_user_ewma(stream: DataFrame, alpha: float = 0.5) -> DataFrame:
                 ignore_index=True,
             )
             ew = (
-                seeded.ewm(alpha=alpha, adjust=False)
+                seeded.ewm(alpha=0.5, adjust=False)
                 .mean()
                 .iloc[1:]
                 .reset_index(drop=True)
             )
         else:
-            ew = values.ewm(alpha=alpha, adjust=False).mean()
+            ew = values.ewm(alpha=0.5, adjust=False).mean()
         out = {
             "user_id": pdf["user_id"],
             "event_id": pdf["event_id"],
@@ -297,7 +294,6 @@ def start_hourly_rollup(
     rollup_dir: str,
     checkpoint_dir: str,
     watermark: str = "1 hour",
-    trigger_seconds: int | None = 60,
     available_now: bool = False,
 ) -> StreamingQuery:
     """Continuous aggregate: maintain an hourly rollup TABLE on disk,
@@ -355,8 +351,8 @@ def start_hourly_rollup(
     )
     if available_now:
         writer = writer.trigger(availableNow=True)
-    elif trigger_seconds:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
+    else:
+        writer = writer.trigger(processingTime="60 seconds")
     return writer.start()
 
 
@@ -369,10 +365,10 @@ def read_rollup(spark: SparkSession, rollup_dir: str) -> DataFrame:
     )
 
 
-def streaming_dedup(stream: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def streaming_dedup(stream: DataFrame) -> DataFrame:
     """Streaming exact dedup on event_id within the watermark horizon —
     state is bounded: ids older than the watermark are evicted."""
-    return stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -390,9 +386,7 @@ def streaming_enrich(stream: DataFrame, dim: DataFrame, on, how: str = "left") -
 def streaming_interval_join(
     left: DataFrame,
     right: DataFrame,
-    key: str = "user_id",
     max_gap_seconds: int = 3600,
-    watermark: str = "2 hours",
 ) -> DataFrame:
     """Stream-stream inner join within an event-time interval: rows of
     ``right`` join rows of ``left`` with the same key where
@@ -401,10 +395,10 @@ def streaming_interval_join(
     join condition bounds the time skew, so each side's buffered state
     is evicted once the other side's watermark passes — without the
     time-range term the state would grow forever."""
-    lt = left.withWatermark("ts", watermark).alias("l")
-    rt = right.withWatermark("ts", watermark).alias("r")
+    lt = left.withWatermark("ts", "2 hours").alias("l")
+    rt = right.withWatermark("ts", "2 hours").alias("r")
     cond = (
-        (F.col(f"l.{key}") == F.col(f"r.{key}"))
+        (F.col("l.user_id") == F.col("r.user_id"))
         & (F.col("r.ts") >= F.col("l.ts"))
         & (
             F.col("r.ts")
@@ -412,7 +406,7 @@ def streaming_interval_join(
         )
     )
     return lt.join(rt, cond, "inner").select(
-        F.col(f"l.{key}").alias(key),
+        F.col("l.user_id").alias("user_id"),
         F.col("l.event_id").alias("left_event_id"),
         F.col("l.ts").alias("left_ts"),
         F.col("r.event_id").alias("right_event_id"),
@@ -569,9 +563,7 @@ def streaming_event_transitions(stream: DataFrame) -> DataFrame:
     )
 
 
-def streaming_user_holt(
-    stream: DataFrame, alpha: float = 0.5, beta: float = 0.5
-) -> DataFrame:
+def streaming_user_holt(stream: DataFrame) -> DataFrame:
     """Per-user Holt level + trend maintained incrementally across
     micro-batches — the streaming twin of the batch
     ``operators.timeseries.holt_daily_smoothing`` recurrence (daily
@@ -609,7 +601,7 @@ def streaming_user_holt(
             StructField("b", DoubleType()),
         ]
     )
-    a, be = float(alpha), float(beta)
+    a = be = 0.5
 
     def step(user_id, pdf, prior):
         day_ns, l, b = prior or (None, None, None)
@@ -711,9 +703,7 @@ def streaming_cusum_alarms(
     )
 
 
-def streaming_benford_counts(
-    stream: DataFrame, window: str = "1 day", watermark: str = "1 hour"
-) -> DataFrame:
+def streaming_benford_counts(stream: DataFrame) -> DataFrame:
     """Windowed first-digit counts per event type — the streaming form
     of the batch ``benford_first_digit`` audit, and deliberately NOT a
     map-only stage: Benford's output is a corpus-level marginal (the
@@ -733,7 +723,7 @@ def streaming_benford_counts(
     most |event_types|·9 count rows, watermark-evicted."""
     x = F.round(F.col("value") * F.lit(1000000.0), 0).cast("bigint")
     return (
-        stream.withWatermark("ts", watermark)
+        stream.withWatermark("ts", "1 hour")
         .filter(F.col("value").isNotNull() & (F.col("value") > 0))
         .select("ts", "event_type", x.alias("x"))
         .filter(F.col("x") > 0)
@@ -744,7 +734,7 @@ def streaming_benford_counts(
                 "digit"
             ),
         )
-        .groupBy(F.window("ts", window), "event_type", "digit")
+        .groupBy(F.window("ts", "1 day"), "event_type", "digit")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_events"))
         .select(
             F.col("window.start").alias("window_start"),

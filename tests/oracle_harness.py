@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import datetime
 import math
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 import numpy as np
@@ -89,8 +90,12 @@ def _values_equal(a, b) -> bool:
 
 def compare(spark_df, oracle_pdf: pd.DataFrame, name: str = "") -> list[str]:
     """Return a list of mismatch descriptions (empty = match)."""
+    return compare_pandas(spark_df.toPandas(), oracle_pdf, name)
+
+
+def compare_pandas(spdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str = "") -> list[str]:
+    """:func:`compare` of a Spark result already converted to pandas."""
     problems: list[str] = []
-    spdf = spark_df.toPandas()
     a, b = _canon(spdf), _canon(oracle_pdf)
     if list(a.columns) != list(b.columns):
         problems.append(f"{name}: columns differ: spark={list(a.columns)} duck={list(b.columns)}")
@@ -111,4 +116,53 @@ def compare(spark_df, oracle_pdf: pd.DataFrame, name: str = "") -> list[str]:
                 f"{name}.{col}: {len(bad)}/{len(av)} values differ; "
                 f"first at row {i}: spark={x!r} duck={y!r}"
             )
+    return problems
+
+
+#: Calls a registry sweep runs at once. Over the tiny test corpora a
+#: query's time is mostly driver-side planning and job scheduling, which
+#: overlaps across the threads of one session: the empty-table sweep of
+#: the whole registry took 100 s one query at a time and 42 s four at a
+#: time (4 CPUs, warm session).
+SWEEP_THREADS = 4
+
+
+def _caught(call):
+    try:
+        return call()
+    except Exception as exc:  # noqa: BLE001 — a sweep reports each query's error
+        return exc
+
+
+def sweep(run, names, between=None) -> tuple[dict, dict]:
+    """Call ``run(name)`` for every name on a pool of SWEEP_THREADS
+    threads sharing one Spark session; meanwhile, if given, call
+    ``between(name)`` for every name on this thread (the DuckDB side of
+    an oracle sweep). Returns ``({name: run's result}, {name: between's
+    result})``, where a call that raised maps to its exception."""
+    with ThreadPoolExecutor(SWEEP_THREADS) as pool:
+        futures = {n: pool.submit(_caught, lambda n=n: run(n)) for n in names}
+        side = {n: _caught(lambda n=n: between(n)) for n in names} if between else {}
+        return {n: f.result() for n, f in futures.items()}, side
+
+
+def oracle_sweep(spark, sf_dir: str, queries: dict, oracles: dict, names) -> list[str]:
+    """Every named query against its DuckDB oracle over ``sf_dir``: the
+    Spark sides run on the sweep pool while DuckDB runs the oracles. An
+    error on either side is reported as that query's one problem (the
+    Spark error first, as a sequential run would have raised it)."""
+    con = duck_connection(sf_dir)
+    got, want = sweep(
+        lambda n: queries[n](spark, sf_dir).toPandas(),
+        names,
+        lambda n: con.execute(oracles[n]).fetchdf(),
+    )
+    problems: list[str] = []
+    for name in names:
+        a, b = got[name], want[name]
+        err = a if isinstance(a, Exception) else b if isinstance(b, Exception) else None
+        if err is None:
+            err = _caught(lambda: problems.extend(compare_pandas(a, b, name)))
+        if isinstance(err, Exception):
+            problems.append(f"{name}: {type(err).__name__}: {err}"[:200])
     return problems

@@ -971,14 +971,30 @@ def _source_scans_per_cached_plan(spark, frames):
 
 def test_band_model_reads_the_corpus_once(spark):
     """minhash_band_model builds its band table from its persisted
-    shingle table, so of the model's three cached plans (shingles,
-    signatures, bands) exactly one scans the documents."""
+    shingle table and caches nothing else, so the CacheManager holds
+    exactly the model's two plans (shingles, bands) and exactly one of
+    them scans the documents."""
     spark.catalog.clearCache()
     bands, sh = minhash.minhash_band_model(catalog.table(spark, SF_SMOKE, "documents"))
     try:
-        assert _source_scans_per_cached_plan(spark, [bands, sh]) == [0, 0, 1]
+        assert _source_scans_per_cached_plan(spark, [bands, sh]) == [0, 1]
     finally:
         spark.catalog.clearCache()
+
+
+def test_bucketed_band_model_leaves_nothing_cached(spark):
+    """minhash_band_model_bucketed returns tables, not cached frames:
+    the CacheManager is as empty after the call as before it."""
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
+    docs = catalog.table(spark, SF_SMOKE, "documents").limit(60)
+    try:
+        minhash.minhash_band_model_bucketed(docs, table_prefix="t_bkt_cache", buckets=2)
+        assert cache.isEmpty()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS t_bkt_cache_bands")
+        spark.sql("DROP TABLE IF EXISTS t_bkt_cache_shingles")
 
 
 def test_bucketed_band_model_matches_persisted(spark, docs):

@@ -20,6 +20,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from chronobase_spark import catalog, queries as q  # noqa: E402
 from tests.conftest import SF_SMOKE  # noqa: E402
+from tests.oracle_harness import sweep  # noqa: E402
 
 
 @pytest.fixture(scope="module")
@@ -34,13 +35,20 @@ def empty_sf_dir(spark, tmp_path_factory):
     return str(root)
 
 
+def _crashes(spark, sf_dir: str) -> dict[str, str]:
+    """{query: its error} for every registered query that raises when
+    run to completion over ``sf_dir``."""
+    qs = q.queries()
+    ran, _ = sweep(lambda name: qs[name](spark, sf_dir).collect(), sorted(qs))
+    return {
+        name: f"{type(r).__name__}: {r}"[:160]
+        for name, r in ran.items()
+        if isinstance(r, Exception)
+    }
+
+
 def test_every_query_survives_empty_tables(spark, empty_sf_dir):
-    failures = {}
-    for name, fn in sorted(q.queries().items()):
-        try:
-            fn(spark, empty_sf_dir).collect()
-        except Exception as exc:  # noqa: BLE001 — collecting the sweep
-            failures[name] = f"{type(exc).__name__}: {exc}"[:160]
+    failures = _crashes(spark, empty_sf_dir)
     assert not failures, f"{len(failures)} queries break on empty input: {failures}"
 
 
@@ -80,10 +88,5 @@ def nully_sf_dir(spark, tmp_path_factory):
 def test_every_query_survives_null_values(spark, nully_sf_dir):
     """NULLs in text/value/measure columns must never raise — dropped,
     grouped, or propagated per SQL semantics, but never a crash."""
-    failures = {}
-    for name, fn in sorted(q.queries().items()):
-        try:
-            fn(spark, nully_sf_dir).collect()
-        except Exception as exc:  # noqa: BLE001 — collecting the sweep
-            failures[name] = f"{type(exc).__name__}: {exc}"[:160]
+    failures = _crashes(spark, nully_sf_dir)
     assert not failures, f"{len(failures)} queries break on NULL input: {failures}"

@@ -26,7 +26,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 from chronobase_spark import catalog  # noqa: E402
 from tests.conftest import SF_SMOKE  # noqa: E402
-from tests.oracle_harness import compare, duck_connection  # noqa: E402
+from tests.oracle_harness import oracle_sweep  # noqa: E402
 
 # Queries whose null behavior is protected by the INGEST contract
 # rather than pinned cross-engine, each with the reason. Keep minimal:
@@ -79,22 +79,14 @@ def nully_file_sf_dir(spark, tmp_path_factory):
     return str(root)
 
 
+def _oracle_sweep(spark, sf_dir: str) -> list[str]:
+    oracles = entrymod.oracle_sql()
+    names = [n for n in sorted(oracles) if n not in _CONTRACT_EXCLUDED]
+    return oracle_sweep(spark, sf_dir, entrymod.queries(), oracles, names)
+
+
 def test_oracle_matches_under_nulls(spark, nully_file_sf_dir):
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    con = duck_connection(nully_file_sf_dir)
-    failures: list[str] = []
-    for name in sorted(oracles):
-        if name in _CONTRACT_EXCLUDED:
-            continue
-        try:
-            problems = compare(
-                qs[name](spark, nully_file_sf_dir),
-                con.execute(oracles[name]).fetchdf(),
-                name,
-            )
-        except Exception as exc:  # noqa: BLE001 — collecting the sweep
-            problems = [f"{name}: {type(exc).__name__}: {exc}"[:200]]
-        failures.extend(problems)
+    failures = _oracle_sweep(spark, nully_file_sf_dir)
     assert not failures, (
         f"{len(failures)} oracle queries diverge under NULLs:\n"
         + "\n".join(failures)
@@ -121,21 +113,7 @@ def test_oracle_matches_on_empty_corpus(spark, empty_file_sf_dir):
     row?) and where tests/test_empty_inputs.py only proves execution.
     Empty partitions, new tenants, and over-filtered sub-corpora make
     this the steady state of a 100 TB deployment, not an edge case."""
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    con = duck_connection(empty_file_sf_dir)
-    failures: list[str] = []
-    for name in sorted(oracles):
-        if name in _CONTRACT_EXCLUDED:
-            continue
-        try:
-            problems = compare(
-                qs[name](spark, empty_file_sf_dir),
-                con.execute(oracles[name]).fetchdf(),
-                name,
-            )
-        except Exception as exc:  # noqa: BLE001 — collecting the sweep
-            problems = [f"{name}: {type(exc).__name__}: {exc}"[:200]]
-        failures.extend(problems)
+    failures = _oracle_sweep(spark, empty_file_sf_dir)
     assert not failures, (
         f"{len(failures)} oracle queries diverge on the empty corpus:\n"
         + "\n".join(failures)

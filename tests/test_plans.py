@@ -322,14 +322,14 @@ _SCALE_FLAG_ALLOWLIST = {
 }
 
 
-def test_registry_sweep_no_unreviewed_scale_flags(spark):
+def test_registry_sweep_no_unreviewed_scale_flags(smoke_frame):
     """Plan every registered query and assert no CartesianProduct,
     BroadcastNestedLoopJoin, or SinglePartition exchange outside the
     reviewed allowlist — and that the allowlist itself stays exact, so
     an entry whose plan improves gets pruned rather than rotting."""
     flagged: dict[str, set[str]] = {}
-    for name, fn in sorted(q.queries().items()):
-        plan = inspect._executed_plan(fn(spark, SF_SMOKE))
+    for name in sorted(q.queries()):
+        plan = inspect._executed_plan(smoke_frame(name))
         f = set()
         if "CartesianProduct" in plan:
             f.add("cartesian")

@@ -31,7 +31,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
-from tests.conftest import SF_SMOKE  # noqa: E402
 
 # (query, column) pairs allowed to be DoubleType/FloatType, grouped by
 # the FIXTURES.md form that makes each hash-safe. Keep sorted within
@@ -263,15 +262,10 @@ def _walk(dt):
 
 
 @pytest.fixture(scope="module")
-def registry_schemas(spark):
-    """Build every registered query ONCE per test module: iterative
-    queries (BPE training, dup clustering) execute driver-side rounds
-    just to produce their DataFrame, so each extra full-registry build
-    costs real minutes."""
-    return [
-        (name, fn(spark, SF_SMOKE).schema)
-        for name, fn in entrymod.queries().items()
-    ]
+def registry_schemas(smoke_frame):
+    """Every registered query's output schema, from the run's one shared
+    build of the registry (conftest.smoke_frame)."""
+    return [(name, smoke_frame(name).schema) for name in entrymod.queries()]
 
 
 def test_no_decimal_output_columns(registry_schemas):

@@ -301,3 +301,94 @@ def test_near_dup_idioms_live_in_bands():
             ):
                 bad.append(f"{rel}:{node.lineno} {attr}")
     assert not bad, bad
+
+
+# --- knob gate -----------------------------------------------------------
+
+#: The only functions whose defaulted parameters need no caller: the
+#: ``ChronoSpark`` facade mirrors the reference's ``pkg/db`` API,
+#: ``get_spark`` is the session factory, and Spark itself calls the
+#: ``DataSource`` classes' methods. Deployment settings (paths,
+#: directories, stored table names, checkpoint locations) all have
+#: callers; a name pattern to exempt them would also exempt unrelated
+#: knobs, so there is none.
+_KNOB_CLASSES = ("ChronoSpark", "DataSource")
+_KNOB_FUNCTIONS = {"get_spark"}
+
+
+def test_every_defaulted_parameter_is_set_by_a_caller():
+    """A defaulted parameter that no call sets is a constant with extra
+    configurations nothing tests. Each one in the package must be set
+    by at least one call in the package, scripts/, chronobench/, tests/
+    or __spark_entry__.py: by keyword, by a positional argument at or
+    after its index, or through a ``*``/``**`` splat. Calls are matched
+    to definitions by name only, so a same-named function elsewhere
+    can hide a hit but never invent one."""
+    callers = (
+        glob.glob(os.path.join(REPO, "chronobase_spark/**/*.py"), recursive=True)
+        + glob.glob(os.path.join(REPO, "scripts/*.py"))
+        + glob.glob(os.path.join(REPO, "chronobench/**/*.py"), recursive=True)
+        + glob.glob(os.path.join(REPO, "tests/**/*.py"), recursive=True)
+        + [os.path.join(REPO, "__spark_entry__.py")]
+    )
+    # name -> [(keywords, n positional, index of the first *splat, **splat)]
+    calls: dict[str, list[tuple[set[str], int, int | None, bool]]] = {}
+    for p in callers:
+        for c in ast.walk(ast.parse(open(p).read())):
+            if not isinstance(c, ast.Call):
+                continue
+            f = c.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            star = next((i for i, a in enumerate(c.args) if isinstance(a, ast.Starred)), None)
+            calls.setdefault(name, []).append(
+                (
+                    {k.arg for k in c.keywords if k.arg},
+                    len(c.args),
+                    star,
+                    any(k.arg is None for k in c.keywords),
+                )
+            )
+
+    def is_set(fn: str, param: str, idx: int | None) -> bool:
+        for kws, npos, star, splat in calls.get(fn, []):
+            if param in kws or splat:
+                return True
+            if idx is not None and (npos > idx or (star is not None and star <= idx)):
+                return True
+        return False
+
+    unset = []
+    for p in glob.glob(os.path.join(REPO, "chronobase_spark/**/*.py"), recursive=True):
+        rel = os.path.relpath(p, REPO)
+
+        def visit(node: ast.AST, cls: ast.ClassDef | None) -> None:
+            for ch in ast.iter_child_nodes(node):
+                if isinstance(ch, ast.ClassDef):
+                    visit(ch, ch)
+                    continue
+                if not isinstance(ch, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(ch, cls)
+                    continue
+                visit(ch, None)
+                bases = [getattr(b, "id", getattr(b, "attr", "")) for b in cls.bases] if cls else []
+                if ch.name in _KNOB_FUNCTIONS or (
+                    cls is not None
+                    and any(n.startswith(_KNOB_CLASSES) for n in [cls.name, *bases])
+                ):
+                    continue
+                a = ch.args
+                pos = a.posonlyargs + a.args
+                # a method's callers do not pass self/cls positionally
+                shift = 1 if cls is not None and pos and pos[0].arg in ("self", "cls") else 0
+                first = len(pos) - len(a.defaults)
+                dflt = [(x.arg, i - shift) for i, x in enumerate(pos) if i >= first]
+                dflt += [(x.arg, None) for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+                for param, idx in dflt:
+                    if not is_set(ch.name, param, idx):
+                        unset.append(f"{rel}:{ch.lineno} {ch.name}({param}=...)")
+
+        visit(ast.parse(open(p).read()), None)
+    assert not unset, (
+        f"{len(unset)} defaulted parameters that no call sets — fold each "
+        "into its value:\n" + "\n".join(unset)
+    )
