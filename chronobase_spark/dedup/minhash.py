@@ -289,10 +289,9 @@ def minhash_band_model_bucketed(
     trigger's. This is the on-disk counterpart of the persisted-DF
     model: a 100 TB store can't live in executor memory, but a
     storage-partitioned layout makes re-reading it per trigger
-    shuffle-free. Measured against the persisted form in
-    scripts/scaling_probe.py --admit-bucketed (SCALING.md r15); an
-    adversarial hot-band fixture shows bucket-pinning is never slower
-    than the persisted model under skew (--admit-skew, SCALING.md r16).
+    shuffle-free. Measured against the persisted form in SCALING.md
+    r15; an adversarial hot-band fixture shows bucket-pinning is never
+    slower than the persisted model under skew (SCALING.md r16).
     Tables are overwritten in the session catalog's warehouse; the
     in-memory catalog forgets them on restart but the files AND the
     write_bucketed manifest survive, so a restarted job re-registers

@@ -39,10 +39,9 @@ def rrf_hybrid_topk(
     docs: DataFrame,
     emb: DataFrame,
     query_terms: Sequence[str],
-    probe_id: int = 0,
     k: int = 20,
 ) -> DataFrame:
-    """Fuse BM25(query_terms) and cosine(probe ``probe_id``) rankings.
+    """Fuse BM25(query_terms) and cosine(probe ``vec_id = 0``) rankings.
 
     Returns the top-``k`` fused documents as
     (doc_id, r_lex, r_vec, rrf_micro): the per-side ranks (NULL when a
@@ -72,7 +71,7 @@ def rrf_hybrid_topk(
     # probe norm computed once on the 1-row side (r17; cosine()'s
     # join-path note): cosine() re-folded the probe's 64-dim norm per
     # corpus row for the same bit-identical double.
-    probe = emb.filter(F.col("vec_id") == probe_id).select(
+    probe = emb.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("probe_vec"),
         similarity.norm(F.col("embedding")).alias("probe_nrm"),
     )
@@ -87,7 +86,7 @@ def rrf_hybrid_topk(
         0,
     ).cast("bigint")
     vec = (
-        emb.filter(F.col("vec_id") != probe_id)
+        emb.filter(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(probe))
         .select(F.col("vec_id"), cos_micro.alias("cos_micro"))
         .orderBy(F.col("cos_micro").desc(), F.col("vec_id"))

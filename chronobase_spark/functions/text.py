@@ -184,13 +184,13 @@ def lang_id(text: Column) -> Column:
     )
 
 
-def tfidf_top_terms(docs, k: int = 3):
-    """Top-k TF-IDF terms per document, with a linear (un-logged) IDF
+def tfidf_top_terms(docs):
+    """Top-3 TF-IDF terms per document, with a linear (un-logged) IDF
     ``N/df`` — integer-ratio double arithmetic, so Spark and the SQL
     oracle produce bit-identical scores (``ln`` could differ in the last
     ulp between engines). Plan: one explode + two hash aggregations
     (both map-side partial), a broadcast join of the vocabulary-sized
-    document-frequency table, and one windowed top-k. At 100 TB the
+    document-frequency table, and one windowed top-3. At 100 TB the
     vocabulary ≪ corpus, so the broadcast holds; nothing is quadratic."""
     from pyspark.sql import Window
 
@@ -212,7 +212,7 @@ def tfidf_top_terms(docs, k: int = 3):
     w = Window.partitionBy("doc_id").orderBy(F.col("score").desc(), F.col("term"))
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 3)
         .select("doc_id", "term", "tf", "score")
     )
 
@@ -350,8 +350,8 @@ def bm25_scores(docs):
     )
 
 
-def bm25_top_terms(docs, k: int = 3):
-    """Top-k BM25 terms per document — windowed top-k over
+def bm25_top_terms(docs):
+    """Top-3 BM25 terms per document — windowed top-3 over
     ``bm25_scores``, partitioned by document (never global)."""
     from pyspark.sql import Window
 
@@ -361,7 +361,7 @@ def bm25_top_terms(docs, k: int = 3):
     )
     return (
         scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
+        .filter(F.col("rn") <= 3)
         .select("doc_id", "term", "tf", "score_micro")
     )
 

@@ -806,7 +806,7 @@ def read_embedding_stream(spark: SparkSession, src_dir: str) -> DataFrame:
 def semantic_admit_stage(
     stream: DataFrame,
     corpus_cells: DataFrame,
-    num_planes: int = 8,
+    num_planes: int,
     min_cosine: float = 0.9,
 ) -> DataFrame:
     """Is this ARRIVING embedding semantically near a FROZEN stored
@@ -821,14 +821,18 @@ def semantic_admit_stage(
     definition); the cell LEFT-joins stream-static against the frozen
     (vid, vec, cell) table from semantic_cell_model (stateless, no
     state store) and the verify is the batch query's exact rounded
-    cosine ≥ min_cosine. The per-doc verdict is a windowed streaming
-    aggregation (dup iff ANY verified neighbor, canonical = min
-    matched stored vid; three scalars of state per in-flight vector,
-    watermark-evicted).
+    cosine ≥ min_cosine. ``num_planes`` is the model's own plane
+    count (8 for semantic_cell_model, the returned k for
+    semantic_cell_model_scaled); any other count folds arrivals into
+    other cells and silently reports cell-mates as non-dup. The
+    per-doc verdict is a windowed streaming aggregation (dup iff ANY
+    verified neighbor, canonical = min matched stored vid; three
+    scalars of state per in-flight vector, watermark-evicted).
 
-    Drained output over a fresh×frozen split equals the batch
-    ``bucketed_near_pairs`` list (same planes/threshold) restricted to
-    (new, old) pairs — pinned in tests/test_streaming.py. NULL
+    Drained output over a fresh×frozen split equals the (new, old)
+    pairs of the batch ``bucketed_near_pairs`` list (same
+    planes/threshold), and of a brute-force cosine within a scaled
+    model's cells — both pinned in tests/test_streaming.py. NULL
     arriving embeddings fold to cell 0 but every cosine against stored
     vectors is NULL, so they report dup_of_corpus=false with NULL
     canonical (a verdict for every arrival, like the other members).

@@ -35,6 +35,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import signal
 import statistics
 import subprocess
 import sys
@@ -49,6 +50,8 @@ PAIRS = 10
 WINS_NEEDED = 9
 #: Pair i runs seed SEED_BASE + i on both sides (steady.py uses 1000 + i).
 SEED_BASE = 2000
+#: Seconds one benchmark run may take before it counts as crashed.
+RUN_TIMEOUT_S = 900
 
 
 def git(*args: str) -> str:
@@ -71,16 +74,27 @@ def load_spec(path: str) -> dict:
 
 
 def run_once(path: str, workload: str, seed: int, trace: int) -> dict | None:
-    """One benchmark run in the checkout at ``path``; None if it crashed."""
+    """One benchmark run in the checkout at ``path``; None if it crashed
+    or ran past RUN_TIMEOUT_S. A hung run is killed with its whole
+    session: the JVM and the Python workers it started."""
     spec = load_spec(path)
     cmd = spec["command"] + [
         "--workload", workload, "--seed", str(seed),
         "--seconds", str(spec["run_seconds"]), "--trace", str(trace),
     ]
-    proc = subprocess.run(cmd, cwd=path, capture_output=True, text=True, timeout=900)
-    lines = proc.stdout.strip().splitlines()
+    proc = subprocess.Popen(
+        cmd, cwd=path, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, start_new_session=True
+    )
+    try:
+        out, err = proc.communicate(timeout=RUN_TIMEOUT_S)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)  # the unreaped leader keeps the group alive
+        proc.communicate()
+        sys.stderr.write(f"run timed out after {RUN_TIMEOUT_S} s\n")
+        return None
+    lines = out.strip().splitlines()
     if proc.returncode != 0 or not lines:
-        sys.stderr.write(proc.stderr[-2000:])
+        sys.stderr.write(err[-2000:])
         return None
     return json.loads(lines[-1])
 

@@ -22,12 +22,10 @@ across a REAL session boundary:
 
 Emits one JSON line; tests/test_plans.py runs it as a subprocess (the
 only way to get a genuinely fresh catalog — newSession() shares the
-SharedState external catalog). --scale N duplicates the corpus N× with
-re-keyed doc ids for the SCALING.md measurement (rebuild grows with the
-store; re-attach must not).
+SharedState external catalog).
 
 Usage:
-    python scripts/restart_reattach_probe.py [--rows 150] [--scale 1]
+    python scripts/restart_reattach_probe.py [--rows 150]
         [--buckets 4] [--sf-dir /root/testdata/sf0.001]
 """
 
@@ -66,38 +64,16 @@ def _admission_join_rows(spark, bands, arr_df):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def _docs(spark, sf_dir: str, rows: int, scale: int):
-    from pyspark.sql import functions as F
-
-    from chronobase_spark import catalog
-
-    docs = (
-        catalog.table(spark, sf_dir, "documents")
-        .filter("text IS NOT NULL")
-        .limit(rows)
-    )
-    if scale > 1:
-        # Re-keyed duplication: the standard store-growth fixture from
-        # scaling_probe — each copy gets distinct doc ids so the model
-        # genuinely grows |copies|×.
-        copies = spark.range(scale).select(F.col("id").alias("copy"))
-        docs = docs.crossJoin(copies).select(
-            F.concat_ws("_", "doc_id", "copy").alias("doc_id"), "text"
-        )
-    return docs
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=150)
-    ap.add_argument("--scale", type=int, default=1)
     ap.add_argument("--buckets", type=int, default=4)
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     args = ap.parse_args()
     os.environ["SPARK_GRAFT_CPUS"] = args.cpus
 
-    from chronobase_spark import get_spark
+    from chronobase_spark import catalog, get_spark
     from chronobase_spark.dedup import minhash
     from chronobase_spark.sources import writers
 
@@ -106,7 +82,11 @@ def main() -> int:
 
     # ---- Session A: build the bucketed model (the rebuild price) ----
     spark = get_spark(app_name="reattach-probe-A", extra_conf=conf)
-    docs = _docs(spark, args.sf_dir, args.rows, args.scale)
+    docs = (
+        catalog.table(spark, args.sf_dir, "documents")
+        .filter("text IS NOT NULL")
+        .limit(args.rows)
+    )
     t0 = time.perf_counter()
     bands_a, sh_a = minhash.minhash_band_model_bucketed(
         docs, table_prefix=TABLE_PREFIX, buckets=args.buckets
@@ -149,7 +129,6 @@ def main() -> int:
 
     out = {
         "rows": args.rows,
-        "scale": args.scale,
         "buckets": args.buckets,
         "build_s": round(build_s, 3),
         "reattach_s": round(reattach_s, 3),

@@ -1,7 +1,10 @@
-"""The verdict rule of scripts/ab.py on synthetic paired runs (no Spark)."""
+"""The verdict rule of scripts/ab.py on synthetic paired runs, and its
+handling of a hung run (no Spark)."""
 
+import json
 import os
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(REPO, "scripts"))
@@ -84,3 +87,34 @@ def test_unresolved_exception_when_every_head_run_beats_every_base_run():
     # one head run above a base run: unresolved again
     head[0] = 11.0
     assert ab.verdict(base, head, "lower", 0.25)["verdict"] == "unresolved"
+
+
+def _alive(pid: int) -> bool:
+    """The process exists and is not a zombie."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            return fh.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except FileNotFoundError:
+        return False
+
+
+def test_hung_run_counts_as_crashed_and_leaves_no_process(tmp_path, monkeypatch):
+    """A run that outlives RUN_TIMEOUT_S is killed with the processes it
+    started and counts as crashed, instead of ending the A/B."""
+    pids = tmp_path / "pids"
+    hang = (
+        "import os, subprocess, sys, time\n"
+        "child = subprocess.Popen([sys.executable, '-c', 'import time; time.sleep(120)'])\n"
+        f"open({str(pids)!r}, 'w').write(f'{{os.getpid()}} {{child.pid}}')\n"
+        "time.sleep(120)\n"
+    )
+    (tmp_path / "BENCHMARK.json").write_text(
+        json.dumps({"command": [sys.executable, "-c", hang], "run_seconds": 1})
+    )
+    monkeypatch.setattr(ab, "RUN_TIMEOUT_S", 5)
+    assert ab.run_once(str(tmp_path), "tsdb_mixed", 1, 0) is None
+    started = [int(p) for p in pids.read_text().split()]
+    deadline = time.monotonic() + 10
+    while any(map(_alive, started)) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not any(map(_alive, started)), started

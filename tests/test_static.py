@@ -303,6 +303,22 @@ def test_near_dup_idioms_live_in_bands():
     assert not bad, bad
 
 
+def test_every_script_has_a_runner():
+    """A script that no test runs and the verify skill does not name is
+    a round-era leftover nobody keeps working. Each ``scripts/*.py``
+    must be named by its full file name (a bare stem would match any
+    word) in a test file or in .claude/skills/verify/SKILL.md."""
+    runners = glob.glob(os.path.join(REPO, "tests/**/*.py"), recursive=True)
+    runners.append(os.path.join(REPO, ".claude/skills/verify/SKILL.md"))
+    text = "\n".join(open(p).read() for p in runners)
+    orphans = sorted(
+        name
+        for name in map(os.path.basename, glob.glob(os.path.join(REPO, "scripts/*.py")))
+        if name not in text
+    )
+    assert not orphans, orphans
+
+
 # --- knob gate -----------------------------------------------------------
 
 #: The only functions whose defaulted parameters need no caller: the

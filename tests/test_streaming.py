@@ -2606,14 +2606,27 @@ def test_phash_admit_composed_after_content_dedup(spark, tmp_path):
     }
 
 
-def test_streaming_semantic_admit_matches_batch_pairs(spark, tmp_path):
+def _fold(a, b) -> float:
+    """The engine's sequential float64 dot-product fold."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc += float(x) * float(y)
+    return acc
+
+
+@pytest.mark.parametrize("model", ["fixed", "scaled"])
+def test_streaming_semantic_admit_matches_batch_pairs(spark, tmp_path, model):
     """Stream-static semantic admission (semantic_admit_stage): drained
-    verdicts over a fresh×frozen embedding split must equal the batch
-    bucketed_near_pairs list (same planes/threshold) restricted to
-    (new, old) pairs — dup iff the arriving vector has ANY stored
-    cell-mate with rounded cosine ≥ threshold, canonical = the min
-    such partner — and every arrival gets a verdict, including a NULL
-    embedding (no cosine is defined for it)."""
+    verdicts over a fresh×frozen embedding split must equal the
+    (new, old) near pairs under the model's own quantizer — dup iff the
+    arriving vector has ANY stored cell-mate with rounded cosine ≥
+    threshold, canonical = the min such partner — and every arrival
+    gets a verdict, including a NULL embedding (no cosine is defined
+    for it). ``fixed``: 8 planes, pairs from the batch
+    bucketed_near_pairs list. ``scaled``: semantic_cell_model_scaled's
+    k = 4 planes, pairs by brute-force cosine within its cells."""
+    import math
+
     from chronobase_spark.dedup import embedding as emb
     from chronobase_spark.streaming import docs as docstream
 
@@ -2634,14 +2647,36 @@ def test_streaming_semantic_admit_matches_batch_pairs(spark, tmp_path):
         .collect()
     }
     frozen = base.filter(~F.col("vec_id").isin(*fresh_ids))
-    corpus_cells = emb.semantic_cell_model(frozen)
-
     expected: dict[int, set[int]] = {d: set() for d in fresh_ids}
-    for a, b in pairs:
-        if a in fresh_ids and b not in fresh_ids:
-            expected[a].add(b)
-        if b in fresh_ids and a not in fresh_ids:
-            expected[b].add(a)
+    if model == "fixed":
+        corpus_cells, k = emb.semantic_cell_model(frozen), 8
+        for a, b in pairs:
+            if a in fresh_ids and b not in fresh_ids:
+                expected[a].add(b)
+            if b in fresh_ids and a not in fresh_ids:
+                expected[b].add(a)
+    else:
+        corpus_cells, k = emb.semantic_cell_model_scaled(frozen)
+        assert k < 8
+        planes = emb.hyperplanes(k)
+
+        def cell(vec) -> int:
+            return sum(1 << i for i, p in enumerate(planes) if _fold(vec, p) >= 0)
+
+        stored = corpus_cells.collect()
+        assert all(r["cell"] == cell(r["vec"]) for r in stored)
+        for r in base.filter(F.col("vec_id").isin(*fresh_ids)).collect():
+            vec = r["embedding"]
+            if vec is None:
+                continue
+            nrm, own = math.sqrt(_fold(vec, vec)), cell(vec)
+            expected[r["vec_id"]] = {
+                s["vid"]
+                for s in stored
+                if s["cell"] == own
+                and round(_fold(vec, s["vec"]) / (nrm * math.sqrt(_fold(s["vec"], s["vec"]))), 6)
+                >= threshold
+            }
 
     # a NULL-embedding arrival and a far-future flush row
     extra = spark.createDataFrame(
@@ -2664,6 +2699,7 @@ def test_streaming_semantic_admit_matches_batch_pairs(spark, tmp_path):
         docstream.semantic_admit_stage(
             docstream.read_embedding_stream(spark, src),
             corpus_cells,
+            num_planes=k,
             min_cosine=threshold,
         )
         .writeStream.format("parquet")
