@@ -152,44 +152,3 @@ def asof_join(
     for c in right_cols:
         filled = filled.withColumn(c, F.last(F.col(c), ignorenulls=True).over(w))
     return filled.filter(F.col("_side") == 1).drop("_side", "_k", "_t")
-
-
-def asof_join_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    right_cols: list[str],
-) -> DataFrame:
-    """As-of join via cogrouped ``applyInPandas`` + ``pd.merge_asof`` —
-    the Pandas-UDF expression of the same '<=' semantics as
-    ``asof_join``, kept as the extension template for per-key logic the
-    union+window trick can't express (interpolation, tolerance bands,
-    nearest-instead-of-backward). Both sides shuffle once on the key;
-    each key's group is processed Arrow-batched. Prefer ``asof_join``
-    (pure Catalyst) when plain backward-fill is all you need."""
-    import pandas as pd
-    from pyspark.sql.types import StructType
-
-    fields = list(left.schema.fields) + [right.schema[c] for c in right_cols]
-    out_schema = StructType(fields)
-    l_cols = [f.name for f in left.schema.fields]
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        lpdf = lpdf.sort_values(left_ts, kind="mergesort")
-        if rpdf.empty:
-            for c in right_cols:
-                lpdf[c] = None
-            return lpdf[l_cols + right_cols]
-        rpdf = rpdf[[right_ts, *right_cols]].sort_values(right_ts, kind="mergesort")
-        merged = pd.merge_asof(
-            lpdf, rpdf, left_on=left_ts, right_on=right_ts, direction="backward"
-        )
-        return merged[l_cols + right_cols]
-
-    return (
-        left.groupBy(on)
-        .cogroup(right.groupBy(on))
-        .applyInPandas(merge, schema=out_schema)
-    )

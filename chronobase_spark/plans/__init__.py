@@ -2,7 +2,6 @@
 
 from chronobase_spark.plans.inspect import (  # noqa: F401
     explain_str,
-    has_broadcast_join,
     pushed_filters,
     read_schema,
 )

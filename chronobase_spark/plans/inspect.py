@@ -36,7 +36,3 @@ def read_schema(df: DataFrame) -> str:
     materializes (column pruning check)."""
     m = re.search(r"ReadSchema: (\S+)", _executed_plan(df))
     return m.group(1) if m else ""
-
-
-def has_broadcast_join(df: DataFrame) -> bool:
-    return "BroadcastHashJoin" in _executed_plan(df)

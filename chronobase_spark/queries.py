@@ -33,6 +33,7 @@ from chronobase_spark.dedup import _bands, cdc, minhash, ngram, simhash, winnow
 from chronobase_spark.functions import bpe, packing, similarity, sketches, text
 from chronobase_spark.operators import aggregates as agg
 from chronobase_spark.operators import joins, setops, timeseries, windows
+from chronobase_spark.streaming import docs as docstream
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -6810,69 +6811,42 @@ WHERE {arr.format(d="e.vec_id")}
 
 @register("semantic_admission_report", _semantic_admission_sql())
 def q_semantic_admission_report(spark, sf_dir):
-    """Batch semantic ADMISSION report — the driver-hash-checked twin
-    of the embedding admission stage (streaming/docs.
-    semantic_admit_stage), completing the cross-engine evidence the
-    r14 round deferred: split the corpus by the content-free md5
-    vec_id bucket (20% "arriving", 80% "stored" — the
-    near_dup_admission_report split idiom), freeze the stored side
-    with the LITERAL streaming model builder
-    (dedup.embedding.semantic_cell_model_scaled — the corpus-scaled
-    quantizer that is the admission default for growing stores), fold
-    each arriving vector's cell under the same k planes exactly as the
-    streaming stage does per row, and emit for EVERY arriving vector
-    whether any stored vector in its cell passes the exact rounded
-    cosine ≥ 0.35 verify, with the min stored partner as canonical —
-    (vec_id, dup_of_corpus, canonical_id). The verdict math is the
-    streaming stage's (dup iff ANY verified neighbor, canonical = min
-    matched vid); its drained-equal pytest pin covers stream/batch
-    equality, this covers the math against an independent engine.
+    """Batch semantic ADMISSION report: the embedding admission stage
+    (streaming/docs.semantic_admit_stage) applied to a static split, so
+    stream and batch share one definition and the DuckDB oracle checks
+    it. Split the corpus by the content-free md5 vec_id bucket (20%
+    "arriving", 80% "stored" — the near_dup_admission_report split
+    idiom), freeze the stored side with
+    dedup.embedding.semantic_cell_model_scaled (the corpus-scaled
+    quantizer that is the admission default for growing stores), and
+    run the stage over the arrivals with the model's k planes and the
+    0.35 cosine floor: for EVERY arriving vector, whether any stored
+    vector in its cell passes the exact rounded cosine verify, with
+    the min stored partner as canonical — (vec_id, dup_of_corpus,
+    canonical_id).
 
     Scale: the stored model is one signature pass persisted once
     (frozen-model posture — re-read, never recomputed); the arriving
     fold is map-only per row; the cell join touches only cell-equal
     (arriving, stored) rows with expected cell size ≈ 32 BY
     CONSTRUCTION (the scaled-k rule), so per-arrival verify fan-out
-    stays constant as the store grows; the verdict is one vec_id-keyed
-    left join. NULL arriving embeddings join nothing and report
-    (false, NULL) — every arrival gets a verdict, the admission
-    contract."""
+    stays constant as the store grows. NULL arriving embeddings
+    verify against nothing and report (false, NULL) — every arrival
+    gets a verdict, the admission contract."""
     embt = _t(spark, sf_dir, "embeddings")
-    stored = embt.filter(~_arriving(F.col("vec_id")))
     cells, k = emb_dedup.semantic_cell_model_scaled(
-        stored,
+        embt.filter(~_arriving(F.col("vec_id"))),
         target_cell_size=_SEMDEDUP_CELL_SIZE,
         max_planes=_SEMDEDUP_MAX_PLANES,
     )
-    planes = emb_dedup.hyperplanes(k)
-    # norms projected once per row BELOW the cell join on BOTH sides
-    # (r17; similarity.cosine_pre's join-path note): a per-pair norm would
-    # re-fold each arrival's and each stored row's norm per (arrival, cand)
-    # pair — bit-identical sim either way.
-    arr = embt.filter(
-        _arriving(F.col("vec_id")) & F.col("embedding").isNotNull()
-    ).select(
-        "vec_id",
-        F.col("embedding").alias("vec_a"),
-        similarity.norm(F.col("embedding")).alias("nrm_a"),
-        emb_dedup.lsh_signature(F.col("embedding"), planes).alias("cell"),
+    # one literal event time: the stage's verdict window then holds
+    # every candidate of an arrival, so it emits one row per arrival
+    arriving = embt.filter(_arriving(F.col("vec_id"))).withColumn(
+        "ingest_ts", F.lit(0).cast("timestamp")
     )
-    cells_n = cells.withColumn("nrm_c", similarity.norm(F.col("vec")))
-    sim = F.round(
-        similarity.cosine_pre(
-            F.col("vec_a"), F.col("vec"), F.col("nrm_a"), F.col("nrm_c")
-        ),
-        6,
-    )
-    # shuffle_hash: the stored cell table is corpus-sized (the
-    # dedup/_bands.py band-join rule — never broadcast the store)
-    ver = (
-        arr.join(cells_n.hint("shuffle_hash"), "cell")
-        .filter(sim >= _SEMDEDUP_MIN_COSINE)
-        .groupBy("vec_id")
-        .agg(F.min("vid").alias("canonical_id"))
-    )
-    return _admission_report(embt, "vec_id", ver)
+    return docstream.semantic_admit_stage(
+        arriving, cells, num_planes=k, min_cosine=_SEMDEDUP_MIN_COSINE
+    ).select("vec_id", "dup_of_corpus", "canonical_id")
 
 
 def _pipeline_sql() -> str:

@@ -1,15 +1,11 @@
-"""COMPOSED-pipeline recovery probe — composition × restart (r16
-verdict next-round #4 + #6).
-
-scripts/restart_stream_recovery_probe.py pins recovery for a SINGLE
-minhash-admit chain; tests/test_streaming.py pins composition (multiple
-state stores + branches) within ONE session. This probe crosses them —
-the actual production crash scenario: a composed intake graph dies
-mid-stream and must resume from its checkpoints in a fresh session with
-every bucketed model re-attached from its manifest.
+"""Restart recovery probe: a composed intake graph dies mid-stream and
+resumes from its checkpoints in a fresh session, with every bucketed
+admission model re-attached from its on-disk manifest, not rebuilt.
 
   Session A: build THREE bucketed model tables (minhash bands +
-             shingles, containment postings); drain arrival batch 1
+             shingles, containment postings; timed — the rebuild price
+             a restart would otherwise pay); join a frozen arrival
+             band sample against the bands; drain arrival batch 1
              through
                main chain (ONE query, TWO state stores):
                  content_dedup (dropDuplicatesWithinWatermark state)
@@ -19,31 +15,36 @@ every bucketed model re-attached from its manifest.
                  → sink D
              each with its own checkpoint; stop() — catalog dies,
              checkpoints + sinks + model files + manifests survive.
-  Session B: reattach_bucketed all three tables (asserted absent from
-             the fresh catalog first — and the attach-time manifest
-             validation runs on each); plan-pin that the re-attached
-             postings still join shuffle-free (Bucketed: true, only the
-             arriving side's Exchange); append batch 2 to the SAME
-             source dir; resume BOTH checkpoints with availableNow.
-  Verdict:   batch 2 fully verdicted in both sinks; batch 1 not
-             re-emitted (physical row-count convention — byte-identical
+  Session B: reattach_bucketed all three tables (timed; asserted
+             absent from the fresh catalog first — and the attach-time
+             manifest validation runs on each); each table's row count
+             equals session A's; the frozen band sample joins to the
+             same rows; both re-attached join sides plan shuffle-free
+             (Bucketed: true, only the arriving side's Exchange);
+             append batch 2 to the SAME source dir; resume BOTH
+             checkpoints with availableNow.
+  Verdict:   re-attach is DDL-priced (reattach_s < build_s); batch 2
+             fully verdicted in both sinks; batch 1 not re-emitted
+             (physical row-count convention — byte-identical
              re-emission cannot hide in set semantics); the content
              dedup state works after restart (exactly one survivor per
              same-content group, in BOTH batches); every survivor
-             verdicts dup-of-stored in sink A; sink D's batch-2
-             verdicts EQUAL the batch containment twin computed on the
-             re-attached postings table.
+             verdicts dup-of-stored in sink A; sink D's verdicts EQUAL
+             the batch containment twin computed on the postings
+             table.
 
-Emits one JSON line; tests/test_streaming.py runs it as a subprocess.
+A subprocess is the only way to get a genuinely fresh catalog:
+newSession() shares the SharedState external catalog. Emits one JSON
+line; tests/conftest.py runs it once per test session.
 
 Usage:
-    python scripts/restart_composed_recovery_probe.py [--rows 60]
-        [--buckets 4] [--sf-dir /root/testdata/sf0.001]
+    python scripts/restart_composed_recovery_probe.py [--cpus 4]
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import json
 import os
 import sys
@@ -51,21 +52,40 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from restart_stream_recovery_probe import (  # noqa: E402  (one-definition)
-    FLUSH1,
-    FLUSH2,
-    T0,
-    T1,
-    _flush_row,
-    _mk_arrivals,
-)
+from tests.conftest import SF_SMOKE  # noqa: E402  (the smoke corpus)
 
+ROWS = 60
+BUCKETS = 4
 PREFIX = "probe_comp_model"
 POSTINGS = "probe_comp_postings"
 FLUSH_IDS = {999_999_901, 999_999_902}
 DUP1, DUP2 = 999_000_001, 999_000_002  # within-batch content duplicates
+
+# Batch-1 rows sit at T0; batch-1's flush pushes the watermark past
+# T0's windows. Batch-2 rows must arrive ABOVE the checkpointed
+# watermark or the resumed query would (correctly) late-drop them.
+T0 = 1_700_000_000
+FLUSH1 = T0 + 10_000_000
+T1 = FLUSH1 + 10_000_000
+FLUSH2 = T1 + 10_000_000
+
+_DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _mk_arrivals(spark, docs_pd, ids, ts):
+    from pyspark.sql import functions as F
+
+    df = spark.createDataFrame([r for r in docs_pd if r["doc_id"] in ids], _DOC_SCHEMA)
+    return df.withColumn("ingest_ts", F.timestamp_seconds(F.lit(ts)))
+
+
+def _flush_row(spark, doc_id, ts):
+    from pyspark.sql import functions as F
+
+    return spark.createDataFrame(
+        [(doc_id, "flush row", "xx", "synthetic", 9)], _DOC_SCHEMA
+    ).withColumn("ingest_ts", F.timestamp_seconds(F.lit(ts)))
 
 
 def _drain_both(spark, src, paths, bands, sh, postings):
@@ -102,6 +122,46 @@ def _drain_both(spark, src, paths, bands, sh, postings):
         q.awaitTermination(600)
 
 
+@contextlib.contextmanager
+def _broadcast_off(spark):
+    """Broadcast joins off, so the bucketed layout is what a join
+    exercises on a corpus this small."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def _band_join(bands, arr_bands):
+    """The admission-shaped band-key equi-join of the frozen arrival
+    sample. Returns (sorted (doc, cand) rows, executed plan string)."""
+    from pyspark.sql import functions as F
+
+    j = arr_bands.join(
+        bands.select(F.col("doc").alias("cand"), "band_id", "band_val"),
+        ["band_id", "band_val"],
+        "left",
+    ).select("doc", "cand")
+    plan = j._jdf.queryExecution().executedPlan().toString()
+    return sorted((r["doc"], r["cand"]) for r in j.collect()), plan
+
+
+def _plan_pin(plan, table, key):
+    """(every scan of ``table`` is Bucketed: true, number of ``key``
+    hash Exchanges) — the re-attached static side must not shuffle, so
+    the only Exchange on ``key`` is the arriving side's."""
+    lines = plan.splitlines()
+    scans = [ln for ln in lines if table in ln]
+    bucketed = bool(scans) and all("Bucketed: true" in ln for ln in scans)
+    exchanges = sum(
+        1 for ln in lines if "Exchange hashpartitioning" in ln and f"{key}#" in ln
+    )
+    return bucketed, exchanges
+
+
 def _content_groups(arrivals):
     """doc_id sets grouped by exact normalized-content fingerprint —
     the content_dedup state's own grouping, computed batch-side."""
@@ -133,9 +193,6 @@ def _containment_verdicts(sink_df, exclude_ids):
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--rows", type=int, default=60)
-    ap.add_argument("--buckets", type=int, default=4)
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.001")
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "8"))
     args = ap.parse_args()
     os.environ["SPARK_GRAFT_CPUS"] = args.cpus
@@ -151,25 +208,40 @@ def main() -> int:
     src = f"{root}/src"
     paths = {k: (f"{root}/sink_{k}", f"{root}/ckpt_{k}") for k in ("a", "d")}
     conf = {"spark.sql.warehouse.dir": wh}
+    tables = (f"{PREFIX}_bands", f"{PREFIX}_shingles", POSTINGS)
 
     # ---- Session A ----
     spark = get_spark(app_name="comp-recovery-A", extra_conf=conf)
     docs = (
-        catalog.table(spark, args.sf_dir, "documents")
+        catalog.table(spark, SF_SMOKE, "documents")
         .filter("text IS NOT NULL")
-        .limit(args.rows)
+        .limit(ROWS)
     )
     frozen_rows = docs.collect()
     all_ids = [r["doc_id"] for r in frozen_rows]
     half = len(all_ids) // 2
     b1_ids, b2_ids = set(all_ids[:half]), set(all_ids[half:])
 
+    t0 = time.perf_counter()
     bands, sh = minhash.minhash_band_model_bucketed(
-        docs, table_prefix=PREFIX, buckets=args.buckets
+        docs, table_prefix=PREFIX, buckets=BUCKETS
     )
     postings = ngram.containment_model_bucketed(
-        docs, table_name=POSTINGS, buckets=args.buckets
+        docs, table_name=POSTINGS, buckets=BUCKETS
     )
+    # saveAsTable materialized the models — stop the clock BEFORE the
+    # counts so build_s and reattach_s each time only their own step
+    build_s = time.perf_counter() - t0
+    counts_a = [t.count() for t in (bands, sh, postings)]
+
+    # freeze the arriving band sample across sessions
+    arr_bands_pd = (
+        minhash.md5_band_table(docs.limit(25))
+        .select("doc", "band_id", "band_val")
+        .toPandas()
+    )
+    with _broadcast_off(spark):
+        join_a, _ = _band_join(bands, spark.createDataFrame(arr_bands_pd))
 
     # arrivals: refetches of stored content under shifted ids, plus one
     # same-content DUPLICATE arrival per batch (ids DUP1/DUP2 repeat the
@@ -219,37 +291,25 @@ def main() -> int:
 
     # ---- Session B: fresh catalog, SAME checkpoints ----
     spark = get_spark(app_name="comp-recovery-B", extra_conf=conf)
-    fresh_catalog = not any(
-        spark.catalog.tableExists(t)
-        for t in (f"{PREFIX}_bands", f"{PREFIX}_shingles", POSTINGS)
-    )
+    fresh_catalog = not any(spark.catalog.tableExists(t) for t in tables)
     t0 = time.perf_counter()
-    bands = writers.reattach_bucketed(spark, f"{PREFIX}_bands")
-    sh = writers.reattach_bucketed(spark, f"{PREFIX}_shingles")
-    postings = writers.reattach_bucketed(spark, POSTINGS)
+    bands, sh, postings = (writers.reattach_bucketed(spark, t) for t in tables)
     reattach_s = time.perf_counter() - t0
+    counts_b = [t.count() for t in (bands, sh, postings)]
 
-    # plan pin: the RE-ATTACHED postings table still feeds the admission
-    # shingle join shuffle-free — Bucketed: true scan, and the only sh
-    # Exchange is the (trigger-sized) arriving side's
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    probe_arr = spark.createDataFrame(
-        [r for r in arr_pd[:10]],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).select("doc_id", F.explode(ngram.shingles(F.col("text"))).alias("sh"))
-    j = probe_arr.join(postings.select(F.col("doc").alias("cand"), "sh"), "sh", "left")
-    plan = j._jdf.queryExecution().executedPlan().toString()
-    scan_lines = [ln for ln in plan.splitlines() if POSTINGS in ln]
-    plan_bucketed = bool(scan_lines) and all(
-        "Bucketed: true" in ln for ln in scan_lines
-    )
-    sh_exchanges = sum(
-        1
-        for ln in plan.splitlines()
-        if "Exchange hashpartitioning" in ln and "sh#" in ln
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    # plan pins: the RE-ATTACHED band and postings tables still feed
+    # their admission joins shuffle-free
+    with _broadcast_off(spark):
+        join_b, band_plan = _band_join(bands, spark.createDataFrame(arr_bands_pd))
+        probe_arr = spark.createDataFrame(arr_pd[:10], _DOC_SCHEMA).select(
+            "doc_id", F.explode(ngram.shingles(F.col("text"))).alias("sh")
+        )
+        j = probe_arr.join(
+            postings.select(F.col("doc").alias("cand"), "sh"), "sh", "left"
+        )
+        sh_plan = j._jdf.queryExecution().executedPlan().toString()
+    band_bucketed, band_exchanges = _plan_pin(band_plan, tables[0], "band_val")
+    plan_bucketed, sh_exchanges = _plan_pin(sh_plan, POSTINGS, "sh")
 
     b2 = _mk_arrivals(
         spark, arr_pd, {i + 900_000_000 for i in b2_ids} | {DUP2}, T1
@@ -286,9 +346,14 @@ def main() -> int:
     ct_b2 = {k: v for k, v in ct_all.items() if k not in ct_b1}
 
     out = {
-        "rows": args.rows,
+        "rows": ROWS,
         "fresh_catalog": fresh_catalog,
+        "build_s": round(build_s, 3),
         "reattach_s": round(reattach_s, 3),
+        "counts_equal_after_reattach": counts_a == counts_b,
+        "band_scan_bucketed_after_reattach": band_bucketed,
+        "band_val_exchanges_after_reattach": band_exchanges,
+        "band_join_equal_after_reattach": join_a == join_b,
         "plan_bucketed_after_reattach": plan_bucketed,
         "sh_exchanges_after_reattach": sh_exchanges,
         "a_b1_one_survivor_per_group": _one_survivor_each(b1_groups, a_ids_after_a),
@@ -304,6 +369,11 @@ def main() -> int:
     print(json.dumps(out))
     ok = (
         out["fresh_catalog"]
+        and out["reattach_s"] < out["build_s"]
+        and out["counts_equal_after_reattach"]
+        and out["band_scan_bucketed_after_reattach"]
+        and out["band_val_exchanges_after_reattach"] == 1
+        and out["band_join_equal_after_reattach"]
         and out["plan_bucketed_after_reattach"]
         and out["sh_exchanges_after_reattach"] == 1
         and out["a_b1_one_survivor_per_group"]

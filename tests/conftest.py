@@ -1,4 +1,5 @@
-"""Shared pytest fixtures: one SparkSession per test run."""
+"""Shared pytest fixtures: one SparkSession per test run, and one run
+of the restart recovery probe."""
 
 from __future__ import annotations
 
@@ -7,7 +8,8 @@ import sys
 
 import pytest
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from chronobase_spark import get_spark  # noqa: E402
 
@@ -41,3 +43,30 @@ def smoke_frame(spark):
         return built[name]
 
     return frame
+
+
+@pytest.fixture(scope="session")
+def restart_probe():
+    """The JSON verdict of scripts/restart_composed_recovery_probe.py,
+    run once per test session and shared by the restart tests. A
+    subprocess because a genuinely fresh catalog needs a new
+    SparkContext: newSession() shares SharedState. Each test asserts
+    its own keys, so a failed check fails the test that owns it."""
+    import json
+    import subprocess
+
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "scripts", "restart_composed_recovery_probe.py"),
+            "--cpus", "4",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=540,
+        cwd=REPO,
+    )
+    try:
+        return json.loads(proc.stdout.strip().splitlines()[-1])
+    except (IndexError, json.JSONDecodeError):
+        pytest.fail(f"restart probe printed no verdict:\n{proc.stdout}{proc.stderr}")

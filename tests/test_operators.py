@@ -428,26 +428,6 @@ def test_kn_bigram_agrees_with_addone_on_grams(spark):
     )
 
 
-def test_asof_join_pandas_matches_window_impl(spark, events):
-    """The cogrouped merge_asof implementation must produce exactly the
-    union+window asof_join result (same '<=' backward semantics)."""
-    clicks = events.filter(F.col("event_type") == "click").select(
-        "user_id", "event_id", "ts"
-    )
-    errors = events.filter(F.col("event_type") == "error").select(
-        "user_id", F.col("ts").alias("err_ts"), F.col("value").alias("err_value")
-    )
-    a = joins.asof_join(
-        clicks, errors, "user_id", "user_id", "ts", "err_ts", ["err_value"]
-    ).select("user_id", "event_id", "err_value")
-    b = joins.asof_join_pandas(
-        clicks, errors, "user_id", "ts", "err_ts", ["err_value"]
-    ).select("user_id", "event_id", "err_value")
-    ka = {(r["user_id"], r["event_id"]): r["err_value"] for r in a.collect()}
-    kb = {(r["user_id"], r["event_id"]): r["err_value"] for r in b.collect()}
-    assert ka == kb and ka
-
-
 def test_multimodal_resize_stub_composes(spark):
     """resize_stub keeps the multimodal row shape (so it composes with
     decode_stub) and downsamples payload bytes deterministically."""

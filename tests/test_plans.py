@@ -583,35 +583,20 @@ def test_reattach_bucketed_same_session_external_location(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_ra_copy")
 
 
-def test_restart_reattach_two_session_probe():
-    """THE two-session pin (r15 verdict next-round #3): run the restart
-    probe as a subprocess — session A builds the bucketed minhash
-    admission model, stop() kills the in-memory catalog, session B
-    re-attaches from the on-disk manifest and must see identical
-    counts, an identical admission-join result, a Bucketed: true scan
-    and exactly one (arriving-side) band-key Exchange. Subprocess
-    because a genuinely fresh external catalog needs a new
-    SparkContext — newSession() shares SharedState."""
-    import json
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(repo, "scripts", "restart_reattach_probe.py"),
-            "--rows", "80", "--buckets", "4", "--cpus", "4",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=420,
-        cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["counts_equal"] and out["join_equal"]
-    assert out["reattached_scan_bucketed"] is True
-    assert out["band_key_exchanges"] == 1
+def test_restart_reattach_two_session_probe(restart_probe):
+    """The two-session model pin, read from the restart probe
+    (tests/conftest.py): session A builds the bucketed minhash bands +
+    shingles and containment postings, stop() kills the in-memory
+    catalog, session B re-attaches all three from the on-disk manifest
+    and must see each table's session-A row count, an identical
+    admission band-join result over a frozen arrival sample, a
+    Bucketed: true band scan and exactly one (arriving-side) band_val
+    Exchange."""
+    out = restart_probe
+    assert out["counts_equal_after_reattach"]
+    assert out["band_join_equal_after_reattach"]
+    assert out["band_scan_bucketed_after_reattach"] is True
+    assert out["band_val_exchanges_after_reattach"] == 1
     # the whole point: recovery is DDL-priced, not store-sized
     assert out["reattach_s"] < out["build_s"]
 

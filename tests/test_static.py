@@ -303,18 +303,44 @@ def test_near_dup_idioms_live_in_bands():
     assert not bad, bad
 
 
+def _runner_text() -> str:
+    """Every test file and the verify skill: where a script and each of
+    its flags must be named to count as run."""
+    runners = glob.glob(os.path.join(REPO, "tests/**/*.py"), recursive=True)
+    runners.append(os.path.join(REPO, ".claude/skills/verify/SKILL.md"))
+    return "\n".join(open(p).read() for p in runners)
+
+
 def test_every_script_has_a_runner():
     """A script that no test runs and the verify skill does not name is
     a round-era leftover nobody keeps working. Each ``scripts/*.py``
     must be named by its full file name (a bare stem would match any
     word) in a test file or in .claude/skills/verify/SKILL.md."""
-    runners = glob.glob(os.path.join(REPO, "tests/**/*.py"), recursive=True)
-    runners.append(os.path.join(REPO, ".claude/skills/verify/SKILL.md"))
-    text = "\n".join(open(p).read() for p in runners)
+    text = _runner_text()
     orphans = sorted(
         name
         for name in map(os.path.basename, glob.glob(os.path.join(REPO, "scripts/*.py")))
         if name not in text
+    )
+    assert not orphans, orphans
+
+
+def test_every_script_flag_has_a_caller():
+    """A command-line flag that no test passes and the verify skill does
+    not show is a knob nothing exercises; the defaulted-parameter gate
+    below walks package functions only, so script flags need their own.
+    Each option a ``scripts/*.py`` declares with ``add_argument`` must
+    appear, by its full name, in a test file or in
+    .claude/skills/verify/SKILL.md."""
+    text = _runner_text()
+    orphans = sorted(
+        f"{os.path.basename(p)} {a.value}"
+        for p in glob.glob(os.path.join(REPO, "scripts/*.py"))
+        for c in ast.walk(ast.parse(open(p).read()))
+        if isinstance(c, ast.Call) and getattr(c.func, "attr", None) == "add_argument"
+        for a in c.args
+        if isinstance(a, ast.Constant) and str(a.value).startswith("--")
+        and a.value not in text
     )
     assert not orphans, orphans
 

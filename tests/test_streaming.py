@@ -3377,69 +3377,36 @@ def test_containment_admit_matches_batch_reference(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_containment_postings")
 
 
-def test_stream_recovery_across_sessions_with_reattached_model():
-    """The production recovery path END-TO-END (extends the r16
-    two-session model re-attach pin): a streaming admission job dies
+def test_stream_recovery_across_sessions_with_reattached_model(restart_probe):
+    """The production recovery path END-TO-END, read from the restart
+    probe (tests/conftest.py): a streaming admission job dies
     mid-stream; a fresh session re-attaches the bucketed model from
     its manifest (no rebuild) and resumes the SAME checkpoint with new
-    arrivals. The probe asserts batch 2 is fully verdicted, batch 1 is
-    not re-processed (the file-source offset log survives the
-    restart), and every re-fetch arrival in both halves verdicts dup
-    of its stored copy. Subprocess because a genuinely fresh catalog
-    needs a new SparkContext."""
-    import json
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(repo, "scripts", "restart_stream_recovery_probe.py"),
-            "--rows", "60", "--cpus", "4",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=420,
-        cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
-    assert out["b2_complete"] and out["b1_not_reemitted"]
-    assert out["b1_all_dup"] and out["b2_all_dup"]
+    arrivals. Batch 1 is not re-processed (the file-source offset log
+    survives the restart), every arrival verdicts dup of its stored
+    copy, and batch 2 is fully verdicted: the chain runs content_dedup
+    first, so completeness is one survivor per same-content group."""
+    out = restart_probe
+    assert out["a_b2_one_survivor_per_group"] and out["a_b1_not_reemitted"]
+    assert out["a_b1_one_survivor_per_group"] and out["a_all_dup_of_stored"]
 
 
-def test_composed_recovery_across_sessions():
-    """Composition × restart (r16 verdict next-round #4 + #6): the
-    COMPOSED intake graph — main chain with TWO state stores
-    (content_dedup + windowed minhash admit under the watermark=None
-    contract) plus a containment branch on the BUCKETED posting model —
-    dies after batch 1 and resumes BOTH checkpoints in a fresh session
-    with all three bucketed models re-attached from their manifests.
-    The probe asserts: fresh catalog, batch 2 fully verdicted in both
-    sinks, batch 1 not re-emitted (physical row-count convention),
-    exactly one survivor per same-content group in both batches (the
-    dedup state works after restart), every survivor dup-of-stored,
-    containment verdicts equal to the batch twin computed ON the
-    re-attached postings table, and the re-attached postings still
-    plan Bucketed: true with only the arriving side's Exchange — the
-    containment member's attach-path parity pin."""
-    import json
-    import subprocess
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(repo, "scripts", "restart_composed_recovery_probe.py"),
-            "--rows", "60", "--cpus", "4",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=540,
-        cwd=repo,
-    )
-    assert proc.returncode == 0, proc.stdout + proc.stderr
-    out = json.loads(proc.stdout.strip().splitlines()[-1])
+def test_composed_recovery_across_sessions(restart_probe):
+    """Composition × restart, read from the restart probe
+    (tests/conftest.py): the COMPOSED intake graph — main chain with
+    TWO state stores (content_dedup + windowed minhash admit under the
+    watermark=None contract) plus a containment branch on the BUCKETED
+    posting model — dies after batch 1 and resumes BOTH checkpoints in
+    a fresh session with all three bucketed models re-attached from
+    their manifests. Asserts: fresh catalog, batch 2 fully verdicted
+    in both sinks, batch 1 not re-emitted (physical row-count
+    convention), exactly one survivor per same-content group in both
+    batches (the dedup state works after restart), every survivor
+    dup-of-stored, containment verdicts equal to the batch twin
+    computed ON the re-attached postings table, and the re-attached
+    postings still plan Bucketed: true with only the arriving side's
+    Exchange."""
+    out = restart_probe
     assert out["fresh_catalog"]
     assert out["plan_bucketed_after_reattach"] is True
     assert out["sh_exchanges_after_reattach"] == 1
