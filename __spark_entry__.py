@@ -35,7 +35,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL oracle per query (omitted only for ops
-    whose values depend on Spark-internal hashing: MinHash/SimHash
-    signatures and the HLL sketch — those get rows-only checks and are
-    pinned against ground truth in tests/)."""
+    whose values depend on Spark-internal hashing or sampling: the
+    xxhash64 MinHash pair finder and the approximate sketches — those
+    get rows-only checks and are pinned against ground truth in
+    tests/)."""
     return _q.oracle_sql()

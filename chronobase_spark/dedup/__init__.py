@@ -4,7 +4,7 @@
 exact      — hash-groupBy exact/normalized duplicate detection
 ngram      — n-gram shingle Jaccard with blocking (SQL-oracle-checkable)
 minhash    — MinHash + LSH banding (the sub-quadratic scale path)
-simhash    — 64-bit SimHash near-dup signatures
+simhash    — 64-bit SimHash near-dup signatures (md5 token bits)
 embedding  — cosine near-dup over embedding vectors (+ LSH bucketing)
 """
 

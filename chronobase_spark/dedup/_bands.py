@@ -79,16 +79,13 @@ def jaccard_sizes(
     )
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    """Popcount of XOR via bit_count (Spark ≥3.3 built-in)."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def chunk_hamming(a: str, b: str, chunks: int) -> Column:
     """BIGINT Hamming distance between two signatures held as chunk
-    columns ``{a}0..`` and ``{b}0..``: the sum of per-chunk popcounts."""
+    columns ``{a}0..`` and ``{b}0..``: the sum of per-chunk popcounts
+    of XOR (``bit_count``, a Spark ≥3.3 built-in)."""
     return sum(
-        hamming_distance(F.col(f"{a}{j}"), F.col(f"{b}{j}")) for j in range(chunks)
+        F.bit_count(F.col(f"{a}{j}").bitwiseXOR(F.col(f"{b}{j}")))
+        for j in range(chunks)
     ).cast("bigint")
 
 

@@ -3,29 +3,36 @@ scale path (Broder's MinHash; Leskovec/Rajaraman/Ullman banding scheme).
 
 Pipeline (all native column ops, no UDF):
   1. shingle each doc (word n-grams);
-  2. per permutation seed s, minhash_s(doc) = min over shingles of
-     xxhash64(shingle, s) — a vector of ``num_perm`` signatures computed
-     in ONE pass via transform+aggregate over the shingle array;
-  3. split the signature into ``bands`` bands of ``rows_per_band``; docs
-     agreeing on any whole band are candidates (group by band value);
-  4. verify candidates with exact shingle Jaccard (re-using dedup.ngram
-     machinery on the candidate subset only).
+  2. lane i of a doc's signature = min over its shingles of a per-lane
+     hash of the shingle;
+  3. split the signature into bands; docs agreeing on any whole band
+     are candidates (group by band value);
+  4. verify candidates with exact shingle Jaccard ≥ 0.5 on the
+     candidate subset only.
 
-Scale: stage 2 is map-only; stage 3 shuffles (band_id, band_hash, doc)
+Two lane hashes live here:
+
+* **md5** (BANDS × ROWS_PER_BAND = 4 × 4 lanes): the one scheme of
+  every surface but chronobench's dedup phase — the batch finder
+  ``minhash_md5_pairs``, the admission models, the streaming
+  ``signature_stage`` / ``minhash_admit_stage`` (:func:`md5_row_bands`)
+  and the DuckDB oracles, which compute the same lanes bit for bit.
+* **xxhash64** (LSH_BANDS × LSH_ROWS_PER_BAND = 16 × 8 lanes):
+  ``minhash_signature``, ``lsh_candidates`` and ``minhash_dedup_pairs``,
+  which chronobench's dedup phase times. Spark-internal, so its
+  registry query is rows-only; tests/test_dedup.py pins it against
+  exact Jaccard brute force. Moving chronobench to md5 costs about 3
+  points of pair recall at 4 × 4 (ROADMAP item 5).
+
+Scale: stage 2 is map-only; stage 3 shuffles (band_id, band_val, doc)
 triples — constant bytes/doc; stage 4 touches only candidate pairs.
-Nothing is quadratic in corpus size; the P(candidate) S-curve is tuned
-by (bands, rows_per_band): with 16 bands × 8 rows, sim 0.8 → ~0.93
-candidate probability, sim 0.3 → ~0.001.
-
-The minhash values depend on Spark's xxhash64, so this operator has no
-cross-engine SQL oracle (driver records rows-only); correctness is
-pinned by tests/test_dedup.py comparing LSH candidates against exact
-Jaccard brute force at small scale.
+Nothing is quadratic in corpus size; with 16 bands × 8 rows, sim 0.8 →
+~0.93 candidate probability, sim 0.3 → ~0.001.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from chronobase_spark.catalog import spread
@@ -35,29 +42,32 @@ from chronobase_spark.dedup.ngram import shingles
 #: Word n-gram size of every MinHash shingle, batch and streaming.
 SHINGLE_N = 3
 #: The portable md5 banding scheme: BANDS bands of ROWS_PER_BAND lanes.
-#: md5_band_table, minhash_band_model(_bucketed), minhash_md5_pairs,
-#: streaming/docs.minhash_admit_stage and the DuckDB oracles in
-#: queries.py all read it, so an admission model and its arrivals
-#: always band alike.
+#: md5_band_table, md5_row_bands (streaming/docs.signature_stage),
+#: minhash_band_model(_bucketed), minhash_md5_pairs and the DuckDB
+#: oracles in queries.py all read it, so an admission model and its
+#: arrivals always band alike.
 BANDS = 4
 ROWS_PER_BAND = 4
+#: The xxhash64 banding of minhash_signature / lsh_candidates.
+LSH_BANDS = 16
+LSH_ROWS_PER_BAND = 8
 
 
-def minhash_signature(df: DataFrame, num_perm: int = 128) -> DataFrame:
-    """(id, sig: array<bigint>[num_perm]).
+def minhash_signature(df: DataFrame) -> DataFrame:
+    """(doc, sig: array<bigint>[128]), 128 = LSH_BANDS × LSH_ROWS_PER_BAND.
 
     Two-stage, fully codegen'd formulation:
       1. explode to (doc, base_hash) with ONE xxhash64 per shingle
          string — |shingles| string hashes per doc, not
-         |shingles| x num_perm;
-      2. groupBy(doc) with num_perm min-aggregate lanes, lane i =
+         |shingles| x 128;
+      2. groupBy(doc) with 128 min-aggregate lanes, lane i =
          min(xxhash64(base_hash, i)) — a cheap long-long hash per lane,
          all inside whole-stage codegen with map-side partial
-         aggregation, so the shuffle carries one num_perm-lane partial
+         aggregation, so the shuffle carries one 128-lane partial
          per doc per map partition.
 
     Rejected alternatives (both measured 5-20x slower): the pure
-    higher-order-function fold runs |shingles| x num_perm *interpreted*
+    higher-order-function fold runs |shingles| x 128 *interpreted*
     lambda evaluations (HOF lambdas never enter codegen), and a
     vectorized pandas UDF pays Arrow transfer and breaks codegen when
     its output is inlined into the banding explode.
@@ -69,14 +79,14 @@ def minhash_signature(df: DataFrame, num_perm: int = 128) -> DataFrame:
         df.select(
             F.col("doc_id").alias("doc"),
             F.explode(shingles(F.col("text"), SHINGLE_N)).alias("_g"),
-        ),
-        num_perm,
+        )
     )
 
 
-def _xxhash_lanes(grams: DataFrame, num_perm: int) -> DataFrame:
+def _xxhash_lanes(grams: DataFrame) -> DataFrame:
     """(doc, sig) from (doc, _g) shingle rows: ONE xxhash64 per shingle,
-    then num_perm min-lanes, lane i = min(xxhash64(base_hash, i))."""
+    then 128 min-lanes, lane i = min(xxhash64(base_hash, i))."""
+    num_perm = LSH_BANDS * LSH_ROWS_PER_BAND
     hashed = grams.select("doc", F.xxhash64("_g").alias("_h"))
     lanes = [
         F.min(F.xxhash64("_h", F.lit(i))).alias(f"_l{i}") for i in range(num_perm)
@@ -88,10 +98,9 @@ def _xxhash_lanes(grams: DataFrame, num_perm: int) -> DataFrame:
     )
 
 
-def lsh_candidates(
-    signatures: DataFrame, bands: int = 16, rows_per_band: int = 8
-) -> DataFrame:
-    """Candidate pairs (doc_a < doc_b) agreeing on ≥1 whole band.
+def lsh_candidates(signatures: DataFrame) -> DataFrame:
+    """Candidate pairs (doc_a < doc_b) agreeing on ≥1 whole band of
+    LSH_BANDS bands × LSH_ROWS_PER_BAND rows.
 
     Band key = xxhash64 of the band's signature slice — a scalar long,
     so the shuffle carries (band_id, band_hash, doc) fixed-width triples
@@ -100,37 +109,33 @@ def lsh_candidates(
     A band-hash collision only creates a spurious candidate, which the
     exact-Jaccard verify stage removes.
 
-    Signatures MUST carry exactly ``bands × rows_per_band`` lanes: a
+    Signatures MUST carry exactly 128 lanes (minhash_signature's): a
     shorter array would make every band past its end slice [] and hash
     identically, silently degenerating the band join toward all-pairs
     (scale death, not a wrong answer — the Jaccard verify would still
     filter). The lane count is checked per row and raises instead.
-    NULL signatures (docs with no shingles, e.g. from the streaming
-    signature_stage) are dropped up front: xxhash64 hashes a NULL
-    input to the SEED, not to NULL, so leaving them in would band
-    every sig-less doc into one giant all-pairs bucket."""
+    NULL signatures are dropped up front: xxhash64 hashes a NULL input
+    to the SEED, not to NULL, so leaving them in would band every
+    sig-less doc into one giant all-pairs bucket."""
+    num_perm = LSH_BANDS * LSH_ROWS_PER_BAND
     signatures = signatures.filter(F.col("sig").isNotNull())
-    lanes_ok = F.size("sig") == F.lit(bands * rows_per_band)
+    lanes_ok = F.size("sig") == F.lit(num_perm)
     lanes_err = F.concat(
         F.lit("lsh_candidates: signature has "),
         F.size("sig").cast("string"),
-        F.lit(
-            f" lanes, expected {bands * rows_per_band} "
-            "(bands*rows_per_band) — align num_perm in "
-            "minhash_signature/signature_stage with the banding scheme"
-        ),
+        F.lit(f" lanes, expected {num_perm}"),
     )
     banded = signatures.select(
         "doc",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
                 lambda b: F.struct(
                     b.alias("band_id"),
                     F.when(
                         lanes_ok,
                         F.xxhash64(
-                            F.slice("sig", b * rows_per_band + 1, rows_per_band)
+                            F.slice("sig", b * LSH_ROWS_PER_BAND + 1, LSH_ROWS_PER_BAND)
                         ),
                     )
                     .otherwise(F.raise_error(lanes_err))
@@ -155,8 +160,8 @@ def md5_lane(g, i: int):
     """Lane-``i`` portable hash of one shingle: 32-bit int via
     ``conv(substr(md5(shingle#i),1,8),16,10)`` — the ONE definition
     shared by the batch explode+groupBy signature (md5_band_table) and
-    the streaming per-row HOF fold (streaming/docs.minhash_admit_stage),
-    so the two surfaces can never drift."""
+    the streaming per-row fold (:func:`md5_row_bands`), so the two
+    surfaces can never drift."""
     return F.conv(
         F.substring(F.md5(F.concat(g, F.lit(f"#{i}"))), 1, 8), 16, 10
     ).cast("bigint")
@@ -180,6 +185,29 @@ def md5_band_key(lane_cols):
                 ).alias("band_val"),
             )
             for bi in range(BANDS)
+        ]
+    )
+
+
+def md5_row_bands(sh) -> Column:
+    """array<struct(band_id, band_val)> of ONE row's shingle array
+    ``sh`` — the per-row form of :func:`md5_band_table` (its rows for
+    that doc), for streams: lane i is an ``array_min`` over a
+    ``transform`` of the row's own shingles with :func:`md5_lane`, so
+    no explode, no groupBy, no state. ``sh`` should be a bound column
+    (not an inline shingles() expression), or every lane re-shingles
+    the text. Callers gate empty arrays to NULL themselves."""
+
+    def lane_fold(i: int):
+        # one-arg lambda REQUIRED: F.transform passes the array INDEX
+        # to a second parameter (even one with a default), which would
+        # silently shadow the lane constant — measured wrong band keys
+        return lambda g: md5_lane(g, i)
+
+    return md5_band_key(
+        [
+            F.array_min(F.transform(sh, lane_fold(i)))
+            for i in range(BANDS * ROWS_PER_BAND)
         ]
     )
 
@@ -319,18 +347,12 @@ def minhash_band_model_bucketed(
     return spark.table(band_name), spark.table(sh_name)
 
 
-def minhash_md5_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Portable-hash MinHash+LSH twin — same banding pipeline as
-    minhash_dedup_pairs but every hash is md5-derived (32-bit int via
+def minhash_md5_pairs(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_a, doc_b, jaccard) for pairs with exact shingle Jaccard ≥
+    0.5, banded on the md5 lanes (32-bit int via
     ``conv(substr(md5(shingle#lane),1,8),16,10)``), which both Spark
-    and DuckDB compute bit-identically — so THIS variant is fully
-    SQL-oracle-checkable (the sketches.py CMS precedent), while the
-    xxhash64 production variant keeps the cheap JVM hash and its
-    brute-force pytest pin.
+    and DuckDB compute bit-identically — so the whole pipeline is
+    SQL-oracle-checked (the sketches.py CMS precedent).
 
     16 lanes (4 bands x 4 rows) instead of 128: the oracle pays 16 md5
     calls per shingle on both engines; the S-curve is looser but the
@@ -354,13 +376,12 @@ def minhash_md5_pairs(
     # the cache each side re-runs the 16-lane md5 aggregate (AQE does
     # not reuse the exchange above a cached scan)
     cands = _pairs(md5_band_table_from_shingles(sh).persist())
-    thresh_micro = int(round(threshold * 1_000_000))
     common, union = jaccard_sizes("sh_a", "sh_b", F.col("_c"))
     return (
         with_shingles(cands, sh)
         .withColumn("_c", common)
         .withColumn("_u", union)
-        .filter(F.col("_c") * 1_000_000 >= F.lit(thresh_micro) * F.col("_u"))
+        .filter(F.col("_c") * 1_000_000 >= F.lit(500_000) * F.col("_u"))
         .select(
             "doc_a",
             "doc_b",
@@ -371,10 +392,10 @@ def minhash_md5_pairs(
     )
 
 
-def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
+def minhash_dedup_pairs(df: DataFrame) -> DataFrame:
     """End-to-end: LSH candidates verified with exact shingle Jaccard.
 
-    Returns (doc_a, doc_b, jaccard) for verified pairs ≥ threshold.
+    Returns (doc_a, doc_b, jaccard) for verified pairs with jaccard ≥ 0.5.
 
     The signature table is persisted before banding: the banding stage
     references it 16×(bands) × 2(join sides), and the signature
@@ -391,7 +412,7 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
     well-split 100 TB scans, parallelizing only unsplittable local
     files)."""
     sh = shingle_table(df).persist()
-    sigs = _xxhash_lanes(sh.select("doc", F.explode("sh").alias("_g")), 128).persist()
+    sigs = _xxhash_lanes(sh.select("doc", F.explode("sh").alias("_g"))).persist()
     cands = lsh_candidates(sigs)
     # _c bound as its own column so the intersect runs once.
     common, union = jaccard_sizes("sh_a", "sh_b", F.col("_c"), dtype=None)
@@ -402,6 +423,6 @@ def minhash_dedup_pairs(df: DataFrame, threshold: float = 0.5) -> DataFrame:
             "jaccard",
             F.round(F.col("_c").cast("double") / union.cast("double"), 6),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
     )

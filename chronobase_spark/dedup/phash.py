@@ -8,7 +8,7 @@ numpy pooling), so payloads that differ in a few pixels land within a
 small Hamming distance, exactly the image-dedup primitive a pretraining
 media pipeline runs (pHash/dHash over thumbnails).
 
-Candidate generation is the chunk-LSH pigeonhole of
+Candidate generation is the chunk-LSH pigeonhole of the one SimHash,
 dedup.simhash.simhash_md5_near_pairs, through the same dedup._bands
 helpers: four 16-bit signature chunks, group-join on any shared chunk,
 verify exact Hamming ≤ 3 — any pair within distance 3 shares at least

@@ -11,9 +11,12 @@ hash-compares both result sets, so:
 * float similarity uses the identical sequential fold on both engines
   and is rounded before any ranking/threshold.
 
-Queries whose values depend on Spark-internal hashing (MinHash, SimHash)
-carry no oracle — the driver records a rows-only check and pytest pins
-their semantics against brute-force ground truth instead.
+Queries whose values depend on Spark-internal hashing or sampling carry
+no oracle: the xxhash64 MinHash (``minhash_dedup_pairs``, the variant
+chronobench times) and the approximate sketches. The driver records a
+rows-only check and pytest pins their semantics against brute-force
+ground truth instead. Every other near-dup family — md5 MinHash, md5
+SimHash, winnowing, pHash — is oracle-checked.
 """
 
 from __future__ import annotations
@@ -904,12 +907,6 @@ def q_minhash_dedup_pairs(spark, sf_dir):
     return minhash.minhash_dedup_pairs(_t(spark, sf_dir, "documents"))
 
 
-@register("simhash_near_pairs", None)  # Spark xxhash64-dependent
-def q_simhash_near_pairs(spark, sf_dir):
-    """SimHash 64-bit signatures; Hamming-ball pairs via chunk LSH."""
-    return simhash.simhash_near_pairs(_t(spark, sf_dir, "documents"))
-
-
 _WINNOW_SQL = r"""
 WITH toks AS MATERIALIZED (
   SELECT doc_id AS doc,
@@ -1054,26 +1051,22 @@ WHERE hamming <= 3
 
 @register("simhash_md5_pairs", _simhash_md5_sql())
 def q_simhash_md5_pairs(spark, sf_dir):
-    """Portable-hash SimHash twin (dedup.simhash.simhash_md5_near_pairs):
-    md5-derived token bits and an unsigned 16-bit-chunk signature
-    representation, so the whole pipeline — 64 bit-sums, chunking,
-    pigeonhole band join, Hamming verify — hash-verifies against
-    DuckDB. The xxhash64 production variant stays for throughput;
-    together with minhash_md5_pairs this makes every near-dup FAMILY
-    oracle-checked, with rows-only checks remaining ONLY on the
-    engine-hash variants."""
+    """SimHash near-pairs within Hamming distance 3
+    (dedup.simhash.simhash_md5_near_pairs, the one SimHash): md5-derived
+    token bits and an unsigned 16-bit-chunk signature representation,
+    so the whole pipeline — 64 bit-sums, chunking, pigeonhole band
+    join, Hamming verify — hash-verifies against DuckDB."""
     return simhash.simhash_md5_near_pairs(_t(spark, sf_dir, "documents"))
 
 
 @register("minhash_md5_pairs", _minhash_md5_sql())
 def q_minhash_md5_pairs(spark, sf_dir):
     """Portable-hash MinHash+LSH (dedup.minhash.minhash_md5_pairs):
-    the oracle-checkable twin of minhash_dedup_pairs — md5-derived
-    32-bit lanes both engines compute bit-identically, so the FULL
-    banding pipeline (signature, band join, exact-Jaccard verify) is
-    hash-verified against DuckDB, not just rows-only. The xxhash64
-    production variant stays for throughput; this pins the pipeline's
-    semantics cross-engine (the sketches.py md5-CMS precedent)."""
+    md5-derived 32-bit lanes both engines compute bit-identically, so
+    the FULL banding pipeline (signature, band join, exact-Jaccard
+    verify) is hash-verified against DuckDB, not just rows-only — the
+    scheme of every MinHash surface but chronobench's dedup phase,
+    which times the xxhash64 ``minhash_dedup_pairs``."""
     return minhash.minhash_md5_pairs(_t(spark, sf_dir, "documents"))
 
 
@@ -1497,7 +1490,7 @@ def q_doc_split_assign(spark, sf_dir):
     """Deterministic train/val/test assignment by md5 nibble of the doc
     id — content-free and stable under corpus growth (a doc's split
     never depends on other rows), and portable hashing means a full
-    cross-engine oracle (unlike the xxhash64-based dedup family)."""
+    cross-engine oracle (unlike the xxhash64 MinHash)."""
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id", "lang", packing.md5_split(F.col("doc_id")).alias("split")

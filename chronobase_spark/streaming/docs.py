@@ -45,9 +45,11 @@ store" for one content modality. SimHash and winnowing are
 alternative SIGNATURES over the same text stream minhash already
 admits on — a simhash_admit_stage would re-answer the text question
 with a different recall curve, not cover new content; their in-stream
-role stays annotation (simhash_stage / winnow_stage), feeding batch
-pipelines that prefer those signatures. Don't "complete" the family
-by duplicating a modality.
+role stays annotation: simhash_stage and winnow_stage emit the literal
+signatures of the batch finders (simhash_md5_chunks,
+selected_fingerprints), so stored documents reach those finders
+already hashed. Don't "complete" the family by duplicating a
+modality.
 """
 
 from __future__ import annotations
@@ -183,95 +185,70 @@ def document_intake(stream: DataFrame) -> DataFrame:
     return content_dedup(quality_gate(stream))
 
 
-def signature_stage(
-    stream: DataFrame,
-    text_col: str = "text",
-    num_perm: int = 128,
-) -> DataFrame:
-    """Per-row MinHash signatures computed IN the stream — so documents
-    land in storage already carrying the signature column and the batch
-    LSH banding (dedup.minhash.lsh_candidates) never re-tokenizes the
-    corpus.
+def signature_stage(stream: DataFrame, text_col: str = "text") -> DataFrame:
+    """Per-row md5 MinHash band keys computed IN the stream: appends
+    ``minhash_bands``, the doc's rows of the batch
+    ``dedup.minhash.md5_band_table`` as an array<struct(band_id,
+    band_val)> (dedup.minhash.md5_row_bands — the same md5_lane and
+    md5_band_key, so the two cannot drift; equality pinned in
+    tests/test_streaming.py). Stored documents land admission-ready:
+    ``minhash_admit_stage`` reads this column and never hashes again,
+    and the band keys join the frozen models' band tables directly.
 
-    Stateless by construction: lane i = min over the row's shingles of
-    xxhash64(xxhash64(shingle), i), a pure higher-order-function fold
-    per document — no explode, no groupBy, no state store, so the
-    stream stays fully pipelined. This is the SAME value the batch
-    formulation produces (dedup.minhash.minhash_signature: explode +
-    num_perm min-agg lanes — exact-equality pinned in
-    tests/test_streaming.py), just arranged for the streaming
-    constraint. The batch engine keeps its explode+agg shape because
-    HOF lambdas are interpreted, not codegen'd (measured 5-20× slower
-    for a full-corpus pass, amortized fine per arriving row). Docs with
-    no shingles get a NULL signature (they cannot near-duplicate
-    anything).
-
-    ``num_perm`` defaults to 128 — the SAME lane count as the batch
-    ``minhash_signature`` — because ``lsh_candidates``' defaults
-    (16 bands × 8 rows) slice 128 lanes: a shorter signature would make
-    every band past the array's end hash an empty slice identically,
-    collapsing the band join toward all-pairs (lsh_candidates now also
-    rejects mismatched lane counts outright)."""
-    from chronobase_spark.dedup.minhash import SHINGLE_N
+    Stateless by construction: each lane is a pure per-row fold over
+    the row's own shingle array — no explode, no groupBy, no state
+    store, so the stream stays fully pipelined. The batch engine keeps
+    its explode+agg shape because HOF lambdas are interpreted, not
+    codegen'd (measured 5-20× slower for a full-corpus pass, amortized
+    fine per arriving row). Docs too short to shingle get NULL (they
+    cannot near-duplicate anything)."""
+    from chronobase_spark.dedup.minhash import SHINGLE_N, md5_row_bands
     from chronobase_spark.dedup.ngram import shingles as _shingles
 
-    sh = _shingles(F.col(text_col), SHINGLE_N)
-    lanes = [
-        F.array_min(
-            F.transform(sh, lambda g: F.xxhash64(F.xxhash64(g), F.lit(i)))
+    # _sh is its own projection, so the 16 lane folds read one shingle
+    # array instead of each re-shingling the text
+    return (
+        stream.withColumn("_sh", _shingles(F.col(text_col), SHINGLE_N))
+        .withColumn(
+            "minhash_bands",
+            F.when(F.size("_sh") > 0, md5_row_bands(F.col("_sh"))),
         )
-        for i in range(num_perm)
-    ]
-    return stream.withColumn(
-        "minhash_sig",
-        F.when(F.size(sh) > 0, F.array(*lanes)),
+        .drop("_sh")
     )
 
 
 def simhash_stage(stream: DataFrame) -> DataFrame:
-    """Per-row SimHash computed IN the stream — the SimHash companion
-    to ``signature_stage``, completing the in-stream signature family
-    so near-dup detection can ride ingest instead of re-tokenizing the
-    corpus in a separate batch pass.
+    """Per-row SimHash computed IN the stream: appends
+    ``simhash_chunks``, the doc's four unsigned 16-bit chunks
+    [c0, c1, c2, c3] of the batch ``dedup.simhash.simhash_md5_chunks``
+    — built from the same token bits (md5_halves, md5_bit_vote) and
+    chunk assembly (md5_chunks), so the two cannot drift.
 
-    Stateless by construction: token hashes are a ``transform`` over
-    the row's own token array, each of the 64 bit accumulators is a
-    pure HOF fold (+1/−1 by the token's bit value), and the signature
-    assembles sign bits into one BIGINT — no explode, no groupBy, no
-    state store, so the stream stays fully pipelined. Integer sums are
-    order-independent, so this is BIT-IDENTICAL to the batch
-    explode+agg formulation (dedup.simhash.simhash — equality pinned in
-    tests/test_streaming.py); the batch engine keeps its explode shape
-    because HOF lambdas are interpreted, not codegen'd (see
-    signature_stage). Docs with no tokens get a NULL signature,
-    mirroring the batch groupBy which never sees them."""
-    from chronobase_spark.dedup.simhash import BITS
+    Stateless by construction: the token hashes are a ``transform``
+    over the row's own token array and each of the 64 bit accumulators
+    is a pure HOF fold (+1/−1 by the token's bit value) — no explode,
+    no groupBy, no state store, so the stream stays fully pipelined.
+    Integer sums are order-independent, so this is BIT-IDENTICAL to
+    the batch explode+agg (pinned in tests/test_streaming.py). Docs
+    with no tokens get NULL, mirroring the batch groupBy which never
+    sees them."""
+    from chronobase_spark.dedup.simhash import (
+        BITS,
+        md5_bit_vote,
+        md5_chunks,
+        md5_halves,
+    )
+
+    def bit_sum(i: int):
+        return F.aggregate("_h", F.lit(0), lambda acc, h: acc + md5_bit_vote(h, i))
 
     toks = text.tokens(F.col("text"))
-    hashes = F.transform(toks, lambda t: F.xxhash64(t))
-
-    def _bit_sum(i: int):
-        return F.aggregate(
-            hashes,
-            F.lit(0),
-            lambda acc, h: acc
-            + F.when(
-                F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, F.lit(1)
-            ).otherwise(F.lit(-1)),
-        )
-
-    sig = F.lit(0).cast("long")
-    for i in range(BITS):
-        bit_sum = _bit_sum(i)
-        # bit 63 is the sign bit of a 64-bit long: its set-value wraps
-        # to long.min in two's complement (same literal as the batch).
-        bit_val = (1 << i) if i < BITS - 1 else -(1 << (BITS - 1))
-        sig = sig + F.when(bit_sum > 0, F.lit(bit_val).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return stream.withColumn(
-        "simhash", F.when(F.size(toks) > 0, sig)
-    )
+    # _h is its own projection, so the 64 folds read one hash array
+    hashed = stream.withColumn("_h", F.transform(toks, md5_halves))
+    chunks = F.array(*md5_chunks([bit_sum(i) for i in range(BITS)]))
+    return hashed.withColumn(
+        "simhash_chunks", F.when(F.size("_h") > 0, chunks)
+    ).drop("_h")
 
 
 def winnow_stage(stream: DataFrame) -> DataFrame:
@@ -680,19 +657,16 @@ def minhash_admit_stage(
     ``dsir_admit_stage`` frozen-model shape applied to
     ``minhash_md5_pairs``' banding.
 
-    Mechanics: the arriving doc's 16 md5-MinHash lanes are a pure
-    per-row HOF fold over its shingle array (dedup.minhash.md5_lane —
-    the LITERAL batch lane hash, arranged per-row exactly like
-    signature_stage's xxhash64 fold; the shingle array is let-bound via
-    a single-element transform so tokenization runs once per row, not
-    once per lane). Band keys assemble through the SHARED
-    dedup.minhash.md5_band_key layout and LEFT-join stream-static
-    against the frozen (doc, band_id, band_val) table from
-    minhash_band_model — stateless, no state store; a second
-    stream-static LEFT join fetches the matched corpus doc's shingle
-    array and the exact-Jaccard verify is the batch query's integer
-    cross-multiplication (LSH recall only tunes candidates; the OUTPUT
-    is exact). The per-doc verdict is a windowed streaming aggregation
+    Mechanics: the stream must carry ``signature_stage``'s
+    ``minhash_bands`` column — compose ``signature_stage`` upstream, so
+    each arriving doc is hashed once, by the literal batch lanes. Its
+    band keys LEFT-join stream-static against the frozen (doc,
+    band_id, band_val) table from minhash_band_model — stateless, no
+    state store; a second stream-static LEFT join fetches the matched
+    corpus doc's shingle array (the arrival's own shingles are computed
+    here, for the verify only), and the exact-Jaccard verify is the
+    batch query's integer cross-multiplication (LSH recall only tunes
+    candidates; the OUTPUT is exact). The per-doc verdict is a windowed streaming aggregation
     (dup iff ANY verified candidate; canonical = min matched corpus
     id): three scalars of state per in-flight doc, watermark-evicted.
 
@@ -733,38 +707,21 @@ def minhash_admit_stage(
     pipeline sets it once at the first stateful stage and passes None
     (with an explicit ``window``) here — pinned in
     tests/test_streaming.py's composed-intake test."""
-    from chronobase_spark.dedup.minhash import (
-        BANDS,
-        ROWS_PER_BAND,
-        SHINGLE_N,
-        md5_band_key,
-        md5_lane,
-    )
+    from chronobase_spark.dedup.minhash import SHINGLE_N
     from chronobase_spark.dedup.ngram import shingles as _shingles
 
-    def _lane_fold(i: int):
-        # one-arg lambda REQUIRED: F.transform passes the array INDEX
-        # to a second parameter (even one with a default), which would
-        # silently shadow the lane constant — measured wrong band keys
-        return lambda g: md5_lane(g, i)
-
-    def _bands_of(s):
-        lanes = [
-            F.array_min(F.transform(s, _lane_fold(i)))
-            for i in range(BANDS * ROWS_PER_BAND)
-        ]
-        return md5_band_key(lanes)
-
-    sh = _shingles(F.col(text_col), SHINGLE_N)
     marked, window = _watermarked(stream, watermark, window)
-    prepped = marked.select("doc_id", "ingest_ts", sh.alias("_sh"))
+    prepped = marked.select(
+        "doc_id",
+        "ingest_ts",
+        "minhash_bands",
+        _shingles(F.col(text_col), SHINGLE_N).alias("_sh"),
+    )
     banded = prepped.select(
         "doc_id",
         "ingest_ts",
         "_sh",
-        F.explode_outer(
-            F.when(F.size("_sh") > 0, _bands_of(F.col("_sh")))
-        ).alias("b"),
+        F.explode_outer("minhash_bands").alias("b"),
     ).select("doc_id", "ingest_ts", "_sh", "b.band_id", "b.band_val")
     cand = banded.join(
         corpus_bands.select(

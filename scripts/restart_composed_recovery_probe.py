@@ -8,7 +8,8 @@ admission model re-attached from its on-disk manifest, not rebuilt.
              band sample against the bands; drain arrival batch 1
              through
                main chain (ONE query, TWO state stores):
-                 content_dedup (dropDuplicatesWithinWatermark state)
+                 signature_stage (stateless md5 band keys)
+                 → content_dedup (dropDuplicatesWithinWatermark state)
                  → minhash_admit (windowed-agg state, watermark=None —
                    the composed-pipeline watermark contract) → sink A
                branch: containment_admit on the BUCKETED postings
@@ -95,7 +96,9 @@ def _drain_both(spark, src, paths, bands, sh, postings):
 
     chain = docstream.minhash_admit_stage(
         docstream.content_dedup(
-            docstream.read_document_stream(spark, src, max_files=8)
+            docstream.signature_stage(
+                docstream.read_document_stream(spark, src, max_files=8)
+            )
         ),
         bands,
         sh,

@@ -1,5 +1,6 @@
 """Shared pytest fixtures: one SparkSession per test run, and one run
-of the restart recovery probe."""
+of the restart recovery probe; and a per-file time summary at the end
+of the run."""
 
 from __future__ import annotations
 
@@ -70,3 +71,21 @@ def restart_probe():
         return json.loads(proc.stdout.strip().splitlines()[-1])
     except (IndexError, json.JSONDecodeError):
         pytest.fail(f"restart probe printed no verdict:\n{proc.stdout}{proc.stderr}")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Per test file, the summed setup, call and teardown seconds,
+    slowest first, so a change in the suite's wall time can be traced
+    to a file. A session fixture's setup counts toward the file of the
+    first test that requests it."""
+    secs: dict[str, float] = {}
+    for reports in terminalreporter.stats.values():
+        for r in reports:
+            if getattr(r, "when", None) in ("setup", "call", "teardown"):
+                path = r.nodeid.split("::")[0]
+                secs[path] = secs.get(path, 0.0) + r.duration
+    if not secs:
+        return
+    terminalreporter.write_sep("-", "seconds per test file (setup + call + teardown)")
+    for path, s in sorted(secs.items(), key=lambda kv: -kv[1]):
+        terminalreporter.write_line(f"{s:9.1f}  {path}")

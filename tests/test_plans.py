@@ -66,7 +66,7 @@ def test_star_join_broadcasts_every_dimension(spark):
     "name",
     [
         "minhash_dedup_pairs",
-        "simhash_near_pairs",
+        "simhash_md5_pairs",
         "ngram_jaccard_pairs",
         "levenshtein_near_pairs",
         "embedding_near_pairs",
@@ -97,7 +97,7 @@ def test_scale_path_ops_have_no_quadratic_join(spark, name):
     "name",
     [
         "minhash_dedup_pairs",
-        "simhash_near_pairs",
+        "simhash_md5_pairs",
         "ngram_jaccard_pairs",
         "levenshtein_near_pairs",
     ],

@@ -32,7 +32,6 @@ def test_rows_only_queries_are_documented_set():
     no_oracle = set(q.queries()) - set(q.oracle_sql())
     assert no_oracle == {
         "minhash_dedup_pairs",
-        "simhash_near_pairs",
         "approx_distinct_users",
         "approx_value_percentiles",
         "sketch_rollup_users",

@@ -303,6 +303,42 @@ def test_near_dup_idioms_live_in_bands():
     assert not bad, bad
 
 
+def test_xxhash64_only_where_chronobench_or_content_dedup_needs_it():
+    """md5 is the one MinHash and the one SimHash of every near-dup
+    surface, so batch, stream and the DuckDB oracles hash alike.
+    ``F.xxhash64`` under dedup/ and in streaming/docs.py is left only
+    in content_dedup's exact fingerprint and in the batch MinHash that
+    chronobench's dedup phase times (minhash_signature, _xxhash_lanes,
+    lsh_candidates, minhash_dedup_pairs)."""
+    allowed = {
+        ("chronobase_spark/streaming/docs.py", "content_dedup"),
+        *(
+            ("chronobase_spark/dedup/minhash.py", fn)
+            for fn in (
+                "minhash_signature",
+                "_xxhash_lanes",
+                "lsh_candidates",
+                "minhash_dedup_pairs",
+            )
+        ),
+    }
+    paths = glob.glob(os.path.join(REPO, "chronobase_spark/dedup/*.py"))
+    paths.append(os.path.join(REPO, "chronobase_spark/streaming/docs.py"))
+    bad = []
+    for p in paths:
+        rel = os.path.relpath(p, REPO)
+        for fn in ast.parse(open(p).read()).body:
+            for node in ast.walk(fn):
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", getattr(node.func, "id", None))
+                    == "xxhash64"
+                    and (rel, getattr(fn, "name", None)) not in allowed
+                ):
+                    bad.append(f"{rel}:{node.lineno}")
+    assert not bad, bad
+
+
 def _runner_text() -> str:
     """Every test file and the verify skill: where a script and each of
     its flags must be named to count as run."""

@@ -757,11 +757,11 @@ def test_streaming_counter_rate_matches_batch(spark, tmp_path):
 
 
 def test_streaming_signature_stage_matches_batch_minhash(spark, tmp_path):
-    """The stateless per-row MinHash stage must emit BIT-IDENTICAL
-    signatures to the batch explode+agg formulation (same lane formula:
-    min over shingles of xxhash64(xxhash64(shingle), lane)), and docs
-    too short to shingle must carry NULL. Run through a real stream so
-    the stage is proven stateless (no watermark, no state store)."""
+    """The stateless per-row MinHash stage must emit exactly each doc's
+    rows of the batch md5_band_table (same md5 lanes, same band keys),
+    and docs too short to shingle must carry NULL. Run through a real
+    stream so the stage is proven stateless (no watermark, no state
+    store)."""
     from chronobase_spark.dedup import minhash
     from chronobase_spark.streaming import docs as docstream
 
@@ -782,9 +782,7 @@ def test_streaming_signature_stage_matches_batch_minhash(spark, tmp_path):
 
     sink = str(tmp_path / "sig_sink")
     q = (
-        docstream.signature_stage(
-            docstream.read_document_stream(spark, src), num_perm=16
-        )
+        docstream.signature_stage(docstream.read_document_stream(spark, src))
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", str(tmp_path / "sig_ckpt"))
@@ -795,23 +793,25 @@ def test_streaming_signature_stage_matches_batch_minhash(spark, tmp_path):
     q.awaitTermination(120)
     out = spark.read.parquet(sink)
 
-    got = {r["doc_id"]: r["minhash_sig"] for r in out.collect()}
-    assert got[999999] is None
-    batch = {
-        r["doc"]: r["sig"]
-        for r in minhash.minhash_signature(
-            spark.read.parquet(src), num_perm=16
-        ).collect()
+    got = {
+        r["doc_id"]: None
+        if r["minhash_bands"] is None
+        else {(b["band_id"], b["band_val"]) for b in r["minhash_bands"]}
+        for r in out.collect()
     }
-    # every shingleable doc: streaming signature == batch signature
+    assert got[999999] is None
+    batch: dict[int, set] = {}
+    for r in minhash.md5_band_table(spark.read.parquet(src)).collect():
+        batch.setdefault(r["doc"], set()).add((r["band_id"], r["band_val"]))
+    # every shingleable doc: streaming band keys == batch band rows
     assert set(batch) == set(k for k, v in got.items() if v is not None)
-    for doc, sig in batch.items():
-        assert got[doc] == sig, doc
+    for doc, bands in batch.items():
+        assert len(bands) == minhash.BANDS and got[doc] == bands, doc
 
 
 def test_streaming_simhash_stage_matches_batch(spark, tmp_path):
     """The stateless per-row SimHash stage must emit BIT-IDENTICAL
-    64-bit signatures to the batch explode+agg formulation (integer
+    chunks to the batch simhash_md5_chunks explode+agg (integer
     bit-accumulator sums are order-independent), and token-less docs
     must carry NULL. Run through a real stream so the stage is proven
     stateless (no watermark, no state store)."""
@@ -846,11 +846,11 @@ def test_streaming_simhash_stage_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
     out = spark.read.parquet(sink)
 
-    got = {r["doc_id"]: r["simhash"] for r in out.collect()}
+    got = {r["doc_id"]: r["simhash_chunks"] for r in out.collect()}
     assert got[999999] is None
     batch = {
-        r["doc"]: r["simhash"]
-        for r in simhash.simhash(spark.read.parquet(src)).collect()
+        r["doc"]: [r[f"c{j}"] for j in range(simhash.CHUNKS)]
+        for r in simhash.simhash_md5_chunks(spark.read.parquet(src)).collect()
     }
     assert set(batch) == set(k for k, v in got.items() if v is not None)
     for doc, sig in batch.items():
@@ -1583,7 +1583,7 @@ def test_tab_stream_end_to_end_pipeline(spark, tmp_path):
     q2.awaitTermination(180)
 
     def row_key(r):
-        sig = tuple(r["minhash_sig"]) if r["minhash_sig"] is not None else None
+        sig = r["minhash_bands"] and tuple(map(tuple, r["minhash_bands"]))
         return (r["n_emails"], r["n_phones"], r["redacted"], sig)
 
     got = {r["doc_id"]: row_key(r) for r in spark.read.parquet(sink).collect()}
@@ -2259,7 +2259,7 @@ def test_streaming_minhash_admit_matches_batch_pairs(spark, tmp_path):
     sink = str(tmp_path / "mh_sink")
     q = (
         docstream.minhash_admit_stage(
-            docstream.read_document_stream(spark, src),
+            docstream.signature_stage(docstream.read_document_stream(spark, src)),
             corpus_bands,
             corpus_shingles,
         )
@@ -2765,7 +2765,9 @@ def test_minhash_admit_bucketed_model_drains_identically(spark, tmp_path):
         sink = str(tmp_path / f"sink_{tag}")
         q = (
             docstream.minhash_admit_stage(
-                docstream.read_document_stream(spark, src), bands, shingles
+                docstream.signature_stage(docstream.read_document_stream(spark, src)),
+                bands,
+                shingles,
             )
             .writeStream.format("parquet")
             .option("path", sink)
@@ -3443,7 +3445,7 @@ def test_watermark_contract_failure_modes(spark, tmp_path):
     try:
         with _pytest.raises(ValueError, match="explicit window"):
             docstream.minhash_admit_stage(
-                docstream.read_document_stream(spark, src),
+                docstream.signature_stage(docstream.read_document_stream(spark, src)),
                 bands,
                 sh,
                 watermark=None,
@@ -3451,7 +3453,9 @@ def test_watermark_contract_failure_modes(spark, tmp_path):
         q = (
             docstream.minhash_admit_stage(
                 docstream.content_dedup(
-                    docstream.read_document_stream(spark, src)
+                    docstream.signature_stage(
+                        docstream.read_document_stream(spark, src)
+                    )
                 ),
                 bands,
                 sh,  # default watermark -> redefinition after stateful dedup
